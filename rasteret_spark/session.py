@@ -3,6 +3,8 @@
 Defaults chosen for correctness-vs-oracle (UTC timestamps) and for scale
 (AQE + skew-join handling on, Arrow execution for pandas UDFs, shuffle
 partition count tied to parallelism instead of the 200 default).
+Python workers start through ``worker_daemon`` so tasks import pyspark from
+its installed directory instead of re-reading Spark's archives.
 """
 
 from __future__ import annotations
@@ -10,6 +12,26 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def with_worker_daemon(extra: dict[str, str]) -> dict[str, str]:
+    """``extra`` plus ``rasteret_spark.worker_daemon`` as the worker daemon
+    (a caller value wins) and the directory holding the ``rasteret_spark``
+    package appended to the workers' PYTHONPATH.  ``extra`` unchanged when
+    the package was imported from an archive (``--py-files``): the daemon
+    starts before those reach the workers' path."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg):
+        return extra
+    root = os.path.dirname(pkg)
+    parts = [p for p in extra.get(PYTHONPATH, "").split(os.pathsep) if p]
+    return {
+        "spark.python.daemon.module": "rasteret_spark.worker_daemon",
+        **extra,
+        PYTHONPATH: os.pathsep.join(parts if root in parts else [*parts, root]),
+    }
 
 
 def get_spark(
@@ -50,6 +72,6 @@ def get_spark(
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra or {}).items():
+    for k, v in with_worker_daemon(extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
