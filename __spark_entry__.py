@@ -1591,9 +1591,9 @@ def q70_class_stats(spark, sf_dir):
     """Class-stratified pixel statistics over (imagery, label) pairs: q48's
     first-valid mosaic canvases joined with q68's label masks on the SAME
     chip grid, per-(chip, band, class) counts and radiometry — the
-    training-data QA surface (class balance, per-class reflectance).  Pure
-    Catalyst nested HOFs with deterministic array-order folds; DuckDB-
-    oracled against the truth-side canvas x mask recomputation."""
+    training-data QA surface (class balance, per-class reflectance).  One
+    vectorized numpy ``mapInPandas`` with deterministic array-order folds;
+    DuckDB-oracled against the truth-side canvas x mask recomputation."""
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators.labels import class_stats, label_masks
     from rasteret_spark.sources import synthetic as syn
@@ -1613,8 +1613,8 @@ def q71_focal_filters(spark, sf_dir):
     """Focal raster filtering where the pixels are (operators/focal.py):
     first-valid mosaic -> 3x3 focal mean (nodata-tolerant smoothing) ->
     Sobel gradient magnitude of the SMOOTHED band — the texture/edge
-    features a chip-quality screen computes, as a pure Catalyst projection
-    (no Python nodes, zero added shuffles; plan-asserted in
+    features a chip-quality screen computes, as one vectorized numpy
+    ``mapInPandas`` per operator (zero added shuffles; plan-asserted in
     tests/test_focal.py).  DuckDB-oracled against an independent numpy
     replicate-pad mirror from pre-encode generator truth."""
     from rasteret_spark.operators import focal
@@ -1658,7 +1658,7 @@ def q72_change_detect(spark, sf_dir):
     timestamp in ONE groupBy (conditional collect_lists — no composite
     self-join), delta the composites per pixel, and count
     ``|delta| > threshold`` changed pixels — the deforestation screen.
-    Pure Catalyst end-to-end after the stack decode; DuckDB-oracled
+    One vectorized numpy pass per group after the stack decode; DuckDB-oracled
     against an independent numpy two-epoch mirror from pre-encode
     generator truth (sources/truth.change_detect_truth_pdf)."""
     from rasteret_spark.operators import band_math as bm
@@ -1694,7 +1694,7 @@ STEEP_TAN2 = 1.0e8
 def q74_terrain(spark, sf_dir):
     """Terrain derivatives where the pixels are (operators/focal.terrain):
     first-valid mosaic -> Horn 3x3 gradients -> slope/aspect/hillshade as
-    a pure Catalyst projection (no Python nodes, zero added shuffles).
+    one vectorized numpy ``mapInPandas`` (zero added shuffles).
     The DuckDB oracle pins the transcendental-free surface bit-exactly
     (gradient folds + steep-pixel counts vs an independent numpy Horn
     mirror from pre-encode truth); the trig outputs are pinned by
@@ -1766,10 +1766,10 @@ def q75_chip_stats(spark, sf_dir):
 def q77_spatial_stats(spark, sf_dir):
     """Per-chip spatial autocorrelation (operators/focal.spatial_stats):
     rook-contiguity Moran's I and Geary's C over mosaic canvases — the
-    clustering/texture screen.  ZERO-shuffle pure Catalyst, no
-    transcendentals, every fold deterministically ordered; DuckDB-oracled
-    bit-exactly against an independent numpy mirror from pre-encode
-    truth."""
+    clustering/texture screen.  ZERO shuffles (one vectorized numpy
+    ``mapInPandas``), no transcendentals, every fold deterministically
+    ordered; DuckDB-oracled bit-exactly against an independent numpy
+    mirror from pre-encode truth."""
     from rasteret_spark.operators import focal
     from rasteret_spark.operators import raster_mosaic as rmo
 
@@ -2072,7 +2072,7 @@ def q73_temporal_trend(spark, sf_dir):
     """Per-pixel least-squares temporal trend over real chip stacks
     (operators/band_math.temporal_trend): OLS slope/intercept of
     value ~ days-since-first-scene at every pixel, the greening/drift
-    screen.  ONE shuffle; the fold is a pure Catalyst ``aggregate`` over
+    screen.  ONE shuffle; the fold is a fixed-order numpy pass over
     a deterministically sorted observation array, so the DuckDB oracle
     (sources/truth.temporal_trend_truth_pdf) matches bit-exactly."""
     from rasteret_spark.operators import band_math as bm
@@ -2203,8 +2203,8 @@ def q64_band_index(spark, sf_dir):
 def q65_temporal_median(spark, sf_dir):
     """Per-pixel temporal MEDIAN composite over real chip stacks — the
     cloud-free monthly-composite primitive (nulls skipped per pixel, not
-    per scene).  Evaluated with nested Catalyst higher-order functions
-    (operators/band_math.temporal_composite: one shuffle, no Python);
+    per scene).  Evaluated by operators/band_math.temporal_composite (one
+    shuffle, then one vectorized numpy ``mapInPandas``);
     numpy nanmedian-exact incl. even-count interpolation per
     tests/test_band_math.py::TestTemporalComposite."""
     from rasteret_spark.operators import band_math as bm

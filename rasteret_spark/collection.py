@@ -508,9 +508,10 @@ class Collection:
         """Per-pixel temporal composite (median/mean/min/max/count) over the
         chip stacks for ``bbox`` — the cloud-free-composite flow: serve the
         [T, C, H, W] stack rows, then reduce across T with
-        ``band_math.temporal_composite`` (nested Catalyst HOFs, nulls
-        skipped per pixel).  Extra kwargs pass to :meth:`chips`
-        (t_start/t_end/t_step, stride, method, grid_epsg, ...)."""
+        ``band_math.temporal_composite`` (one vectorized numpy pass per
+        chip band, nulls skipped per pixel).  Extra kwargs pass to
+        :meth:`chips` (t_start/t_end/t_step, stride, method, grid_epsg,
+        ...)."""
         from rasteret_spark.operators import band_math as bm
 
         stack = self.chips(bbox, size, xres, bands=bands, **chip_kwargs)
@@ -523,8 +524,8 @@ class Collection:
         """Mosaic ``bands`` over ``bbox`` and run a moving-window statistic
         (focal mean/min/max/sum/count) over every chip — nodata-tolerant
         smoothing / texture features computed where the pixels are
-        (`operators/focal.py`: the stencil is a pure Catalyst projection,
-        no Python nodes, zero added shuffles).  Extra kwargs pass to
+        (`operators/focal.py`: one vectorized numpy pass per chip in one
+        ``mapInPandas``, zero added shuffles).  Extra kwargs pass to
         :meth:`mosaic` (date_range, method, grid_epsg, ...)."""
         from rasteret_spark.operators import focal as fo
 
@@ -539,7 +540,7 @@ class Collection:
         ``bbox``: composite the scenes before/after ``split_ts`` with the
         same statistic and delta them per pixel (plus changed-pixel counts
         when ``threshold`` is given) — `operators/band_math.change_detect`
-        over :meth:`chips` rows, one shuffle, pure Catalyst."""
+        over :meth:`chips` rows, one shuffle, one ``mapInPandas``."""
         from rasteret_spark.operators import band_math as bm
 
         stack = self.chips(bbox, size, xres, bands=bands, **chip_kwargs)
@@ -568,8 +569,8 @@ class Collection:
     ) -> DataFrame:
         """Mosaic ``bands`` over ``bbox`` and derive gdaldem-style terrain
         products (Horn gradients, slope, compass aspect, hillshade) per
-        pixel — `operators/focal.terrain`, a pure Catalyst projection with
-        zero added shuffles.  Extra kwargs pass to :meth:`mosaic`."""
+        pixel — `operators/focal.terrain`, one ``mapInPandas`` with zero
+        added shuffles.  Extra kwargs pass to :meth:`mosaic`."""
         from rasteret_spark.operators import focal as fo
 
         per_band = self.mosaic(bbox, size, xres, bands=bands, **mosaic_kwargs)

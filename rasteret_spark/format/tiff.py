@@ -294,13 +294,6 @@ def sniff(prefix: bytes) -> str | None:
     return None
 
 
-def _scalar(order: str, ftype: int, raw: bytes) -> float:
-    np_t = _TYPE_NP.get(ftype)
-    if np_t is None:
-        raise ValueError(f"unsupported inline field type {ftype}")
-    return np.frombuffer(raw, dtype=order + np_t, count=1)[0]
-
-
 def _values(rng: _Ranges, order: str, ftype: int, count: int,
             inline: bytes, inline_cap: int, off_dtype: str) -> np.ndarray | bytes:
     """Decode one IFD entry's value(s): inline when they fit, else one ranged

@@ -1,31 +1,31 @@
-"""Vectorized (Arrow/numpy) mirrors of the per-pixel Catalyst kernels.
+"""Vectorized (Arrow/numpy) per-chip kernels behind the focal operators,
+plus the ``mapInPandas`` runner and sort helpers ``band_math`` shares.
 
-The focal/terrain/temporal operators were first written as pure Catalyst
-higher-order functions — zero Python nodes, zero added shuffles.  That shape
-is correct, but Catalyst HOF lambdas are *interpreted per element*: a 3x3
-stencil over a 4096-px chip evaluates ~37k lambda invocations per row, and
-profiles showed the stencil projections dominating those queries' wall time
-(guide §4.2: hand whole batches to vectorized native code instead).
+Each kernel takes one chip as a whole 2-D array and evaluates the stencil
+with numpy over the chip at once: whole batches go to vectorized native
+code, where a per-element interpreted expression would cost ~37k lambda
+calls per 4096-px chip for a 3x3 stencil.
 
-These kernels are drop-in replacements with BIT-IDENTICAL results.  The
-discipline that makes that true:
+Float contract — every kernel's output is a fixed function of its input
+bits, so independent oracles (``sources/truth.py``) can reproduce it
+exactly:
 
-* every float reduction replicates the Catalyst fold ORDER — sequential
-  left-folds become ``cumsum`` (numpy's cumsum accumulates strictly in
-  order; its last element IS the left-fold sum), never ``np.sum`` (pairwise
-  summation rounds differently);
+* every float reduction is a strict left fold in a fixed order (tap
+  row-major offset order, or pixel order) — ``cumsum``'s last element or
+  an explicit loop, never ``np.sum`` (pairwise summation rounds
+  differently);
 * "skip the nulls" folds never add a spurious ``0.0`` (which would turn a
   ``-0.0`` partial into ``+0.0``): accumulation uses ``np.where(valid,
-  acc + term, acc)`` chains in tap order;
+  acc + term, acc)`` chains;
+* min/max keep the FIRST extreme in fold order (``-0.0`` and ``0.0`` tie,
+  as in Spark's ``array_min``/``array_max``);
 * sorts use an IEEE-754 total-order key so ``-0.0 < 0.0`` exactly like
-  Java's ``Double.compare`` inside ``array_sort``;
-* expressions mirror the Catalyst tree shape (same association order).
+  Java's ``Double.compare`` inside ``array_sort``.
 
 Inputs arrive through ``mapInPandas``: Arrow hands ``array<double>`` cells
 to pandas as float64 ndarrays with nulls already NaN, so null<->NaN is the
 (lossless) interchange convention here, exactly as in ``timeseries.gap_fill``.
-Rows whose ``values`` is null pass through with null outputs (matching
-``F.when(col.isNotNull(), ...)``).
+Rows whose ``values`` is null pass through with null outputs.
 """
 
 from __future__ import annotations
@@ -47,17 +47,6 @@ def _row_array(cell) -> np.ndarray | None:
     return np.asarray(cell, dtype=np.float64)
 
 
-def seq_sum(a: np.ndarray, axis: int = -1) -> np.ndarray:
-    """Strict left-fold sum along ``axis`` (Catalyst ``aggregate`` order):
-    cumsum's last slot, not pairwise ``np.sum``."""
-    a = np.asarray(a, dtype=np.float64)
-    if a.shape[axis] == 0:
-        shape = list(a.shape)
-        del shape[axis if axis >= 0 else a.ndim + axis]
-        return np.zeros(shape)
-    return np.cumsum(a, axis=axis).take(-1, axis=axis)
-
-
 def total_order_key(a: np.ndarray) -> np.ndarray:
     """IEEE-754 total-order sort key for float64 (no NaNs expected): maps
     doubles to uint64 so ascending int order == Java Double.compare order
@@ -73,8 +62,8 @@ def sort_doubles(a: np.ndarray) -> np.ndarray:
 
 def _clamped_taps(v2d: np.ndarray, radius: int):
     """Replicate-clamped window taps of a 2-D array in row-major offset
-    order — the exact tap order of ``focal._taps``.  Yields (dr, dc, tap)
-    where ``tap`` has the input shape."""
+    order (dr outer, dc inner) — the order every fold below accumulates
+    in.  Yields (dr, dc, tap) where ``tap`` has the input shape."""
     p = np.pad(v2d, radius, mode="edge")
     h, w = v2d.shape
     for dr in range(-radius, radius + 1):
@@ -83,9 +72,9 @@ def _clamped_taps(v2d: np.ndarray, radius: int):
 
 
 def focal_stat_2d(v2d: np.ndarray, stat: str, radius: int) -> np.ndarray:
-    """Mirror of ``focal.focal_stats``'s per-pixel expression over one chip:
-    statistic over the VALID taps of the replicate-clamped window; a pixel
-    with zero valid taps is NaN (null)."""
+    """Focal statistic over one chip: ``stat`` over the VALID taps of the
+    replicate-clamped window; a pixel with zero valid taps is NaN (null).
+    Sums fold in tap order; min/max keep the first extreme tap."""
     taps = [t for _, _, t in _clamped_taps(v2d, radius)]
     valid = [~np.isnan(t) for t in taps]
     nv = np.zeros(v2d.shape)
@@ -94,10 +83,13 @@ def focal_stat_2d(v2d: np.ndarray, stat: str, radius: int) -> np.ndarray:
     if stat == "count":
         return nv + 0.0  # count of valid taps as double
     if stat in ("min", "max"):
-        # array_min/array_max are total-order reductions; the safe mirror
-        # needs -0.0-aware key comparisons — not needed by any query path,
-        # so these stats stay on the Catalyst implementation
-        raise NotImplementedError("min/max focal stats use the catalyst impl")
+        # replace only on a strict improvement: the first extreme tap wins,
+        # so -0.0 and 0.0 tie and the earlier one is kept
+        better = np.less if stat == "min" else np.greater
+        acc = np.full(v2d.shape, np.nan)
+        for t, m in zip(taps, valid):
+            acc = np.where(m & (np.isnan(acc) | better(t, acc)), t, acc)
+        return acc
     # sum / mean: left-fold over valid taps in tap order, no spurious 0.0
     s = np.zeros(v2d.shape)
     for t, m in zip(taps, valid):
@@ -110,8 +102,9 @@ def focal_stat_2d(v2d: np.ndarray, stat: str, radius: int) -> np.ndarray:
 def convolve_2d(
     v2d: np.ndarray, kernel: list[list[float]], normalize: bool
 ) -> np.ndarray:
-    """Mirror of ``focal.convolve``'s per-pixel expression (strict stencil
-    or valid-renormalized)."""
+    """Weighted sum of the clamped taps in tap order.  Strict: any NaN tap
+    nulls the pixel.  ``normalize``: ``sum w*v / sum w`` over the valid
+    taps, NaN where the valid weights sum to zero."""
     radius = len(kernel) // 2
     terms = [
         (t, float(kernel[dr + radius][dc + radius]))
@@ -139,8 +132,8 @@ SOBEL_Y = ((-1.0, -2.0, -1.0), (0.0, 0.0, 0.0), (1.0, 2.0, 1.0))
 
 
 def sobel_2d(v2d: np.ndarray) -> np.ndarray:
-    """Mirror of ``focal.sobel``: gx/gy as ordered weighted sums over ALL
-    taps (zero weights included, same association order), strict null."""
+    """Sobel magnitude ``sqrt(gx^2 + gy^2)``: gx/gy are weighted sums over
+    ALL nine taps in tap order (zero weights included), strict null."""
     taps = list(_clamped_taps(v2d, 1))
     gx = None
     gy = None
@@ -163,10 +156,11 @@ def terrain_2d(
     altitude: float,
     azimuth: float,
 ) -> dict[str, np.ndarray]:
-    """Mirror of ``focal.terrain``'s per-pixel Horn expressions.  The
-    gradient surfaces (dzdx/dzdy and everything derived without trig) are
-    bit-exact; slope/aspect/hillshade use libm atan/atan2/cos which may
-    differ from the JVM's in the last ulp (tests pin those by tolerance)."""
+    """Horn's-method terrain surfaces for one chip.  The gradient surfaces
+    (dzdx/dzdy) are fixed-order float expressions, reproducible exactly;
+    slope/aspect/hillshade go through libm atan/atan2/cos, whose last ulp
+    may differ from another math library's (tests pin those by
+    tolerance)."""
     import math
 
     t = {(dr, dc): tap for dr, dc, tap in _clamped_taps(v2d, 1)}
@@ -199,9 +193,9 @@ def terrain_2d(
 
 
 def _masked_fold(terms: np.ndarray) -> float:
-    """Catalyst ``aggregate(filter(arr, notNull), 0.0, +)`` over a flat
-    per-pixel term array (NaN = null): sequential sum of the non-null terms
-    in pixel order, no spurious 0.0 additions."""
+    """Sequential sum of the non-null terms of a flat per-pixel term array
+    (NaN = null) in pixel order, starting from 0.0, with no spurious 0.0
+    additions."""
     kept = terms[~np.isnan(terms)]
     if kept.size == 0:
         return 0.0
@@ -209,9 +203,9 @@ def _masked_fold(terms: np.ndarray) -> float:
 
 
 def spatial_stats_row(v2d: np.ndarray) -> dict:
-    """Mirror of ``focal.spatial_stats``'s staged Catalyst folds for one
-    chip: rook-contiguity Moran's I / Geary's C with the exact same
-    (pixel-major, then N/S/W/E) float accumulation order."""
+    """Rook-contiguity Moran's I / Geary's C for one chip.  Per-pixel terms
+    accumulate their neighbours in N/S/W/E order; the chip totals fold the
+    per-pixel terms in pixel order."""
     h, w = v2d.shape
     valid = ~np.isnan(v2d)
     n_valid = int(valid.sum())

@@ -17,12 +17,29 @@ zero denominator yields null rather than an IEEE Inf/NaN — the
 distributed analogue of xarray's NaN propagation.  Per-chip summary
 stats (filled/mean/min/max) come from the same expressions so downstream
 filters (e.g. "chips with mean NDVI > 0.3") never touch the arrays.
+
+The per-pixel reductions that fold many values per pixel
+(``temporal_composite``, ``change_detect``, ``temporal_trend``) and the
+per-chip ``chip_stats`` run as ONE ``mapInPandas`` each: a vectorized
+numpy pass over whole rows (after the groupBy for the temporal ones), with
+fixed fold orders so independent oracles reproduce the floats exactly.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F  # noqa: N812
+
+from rasteret_spark.operators.arrow_kernels import (
+    _out_schema,
+    sort_doubles,
+    total_order_key,
+)
+from rasteret_spark.operators.util import nanlist
 
 GRID_COLS = ("chip_xmin", "chip_ymax", "chip_xres", "chip_yres",
              "chip_w", "chip_h", "grid_epsg")
@@ -160,40 +177,12 @@ def linear_combination(
     return out
 
 
-def _pixel_stat(tcol: Column, i: Column, stat: str) -> Column:
-    """Reduce pixel ``i`` across a collected list of value arrays: the
-    statistic over the valid observations at that slot (null if none;
-    ``count`` is the valid-observation count as double)."""
-    vals = F.filter(
-        F.transform(tcol, lambda arr: F.get(arr, i)),
-        lambda v: v.isNotNull(),
-    )
-    n = F.size(vals)
-    if stat == "count":
-        return n.cast("double")
-    if stat == "min":
-        return F.array_min(vals)
-    if stat == "max":
-        return F.array_max(vals)
-    if stat == "mean":
-        return F.when(
-            n > 0, F.aggregate(vals, F.lit(0.0), lambda a, v: a + v) / n
-        )
-    s = F.array_sort(vals)
-    lo = F.get(s, ((n - 1) / 2).cast("int"))
-    hi = F.get(s, (n / 2).cast("int"))
-    return F.when(n > 0, (lo + hi) / 2)
-
-
 def _stat_matrix(mat, stat: str):
-    """Per-slot statistic across a (T, N) float64 matrix with NaN nulls —
-    the vectorized mirror of ``_pixel_stat`` (same fold order / sort
-    semantics).  Returns a length-N float64 array with NaN where no valid
-    observation exists."""
-    import numpy as np
-
-    from rasteret_spark.operators.arrow_kernels import total_order_key
-
+    """Per-slot statistic across a (T, N) float64 matrix with NaN nulls.
+    ``mean`` folds the valid observations in row (collected) order;
+    ``min``/``max``/``median`` read an IEEE-754 total-order sort of the
+    valid observations (``-0.0`` sorts before ``0.0``).  Returns a length-N
+    float64 array with NaN where no valid observation exists."""
     T, N = mat.shape
     valid = ~np.isnan(mat)
     n = valid.sum(axis=0)
@@ -217,7 +206,7 @@ def _stat_matrix(mat, stat: str):
         return np.where(n > 0, svals[np.zeros(N, dtype=int), cols], np.nan)
     if stat == "max":
         return np.where(n > 0, svals[np.maximum(n - 1, 0), cols], np.nan)
-    # median: ((n-1)/2, n/2) with the Catalyst int-division truncation
+    # median: mean of the sorted slots (n-1)//2 and n//2
     lo = svals[np.maximum((n - 1) // 2, 0), cols]
     hi = svals[np.maximum(n // 2, 0), cols]
     return np.where(n > 0, (lo + hi) / 2, np.nan)
@@ -226,14 +215,12 @@ def _stat_matrix(mat, stat: str):
 def _group_matrix(arrs) -> "tuple":
     """List of per-timestep pixel arrays (None entries allowed) -> (T, N)
     float64 matrix in list order + N (0 when undeterminable)."""
-    import numpy as np
-
     rows = [None if a is None else np.asarray(a, dtype=np.float64) for a in arrs]
     n_px = next((r.size for r in rows if r is not None), 0)
     mat = np.full((len(rows), n_px), np.nan)
     for t, r in enumerate(rows):
         if r is None:
-            continue  # null array: every slot null (get(null, i) -> null)
+            continue  # null array: every slot null
         if r.size >= n_px:
             mat[t] = r[:n_px]
         else:  # short array: slots past its end are null
@@ -248,7 +235,6 @@ def temporal_composite(
     key_cols: tuple[str, ...] = ("chip_id", "band"),
     carry_cols: tuple[str, ...] = GRID_COLS,
     out_col: str = "composite",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-pixel reduction ACROSS TIME over chip-stack rows — the
     cloud-free-composite primitive (monthly median NDVI, max-value
@@ -260,8 +246,8 @@ def temporal_composite(
     values on even counts, numpy semantics), ``mean``, ``min``, ``max`` or
     ``count`` (valid observations per pixel — data-density maps).  Null
     pixels are skipped per pixel, NOT per timestep: a pixel cloudy at t0
-    still composites from t1..tn.  Pure Catalyst (nested higher-order
-    functions), one shuffle, no Python."""
+    still composites from t1..tn.  One shuffle (the groupBy), then one
+    vectorized numpy pass per group row (one ``mapInPandas``)."""
     if stat not in ("median", "mean", "min", "max", "count"):
         raise ValueError(f"unknown stat {stat!r}")
     g = stack.groupBy(*key_cols).agg(
@@ -269,54 +255,28 @@ def temporal_composite(
         *[F.first(c).alias(c) for c in carry_cols
           if c in stack.columns and c not in key_cols],
     )
-    carry = [c for c in g.columns if c != "_t"]
-    if impl == "arrow":
-        # same single-shuffle plan; the per-pixel reduction runs as one
-        # vectorized numpy pass per group row instead of interpreted
-        # Catalyst lambdas (bit-identical: see _stat_matrix)
-        import pandas as pd
-
-        from rasteret_spark.operators.arrow_kernels import _out_schema
-        from rasteret_spark.operators.util import nanlist
-
-        schema = _out_schema(
-            g.drop("_t"), [("n_t", "int"), (out_col, "array<double>")]
-        )
-
-        def run(batches):
-            import numpy as np
-
-            for pdf in batches:
-                n_t, comps = [], []
-                for arrs in pdf["_t"]:
-                    n_t.append(len(arrs))
-                    mat, n_px = _group_matrix(arrs)
-                    if len(arrs) == 0:
-                        comps.append(None)
-                    elif n_px == 0:
-                        comps.append([])
-                    else:
-                        comps.append(nanlist(_stat_matrix(mat, stat)))
-                out = pdf.drop(columns=["_t"])
-                out["n_t"] = pd.array(n_t, dtype="int32")
-                out[out_col] = comps
-                yield out
-
-        return g.mapInPandas(run, schema=schema)
-
-    def reduce_pixel(i: Column) -> Column:
-        return _pixel_stat(F.col("_t"), i, stat)
-
-    n_px = F.size(F.get("_t", 0))
-    # sequence(0, -1) would DESCEND, so empty pixel arrays need the guard
-    comp = F.when(
-        n_px > 0, F.transform(F.sequence(F.lit(0), n_px - 1), reduce_pixel)
-    ).otherwise(F.expr("array()").cast("array<double>"))
-    return g.select(
-        *carry,
-        F.size("_t").alias("n_t"),
-        F.when(F.size("_t") > 0, comp).alias(out_col),
+    schema = _out_schema(
+        g.drop("_t"), [("n_t", "int"), (out_col, "array<double>")]
     )
+
+    def run(batches):
+        for pdf in batches:
+            n_t, comps = [], []
+            for arrs in pdf["_t"]:
+                n_t.append(len(arrs))
+                mat, n_px = _group_matrix(arrs)
+                if len(arrs) == 0:
+                    comps.append(None)
+                elif n_px == 0:
+                    comps.append([])
+                else:
+                    comps.append(nanlist(_stat_matrix(mat, stat)))
+            out = pdf.drop(columns=["_t"])
+            out["n_t"] = pd.array(n_t, dtype="int32")
+            out[out_col] = comps
+            yield out
+
+    return g.mapInPandas(run, schema=schema)
 
 
 def change_detect(
@@ -329,7 +289,6 @@ def change_detect(
     key_cols: tuple[str, ...] = ("chip_id", "band"),
     carry_cols: tuple[str, ...] = GRID_COLS,
     out_col: str = "delta",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Two-epoch per-pixel change detection over chip-stack rows: composite
     the timesteps BEFORE ``split_ts`` and the timesteps AT/AFTER it with the
@@ -345,7 +304,8 @@ def change_detect(
 
     ONE shuffle: both epochs aggregate in the same groupBy via conditional
     collect_lists (no self-join of composites), and the per-pixel reduction
-    is pure Catalyst (`_pixel_stat`), so the plan has no Python nodes.
+    is one vectorized numpy pass per group row (`_stat_matrix`, one
+    ``mapInPandas``).
     ``stat="count"`` deltas observation DENSITY (data-coverage drift)."""
     if stat not in ("median", "mean", "min", "max", "count"):
         raise ValueError(f"unknown stat {stat!r}")
@@ -363,106 +323,62 @@ def change_detect(
         *[F.first(c).alias(c) for c in carry_cols
           if c in stack.columns and c not in key_cols],
     )
-
-    if impl == "arrow":
-        import pandas as pd
-
-        from rasteret_spark.operators.arrow_kernels import _out_schema
-        from rasteret_spark.operators.util import nanlist
-
-        extra = [("n_before", "int"), ("n_after", "int"),
-                 (out_col, "array<double>"), (f"{out_col}_valid", "int")]
-        if threshold is not None:
-            extra.append((f"{out_col}_changed", "int"))
-        schema = _out_schema(g.drop("_a", "_b"), extra)
-        thr = None if threshold is None else float(threshold)
-
-        def run(batches):
-            import numpy as np
-
-            for pdf in batches:
-                cols: dict[str, list] = {n: [] for n, _ in extra}
-                for arrs_a, arrs_b in zip(pdf["_a"], pdf["_b"]):
-                    cols["n_before"].append(len(arrs_a))
-                    cols["n_after"].append(len(arrs_b))
-                    first = next(
-                        (np.asarray(a) for a in list(arrs_a) + list(arrs_b)
-                         if a is not None),
-                        None,
-                    )
-                    n_px = 0 if first is None else first.size
-                    if n_px <= 0:
-                        cols[out_col].append([])
-                        cols[f"{out_col}_valid"].append(0)
-                        if thr is not None:
-                            cols[f"{out_col}_changed"].append(0)
-                        continue
-                    mat_a, _ = _group_matrix(list(arrs_a)[: len(arrs_a)])
-                    mat_b, _ = _group_matrix(list(arrs_b)[: len(arrs_b)])
-                    # both matrices sized by the SHARED n_px (first array of
-                    # either epoch), mirroring get(arr, i) null semantics
-                    def sized(mat):
-                        out = np.full((mat.shape[0], n_px), np.nan)
-                        m = min(mat.shape[1], n_px)
-                        out[:, :m] = mat[:, :m]
-                        return out
-
-                    delta = _stat_matrix(sized(mat_b), stat) - _stat_matrix(
-                        sized(mat_a), stat
-                    )
-                    cols[out_col].append(nanlist(delta))
-                    fin = ~np.isnan(delta)
-                    cols[f"{out_col}_valid"].append(int(fin.sum()))
-                    if thr is not None:
-                        with np.errstate(invalid="ignore"):
-                            cols[f"{out_col}_changed"].append(
-                                int((np.abs(delta[fin]) > thr).sum())
-                            )
-                out = pdf.drop(columns=["_a", "_b"])
-                for n, t in extra:
-                    out[n] = (
-                        pd.array(cols[n], dtype="int32")
-                        if t == "int"
-                        else cols[n]
-                    )
-                yield out
-
-        return g.mapInPandas(run, schema=schema)
-
-    def px(i: Column) -> Column:
-        return _pixel_stat(F.col("_b"), i, stat) - _pixel_stat(
-            F.col("_a"), i, stat
-        )
-
-    # pixel count from whichever epoch has rows (arrays are chip-sized)
-    n_px = F.size(F.coalesce(F.get("_a", 0), F.get("_b", 0)))
-    delta = F.when(
-        n_px > 0, F.transform(F.sequence(F.lit(0), n_px - 1), px)
-    ).otherwise(F.expr("array()").cast("array<double>"))
-    carry = [c for c in g.columns if c not in ("_a", "_b")]
-    out = g.select(
-        *carry,
-        F.size("_a").alias("n_before"),
-        F.size("_b").alias("n_after"),
-        delta.alias(out_col),
-    )
-    # separate projection so the delta transform evaluates once (Catalyst
-    # does not collapse projects that would duplicate a non-cheap expr)
-    stats = [
-        F.size(
-            F.filter(F.col(out_col), lambda v: v.isNotNull())
-        ).alias(f"{out_col}_valid"),
-    ]
+    extra = [("n_before", "int"), ("n_after", "int"),
+             (out_col, "array<double>"), (f"{out_col}_valid", "int")]
     if threshold is not None:
-        stats.append(
-            F.size(
-                F.filter(
-                    F.col(out_col),
-                    lambda v: F.abs(v) > F.lit(float(threshold)),
+        extra.append((f"{out_col}_changed", "int"))
+    schema = _out_schema(g.drop("_a", "_b"), extra)
+    thr = None if threshold is None else float(threshold)
+
+    def run(batches):
+        for pdf in batches:
+            cols: dict[str, list] = {n: [] for n, _ in extra}
+            for arrs_a, arrs_b in zip(pdf["_a"], pdf["_b"]):
+                cols["n_before"].append(len(arrs_a))
+                cols["n_after"].append(len(arrs_b))
+                first = next(
+                    (np.asarray(a) for a in list(arrs_a) + list(arrs_b)
+                     if a is not None),
+                    None,
                 )
-            ).alias(f"{out_col}_changed")
-        )
-    return out.select("*", *stats)
+                n_px = 0 if first is None else first.size
+                if n_px <= 0:
+                    cols[out_col].append([])
+                    cols[f"{out_col}_valid"].append(0)
+                    if thr is not None:
+                        cols[f"{out_col}_changed"].append(0)
+                    continue
+                mat_a, _ = _group_matrix(arrs_a)
+                mat_b, _ = _group_matrix(arrs_b)
+                # both matrices sized by the SHARED n_px (first array of
+                # either epoch); slots past a short array's end are null
+                def sized(mat):
+                    out = np.full((mat.shape[0], n_px), np.nan)
+                    m = min(mat.shape[1], n_px)
+                    out[:, :m] = mat[:, :m]
+                    return out
+
+                delta = _stat_matrix(sized(mat_b), stat) - _stat_matrix(
+                    sized(mat_a), stat
+                )
+                cols[out_col].append(nanlist(delta))
+                fin = ~np.isnan(delta)
+                cols[f"{out_col}_valid"].append(int(fin.sum()))
+                if thr is not None:
+                    with np.errstate(invalid="ignore"):
+                        cols[f"{out_col}_changed"].append(
+                            int((np.abs(delta[fin]) > thr).sum())
+                        )
+            out = pdf.drop(columns=["_a", "_b"])
+            for n, t in extra:
+                out[n] = (
+                    pd.array(cols[n], dtype="int32")
+                    if t == "int"
+                    else cols[n]
+                )
+            yield out
+
+    return g.mapInPandas(run, schema=schema)
 
 
 def temporal_trend(
@@ -473,7 +389,6 @@ def temporal_trend(
     tie_cols: tuple[str, ...] = ("image_id",),
     carry_cols: tuple[str, ...] = GRID_COLS,
     per_seconds: float = 86400.0,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-pixel least-squares temporal trend over chip-stack rows: for
     every pixel, the OLS slope and intercept of ``value ~ time`` across the
@@ -487,10 +402,11 @@ def temporal_trend(
     observations exist) and an ``intercept`` array (null exactly where
     slope is).
 
-    ONE shuffle (the groupBy); the per-pixel fold is a pure Catalyst
-    ``aggregate`` over a DETERMINISTICALLY ordered observation array —
-    ``array_sort`` on (time, tie_cols, values) structs — so float sums are
-    reproducible and independent oracles can mirror them bit-exactly."""
+    ONE shuffle (the groupBy); the per-pixel sums fold time-major in one
+    vectorized numpy pass per group row (one ``mapInPandas``) over a
+    DETERMINISTICALLY ordered observation array — ``array_sort`` on
+    (time, tie_cols, values) structs — so float sums are reproducible and
+    independent oracles can mirror them bit-exactly."""
     for c in (value_col, time_col):
         if c not in stack.columns:
             raise ValueError(f"temporal_trend needs column {c!r}")
@@ -512,151 +428,79 @@ def temporal_trend(
         *[F.first(c).alias(c) for c in carry_cols
           if c in stack.columns and c not in key_cols],
     )
-    if impl == "arrow":
-        import pandas as pd
-
-        from rasteret_spark.operators.arrow_kernels import _out_schema
-        from rasteret_spark.operators.util import nanlist
-
-        schema = _out_schema(
-            g.drop("_obs"),
-            [("n_t", "int"), ("slope", "array<double>"),
-             ("intercept", "array<double>")],
-        )
-        per_s = float(per_seconds)
-
-        def _ts_seconds(ts) -> float:
-            # mirror Catalyst cast(timestamp as double): whole microseconds
-            # divided by 1e6 as ONE double division
-            return (pd.Timestamp(ts).value // 1000) / 1000000.0
-
-        def run(batches):
-            import numpy as np
-
-            for pdf in batches:
-                n_t, slopes, intercepts = [], [], []
-                for obs in pdf["_obs"]:
-                    n_t.append(len(obs))
-                    if len(obs) == 0:
-                        slopes.append(None)
-                        intercepts.append(None)
-                        continue
-                    first_v = obs[0]["v"]
-                    n_px = 0 if first_v is None else len(first_v)
-                    mat, _ = _group_matrix([e["v"] for e in obs])
-                    if mat.shape[1] != n_px:  # first v null: every get null
-                        mat = np.full((len(obs), n_px), np.nan)
-                    t0 = _ts_seconds(obs[0]["t"])
-                    tdays = np.array(
-                        [(_ts_seconds(e["t"]) - t0) / per_s for e in obs]
-                    )
-                    n = np.zeros(n_px); st = np.zeros(n_px)
-                    sv = np.zeros(n_px); stt = np.zeros(n_px)
-                    stv = np.zeros(n_px)
-                    for k in range(len(obs)):  # time-major fold, T order
-                        v = mat[k]
-                        ok = ~np.isnan(v)
-                        t = tdays[k]
-                        n = np.where(ok, n + 1.0, n)
-                        st = np.where(ok, st + t, st)
-                        sv = np.where(ok, sv + np.where(ok, v, 0.0), sv)
-                        stt = np.where(ok, stt + t * t, stt)
-                        stv = np.where(ok, stv + t * np.where(ok, v, 0.0), stv)
-                    den = n * stt - st * st
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        slope = np.where(
-                            den != 0.0, (n * stv - st * sv) / den, np.nan
-                        )
-                        intercept = (sv - slope * st) / n
-                    slopes.append(nanlist(slope))
-                    intercepts.append(nanlist(intercept))
-                out = pdf.drop(columns=["_obs"])
-                out["n_t"] = pd.array(n_t, dtype="int32")
-                out["slope"] = slopes
-                out["intercept"] = intercepts
-                yield out
-
-        return g.mapInPandas(run, schema=schema)
-
-    first = F.try_element_at(F.col("_obs"), F.lit(1))
-    t0 = first["t"].cast("double")
-    zero = F.lit(0.0)
-    # empty groups (every values array null) have no first element; clamp
-    # so array_repeat never sees a null/negative count
-    n_px = F.greatest(
-        F.lit(0), F.coalesce(F.size(first["v"]), F.lit(0))
+    schema = _out_schema(
+        g.drop("_obs"),
+        [("n_t", "int"), ("slope", "array<double>"),
+         ("intercept", "array<double>")],
     )
+    per_s = float(per_seconds)
 
-    # time-major folds: five array accumulators updated once per timestep
-    # with a vectorized zip_with — per pixel the add sequence is identical
-    # to a per-pixel loop (same T order), so sums stay bit-reproducible,
-    # but Catalyst never allocates a per-pixel struct accumulator
-    def fold(update) -> Column:
-        return F.aggregate(
-            F.col("_obs"),
-            F.array_repeat(zero, n_px),
-            lambda acc, e: F.zip_with(
-                acc, e["v"], lambda a, v: update(
-                    a, v, (e["t"].cast("double") - t0)
-                    / F.lit(float(per_seconds)),
+    def _ts_seconds(ts) -> float:
+        # Spark's cast(timestamp as double): whole microseconds divided by
+        # 1e6 as ONE double division
+        return (pd.Timestamp(ts).value // 1000) / 1000000.0
+
+    def run(batches):
+        for pdf in batches:
+            n_t, slopes, intercepts = [], [], []
+            for obs in pdf["_obs"]:
+                n_t.append(len(obs))
+                if len(obs) == 0:
+                    slopes.append(None)
+                    intercepts.append(None)
+                    continue
+                first_v = obs[0]["v"]
+                n_px = 0 if first_v is None else len(first_v)
+                mat, _ = _group_matrix([e["v"] for e in obs])
+                if mat.shape[1] != n_px:  # first v null: every get null
+                    mat = np.full((len(obs), n_px), np.nan)
+                t0 = _ts_seconds(obs[0]["t"])
+                tdays = np.array(
+                    [(_ts_seconds(e["t"]) - t0) / per_s for e in obs]
                 )
-            ),
-        )
+                n = np.zeros(n_px); st = np.zeros(n_px)
+                sv = np.zeros(n_px); stt = np.zeros(n_px)
+                stv = np.zeros(n_px)
+                for k in range(len(obs)):  # time-major fold, T order
+                    v = mat[k]
+                    ok = ~np.isnan(v)
+                    t = tdays[k]
+                    n = np.where(ok, n + 1.0, n)
+                    st = np.where(ok, st + t, st)
+                    sv = np.where(ok, sv + np.where(ok, v, 0.0), sv)
+                    stt = np.where(ok, stt + t * t, stt)
+                    stv = np.where(ok, stv + t * np.where(ok, v, 0.0), stv)
+                den = n * stt - st * st
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    slope = np.where(
+                        den != 0.0, (n * stv - st * sv) / den, np.nan
+                    )
+                    intercept = (sv - slope * st) / n
+                slopes.append(nanlist(slope))
+                intercepts.append(nanlist(intercept))
+            out = pdf.drop(columns=["_obs"])
+            out["n_t"] = pd.array(n_t, dtype="int32")
+            out["slope"] = slopes
+            out["intercept"] = intercepts
+            yield out
 
-    def valid_add(term):
-        return lambda a, v, t: F.when(v.isNotNull(), a + term(v, t)).otherwise(a)
-
-    sums = {
-        "n": fold(valid_add(lambda v, t: F.lit(1.0))),
-        "st": fold(valid_add(lambda v, t: t)),
-        "sv": fold(valid_add(lambda v, t: v)),
-        "stt": fold(valid_add(lambda v, t: t * t)),
-        "stv": fold(valid_add(lambda v, t: t * v)),
-    }
-    carry = [c for c in g.columns if c != "_obs"]
-    folded = g.select(
-        *carry,
-        F.size("_obs").alias("n_t"),
-        *[e.alias(f"_{k}") for k, e in sums.items()],
-    )
-    i = F.sequence(F.lit(0), F.size("_n") - 1)
-
-    def at(col: str, j: Column) -> Column:
-        return F.get(F.col(col), j)
-
-    def fit(j: Column) -> Column:
-        n, st, sv = at("_n", j), at("_st", j), at("_sv", j)
-        stt, stv = at("_stt", j), at("_stv", j)
-        den = n * stt - st * st
-        slope = F.when(den != zero, (n * stv - st * sv) / den)
-        return F.struct(
-            slope.alias("m"), ((sv - slope * st) / n).alias("b")
-        )
-
-    fits = F.when(F.col("n_t") > 0, F.transform(i, fit))
-    return folded.select(
-        *carry, "n_t", fits.alias("_fit")
-    ).select(
-        *carry, "n_t",
-        F.transform("_fit", lambda s: s["m"]).alias("slope"),
-        F.transform("_fit", lambda s: s["b"]).alias("intercept"),
-    )
+    return g.mapInPandas(run, schema=schema)
 
 
 def chip_stats(
     per_band: DataFrame,
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
     value_col: str = "values",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-chip radiometric QA: exact linear-interpolated quantiles, value
     range, null fraction and saturated-pixel count over one chip band's
     pixel array — the chip-quality screen (drop cloudy/flat/clipped chips
     before they reach a training set).
 
-    ZERO shuffles: every statistic is a Catalyst expression over the row's
-    own array (sort + index math), so the pass pipelines into whatever
-    produced the rows.  Quantiles use the linear-interpolation convention
+    ZERO shuffles: every statistic comes from the row's own array (one
+    total-order sort + index math) in one ``mapInPandas``, so the pass
+    pipelines into whatever produced the rows.  Quantiles use the
+    linear-interpolation convention
     ``v[lo] + (v[hi] - v[lo]) * (p*(n-1) - lo)`` over the ascending valid
     pixels — numpy's default — emitted as ``q25`` for p=0.25 etc.;
     ``at_max_px`` counts pixels equal to the chip maximum (saturation /
@@ -666,109 +510,60 @@ def chip_stats(
     for p in probs:
         if not 0.0 <= p <= 1.0:
             raise ValueError(f"quantile prob {p} outside [0, 1]")
-    if impl == "arrow":
-        import math
-
-        import pandas as pd
-
-        from rasteret_spark.operators.arrow_kernels import (
-            _out_schema,
-            sort_doubles,
-        )
-
-        qnames = [f"q{int(round(p * 100)):02d}" for p in probs]
-        extra = (
-            [("n_valid", "int"), ("null_frac", "double"), ("vmin", "double"),
-             ("vmax", "double"), ("at_max_px", "int")]
-            + [(qn, "double") for qn in qnames]
-        )
-        schema = _out_schema(per_band, extra)
-        pvals = [float(p) for p in probs]
-
-        def run(batches):
-            import numpy as np
-
-            for pdf in batches:
-                cols: dict[str, list] = {n: [] for n, _ in extra}
-                for cell in pdf[value_col]:
-                    if cell is None or (
-                        isinstance(cell, float) and np.isnan(cell)
-                    ):
-                        for n_, _t in extra:
-                            cols[n_].append(None)
-                        continue
-                    arr = np.asarray(cell, dtype=np.float64)
-                    s = sort_doubles(arr[~np.isnan(arr)])
-                    n = int(s.size)
-                    n_px = int(arr.size)
-                    cols["n_valid"].append(n)
-                    cols["null_frac"].append(
-                        float(n_px - n) / float(n_px) if n_px > 0 else None
-                    )
-                    cols["vmin"].append(float(s[0]) if n else None)
-                    vmax = float(s[-1]) if n else None
-                    cols["vmax"].append(vmax)
-                    if vmax is None:
-                        cols["at_max_px"].append(0)
-                    else:
-                        with np.errstate(invalid="ignore"):
-                            cols["at_max_px"].append(int((arr == vmax).sum()))
-                    for p, qn in zip(pvals, qnames):
-                        if n == 0:
-                            cols[qn].append(None)
-                            continue
-                        idx = p * float(n - 1)
-                        lo = int(math.floor(idx))
-                        hi = int(math.ceil(idx))
-                        vlo, vhi = float(s[lo]), float(s[hi])
-                        cols[qn].append(vlo + (vhi - vlo) * (idx - float(lo)))
-                out = pdf.copy()
-                for n_, t in extra:
-                    out[n_] = (
-                        pd.array(cols[n_], dtype="Int32")
-                        if t == "int"
-                        else cols[n_]
-                    )
-                yield out
-
-        return per_band.mapInPandas(run, schema=schema)
-    # stage the sorted valid pixels ONCE: Catalyst does not CSE
-    # lambda-bearing expressions, so inlining the sort into every statistic
-    # re-sorts per output column — and re-sorts PER ELEMENT inside the
-    # at_max_px filter lambda (O(N^2 log N) per chip).  A separate
-    # projection pins a single sort per row; CollapseProject keeps it
-    # (non-cheap expression, many references).
-    sorted_col = "_cs_sorted"
-    staged = per_band.select(
-        "*",
-        F.array_sort(
-            F.filter(F.col(value_col), lambda v: v.isNotNull())
-        ).alias(sorted_col),
+    qnames = [f"q{int(round(p * 100)):02d}" for p in probs]
+    extra = (
+        [("n_valid", "int"), ("null_frac", "double"), ("vmin", "double"),
+         ("vmax", "double"), ("at_max_px", "int")]
+        + [(qn, "double") for qn in qnames]
     )
-    vals = F.col(sorted_col)
-    n = F.size(vals)
-    n_px = F.size(F.col(value_col))
-    vmax = F.try_element_at(vals, F.lit(-1))
-    cols = [
-        n.alias("n_valid"),
-        F.when(
-            n_px > 0, (n_px - n).cast("double") / n_px.cast("double")
-        ).alias("null_frac"),
-        F.try_element_at(vals, F.lit(1)).alias("vmin"),
-        vmax.alias("vmax"),
-        F.size(
-            F.filter(F.col(value_col), lambda v: v == vmax)
-        ).alias("at_max_px"),
-    ]
-    for p in probs:
-        idx = F.lit(float(p)) * (n - 1).cast("double")
-        lo = F.floor(idx).cast("int")
-        hi = F.ceil(idx).cast("int")
-        vlo = F.get(vals, lo)
-        vhi = F.get(vals, hi)
-        q = F.when(n > 0, vlo + (vhi - vlo) * (idx - lo.cast("double")))
-        cols.append(q.alias(f"q{int(round(p * 100)):02d}"))
-    return staged.select("*", *cols).drop(sorted_col)
+    schema = _out_schema(per_band, extra)
+    pvals = [float(p) for p in probs]
+
+    def run(batches):
+        for pdf in batches:
+            cols: dict[str, list] = {n: [] for n, _ in extra}
+            for cell in pdf[value_col]:
+                if cell is None or (
+                    isinstance(cell, float) and np.isnan(cell)
+                ):
+                    for n_, _t in extra:
+                        cols[n_].append(None)
+                    continue
+                arr = np.asarray(cell, dtype=np.float64)
+                s = sort_doubles(arr[~np.isnan(arr)])
+                n = int(s.size)
+                n_px = int(arr.size)
+                cols["n_valid"].append(n)
+                cols["null_frac"].append(
+                    float(n_px - n) / float(n_px) if n_px > 0 else None
+                )
+                cols["vmin"].append(float(s[0]) if n else None)
+                vmax = float(s[-1]) if n else None
+                cols["vmax"].append(vmax)
+                if vmax is None:
+                    cols["at_max_px"].append(0)
+                else:
+                    with np.errstate(invalid="ignore"):
+                        cols["at_max_px"].append(int((arr == vmax).sum()))
+                for p, qn in zip(pvals, qnames):
+                    if n == 0:
+                        cols[qn].append(None)
+                        continue
+                    idx = p * float(n - 1)
+                    lo = int(math.floor(idx))
+                    hi = int(math.ceil(idx))
+                    vlo, vhi = float(s[lo]), float(s[hi])
+                    cols[qn].append(vlo + (vhi - vlo) * (idx - float(lo)))
+            out = pdf.copy()
+            for n_, t in extra:
+                out[n_] = (
+                    pd.array(cols[n_], dtype="Int32")
+                    if t == "int"
+                    else cols[n_]
+                )
+            yield out
+
+    return per_band.mapInPandas(run, schema=schema)
 
 
 def qa_mask(
@@ -854,7 +649,7 @@ def stretch(
     (`src/rasteret/integrations/torchgeo.py:292-299`).
 
     ZERO shuffles: the quantile cut points use the same linear-interpolation
-    expression tree as :func:`chip_stats` over the row's own sorted valid
+    convention as :func:`chip_stats` over the row's own sorted valid
     pixels, and the rescale is ``clamp((v - lo) / (hi - lo), 0, 1)`` per
     pixel (``hi == lo`` -> flat chip -> 0.0).  Adds ``cut_lo`` / ``cut_hi``,
     the stretched array, and ``clip_lo_px`` / ``clip_hi_px`` counts so a
@@ -981,7 +776,6 @@ def threshold_mask(
         "*",
         F.size(F.filter(F.col(out_col), lambda b: b)).alias(f"{out_col}_count"),
     )
-
 
 
 def global_band_stats(

@@ -186,17 +186,6 @@ def _pairs_limit(spark) -> int:
         return BROADCAST_PAIRS_DEFAULT
 
 
-def choose_broadcast(pairs: DataFrame, explicit: bool | None) -> bool:
-    """Standalone broadcast-vs-shuffle guard over a pair DataFrame: bounded
-    by conf ``spark.rasteret.broadcastPairsLimit`` (default 20M pairs,
-    ``BROADCAST_PAIRS_DEFAULT``).  Uses ``limit(n+1).count()`` so the scan
-    short-circuits at the bound.  ``explicit`` (True/False) overrides."""
-    if explicit is not None:
-        return explicit
-    limit = _pairs_limit(pairs.sparkSession)
-    return pairs.limit(limit + 1).count() <= limit
-
-
 # persisted grouped sides from auto-mode decisions, released on the next
 # auto-mode call (by then the previous plan has been consumed in any
 # straight-line pipeline) or explicitly via release_grouped_caches()

@@ -6,13 +6,13 @@ filtering to numpy/xarray on the client (`examples/landsat_xarray.py`,
 kind of post-processing).  At 100 TB the neighborhood pass has to run WHERE
 the pixels already are: these operators evaluate (2R+1)x(2R+1) stencils over
 the engine's per-band rows (MOSAIC_SCHEMA shape: one row per chip x band
-with ``values array<double>`` + ``chip_w``/``chip_h``) entirely in Catalyst
-— the stencil is unrolled into a fixed expression tree per pixel, so the
-plan has NO Python nodes and NO shuffle (each chip row is independent; the
-operator is a pure projection and pipelines into whatever produced the
-rows).  Chips overlap by construction when the grid stride < chip size, so
-no halo exchange is needed — the window never has to cross a chip boundary
-that the sampler didn't already cover.
+with ``values array<double>`` + ``chip_w``/``chip_h``) as vectorized numpy
+kernels (``operators/arrow_kernels.py``) over whole chips — ONE
+``mapInPandas`` per operator and NO shuffle (each chip row is independent;
+the operator pipelines into whatever produced the rows).  Chips overlap by
+construction when the grid stride < chip size, so no halo exchange is
+needed — the window never has to cross a chip boundary that the sampler
+didn't already cover.
 
 Edge policy: replicate (out-of-chip taps clamp to the nearest edge pixel —
 numpy's ``np.pad(mode="edge")``).  Null semantics are per operator:
@@ -30,16 +30,12 @@ numpy's ``np.pad(mode="edge")``).  Null semantics are per operator:
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F  # noqa: N812
+from rasteret_spark.operators import arrow_kernels as ak
+from rasteret_spark.operators.arrow_kernels import SOBEL_X, SOBEL_Y  # noqa: F401
 
 FOCAL_STATS = ("mean", "min", "max", "sum", "count")
-
-SOBEL_X = ((-1.0, 0.0, 1.0), (-2.0, 0.0, 2.0), (-1.0, 0.0, 1.0))
-SOBEL_Y = ((-1.0, -2.0, -1.0), (0.0, 0.0, 0.0), (1.0, 2.0, 1.0))
 
 
 def _require(df: DataFrame, value_col: str) -> None:
@@ -48,42 +44,9 @@ def _require(df: DataFrame, value_col: str) -> None:
             raise ValueError(f"focal operators need column {c!r}")
 
 
-def _taps(i: Column, radius: int, value_col: str) -> list[tuple[int, int, Column]]:
-    """The clamped window around flat index ``i``: a list of
-    ``(dr, dc, value_expr)`` in row-major offset order (the order every
-    fold below accumulates in — truth mirrors must match it)."""
-    w = F.col("chip_w").cast("int")
-    h = F.col("chip_h").cast("int")
-    r = F.floor(i / w).cast("int")
-    c = (i % w).cast("int")
-    out = []
-    for dr in range(-radius, radius + 1):
-        rr = F.greatest(F.lit(0), F.least(r + F.lit(dr), h - F.lit(1)))
-        for dc in range(-radius, radius + 1):
-            cc = F.greatest(F.lit(0), F.least(c + F.lit(dc), w - F.lit(1)))
-            out.append(
-                (dr, dc, F.try_element_at(F.col(value_col), rr * w + cc + F.lit(1)))
-            )
-    return out
-
-
-def _map_pixels(df: DataFrame, value_col: str, px_fn, out_col: str) -> DataFrame:
-    """Project ``out_col = transform(sequence(0, w*h-1), px_fn)`` — one
-    Catalyst pass, guarded against empty arrays (``sequence(0, -1)``
-    descends)."""
-    n = F.col("chip_w").cast("int") * F.col("chip_h").cast("int")
-    arr = F.when(
-        (n > 0) & F.col(value_col).isNotNull(),
-        F.transform(F.sequence(F.lit(0), n - F.lit(1)), px_fn),
-    )
-    return df.select("*", arr.alias(out_col))
-
-
 def _arrow_map(per_band, value_col, out_col, fn):
     """Run a per-chip 2-D kernel through the shared mapInPandas runner:
-    null/short rows -> null output column (mirrors the ``F.when`` guard of
-    ``_map_pixels``)."""
-    from rasteret_spark.operators import arrow_kernels as ak
+    null/short rows -> null output column."""
 
     def row_fn(row, arr2d):
         if arr2d is None:
@@ -101,7 +64,6 @@ def focal_stats(
     radius: int = 1,
     value_col: str = "values",
     out_col: str | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Moving-window statistic per pixel (focal mean/min/max/sum/count).
 
@@ -115,43 +77,10 @@ def focal_stats(
     if radius < 1:
         raise ValueError("radius must be >= 1")
     _require(per_band, value_col)
-    out_col = out_col or f"focal_{stat}"
-    if impl == "arrow" and stat in ("mean", "sum", "count"):
-        # vectorized numpy stencil, bit-identical fold order (guide §4.2);
-        # min/max need total-order reductions and keep the Catalyst tree
-        from rasteret_spark.operators import arrow_kernels as ak
-
-        return _arrow_map(
-            per_band, value_col, out_col,
-            lambda row, a: ak.focal_stat_2d(a, stat, radius),
-        )
-
-    def px(i: Column) -> Column:
-        vals = F.filter(
-            F.array(*[t for _, _, t in _taps(i, radius, value_col)]),
-            lambda v: v.isNotNull(),
-        )
-        nv = F.size(vals)
-        if stat == "count":
-            return nv.cast("double")
-        if stat == "min":
-            return F.array_min(vals)
-        if stat == "max":
-            return F.array_max(vals)
-        s = F.aggregate(vals, F.lit(0.0), lambda a, v: a + v)
-        if stat == "sum":
-            return F.when(nv > 0, s)
-        return F.when(nv > 0, s / nv)
-
-    return _map_pixels(per_band, value_col, px, out_col)
-
-
-def _weighted_terms(
-    taps: list[tuple[int, int, Column]], kernel, radius: int
-) -> list[tuple[Column, float]]:
-    return [
-        (t, float(kernel[dr + radius][dc + radius])) for dr, dc, t in taps
-    ]
+    return _arrow_map(
+        per_band, value_col, out_col or f"focal_{stat}",
+        lambda row, a: ak.focal_stat_2d(a, stat, radius),
+    )
 
 
 def convolve(
@@ -160,7 +89,6 @@ def convolve(
     normalize: bool = False,
     value_col: str = "values",
     out_col: str = "conv",
-    impl: str = "arrow",
 ) -> DataFrame:
     """2-D convolution with an arbitrary odd-sized square kernel.
 
@@ -172,35 +100,11 @@ def convolve(
     size = len(k)
     if size % 2 != 1 or size < 3 or any(len(row) != size for row in k):
         raise ValueError("kernel must be square with odd size >= 3")
-    radius = size // 2
     _require(per_band, value_col)
-    if impl == "arrow":
-        from rasteret_spark.operators import arrow_kernels as ak
-
-        return _arrow_map(
-            per_band, value_col, out_col,
-            lambda row, a: ak.convolve_2d(a, k, normalize),
-        )
-
-    def px(i: Column) -> Column:
-        terms = _weighted_terms(_taps(i, radius, value_col), k, radius)
-        if normalize:
-            num = reduce(add, [
-                F.when(t.isNotNull(), t * F.lit(w)).otherwise(F.lit(0.0))
-                for t, w in terms
-            ])
-            den = reduce(add, [
-                F.when(t.isNotNull(), F.lit(w)).otherwise(F.lit(0.0))
-                for t, w in terms
-            ])
-            return num / F.nullif(den, F.lit(0.0))
-        s = reduce(add, [t * F.lit(w) for t, w in terms])
-        any_null = reduce(
-            lambda a, b: a | b, [t.isNull() for t, _ in terms]
-        )
-        return F.when(~any_null, s)
-
-    return _map_pixels(per_band, value_col, px, out_col)
+    return _arrow_map(
+        per_band, value_col, out_col,
+        lambda row, a: ak.convolve_2d(a, k, normalize),
+    )
 
 
 TERRAIN_OUTS = ("dzdx", "dzdy", "slope", "aspect", "hillshade")
@@ -215,15 +119,14 @@ def terrain(
     value_col: str = "values",
     xres_col: str = "chip_xres",
     yres_col: str = "chip_yres",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Terrain derivatives from elevation chips via Horn's method (the
     standard GIS kernel): per-pixel 3x3 weighted gradients, slope, compass
     aspect, and analytic hillshade.  The reference's users run
     ``gdaldem``-style products client-side on assembled arrays; at 100 TB
-    the stencil runs where the pixels are, as a pure Catalyst projection
-    (no Python nodes, zero added shuffles — same contract as the other
-    focal operators, plan-asserted in tests).
+    the stencil runs where the pixels are, as one vectorized numpy pass per
+    chip (one ``mapInPandas``, zero added shuffles — same contract as the
+    other focal operators, plan-asserted in tests).
 
     Conventions (Esri/GDAL): the grid is north-up (row 0 = max y), so
     ``dzdx`` is (east - west) / (8 * |xres|) and ``dzdy`` is
@@ -233,9 +136,10 @@ def terrain(
     (0 = north, clockwise, null for flat cells); ``hillshade`` is the
     0-255 illumination for a sun at ``altitude``/``azimuth`` degrees,
     clamped at 0.  Strict stencil: ANY null tap nulls every output at
-    that pixel (a gradient with a missing term is not that gradient)."""
-    import math
-
+    that pixel (a gradient with a missing term is not that gradient).
+    The gradient surfaces are exact; the trig surfaces go through libm
+    (pinned by tolerance in tests, like the reference pins gdaldem
+    parity)."""
     bad = [o for o in outs if o not in TERRAIN_OUTS]
     if bad:
         raise ValueError(f"unknown terrain outputs {bad} (of {TERRAIN_OUTS})")
@@ -243,84 +147,24 @@ def terrain(
     for c in (xres_col, yres_col):
         if c not in per_band.columns:
             raise ValueError(f"terrain needs column {c!r}")
-    if impl == "arrow":
-        # gradient surfaces bit-exact; trig surfaces via libm (pinned by
-        # tolerance in tests, like the reference pins gdaldem parity)
-        from rasteret_spark.operators import arrow_kernels as ak
 
-        def row_fn(row, arr2d):
-            if arr2d is None:
-                return {o: None for o in outs}
-            return ak.terrain_2d(
-                arr2d, tuple(outs), float(row[xres_col]), float(row[yres_col]),
-                float(z_factor), float(altitude), float(azimuth),
-            )
-
-        return ak.map_chip_rows(
-            per_band, [(o, "array<double>") for o in outs], row_fn,
-            value_col=value_col,
-        )
-    zf = F.lit(float(z_factor))
-    deg = F.lit(180.0 / math.pi)
-    zen = math.radians(90.0 - float(altitude))
-    azm = math.radians((360.0 - float(azimuth) + 90.0) % 360.0)
-
-    def px(i: Column) -> Column:
-        taps = _taps(i, 1, value_col)
-        t = {(dr, dc): c for dr, dc, c in taps}
-        a, b, cc = t[(-1, -1)], t[(-1, 0)], t[(-1, 1)]
-        d, f_, = t[(0, -1)], t[(0, 1)]
-        g, h, ii = t[(1, -1)], t[(1, 0)], t[(1, 1)]
-        p = ((cc + 2.0 * f_ + ii) - (a + 2.0 * d + g)) / (
-            8.0 * F.abs(F.col(xres_col).cast("double"))
-        )
-        q = ((a + 2.0 * b + cc) - (g + 2.0 * h + ii)) / (
-            8.0 * F.abs(F.col(yres_col).cast("double"))
-        )
-        any_null = reduce(lambda x, y: x | y, [c.isNull() for _, _, c in taps])
-        out = {"dzdx": p, "dzdy": q}
-        if not {"slope", "aspect", "hillshade"}.isdisjoint(outs):
-            srad = F.atan(zf * F.sqrt(p * p + q * q))
-            out["slope"] = srad * deg
-            # Esri's atan2(dzdy_rowdown, -dzdx): our q is y-up, so negate
-            arad = F.atan2(-q, -p)
-            if "aspect" in outs:
-                compass = F.when(
-                    (p == F.lit(0.0)) & (q == F.lit(0.0)), F.lit(None)
-                ).otherwise(
-                    ((F.lit(450.0) - arad * deg) % F.lit(360.0))
-                )
-                out["aspect"] = compass
-            if "hillshade" in outs:
-                hs = F.lit(255.0) * (
-                    F.lit(math.cos(zen)) * F.cos(srad)
-                    + F.lit(math.sin(zen)) * F.sin(srad)
-                    * F.cos(F.lit(azm) - arad)
-                )
-                out["hillshade"] = F.greatest(F.lit(0.0), hs)
-        return F.struct(
-            *[F.when(~any_null, out[o]).alias(o) for o in outs]
+    def row_fn(row, arr2d):
+        if arr2d is None:
+            return {o: None for o in outs}
+        return ak.terrain_2d(
+            arr2d, tuple(outs), float(row[xres_col]), float(row[yres_col]),
+            float(z_factor), float(altitude), float(azimuth),
         )
 
-    n = F.col("chip_w").cast("int") * F.col("chip_h").cast("int")
-    packed = F.when(
-        (n > 0) & F.col(value_col).isNotNull(),
-        F.transform(F.sequence(F.lit(0), n - F.lit(1)), px),
-    )
-    def _field(name):
-        return lambda s: s[name]
-
-    step = per_band.select("*", packed.alias("_terrain"))
-    return step.select(
-        *per_band.columns,
-        *[F.transform("_terrain", _field(o)).alias(o) for o in outs],
+    return ak.map_chip_rows(
+        per_band, [(o, "array<double>") for o in outs], row_fn,
+        value_col=value_col,
     )
 
 
 def spatial_stats(
     per_band: DataFrame,
     value_col: str = "values",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-chip spatial autocorrelation: Moran's I and Geary's C under
     rook contiguity (unit weights between orthogonally adjacent VALID
@@ -336,148 +180,30 @@ def spatial_stats(
     N/S/W/E offset) order, so independent mirrors reproduce the floats
     bit-exactly."""
     _require(per_band, value_col)
-    if impl == "arrow":
-        from rasteret_spark.operators import arrow_kernels as ak
 
-        def row_fn(row, arr2d):
-            if arr2d is None:
-                return {"n_valid": None, "w_pairs": None,
-                        "morans_i": None, "gearys_c": None}
-            return ak.spatial_stats_row(arr2d)
+    def row_fn(row, arr2d):
+        if arr2d is None:
+            return {"n_valid": None, "w_pairs": None,
+                    "morans_i": None, "gearys_c": None}
+        return ak.spatial_stats_row(arr2d)
 
-        return ak.map_chip_rows(
-            per_band,
-            [("n_valid", "int"), ("w_pairs", "bigint"),
-             ("morans_i", "double"), ("gearys_c", "double")],
-            row_fn, value_col=value_col,
-        )
-    w = F.col("chip_w").cast("int")
-    h = F.col("chip_h").cast("int")
-    vals = F.col(value_col)
-    n_px = w * h
-
-    def seq() -> Column:
-        return F.sequence(F.lit(0), n_px - 1)
-
-    def fold(arr: Column) -> Column:
-        return F.aggregate(
-            F.filter(arr, lambda v: v.isNotNull()),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-
-    # stage n_valid/mean as real columns: Catalyst does not CSE
-    # lambda-bearing expressions, so inlining the mean (a full-array fold)
-    # into the per-pixel cross/ssdev lambdas re-folds the whole array PER
-    # PIXEL — O(N^2) per chip.  A separate projection evaluates each once
-    # per row; CollapseProject keeps it (non-cheap, many references).
-    nv_col, mean_col = "_ss_n_valid", "_ss_mean"
-    n_valid_expr = F.size(F.filter(vals, lambda v: v.isNotNull()))
-    per_band = per_band.select(
-        "*",
-        n_valid_expr.alias(nv_col),
-        F.when(
-            n_valid_expr > 0, fold(vals) / n_valid_expr.cast("double")
-        ).alias(mean_col),
+    return ak.map_chip_rows(
+        per_band,
+        [("n_valid", "int"), ("w_pairs", "bigint"),
+         ("morans_i", "double"), ("gearys_c", "double")],
+        row_fn, value_col=value_col,
     )
-    n_valid = F.col(nv_col)
-    mean = F.col(mean_col)
-
-    def at(i: Column) -> Column:
-        return F.try_element_at(vals, i + F.lit(1))
-
-    def rook(i: Column):
-        """N/S/W/E neighbor values; out-of-chip -> null (no clamping)."""
-        r = F.floor(i / w).cast("int")
-        c = (i % w).cast("int")
-        north = F.when(r > 0, at(i - w))
-        south = F.when(r < h - 1, at(i + w))
-        west = F.when(c > 0, at(i - 1))
-        east = F.when(c < w - 1, at(i + 1))
-        return [north, south, west, east]
-
-    def dev(v: Column) -> Column:
-        return v - mean
-
-    # per-pixel terms (null where the center pixel is null), folded
-    # pixel-major; neighbor contributions accumulate in N/S/W/E order
-    def links(i: Column) -> Column:
-        v = at(i)
-        cnt = sum(
-            F.when(nb.isNotNull(), 1).otherwise(0) for nb in rook(i)
-        )
-        return F.when(v.isNotNull(), cnt.cast("double"))
-
-    def cross(i: Column) -> Column:
-        v = at(i)
-        s = F.lit(0.0)
-        for nb in rook(i):
-            s = s + F.coalesce(dev(nb), F.lit(0.0))
-        return F.when(v.isNotNull(), dev(v) * s)
-
-    def sqdiff(i: Column) -> Column:
-        v = at(i)
-        s = F.lit(0.0)
-        for nb in rook(i):
-            d = v - nb
-            s = s + F.coalesce(d * d, F.lit(0.0))
-        return F.when(v.isNotNull(), s)
-
-    def ssdev(i: Column) -> Column:
-        v = at(i)
-        return F.when(v.isNotNull(), dev(v) * dev(v))
-
-    # the four folds are each referenced several times in the output
-    # expressions — stage them too (same CSE rationale as the mean)
-    wp_col, ni_col, nc_col, den_col = "_ss_wp", "_ss_ni", "_ss_nc", "_ss_den"
-    per_band = per_band.select(
-        "*",
-        fold(F.transform(seq(), links)).alias(wp_col),
-        fold(F.transform(seq(), cross)).alias(ni_col),
-        fold(F.transform(seq(), sqdiff)).alias(nc_col),
-        fold(F.transform(seq(), ssdev)).alias(den_col),
-    )
-    w_pairs, num_i = F.col(wp_col), F.col(ni_col)
-    num_c, den = F.col(nc_col), F.col(den_col)
-    nv = n_valid.cast("double")
-    ok = (w_pairs > 0) & (den != 0.0)
-    return per_band.select(
-        "*",
-        n_valid.alias("n_valid"),
-        w_pairs.cast("bigint").alias("w_pairs"),
-        F.when(ok, (nv / w_pairs) * (num_i / den)).alias("morans_i"),
-        F.when(
-            ok & (nv > 1.0),
-            ((nv - 1.0) / (2.0 * w_pairs)) * (num_c / den),
-        ).alias("gearys_c"),
-    ).drop(nv_col, mean_col, wp_col, ni_col, nc_col, den_col)
 
 
 def sobel(
     per_band: DataFrame,
     value_col: str = "values",
     out_col: str = "sobel",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Sobel gradient magnitude per pixel: ``sqrt(gx^2 + gy^2)`` with the
     standard 3x3 kernels, strict stencil (any null neighbor -> null).
     Edge-detection / texture features for chip quality screens."""
     _require(per_band, value_col)
-    if impl == "arrow":
-        from rasteret_spark.operators import arrow_kernels as ak
-
-        return _arrow_map(
-            per_band, value_col, out_col, lambda row, a: ak.sobel_2d(a)
-        )
-
-    def px(i: Column) -> Column:
-        taps = _taps(i, 1, value_col)
-        gx = reduce(add, [
-            t * F.lit(w) for (t, w) in _weighted_terms(taps, SOBEL_X, 1)
-        ])
-        gy = reduce(add, [
-            t * F.lit(w) for (t, w) in _weighted_terms(taps, SOBEL_Y, 1)
-        ])
-        any_null = reduce(lambda a, b: a | b, [t.isNull() for _, _, t in taps])
-        return F.when(~any_null, F.sqrt(gx * gx + gy * gy))
-
-    return _map_pixels(per_band, value_col, px, out_col)
+    return _arrow_map(
+        per_band, value_col, out_col, lambda row, a: ak.sobel_2d(a)
+    )

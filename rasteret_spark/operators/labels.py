@@ -90,7 +90,6 @@ def class_stats(
     pixels: DataFrame,
     value_col: str = "values",
     mask_col: str = "mask",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Class-stratified pixel statistics over (imagery, label) pairs — the
     training-data QA surface (class balance, per-class radiometry) for the
@@ -102,87 +101,57 @@ def class_stats(
     one row per (chip_id, band, class_id) with n_px (pixels of the class),
     n_valid (with a non-null value), v_sum / v_mean over the valid ones.
 
-    Pure Catalyst: per-row nested higher-order functions fold each class's
-    pixels IN ARRAY ORDER (deterministic, oracle-exact sums — never a
-    shuffle-order-dependent SQL SUM over exploded pixels), the per-class
-    rows explode only AFTER aggregation (K rows per chip, not H x W), and
-    the only data movement is the chip-keyed equi-join."""
+    One vectorized numpy pass per joined row (one ``mapInPandas``) folds
+    each class's valid pixels IN ARRAY ORDER (deterministic, oracle-exact
+    sums — never a shuffle-order-dependent SQL SUM over exploded pixels),
+    emits K rows per chip (not H x W), and the only data movement is the
+    chip-keyed equi-join.  A null mask emits no rows."""
     j_in = pixels.join(
         masks.select("chip_id", F.col(mask_col).alias("_mask")), "chip_id"
     )
     carry_a = [c for c in ("chip_id", "band") if c in pixels.columns]
-    if impl == "arrow":
-        # one vectorized numpy pass per row instead of K classes x 3
-        # interpreted HOF sweeps; same chip-keyed join, same output rows.
-        # Fold parity: per-class sums accumulate the valid pixels in array
-        # order via cumsum (the Catalyst aggregate order).
-        schema = ", ".join(
-            [f"{c} {'string' if c == 'chip_id' else 'int'}" for c in carry_a]
-            + ["class_id int", "n_px int", "n_valid int",
-               "v_sum double", "v_mean double"]
-        )
-        sel_cols = carry_a + [value_col, "_mask"]
-
-        def run(batches):
-            for pdf in batches:
-                out: dict[str, list] = {c: [] for c in (
-                    *carry_a, "class_id", "n_px", "n_valid", "v_sum", "v_mean"
-                )}
-                for i in range(len(pdf)):
-                    m_cell = pdf["_mask"].iloc[i]
-                    if m_cell is None:
-                        continue  # explode(null) emits no rows
-                    m = np.asarray(m_cell, dtype=np.int64)
-                    v_cell = pdf[value_col].iloc[i]
-                    v = np.full(m.size, np.nan)
-                    if v_cell is not None:
-                        va = np.asarray(v_cell, dtype=np.float64)
-                        v[: min(va.size, m.size)] = va[: m.size]
-                    for c in np.unique(m[m != 0]):
-                        sel = m == c
-                        ok = sel & ~np.isnan(v)
-                        n_valid = int(ok.sum())
-                        vs = v[ok]
-                        v_sum = float(np.cumsum(vs)[-1]) if n_valid else None
-                        for cc in carry_a:
-                            out[cc].append(pdf[cc].iloc[i])
-                        out["class_id"].append(int(c))
-                        out["n_px"].append(int(sel.sum()))
-                        out["n_valid"].append(n_valid)
-                        out["v_sum"].append(v_sum)
-                        out["v_mean"].append(
-                            None if not n_valid else v_sum / n_valid
-                        )
-                yield pd.DataFrame(out)
-
-        return j_in.select(*sel_cols).mapInPandas(run, schema=schema)
-
-    zipped = F.zip_with(
-        F.col("_mask"), F.col(value_col), lambda m, v: F.struct(m.alias("m"), v.alias("v"))
+    # per-class sums accumulate the valid pixels in array order (cumsum's
+    # last slot, not pairwise np.sum)
+    schema = ", ".join(
+        [f"{c} {'string' if c == 'chip_id' else 'int'}" for c in carry_a]
+        + ["class_id int", "n_px int", "n_valid int",
+           "v_sum double", "v_mean double"]
     )
+    sel_cols = carry_a + [value_col, "_mask"]
 
-    def per_class(c):
-        sel = F.filter(zipped, lambda x: x["m"] == c)
-        valid = F.filter(sel, lambda x: x["v"].isNotNull())
-        n_valid = F.size(valid)
-        v_sum = F.aggregate(valid, F.lit(0.0), lambda acc, x: acc + x["v"])
-        return F.struct(
-            c.alias("class_id"),
-            F.size(sel).alias("n_px"),
-            n_valid.alias("n_valid"),
-            F.when(n_valid > 0, v_sum).alias("v_sum"),
-            F.when(n_valid > 0, v_sum / n_valid).alias("v_mean"),
-        )
+    def run(batches):
+        for pdf in batches:
+            out: dict[str, list] = {c: [] for c in (
+                *carry_a, "class_id", "n_px", "n_valid", "v_sum", "v_mean"
+            )}
+            for i in range(len(pdf)):
+                m_cell = pdf["_mask"].iloc[i]
+                if m_cell is None:
+                    continue
+                m = np.asarray(m_cell, dtype=np.int64)
+                v_cell = pdf[value_col].iloc[i]
+                v = np.full(m.size, np.nan)
+                if v_cell is not None:
+                    va = np.asarray(v_cell, dtype=np.float64)
+                    v[: min(va.size, m.size)] = va[: m.size]
+                for c in np.unique(m[m != 0]):
+                    sel = m == c
+                    ok = sel & ~np.isnan(v)
+                    n_valid = int(ok.sum())
+                    vs = v[ok]
+                    v_sum = float(np.cumsum(vs)[-1]) if n_valid else None
+                    for cc in carry_a:
+                        out[cc].append(pdf[cc].iloc[i])
+                    out["class_id"].append(int(c))
+                    out["n_px"].append(int(sel.sum()))
+                    out["n_valid"].append(n_valid)
+                    out["v_sum"].append(v_sum)
+                    out["v_mean"].append(
+                        None if not n_valid else v_sum / n_valid
+                    )
+            yield pd.DataFrame(out)
 
-    classes = F.array_sort(
-        F.array_distinct(F.filter(F.col("_mask"), lambda m: m != 0))
-    )
-    j = pixels.join(masks.select("chip_id", F.col(mask_col).alias("_mask")), "chip_id")
-    carry = [c for c in ("chip_id", "band") if c in pixels.columns]
-    return (
-        j.select(*carry, F.explode(F.transform(classes, per_class)).alias("_s"))
-        .select(*carry, "_s.*")
-    )
+    return j_in.select(*sel_cols).mapInPandas(run, schema=schema)
 
 
 def label_masks(

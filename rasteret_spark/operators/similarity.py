@@ -36,52 +36,6 @@ def cosine_expr(a, b) -> F.Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def _cosine_batch_py(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized mirror of ``cosine_expr`` — bit-identical: elementwise
-    double products in array order, SEQUENTIAL left-fold sums (cumsum's
-    last slot, matching Catalyst ``aggregate``; pairwise np.sum rounds
-    differently), then the same sqrt/divide tree.  Unequal lengths or null
-    elements poison the dot exactly like zip_with's null padding (NaN ->
-    null on return)."""
-    n = len(a)
-    out = np.full(n, np.nan)
-    la = np.fromiter((len(v) if v is not None else -1 for v in a), np.int64, n)
-    lb = np.fromiter((len(v) if v is not None else -1 for v in b), np.int64, n)
-    for dim in np.unique(la):
-        if dim < 0:
-            continue
-        sel = np.nonzero((la == dim) & (lb == dim))[0]
-        if not len(sel):
-            continue
-        ma = np.stack([np.asarray(a.iat[i], dtype=np.float64) for i in sel])
-        mb = np.stack([np.asarray(b.iat[i], dtype=np.float64) for i in sel])
-        if dim == 0:
-            continue  # empty arrays: dot aggregates of [] are 0 -> 0/0 = NaN
-        dot = np.cumsum(ma * mb, axis=1)[:, -1]
-        na = np.sqrt(np.cumsum(ma * ma, axis=1)[:, -1])
-        nb = np.sqrt(np.cumsum(mb * mb, axis=1)[:, -1])
-        out[sel] = dot / (na * nb)
-    return pd.Series(out)
-
-
-_COSINE_UDF = None
-
-
-def cosine_score(a, b) -> F.Column:
-    """Vectorized cosine scorer (Arrow batch kernel, bit-identical to
-    ``cosine_expr`` — parity-pinned in tests).  Use it in place of
-    ``cosine_expr`` when the candidate set is large: the numpy matmul
-    amortizes the python-stage round trip above roughly 10^5 pairs,
-    while below that the in-stage JVM expression wins (measured ~0.1 s
-    either way at the bench's 10^4-pair rerank sizes, which is why the
-    rerank paths default to the expression).  The UDF wraps lazily
-    (return-type parsing needs an active session)."""
-    global _COSINE_UDF
-    if _COSINE_UDF is None:
-        _COSINE_UDF = F.pandas_udf(_cosine_batch_py, "double")
-    return _COSINE_UDF(a, b)
-
-
 def cosine_topk(
     targets: DataFrame,
     probes: DataFrame,

@@ -26,8 +26,6 @@ handles residual imbalance).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F  # noqa: N812
@@ -237,28 +235,3 @@ def refine_rect_polygon(
             F.col(poly_col),
         ),
     )
-
-
-def refine_point_in_polygon(
-    cands: DataFrame, x: str = "x", y: str = "y", poly_col: str = "geometry",
-    out_col: str = "inside",
-) -> DataFrame:
-    """Exact ray-cast PIP refine (vectorized per polygon group inside batches)."""
-    from rasteret_spark import geom
-    import numpy as np
-
-    @F.pandas_udf("boolean")
-    def _pip(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-        out = np.zeros(len(px), dtype=bool)
-        # group rows by identical polygon payload -> one vectorized cast each
-        groups: dict[bytes, list[int]] = {}
-        for i, g in enumerate(wkb):
-            groups.setdefault(bytes(g), []).append(i)
-        pxv = px.to_numpy(dtype=float)
-        pyv = py.to_numpy(dtype=float)
-        for g, idxs in groups.items():
-            ii = np.asarray(idxs)
-            out[ii] = geom.points_in_polygon_wkb(pxv[ii], pyv[ii], g)
-        return pd.Series(out)
-
-    return cands.withColumn(out_col, _pip(F.col(x), F.col(y), F.col(poly_col)))

@@ -40,13 +40,6 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def upper_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[A-Z]", "")
-    return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
-        (F.length(text) - F.length(stripped)).cast("double") / F.length(text)
-    )
-
-
 def digit_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, r"[0-9]", "")
     return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(

@@ -1,6 +1,7 @@
 """Distributed band math (operators/band_math.py): numpy-oracle exactness,
 null/zero-denominator semantics, end-to-end over real mosaic output, and
-the plan contract (pure Catalyst: no Python nodes, exactly one shuffle).
+the plan contract (band indices pure Catalyst with exactly one shuffle; the
+temporal reductions and chip_stats exactly one vectorized Python stage).
 
 Reference parity: the reference computes NDVI driver-side on assembled
 xarrays (`examples/landsat_xarray.py:58`); here the same arithmetic runs
@@ -13,6 +14,15 @@ import pytest
 
 from rasteret_spark.operators import band_math as bm
 from rasteret_spark.operators import raster_mosaic as rmo
+
+
+def _assert_one_python_stage(df, exchanges):
+    """Executed plan: exactly one MapInPandas, no other Python node, and
+    ``exchanges`` Exchange nodes."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 and "EvalPython" not in plan, plan
+    assert plan.count("Exchange") == exchanges, plan
+
 
 GRID = {"chip_xmin": 1.0, "chip_ymax": 2.0, "chip_xres": 0.1,
         "chip_yres": -0.1, "chip_w": 4, "chip_h": 3, "grid_epsg": 4326}
@@ -270,14 +280,10 @@ class TestTemporalComposite:
             bm.temporal_composite(df, stat="mode")
 
     def test_plan_pure_catalyst(self, stack):
+        """One shuffle (the groupBy), then ONE vectorized Python stage."""
         df, _ = stack
-        plan = (bm.temporal_composite(df, stat="median", impl="catalyst")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "EvalPython" not in plan and "InPandas" not in plan
-        assert plan.count("Exchange") == 1
-        plan_a = (bm.temporal_composite(df, stat="median")
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert plan_a.count("Exchange") == 1  # arrow impl adds no shuffle
+        _assert_one_python_stage(
+            bm.temporal_composite(df, stat="median"), exchanges=1)
 
 
 class TestChangeDetect:
@@ -337,15 +343,10 @@ class TestChangeDetect:
             bm.change_detect(df.drop("datetime"), "2024-01-01")
 
     def test_plan_pure_catalyst_single_shuffle(self, stack):
+        """Both epochs in ONE groupBy shuffle, then ONE Python stage."""
         df, _ = stack
-        plan = (bm.change_detect(df, "2024-01-01", threshold=1.0,
-                                 impl="catalyst")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "EvalPython" not in plan and "InPandas" not in plan
-        assert plan.count("Exchange") == 1
-        plan_a = (bm.change_detect(df, "2024-01-01", threshold=1.0)
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert plan_a.count("Exchange") == 1
+        _assert_one_python_stage(
+            bm.change_detect(df, "2024-01-01", threshold=1.0), exchanges=1)
 
     def test_truth_mirror_agrees_on_real_chips(self, spark):
         """q72 closure: the engine path over real encoded chip stacks equals
@@ -455,14 +456,9 @@ class TestTemporalTrend:
             bm.temporal_trend(df.drop("datetime"))
 
     def test_plan_pure_catalyst_single_shuffle(self, stack):
+        """One shuffle (the groupBy), then ONE vectorized Python stage."""
         df, _, _ = stack
-        plan = (bm.temporal_trend(df, impl="catalyst")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "EvalPython" not in plan and "InPandas" not in plan
-        assert plan.count("Exchange") == 1
-        plan_a = (bm.temporal_trend(df)
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert plan_a.count("Exchange") == 1
+        _assert_one_python_stage(bm.temporal_trend(df), exchanges=1)
 
     def test_truth_mirror_agrees_on_real_chips(self, spark):
         """q73 closure: engine OLS over real encoded chip stacks equals the
@@ -531,13 +527,7 @@ class TestChipStats:
 
     def test_plan_zero_shuffle(self, per_band):
         df, _ = per_band
-        plan = (bm.chip_stats(df, impl="catalyst")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "EvalPython" not in plan and "InPandas" not in plan
-        assert plan.count("Exchange") == 0
-        plan_a = (bm.chip_stats(df)
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert plan_a.count("Exchange") == 0
+        _assert_one_python_stage(bm.chip_stats(df), exchanges=0)
 
     def test_truth_mirror_agrees_on_real_chips(self, spark):
         """q75 closure: engine QA stats over real encoded mosaics equal the

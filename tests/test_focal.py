@@ -1,8 +1,8 @@
 """Focal window operators (operators/focal.py): numpy-oracle exactness for
 every statistic, replicate-edge and null semantics, strict vs normalized
 convolution, Sobel gradients, composition over real mosaic rows, and the
-plan contract (pure Catalyst: no Python nodes, ZERO shuffles — the stencil
-is a projection).
+plan contract (one vectorized Python stage per operator, ZERO shuffles —
+each chip row is independent).
 
 Reference parity: the reference hands assembled xarrays to the client for
 neighborhood post-processing (`examples/landsat_xarray.py`); here the
@@ -17,6 +17,14 @@ from rasteret_spark.operators import focal
 from rasteret_spark.operators import raster_mosaic as rmo
 
 W, H = 6, 5
+
+
+def _assert_python_stages(df, n):
+    """Executed plan: exactly ``n`` MapInPandas (one per operator), no other
+    Python node, and NO exchange."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == n and "EvalPython" not in plan, plan
+    assert plan.count("Exchange") == 0, plan
 
 
 def _grid(w=W, h=H):
@@ -180,6 +188,23 @@ def test_sobel_flat_field_is_zero(spark):
     assert all(v == 0.0 for v in r.sobel)
 
 
+def test_focal_min_max_keep_first_extreme_tap():
+    """min/max fold the taps in row-major offset order and replace only on
+    a strict improvement, so -0.0 and 0.0 tie and the first tap wins (the
+    array_min/array_max convention, not a total order)."""
+    from rasteret_spark.operators import arrow_kernels as ak
+
+    lo = ak.focal_stat_2d(np.array([[0.0, -0.0]]), "min", 1)
+    hi = ak.focal_stat_2d(np.array([[-0.0, 0.0]]), "max", 1)
+    assert (lo == 0.0).all() and not np.signbit(lo).any()
+    assert (hi == 0.0).all() and np.signbit(hi).all()
+    a = np.array([[np.nan, 3.0, np.nan], [np.nan, np.nan, np.nan]])
+    for stat in ("min", "max"):
+        np.testing.assert_array_equal(
+            ak.focal_stat_2d(a, stat, 1), [[3.0] * 3, [3.0] * 3])
+    assert np.isnan(ak.focal_stat_2d(np.full((2, 2), np.nan), "min", 1)).all()
+
+
 def test_validation_errors(per_band):
     df, _ = per_band
     with pytest.raises(ValueError, match="unknown focal stat"):
@@ -193,19 +218,12 @@ def test_validation_errors(per_band):
 
 
 def test_plan_is_pure_projection(per_band):
-    """catalyst impl: no Python nodes and NO exchange.  Default (arrow)
-    impl: vectorized numpy batches, still ZERO added exchanges — the
-    stencil stays where the pixels are either way."""
+    """Each operator is one vectorized Python stage and adds NO exchange:
+    the stencil stays where the pixels are."""
     df, _ = per_band
-    fm = focal.focal_stats(df, "mean", radius=1, out_col="fm", impl="catalyst")
-    sb = focal.sobel(fm, value_col="fm", out_col="sb", impl="catalyst")
-    plan = sb._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan and "InPandas" not in plan
-    assert plan.count("Exchange") == 0
-    fm_a = focal.focal_stats(df, "mean", radius=1, out_col="fm")
-    sb_a = focal.sobel(fm_a, value_col="fm", out_col="sb")
-    plan_a = sb_a._jdf.queryExecution().executedPlan().toString()
-    assert plan_a.count("Exchange") == 0
+    fm = focal.focal_stats(df, "mean", radius=1, out_col="fm")
+    _assert_python_stages(fm, 1)
+    _assert_python_stages(focal.sobel(fm, value_col="fm", out_col="sb"), 2)
 
 
 def _np_terrain(a2d, xres, yres, z_factor=1.0, altitude=45.0, azimuth=315.0):
@@ -295,13 +313,7 @@ def test_terrain_validation_and_plan(per_band):
         focal.terrain(df, outs=("slope", "curvature"))
     with pytest.raises(ValueError, match="needs column"):
         focal.terrain(df.drop("chip_xres"))
-    plan = (focal.terrain(df, impl="catalyst")._jdf.queryExecution()
-            .executedPlan().toString())
-    assert "EvalPython" not in plan and "InPandas" not in plan
-    assert plan.count("Exchange") == 0
-    plan_a = (focal.terrain(df)._jdf.queryExecution()
-              .executedPlan().toString())
-    assert plan_a.count("Exchange") == 0
+    _assert_python_stages(focal.terrain(df), 1)
 
 
 def _np_spatial(a2d):
@@ -363,12 +375,7 @@ def test_spatial_stats_known_patterns(spark):
     assert got["checker"].morans_i == -1.0  # every neighbor pair opposes
     assert got["halves"].morans_i > 0.5
     assert got["checker"].gearys_c > 1.0 and got["halves"].gearys_c < 0.5
-    plan = (focal.spatial_stats(spark.createDataFrame(rows), impl="catalyst")
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "EvalPython" not in plan and plan.count("Exchange") == 0
-    plan_a = (focal.spatial_stats(spark.createDataFrame(rows))
-              ._jdf.queryExecution().executedPlan().toString())
-    assert plan_a.count("Exchange") == 0
+    _assert_python_stages(focal.spatial_stats(spark.createDataFrame(rows)), 1)
 
 
 def test_spatial_stats_truth_mirror_agrees_on_real_chips(spark):
@@ -463,35 +470,3 @@ def test_focal_over_real_mosaic_composes(spark, images_pdf):
         np.testing.assert_allclose(
             _got(got[chip_id], "sb"), want, rtol=0, atol=1e-9, equal_nan=True)
     mosaic.unpersist()
-
-
-def test_arrow_impl_matches_catalyst_bit_exact(per_band):
-    """The vectorized (arrow) kernels are drop-in replacements: every
-    non-trig surface must equal the Catalyst HOF implementation bit for
-    bit (fold order, null semantics, -0.0 handling)."""
-    df, _ = per_band
-
-    def rows(d):
-        return {
-            (r["chip_id"], r["band"]): r.asDict()
-            for r in d.collect()
-        }
-
-    pairs = [
-        (focal.focal_stats(df, "mean", radius=1, impl="arrow"),
-         focal.focal_stats(df, "mean", radius=1, impl="catalyst")),
-        (focal.sobel(df, impl="arrow"), focal.sobel(df, impl="catalyst")),
-        (focal.convolve(df, [[1, 2, 1], [2, 4, 2], [1, 2, 1]],
-                        normalize=True, impl="arrow"),
-         focal.convolve(df, [[1, 2, 1], [2, 4, 2], [1, 2, 1]],
-                        normalize=True, impl="catalyst")),
-        (focal.terrain(df, outs=("dzdx", "dzdy"), impl="arrow"),
-         focal.terrain(df, outs=("dzdx", "dzdy"), impl="catalyst")),
-        (focal.spatial_stats(df, impl="arrow"),
-         focal.spatial_stats(df, impl="catalyst")),
-    ]
-    for a_df, c_df in pairs:
-        a, c = rows(a_df), rows(c_df)
-        assert a.keys() == c.keys()
-        for k in a:
-            assert a[k] == c[k], (k, a[k], c[k])

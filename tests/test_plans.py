@@ -64,8 +64,9 @@ def test_zonal_plan_broadcasts_pairs_and_keeps_blobs_unshuffled(spark, images_pa
 
 
 def test_broadcast_guard_switches_at_bound_with_identical_output(spark, images_pdf, points_pdf):
-    """choose_broadcast: default path broadcasts below the pair bound and
-    switches to the shuffle join above it; both plans produce identical rows."""
+    """The sample_points broadcast guard: the default path broadcasts below
+    the pair bound and switches to the shuffle join above it; both plans
+    produce identical rows."""
     from rasteret_spark.operators import decode, sampling, spatial_join as sj
 
     images = spark.createDataFrame(images_pdf)
@@ -79,11 +80,9 @@ def test_broadcast_guard_switches_at_bound_with_identical_output(spark, images_p
         "point_index", "x", "y", "image_id"
     )
     blobs = images.select("image_id", "bytes")
-    assert decode.choose_broadcast(cands, None) is True  # small input
     prev = spark.conf.get(decode.BROADCAST_PAIRS_CONF, None)
     spark.conf.set(decode.BROADCAST_PAIRS_CONF, "1")  # force above-bound
     try:
-        assert decode.choose_broadcast(cands, None) is False
         shuffled = sampling.sample_points(cands, blobs, max_ring=2)
         # above the bound: no broadcast HINT — AQE may still pick broadcast
         # for a genuinely tiny side, but the plan must carry the explicit

@@ -339,24 +339,3 @@ def test_feature_extract_finds_planted_image_dups(spark, images_df, images_pdf):
     )
     q = multimodal.extract_features(bad).toPandas().iloc[0]
     assert q["features"] is None and q["status"] != "ok"
-
-
-def test_cosine_score_matches_expr_bit_exact(spark):
-    """cosine_score (the Arrow batch scorer for large candidate sets) must
-    equal the JVM expression bit for bit — same sequential fold order."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(3)
-    rows = [
-        (i, [float(v) for v in rng.normal(size=16).astype(np.float32)])
-        for i in range(60)
-    ]
-    emb = spark.createDataFrame(rows, "id long, e array<float>")
-    a = emb.select(F.col("id").alias("ia"), F.col("e").alias("ea"))
-    b = emb.select(F.col("id").alias("ib"), F.col("e").alias("eb"))
-    j = a.crossJoin(b).withColumn(
-        "c1", similarity.cosine_expr(F.col("ea"), F.col("eb"))
-    ).withColumn("c2", similarity.cosine_score(F.col("ea"), F.col("eb")))
-    pdf = j.select("c1", "c2").toPandas()
-    assert (pdf["c1"] == pdf["c2"]).all()

@@ -244,11 +244,15 @@ class TestAssignSplit:
         ("q79_stretch", ["chip_id", "band"]),
         ("q80_chip_histogram", ["chip_id", "band"]),
         ("q81_train_split", ["chip_id", "band"]),
+        ("q65_temporal_median", ["chip_id", "band"]),
+        ("q70_class_stats", ["chip_id", "band", "class_id"]),
+        ("q71_focal_filters", ["chip_id", "band"]),
     ],
 )
 def test_truth_mirror_closure(spark, qname, keys):
-    """q78–q81 closure: the engine over real encoded mosaics equals the
-    independent numpy mirror from pre-encode truth, bit for bit."""
+    """q65/q70/q71 and q78–q81 closure: the engine over real encoded
+    mosaics equals the independent numpy mirror from pre-encode truth, bit
+    for bit."""
     import duckdb
 
     import __spark_entry__ as entry
