@@ -14,7 +14,9 @@ DataLoader-ready chip batches — while the plans stay the engine's
 
 Everything is lazy: the facade holds a records DataFrame; nothing executes
 until a Spark action runs (or a driver-side iterator like
-``chip_batches`` is consumed).
+``chip_batches`` is consumed).  The one exception: building a zonal, sample,
+mosaic or chip plan runs its candidate join once, to size and checkpoint the
+grouped side (``decode.grouped_side_choice``).
 """
 
 from __future__ import annotations

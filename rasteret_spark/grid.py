@@ -130,7 +130,7 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> 
 
     No epsilon shrink on the max edge: containment predicates downstream are
     closed (x <= xmax), so a max edge exactly on a cell boundary must include
-    the boundary cell (matches ``spatial_join._ix_col`` semantics)."""
+    the boundary cell (matches ``spatial_join._axis_cell`` semantics)."""
     n = np.int64(1) << res
     ix0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
     ix1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))

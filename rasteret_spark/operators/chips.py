@@ -146,7 +146,6 @@ def chip_serve(
     method: str = "nearest",
     max_images_per_chip: int | None = DEFAULT_MAX_IMAGES_PER_CHIP,
     res: int = 7,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Serve [T, C, H, W] chip stacks for a chip-request table.
 
@@ -159,7 +158,9 @@ def chip_serve(
     broadcast (each surviving blob shuffles once, into its chip group — see
     ``raster_mosaic.join_payload_grouped``) -> ``chip_stack_pixels``.
     Matches the reference adapter's select-then-fetch ordering
-    (`torchgeo.py:1016-1061`).
+    (`torchgeo.py:1016-1061`).  Building the plan runs the candidate join
+    once to size and local-checkpoint the grouped side
+    (``decode.grouped_side_choice``).
     """
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators.spatial_join import bbox_join
@@ -173,9 +174,7 @@ def chip_serve(
         # depth cap on LIGHT columns, before the payload join — dropped time
         # steps never shuffle their blobs (same rule as the t-step slice)
         cands = rmo._depth_cap(cands, max_images_per_chip, newest_first=True)
-    pairs = rmo.join_payload_grouped(
-        cands.drop("datetime"), images_payload, broadcast_pairs
-    )
+    pairs = rmo.join_payload_grouped(cands.drop("datetime"), images_payload)
     return rmo.chip_stack_pixels(
         pairs, bands=bands, method=method, max_images_per_chip=None
     )

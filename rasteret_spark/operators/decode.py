@@ -168,68 +168,40 @@ def pixel_axes_lonlat(
     return lon, lat
 
 
-BROADCAST_PAIRS_CONF = "spark.rasteret.broadcastPairsLimit"
 # pair structs are ~32-60 bytes (point probes) to ~400 bytes (AOI+WKB), so
 # 20M pairs is roughly 0.6-8 GB of broadcast — fine for the default 24g
 # driver, and two orders of magnitude below the 10^9-pair regime where the
 # shuffle join is the only sane plan.  Crossing to the shuffle path too
 # early is its own scale bug: it puts the BLOBS through a shuffle that the
 # broadcast plan avoids entirely (measured 2-3x wall on the 32k sample
-# pipeline).  Tune per-deployment via the conf.
-BROADCAST_PAIRS_DEFAULT = 20_000_000
+# pipeline).
+BROADCAST_PAIRS_LIMIT = 20_000_000
 
 
-def _pairs_limit(spark) -> int:
-    try:
-        return int(spark.conf.get(BROADCAST_PAIRS_CONF))
-    except Exception:
-        return BROADCAST_PAIRS_DEFAULT
-
-
-# persisted grouped sides from auto-mode decisions, released on the next
-# auto-mode call (by then the previous plan has been consumed in any
-# straight-line pipeline) or explicitly via release_grouped_caches()
-_GROUPED_CACHES: list[DataFrame] = []
-
-
-def release_grouped_caches() -> None:
-    """Unpersist every grouped side cached by auto-mode decisions.  Call
-    after the consuming action when the session is long-lived (bench loops,
-    services); idempotent."""
-    while _GROUPED_CACHES:
-        try:
-            _GROUPED_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
-def grouped_side_choice(agg: DataFrame, explicit: bool | None, list_col: str):
+def grouped_side_choice(agg: DataFrame, list_col: str) -> tuple[DataFrame, bool]:
     """Broadcast-vs-shuffle decision for a grouped probe side WITHOUT
     re-executing the upstream candidate join.
 
-    In auto mode the grouped side is persisted and the decision count is a
-    cheap sum of list sizes over the CACHE — the expensive candidate join
+    The grouped side is local-checkpointed eagerly and the decision is one
+    sum of list sizes over the checkpoint — the expensive candidate join
     (cell join + exact refine) executes exactly once whichever path wins,
-    and the persisted agg is the very thing the winning join then consumes.
-    At or below the pair limit (conf ``spark.rasteret.broadcastPairsLimit``,
-    default 20M) the grouped side broadcasts (blobs never shuffle); above it
-    the plan switches to a shuffle join on image_id, which scales to 10^9+
-    pairs where an unconditional broadcast would blow the driver.
+    and the checkpoint is the very thing the winning join then consumes.
+    At or below ``BROADCAST_PAIRS_LIMIT`` pairs the grouped side broadcasts
+    (blobs never shuffle); above it the plan switches to a shuffle join on
+    image_id, which scales to 10^9+ pairs where an unconditional broadcast
+    would blow the driver.  Leaving the choice to AQE does not work: it
+    picks the broadcast only after the blob side has already shuffled.
 
-    Cache lifecycle: the persisted side is registered and released on the
-    NEXT auto-mode call (or explicitly via ``release_grouped_caches``), so a
-    session never accumulates more than one live grouped cache.  Building
-    two auto-mode plans before collecting either is still correct — the
-    first just recomputes its grouped side if its cache was released.
-    Returns (agg, use_broadcast)."""
-    if explicit is not None:
-        return agg, explicit
-    limit = _pairs_limit(agg.sparkSession)
-    release_grouped_caches()
-    agg = agg.persist()
-    _GROUPED_CACHES.append(agg)
+    The checkpoint lives exactly as long as the plans that reference it —
+    Spark's ContextCleaner frees its blocks once they are unreachable — so
+    what a plan computes and costs does not depend on which plans were
+    built after it.  The trade: checkpoint blocks are not replicated, so a
+    lost executor fails the query instead of recomputing the grouped side
+    (``knn.knn_ring_expand`` makes the same trade).  Returns
+    (agg, use_broadcast)."""
+    agg = agg.localCheckpoint(eager=True)
     n_pairs = agg.select(F.sum(F.size(F.col(list_col)))).first()[0] or 0
-    return agg, int(n_pairs) <= limit
+    return agg, int(n_pairs) <= BROADCAST_PAIRS_LIMIT
 
 
 def _decode_parallelism(df: DataFrame, parallelism: int | None) -> int:
@@ -246,7 +218,6 @@ def zonal_stats(
     pairs: DataFrame,
     images: DataFrame,
     parallelism: int | None = None,
-    broadcast_pairs: bool | None = None,
     bands: tuple[int, ...] | list[int] | None = None,
 ) -> DataFrame:
     """Zonal extraction with scale-aware dataflow.
@@ -264,6 +235,10 @@ def zonal_stats(
 
     This mirrors rasteret's per-record multi-geometry read loop
     (`src/rasteret/core/execution.py:244-297`) in distributed form.
+
+    Building the plan runs the candidate join once: the grouped AOI side is
+    local-checkpointed and its pair count picks broadcast vs shuffle join
+    (``grouped_side_choice``).
     """
     agg = pairs.groupBy("image_id").agg(
         F.collect_list(
@@ -286,7 +261,7 @@ def zonal_stats(
         # snapshot at plan build: driver-registered schemes travel by
         # closure (executors import this module fresh)
         ranged_readers = dict(_RANGED_READERS)
-    agg, use_broadcast = grouped_side_choice(agg, broadcast_pairs, "_aois")
+    agg, use_broadcast = grouped_side_choice(agg, "_aois")
     if use_broadcast:
         # the grouped AOI side is small next to the blobs (size-guarded):
         # broadcast it so the decode fuses with the image scan — blobs NEVER

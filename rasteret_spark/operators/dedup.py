@@ -27,23 +27,6 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark.operators.util import spread_compute as _spread
 
-# persisted intermediates of the most recent minhash_lsh_pairs call —
-# auto-released at the NEXT call (same lifecycle as decode's grouped-side
-# caches), or explicitly via release_dedup_caches(), so a long-lived
-# session never accumulates more than one live candidate/shingle cache
-_DEDUP_CACHES: list[DataFrame] = []
-
-
-def release_dedup_caches() -> None:
-    """Unpersist the candidate/shingle tables cached by the last
-    minhash_lsh_pairs call; idempotent."""
-    while _DEDUP_CACHES:
-        try:
-            _DEDUP_CACHES.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Keep the lowest-id row per exact content hash (deterministic winner)."""
     h = F.md5(F.col(content_col).cast("string")).alias("_h")
@@ -132,15 +115,11 @@ def minhash_lsh_pairs(
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
-        .persist()  # consumed 3x below (need + two verify sides)
     )
-    release_dedup_caches()  # at most one live cache pair per session
-    _DEDUP_CACHES.append(cand)
     # exact verify only touches documents that appear in a candidate pair —
-    # semi-join-filter the corpus BEFORE tokenizing, then persist: the
-    # shingle table is built once, for candidates only (the full-corpus
-    # shingle build dominated the verify cost otherwise), and both verify
-    # sides reuse it
+    # semi-join-filter the corpus BEFORE tokenizing: the shingle table is
+    # built for candidates only (the full-corpus shingle build dominated the
+    # verify cost otherwise)
     need = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
@@ -148,8 +127,7 @@ def minhash_lsh_pairs(
     )
     sh = _spread(df.join(need, id_col, "left_semi")).select(
         F.col(id_col), F.array_distinct(_shingles(text_col, shingle_n)).alias("sh")
-    ).persist()
-    _DEDUP_CACHES.append(sh)
+    )
     pairs = (
         cand.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")

@@ -659,26 +659,23 @@ def chips_as_aois(chips: DataFrame) -> DataFrame:
     return chips.mapInPandas(to_lonlat_bounds, schema=schema)
 
 
-def join_payload_grouped(
-    cands: DataFrame,
-    images_payload: DataFrame,
-    broadcast_pairs: bool | None = None,
-) -> DataFrame:
+def join_payload_grouped(cands: DataFrame, images_payload: DataFrame) -> DataFrame:
     """Join light (chip x image) candidates to blob payloads with the
     one-blob-shuffle guarantee: candidates group into one per-image chip
     LIST (light columns), and that grouped side joins the payload under the
     same size-guarded broadcast the zonal path uses
     (``decode.grouped_side_choice``).  Broadcast path: blobs never shuffle
     at the join — the only blob exchange left is the final per-chip group.
-    Above the pair bound the plan falls back to a hash join on image_id
-    (the 10^9-pair regime where broadcasting would blow the driver)."""
+    Above ``decode.BROADCAST_PAIRS_LIMIT`` pairs the plan falls back to a
+    hash join on image_id (the 10^9-pair regime where broadcasting would
+    blow the driver)."""
     from rasteret_spark.operators.decode import grouped_side_choice
 
     chip_cols = [c for c in cands.columns if c != "image_id"]
     agg = cands.groupBy("image_id").agg(
         F.collect_list(F.struct(*chip_cols)).alias("_chips")
     )
-    agg, use_broadcast = grouped_side_choice(agg, broadcast_pairs, "_chips")
+    agg, use_broadcast = grouped_side_choice(agg, "_chips")
     side = F.broadcast(agg) if use_broadcast else agg
     return (
         images_payload.join(side, "image_id")
@@ -695,7 +692,6 @@ def chip_candidates(
     res: int = 7,
     max_images_per_chip: int | None = None,
     newest_first: bool = True,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """chips x images candidate pairs via the native cell-cover join, then
     payload join — CHIP_COLS + image_id + datetime + bytes, blobs through
@@ -712,11 +708,10 @@ def chip_candidates(
     None`` to the downstream pixel kernel (capping twice is correct but
     windows the rows once more for nothing).
 
-    NOTE: in auto mode (``broadcast_pairs=None``) the size guard runs an
-    eager count of the candidate join at PLAN-BUILD time (same contract as
-    the zonal path's ``grouped_side_choice``) and keeps one grouped cache
-    live until the next auto-mode call; pass an explicit True/False to stay
-    fully lazy."""
+    NOTE: the size guard runs the candidate join once at PLAN-BUILD time and
+    local-checkpoints the grouped side (same contract as the zonal path's
+    ``grouped_side_choice``); the checkpoint lives as long as the returned
+    plan."""
     from rasteret_spark.operators.spatial_join import bbox_join
 
     extra = ["grid_epsg"] if "grid_epsg" in chips.columns else []
@@ -728,4 +723,4 @@ def chip_candidates(
         cands = _depth_cap(
             cands.join(light_dt, "image_id"), max_images_per_chip, newest_first
         ).drop("datetime")
-    return join_payload_grouped(cands, images_payload, broadcast_pairs)
+    return join_payload_grouped(cands, images_payload)

@@ -291,7 +291,6 @@ def sample_points(
     images: DataFrame,
     max_ring: int = 0,
     parallelism: int | None = None,
-    broadcast_points: bool | None = None,
     bands: tuple[int, ...] | list[int] | None = None,
     neighborhood: int = 0,
 ) -> DataFrame:
@@ -301,7 +300,11 @@ def sample_points(
     (bands missing from an image are skipped).  ``neighborhood=n`` (odd n)
     appends an n x n edge-clamped window per in-bounds sample as an
     ``array<double>`` column.  A corrupt blob yields one quarantine row per
-    candidate point (status column) instead of failing the stage."""
+    candidate point (status column) instead of failing the stage.
+
+    Building the plan runs the candidate join once: the grouped point side
+    is local-checkpointed and its pair count picks broadcast vs shuffle join
+    (``decode.grouped_side_choice``)."""
     from rasteret_spark.operators.decode import (
         _decode_parallelism,
         _err_status,
@@ -324,7 +327,7 @@ def sample_points(
     agg = candidates.groupBy("image_id").agg(
         F.collect_list(F.struct("point_index", "x", "y")).alias("_pts")
     )
-    agg, use_broadcast = grouped_side_choice(agg, broadcast_points, "_pts")
+    agg, use_broadcast = grouped_side_choice(agg, "_pts")
     if use_broadcast:
         # grouped probe side is small next to the blobs (size-guarded):
         # broadcast it so the sampling stage fuses with the image scan (no

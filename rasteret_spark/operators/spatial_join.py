@@ -46,40 +46,28 @@ def pack_cell(res: int, ix: Column, iy: Column) -> Column:
     )
 
 
+def _axis_cell(v: Column, half_span: float, res: int) -> Column:
+    """Clamped cell index of a coordinate on one axis (``half_span`` 180 for
+    lon, 90 for lat), same math as grid.cell_of_point.
+
+    No epsilon shrink on a bbox max edge: the containment predicate is
+    closed (x <= xmax), so a point lying exactly on a cell boundary that is
+    also the bbox max edge must still find the cover cell containing it —
+    shrinking by eps dropped those matches.  Cost is at most one extra
+    candidate cell per axis; canonical-cell dedup and the exact refine
+    filter keep the output identical otherwise."""
+    n = _n(res)
+    return F.least(
+        F.greatest(
+            F.floor((v + F.lit(half_span)) / F.lit(2 * half_span) * F.lit(float(n))), F.lit(0)
+        ),
+        F.lit(n - 1),
+    )
+
+
 def cell_of_point_col(lon: Column, lat: Column, res: int) -> Column:
     """Native-expression cell id of a point (same math as grid.cell_of_point)."""
-    n = _n(res)
-    ix = F.least(
-        F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return pack_cell(res, ix, iy)
-
-
-def _ix_col(x: Column, res: int, is_max: bool) -> Column:
-    # NOTE: no epsilon shrink on the max edge.  The containment predicate is
-    # closed (x <= xmax), so a point lying exactly on a cell boundary that is
-    # also the bbox max edge must still find the cover cell containing it —
-    # shrinking by eps dropped those matches.  Cost is at most one extra
-    # candidate cell per axis; canonical-cell dedup and the exact refine
-    # filter keep the output identical otherwise.
-    n = _n(res)
-    return F.least(
-        F.greatest(F.floor((x + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    )
-
-
-def _iy_col(y: Column, res: int, is_max: bool) -> Column:
-    n = _n(res)
-    return F.least(
-        F.greatest(F.floor((y + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    )
+    return pack_cell(res, _axis_cell(lon, 180.0, res), _axis_cell(lat, 90.0, res))
 
 
 def explode_cover(
@@ -94,10 +82,10 @@ def explode_cover(
     """Explode a bbox into its covering cells at ``res`` — JVM-native
     (sequence x sequence), no UDF.  Adds ``cell_name`` column."""
     df = (
-        df.withColumn("_ix0", _ix_col(F.col(xmin), res, False))
-        .withColumn("_ix1", F.greatest(_ix_col(F.col(xmax), res, True), F.col("_ix0")))
-        .withColumn("_iy0", _iy_col(F.col(ymin), res, False))
-        .withColumn("_iy1", F.greatest(_iy_col(F.col(ymax), res, True), F.col("_iy0")))
+        df.withColumn("_ix0", _axis_cell(F.col(xmin), 180.0, res))
+        .withColumn("_ix1", F.greatest(_axis_cell(F.col(xmax), 180.0, res), F.col("_ix0")))
+        .withColumn("_iy0", _axis_cell(F.col(ymin), 90.0, res))
+        .withColumn("_iy1", F.greatest(_axis_cell(F.col(ymax), 90.0, res), F.col("_iy0")))
     )
     df = df.withColumn("_ix", F.explode(F.sequence("_ix0", "_ix1"))).withColumn(
         "_iy", F.explode(F.sequence("_iy0", "_iy1"))

@@ -82,11 +82,8 @@ def stream_sample_points(
         cands = sj.point_in_bbox_join(points, img_light, res=8).select(
             "point_index", "x", "y", "image_id"
         )
-        # explicit broadcast: micro-batches are small by construction, and
-        # the auto guard would persist a new grouped side every epoch
         out = sampling.sample_points(
-            cands, batch_df.select("image_id", "bytes"), max_ring=max_ring,
-            broadcast_points=True,
+            cands, batch_df.select("image_id", "bytes"), max_ring=max_ring
         )
         _overwrite_epoch_partition(
             out.withColumn("epoch", F.lit(int(epoch_id))), out_path

@@ -63,7 +63,9 @@ def test_zonal_plan_broadcasts_pairs_and_keeps_blobs_unshuffled(spark, images_pa
     )
 
 
-def test_broadcast_guard_switches_at_bound_with_identical_output(spark, images_pdf, points_pdf):
+def test_broadcast_guard_switches_at_bound_with_identical_output(
+    spark, images_pdf, points_pdf, monkeypatch
+):
     """The sample_points broadcast guard: the default path broadcasts below
     the pair bound and switches to the shuffle join above it; both plans
     produce identical rows."""
@@ -80,22 +82,16 @@ def test_broadcast_guard_switches_at_bound_with_identical_output(spark, images_p
         "point_index", "x", "y", "image_id"
     )
     blobs = images.select("image_id", "bytes")
-    prev = spark.conf.get(decode.BROADCAST_PAIRS_CONF, None)
-    spark.conf.set(decode.BROADCAST_PAIRS_CONF, "1")  # force above-bound
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(decode, "BROADCAST_PAIRS_LIMIT", 0)  # force above-bound
         shuffled = sampling.sample_points(cands, blobs, max_ring=2)
-        # above the bound: no broadcast HINT — AQE may still pick broadcast
-        # for a genuinely tiny side, but the plan must carry the explicit
-        # image_id repartition of the shuffle path
-        opt = _optimized(shuffled)
-        assert "strategy=broadcast" not in opt, opt
-        assert "REPARTITION_BY_NUM" in _plan(shuffled)
-        got_shuffle = shuffled.toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(decode.BROADCAST_PAIRS_CONF)
-        else:
-            spark.conf.set(decode.BROADCAST_PAIRS_CONF, prev)
+    # above the bound: no broadcast HINT — AQE may still pick broadcast
+    # for a genuinely tiny side, but the plan must carry the explicit
+    # image_id repartition of the shuffle path
+    opt = _optimized(shuffled)
+    assert "strategy=broadcast" not in opt, opt
+    assert "REPARTITION_BY_NUM" in _plan(shuffled)
+    got_shuffle = shuffled.toPandas()
     bcast = sampling.sample_points(cands, blobs, max_ring=2)
     assert "strategy=broadcast" in _optimized(bcast)
     got_bcast = bcast.toPandas()

@@ -259,11 +259,13 @@ def test_mosaic_max_images_cap_bounds_group_depth(mosaic_inputs, images_pdf):
         np.testing.assert_array_equal(vals[~np.isnan(want)], want[~np.isnan(want)])
 
 
-def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf):
+def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf, monkeypatch):
     """The size-guarded grouped payload join: broadcast mode keeps blobs out
     of the join shuffle entirely (no sort-merge join; the broadcast side is
-    the per-image chip LIST), the explicit shuffle mode produces identical
-    rows — same guarantee the zonal path has."""
+    the per-image chip LIST), the above-bound shuffle mode produces
+    identical rows — same guarantee the zonal path has."""
+    from rasteret_spark.operators import decode
+
     chips = spark.createDataFrame(_chips_pdf())
     img_light = spark.createDataFrame(
         images_pdf[["image_id", "xmin", "ymin", "xmax", "ymax"]].rename(
@@ -272,7 +274,7 @@ def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf):
     )
     payload = spark.createDataFrame(images_pdf[["image_id", "datetime", "bytes"]])
 
-    bc = rmo.chip_candidates(chips, img_light, payload, res=7, broadcast_pairs=True)
+    bc = rmo.chip_candidates(chips, img_light, payload, res=7)
     plan = bc._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, "broadcast path must not shuffle blobs"
     assert "BroadcastExchange" in plan
@@ -306,7 +308,9 @@ def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf):
         "the payload must never be broadcast"
     )
 
-    sh = rmo.chip_candidates(chips, img_light, payload, res=7, broadcast_pairs=False)
+    with monkeypatch.context() as m:
+        m.setattr(decode, "BROADCAST_PAIRS_LIMIT", 0)  # force above-bound
+        sh = rmo.chip_candidates(chips, img_light, payload, res=7)
     a = bc.drop("bytes").toPandas().sort_values(["chip_id", "image_id"]).reset_index(drop=True)
     b = sh.drop("bytes").toPandas().sort_values(["chip_id", "image_id"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns])

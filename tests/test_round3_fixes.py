@@ -1,5 +1,5 @@
 """Round-3 hygiene fixes: v1 format compat, as-of NULL semantics, binary-safe
-media sniffing, grouped-cache lifecycle, retry-exact lineage rows_out."""
+media sniffing, grouped-side lifetime, retry-exact lineage rows_out."""
 
 import numpy as np
 import pandas as pd
@@ -117,36 +117,56 @@ def test_classify_media_handles_non_utf8_payloads(spark):
     assert kinds == {"a": "miniraster", "b": "audio", "c": "png"}
 
 
-# --- grouped-cache lifecycle -------------------------------------------------------
-def _n_cached(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+# --- grouped-side lifetime ----------------------------------------------------------
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def test_grouped_cache_released_after_auto_mode(spark, images_pdf):
-    from rasteret_spark.operators import decode, sampling
+def test_grouped_side_outlives_later_plan_builds(spark, images_pdf, aois_pdf, points_pdf):
+    """Building a sample plan after a zonal plan must not free the zonal
+    plan's grouped side: it stays materialized until the zonal plan is
+    collected, and the zonal rows equal a fresh build."""
+    from rasteret_spark.operators import decode, sampling, spatial_join as sj
 
-    im = images_pdf.iloc[0]
-    cands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "point_index": [0],
-                "x": [(im["xmin"] + im["xmax"]) / 2],
-                "y": [(im["ymin"] + im["ymax"]) / 2],
-                "image_id": [im["image_id"]],
+    img_light = spark.createDataFrame(
+        images_pdf[["image_id", "xmin", "ymin", "xmax", "ymax"]].rename(
+            columns={c: f"img_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]}
+        )
+    )
+    blobs = spark.createDataFrame(images_pdf[["image_id", "bytes", "caption"]])
+    aoi = spark.createDataFrame(
+        aois_pdf.rename(
+            columns={
+                **{c: f"aoi_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]},
+                "geometry": "aoi_geometry",
             }
         )
     )
-    images = spark.createDataFrame(images_pdf[["image_id", "bytes"]])
-    decode.release_grouped_caches()
-    base = _n_cached(spark)
-    out = sampling.sample_points(cands, images, broadcast_points=None).collect()
-    assert len(out) == 1
-    assert _n_cached(spark) == base + 1  # decision cache live during the run
-    # a second auto-mode call releases the previous grouped side: never >1 extra
-    sampling.sample_points(cands, images, broadcast_points=None).collect()
-    assert _n_cached(spark) == base + 1
-    decode.release_grouped_caches()
-    assert _n_cached(spark) == base, "no grouped caches may remain after release"
+    pairs = (
+        sj.refine_rect_polygon(sj.bbox_join(img_light, aoi, res=7))
+        .filter(F.col("intersects"))
+        .select("image_id", "aoi_id", "aoi_geometry",
+                "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax")
+    )
+    cands = sj.point_in_bbox_join(spark.createDataFrame(points_pdf), img_light, res=8).select(
+        "point_index", "x", "y", "image_id"
+    )
+
+    before = _persistent_rdd_ids(spark)
+    plan_a = decode.zonal_stats(pairs, blobs)
+    grouped_a = _persistent_rdd_ids(spark) - before
+    assert grouped_a, "building the zonal plan materializes its grouped side"
+    sampling.sample_points(cands, blobs.select("image_id", "bytes"))  # plan B
+    assert grouped_a <= _persistent_rdd_ids(spark), "plan B freed plan A's grouped side"
+    got = plan_a.toPandas()
+    assert grouped_a <= _persistent_rdd_ids(spark)
+    want = decode.zonal_stats(pairs, blobs).toPandas()
+    assert len(got) > 0
+    key = ["image_id", "aoi_id", "band"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+    )
 
 
 # --- retry-exact lineage rows_out --------------------------------------------------
@@ -280,26 +300,3 @@ def test_depth_cap_prejoin_equivalent_to_kernel_cap(spark, images_pdf):
         new.sort_values(key).reset_index(drop=True),
         old.sort_values(key).reset_index(drop=True),
     )
-
-
-def test_dedup_caches_released_between_calls(spark):
-    """minhash_lsh_pairs keeps at most ONE live cand/shingle cache pair: the
-    next call (or release_dedup_caches) unpersists the previous one."""
-    import pandas as pd
-
-    from rasteret_spark.operators import dedup
-
-    base = _n_cached(spark)
-    docs = spark.createDataFrame(pd.DataFrame([
-        {"doc_id": i, "text": f"alpha beta gamma {i % 7} delta epsilon"}
-        for i in range(40)
-    ]))
-    dedup.minhash_lsh_pairs(docs, "text", "doc_id", num_perm=8, bands=2,
-                            jaccard_threshold=0.5).count()
-    first = _n_cached(spark)
-    assert first > base  # cand + shingle caches live
-    dedup.minhash_lsh_pairs(docs.limit(20), "text", "doc_id", num_perm=8,
-                            bands=2, jaccard_threshold=0.5).count()
-    assert _n_cached(spark) <= first  # previous pair was released, not stacked
-    dedup.release_dedup_caches()
-    assert _n_cached(spark) == base
