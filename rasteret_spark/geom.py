@@ -8,7 +8,8 @@ polygon masks via rasterio `geometry_mask`; here the join refine only needs
 point-in-polygon and rectangle-polygon tests).
 
 All predicates are numpy-vectorized over arrays of points against one
-polygon; they are called from Arrow-batched pandas UDFs.
+polygon; they are called from Arrow-batched pandas UDFs.  Pixel-window masks
+use ``points_in_polygon_grid``, a crossing-count form of the same ray-cast.
 """
 
 from __future__ import annotations
@@ -148,66 +149,59 @@ def points_in_polygon_wkb(px: np.ndarray, py: np.ndarray, buf: bytes) -> np.ndar
     return inside
 
 
-def points_in_polygon_grid(xs: np.ndarray, ys: np.ndarray, buf: bytes) -> np.ndarray:
-    """Even-odd PIP for a regular grid — scanline form of
-    ``points_in_polygon_wkb`` (bit-identical results, O(rows·log edges +
-    rows·cols) instead of O(rows·cols·edges)).
+# cells per row block of points_in_polygon_grid's count table and crossing test
+PIP_BLOCK_CELLS = 1 << 20
 
-    xs: (nx,) pixel-center x coords; ys: (ny,) pixel-center y coords.
-    Returns (ny, nx) bool.  Per grid row the crossing x-intersections are
-    computed once (same predicate ``(y0 > py) != (y1 > py)`` and the same
-    ``xint`` expression as the generic kernel), then each pixel's parity is
-    the count of intersections >= px via searchsorted.
-    """
+
+def polygon_edges(buf: bytes) -> list[np.ndarray]:
+    """Edge table per polygon, parsed once: a (5, e) float64 array of rows
+    ``x0, y0, x1, y1`` and the ray-cast denominator ``y1 - y0`` (inf where
+    horizontal) over the edges of all its rings."""
+    edges = []
+    for rings in polygons_of(buf):
+        x0, y0 = np.concatenate([r[:-1] for r in rings]).T
+        x1, y1 = np.concatenate([r[1:] for r in rings]).T
+        edges.append(np.array([x0, y0, x1, y1, np.where(y1 == y0, np.inf, y1 - y0)]))
+    return edges
+
+
+def points_in_polygon_grid(
+    xs: np.ndarray, ys: np.ndarray, poly: bytes | list[np.ndarray]
+) -> np.ndarray:
+    """(ny, nx) even-odd mask of the grid ``xs`` x ``ys`` (any order) against
+    polygon WKB or its ``polygon_edges``, bit-identical to
+    ``points_in_polygon_wkb`` on the meshgrid.  Only crossing (row, edge)
+    pairs get the generic kernel's ``xint``; over ascending xs, ``px <= xint``
+    holds exactly for columns ``j < searchsorted(xs, xint, 'right')``, so a
+    pixel's parity counts the cuts right of it, read off a running count of
+    their ``bincount``."""
+    edges = poly if isinstance(poly, list) else polygon_edges(poly)
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    out = np.zeros((ys.size, xs.size), dtype=bool)
-    for rings in polygons_of(buf):
-        ex0 = np.concatenate([r[:-1, 0] for r in rings])
-        ey0 = np.concatenate([r[:-1, 1] for r in rings])
-        ex1 = np.concatenate([r[1:, 0] for r in rings])
-        ey1 = np.concatenate([r[1:, 1] for r in rings])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            denom = np.where(ey1 == ey0, np.inf, ey1 - ey0)
-            py = ys[:, None]  # (h, 1) vs edges (1, e)
-            crosses = (ey0[None, :] > py) != (ey1[None, :] > py)  # (h, e)
-            xint = ex0[None, :] + (py - ey0[None, :]) * (ex1 - ex0)[None, :] / denom[None, :]
-        counts = crosses.sum(axis=1)
-        ascending = xs.size < 2 or bool(np.all(np.diff(xs) > 0))
-        if ascending and int(counts.max(initial=0)) <= 2:
-            # interval fast path (convex rings): each row crosses the boundary
-            # 0 or 2 times; inside = x1 < px <= x2 — the same comparisons the
-            # parity count makes, realized as two searchsorted cuts per row.
-            poly_in = np.zeros((ys.size, xs.size), dtype=bool)
-            two = np.nonzero(counts == 2)[0]
-            if two.size:
-                xint2 = np.where(crosses[two], xint[two], np.nan)
-                x1 = np.nanmin(xint2, axis=1)
-                x2 = np.nanmax(xint2, axis=1)
-                starts = np.searchsorted(xs, x1, side="right")
-                ends = np.searchsorted(xs, x2, side="right")
-                for i, s, e in zip(two, starts, ends):
-                    poly_in[i, s:e] = True
-            for i in np.nonzero(counts == 1)[0]:  # degenerate tangent rows
-                xi = xint[i][crosses[i]]
-                cnt = 1 - np.searchsorted(xi, xs, side="left")
-                poly_in[i] = cnt == 1
-            out |= poly_in
-        elif xs.size * ys.size * ex0.size <= 64_000_000:
-            # one fused (h, w, e) pass — small edge counts (the common case)
-            hits = crosses[:, None, :] & (xs[None, :, None] <= xint[:, None, :])
-            out |= (hits.sum(axis=2) % 2) == 1
-        else:
-            # many edges: per-row sorted intersections + searchsorted
-            poly_in = np.zeros((ys.size, xs.size), dtype=bool)
-            for i in range(ys.size):
-                xi = xint[i][crosses[i]]
-                if xi.size == 0:
-                    continue
-                xi.sort()
-                cnt = xi.size - np.searchsorted(xi, xs, side="left")
-                poly_in[i] = (cnt % 2) == 1
-            out |= poly_in
+    h, w = ys.size, xs.size
+    order = None
+    if not (xs[1:] >= xs[:-1]).all():  # unsorted, descending or NaN
+        order = np.argsort(xs, kind="stable")
+        xs = xs[order]
+    out = np.zeros((h, w), dtype=bool)
+    for x0, y0, x1, y1, den in edges:
+        step = max(1, PIP_BLOCK_CELLS // max(w + 1, x0.size))
+        for r0 in range(0, h, step):
+            py = ys[r0 : r0 + step, None]
+            rows, idx = np.nonzero((y0 > py) != (y1 > py))
+            if rows.size == 0:
+                continue
+            xint = x0[idx] + (py[rows, 0] - y0[idx]) * (x1[idx] - x0[idx]) / den[idx]
+            cut = xs.searchsorted(xint, side="right")
+            cut[np.isnan(xint)] = 0  # px <= NaN never holds
+            # cuts right of pixel j = running count at the row end minus the
+            # one through j, so parity = inequality of the two running parities
+            run = np.bincount(rows * (w + 1) + cut, minlength=py.size * (w + 1))
+            np.bitwise_and(run.cumsum(out=run), 1, out=run)
+            run = run.reshape(py.size, w + 1)
+            out[r0 : r0 + py.size] |= run[:, :w] != run[:, w:]
+    if order is not None:
+        out[:, order] = out.copy()
     return out
 
 

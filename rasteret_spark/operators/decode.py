@@ -230,8 +230,11 @@ def zonal_stats(
         JOIN images(image_id, bytes, caption)              -- each blob moves
                                                               at most once
         mapInPandas: per image, ONE CachedReader shares tile decodes across
-        all its AOIs; masking is the scanline grid PIP (bit-identical to the
-        generic ray-cast kernel).
+        all its AOIs; masking is the grid PIP (bit-identical to the generic
+        ray-cast kernel) over AOI edges parsed once per task.
+
+    One row per (image, aoi, requested band the image has); a band whose
+    read fails gets a status row without touching the other bands' rows.
 
     This mirrors rasteret's per-record multi-geometry read loop
     (`src/rasteret/core/execution.py:244-297`) in distributed form.
@@ -274,25 +277,27 @@ def zonal_stats(
 
     want_bands = tuple(bands) if bands is not None else (0,)
 
-    def _quarantine(image_id, caption, aois, bands, e) -> list[dict]:
-        """One status row per planned (aoi, requested band) work unit — a
-        corrupt blob yields data rows, never a task failure (the reference's
-        per-record failure collection, `src/rasteret/core/execution.py:274-297`)."""
-        msg = _err_status(e)
+    def _rows(image_id, caption, aois, bands, status, win=(None,) * 4, px_count=0):
+        """One row per (aoi, band) work unit.  A status other than "ok" is a
+        quarantine row — a corrupt blob yields data rows, never a task
+        failure (the reference's per-record failure collection,
+        `src/rasteret/core/execution.py:274-297`)."""
+        c0, r0, ww, wh = win
         return [
             {
                 "image_id": image_id, "aoi_id": aoi["aoi_id"], "band": band,
                 "caption": caption,
-                "win_col": None, "win_row": None, "win_w": None, "win_h": None,
-                "px_count": 0, "valid_count": 0,
+                "win_col": c0, "win_row": r0, "win_w": ww, "win_h": wh,
+                "px_count": px_count, "valid_count": 0,
                 "v_sum": None, "v_mean": None, "v_min": None, "v_max": None,
-                "status": msg,
+                "status": status,
             }
             for aoi in aois
             for band in bands
         ]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        edges_of: dict[bytes, list[np.ndarray]] = {}  # AOI WKB -> parsed edges, this task
         for pdf in batches:
             out = []
             metas = pdf["meta"] if has_meta else [None] * len(pdf)
@@ -311,7 +316,7 @@ def zonal_stats(
                     meta = reader.meta
                     img_bands = [b for b in want_bands if b < meta.n_bands]
                 except Exception as e:  # header/blob-level failure
-                    out.extend(_quarantine(image_id, caption, aois, want_bands, e))
+                    out.extend(_rows(image_id, caption, aois, want_bands, _err_status(e)))
                     continue
                 for aoi in aois:
                     try:
@@ -325,13 +330,14 @@ def zonal_stats(
                         )
                         inside = None
                         if ww > 0 and wh > 0:
+                            wkb = bytes(aoi["aoi_geometry"])
                             if crs.is_separable(meta.epsg):
                                 lon, lat = pixel_axes_lonlat(
                                     meta.transform, meta.epsg, c0, r0, ww, wh
                                 )
-                                inside = geom.points_in_polygon_grid(
-                                    lon, lat, bytes(aoi["aoi_geometry"])
-                                )
+                                if wkb not in edges_of:
+                                    edges_of[wkb] = geom.polygon_edges(wkb)
+                                inside = geom.points_in_polygon_grid(lon, lat, edges_of[wkb])
                             else:
                                 # non-separable CRS (real Transverse Mercator):
                                 # lat varies along a pixel row, so the scanline
@@ -341,21 +347,18 @@ def zonal_stats(
                                     meta.transform, meta.epsg, c0, r0, ww, wh
                                 )
                                 inside = geom.points_in_polygon_wkb(
-                                    glon.ravel(), glat.ravel(),
-                                    bytes(aoi["aoi_geometry"]),
+                                    glon.ravel(), glat.ravel(), wkb
                                 ).reshape(wh, ww)
-                        for band in img_bands:
-                            rec = {
-                                "image_id": image_id,
-                                "aoi_id": aoi["aoi_id"],
-                                "band": band,
-                                "caption": caption,
-                                "win_col": c0, "win_row": r0, "win_w": ww, "win_h": wh,
-                                "px_count": 0, "valid_count": 0,
-                                "v_sum": None, "v_mean": None, "v_min": None, "v_max": None,
-                                "status": "ok",
-                            }
-                            if inside is not None:
+                    except Exception as e:  # window/mask failure: this AOI only
+                        out.extend(_rows(image_id, caption, [aoi], img_bands, _err_status(e)))
+                        continue
+                    px_count = 0 if inside is None else int(inside.sum())
+                    for band in img_bands:
+                        rec = _rows(
+                            image_id, caption, [aoi], [band], "ok", (c0, r0, ww, wh), px_count
+                        )[0]
+                        if inside is not None:
+                            try:
                                 arr = reader.window(c0, r0, ww, wh, band=band)
                                 valid = inside
                                 if meta.nodata is not None:
@@ -369,17 +372,17 @@ def zonal_stats(
                                             arr != np.asarray(meta.nodata).astype(arr.dtype)
                                         )
                                 v = arr[valid].astype(np.float64)
-                                rec.update(
-                                    px_count=int(inside.sum()),
-                                    valid_count=int(v.size),
-                                    v_sum=float(v.sum()) if v.size else None,
-                                    v_mean=float(v.mean()) if v.size else None,
-                                    v_min=float(v.min()) if v.size else None,
-                                    v_max=float(v.max()) if v.size else None,
-                                )
-                            out.append(rec)
-                    except Exception as e:  # tile/window-level failure: this AOI only
-                        out.extend(_quarantine(image_id, caption, [aoi], img_bands, e))
+                                if v.size:
+                                    # v_mean: the division ndarray.mean makes of this sum
+                                    v_sum = float(v.sum())
+                                    rec.update(
+                                        valid_count=int(v.size), v_sum=v_sum,
+                                        v_mean=v_sum / v.size,
+                                        v_min=float(v.min()), v_max=float(v.max()),
+                                    )
+                            except Exception as e:  # tile failure: this (aoi, band) only
+                                rec = _rows(image_id, caption, [aoi], [band], _err_status(e))[0]
+                        out.append(rec)
             yield pd.DataFrame(out) if out else pd.DataFrame(
                 {f.split(" ")[0]: [] for f in ZONAL_SCHEMA.split(", ")}
             )

@@ -62,6 +62,31 @@ def test_zonal_quarantines_corrupt_blob(spark, mixed_images):
     assert bad.iloc[0]["valid_count"] == 0 and pd.isna(bad.iloc[0]["v_mean"])
 
 
+def test_zonal_partial_band_failure_one_row_per_band(spark):
+    """Band 1's tiles are corrupt, band 0's decode: the AOI keeps band 0's
+    ok row and gets one status row for band 1 — no band appears twice."""
+    arr = np.arange(2 * 32 * 32, dtype=np.uint16).reshape(2, 32, 32)
+    transform = (0.01, 0.0, 10.0, 0.0, -0.01, 50.0)
+    blob = bytearray(
+        mr.encode_image(arr, tile_w=16, tile_h=16, transform=transform, epsg=4326)
+    )
+    meta = mr.parse_header(bytes(blob))
+    for t in range(meta.tiles_per_band, 2 * meta.tiles_per_band):  # band 1
+        off, cnt = int(meta.tile_offsets[t]), int(meta.tile_byte_counts[t])
+        blob[off : off + cnt] = b"\x99" * cnt
+    im = {"image_id": "img-2band", "xmin": 10.05, "ymin": 49.75, "xmax": 10.25, "ymax": 49.95}
+    pairs = spark.createDataFrame(pd.DataFrame([{"image_id": "img-2band", **_aoi_for(im)}]))
+    images = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["img-2band"], "bytes": [blob], "caption": [""]})
+    )
+    got = decode.zonal_stats(pairs, images, bands=(0, 1)).toPandas().sort_values("band")
+    assert list(got["band"]) == [0, 1]
+    ok, bad = got.iloc[0], got.iloc[1]
+    assert ok["status"] == "ok" and ok["px_count"] > 0 and ok["valid_count"] > 0
+    assert bad["status"] != "ok" and "Error" in bad["status"]
+    assert bad["valid_count"] == 0 and pd.isna(bad["v_mean"])
+
+
 def test_sampling_quarantines_corrupt_blob(spark, mixed_images):
     cands = spark.createDataFrame(
         pd.DataFrame(

@@ -6,8 +6,11 @@ here the same kernels additionally hold under generated inputs.
 Properties pinned:
   * codec matrix: encode/decode identity for arbitrary tiles, every lossless
     codec x predictor combination (incl. the pure-Python LZW);
-  * PIP: the scanline grid kernel is BIT-IDENTICAL to the generic even-odd
-    ray-cast for arbitrary simple polygons on arbitrary grids;
+  * PIP: the crossing-count grid kernel is BIT-IDENTICAL to the generic
+    even-odd ray-cast for simple polygons, multipolygons with holes,
+    vertices and pixel centres on shared grid values, ascending, descending
+    and unsorted columns, NaN coordinates and grids split into many row
+    blocks, and its ``polygon_edges`` input form equals its WKB form;
   * quadtree cells: pack/unpack identity, parent containment, cover_bbox
     covers every sampled interior point, compact/uncover equivalence;
   * CRS: forward/inverse identity for every builtin projection family;
@@ -15,6 +18,7 @@ Properties pinned:
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from rasteret_spark import crs, geom, grid
@@ -75,33 +79,90 @@ def test_float_predictor3_roundtrip(seed):
     np.testing.assert_array_equal(out, tile)
 
 
-# --- PIP: scanline == generic ray-cast -----------------------------------------
+# --- PIP: grid kernel == generic ray-cast --------------------------------------
 @st.composite
-def simple_polygon(draw):
-    """Star-shaped simple polygon: sorted angles around a center."""
-    n = draw(st.integers(3, 9))
+def tricky_multipolygon(draw):
+    """1-3 polygons, each an outer ring with an optional hole; on a quarter
+    grid (so vertices, horizontal edges and pixel centres share values),
+    unsorted angles (self-intersecting rings) and a NaN vertex allowed."""
     seed = draw(st.integers(0, 2**31 - 1))
+    snap = draw(st.booleans())
     rng = np.random.default_rng(seed)
-    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
-    rad = rng.uniform(0.2, 1.0, n)
-    cx, cy = rng.uniform(-1, 1, 2)
-    xs = cx + rad * np.cos(ang)
-    ys = cy + rad * np.sin(ang)
-    ring = np.stack([np.append(xs, xs[0]), np.append(ys, ys[0])], axis=1)
-    return geom.wkb_polygon([ring])
+
+    def ring(cx, cy, scale):
+        n = int(rng.integers(3, 10))
+        ang = rng.uniform(0, 2 * np.pi, n)
+        if rng.random() < 0.7:
+            ang = np.sort(ang)
+        rad = scale * rng.uniform(0.2, 1.0, n)
+        pts = np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
+        if snap:
+            pts = np.round(pts * 4) / 4
+        if rng.random() < 0.1:
+            pts[rng.integers(n), rng.integers(2)] = np.nan
+        return np.vstack([pts, pts[:1]])
+
+    polys = []
+    for _ in range(int(rng.integers(1, 4))):
+        cx, cy = rng.uniform(-1, 1, 2)
+        rings = [ring(cx, cy, 1.0)]
+        if rng.random() < 0.5:
+            rings.append(ring(cx, cy, 0.35))  # hole (or overlap: even-odd either way)
+        polys.append(rings)
+    if len(polys) == 1 and rng.random() < 0.5:
+        return geom.wkb_polygon(polys[0]), snap
+    return geom.wkb_multipolygon(polys), snap
 
 
-@settings(**SETTINGS)
-@given(buf=simple_polygon(), seed=st.integers(0, 2**31 - 1))
-def test_scanline_pip_bitidentical_to_raycast(buf, seed):
+def _tricky_grid(seed: int, snap: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Pixel-centre axes in ascending, descending or shuffled column order,
+    snapped to the polygon's quarter grid when it is, with NaN allowed."""
     rng = np.random.default_rng(seed)
-    nx, ny = int(rng.integers(1, 30)), int(rng.integers(1, 30))
-    xs = np.sort(rng.uniform(-2.2, 2.2, nx))
-    ys = rng.uniform(-2.2, 2.2, ny)  # arbitrary order: grid rows need no sort
-    grid_mask = geom.points_in_polygon_grid(xs, ys, buf)
+    nx, ny = int(rng.integers(0, 30)), int(rng.integers(0, 30))
+    xs = rng.uniform(-2.2, 2.2, nx)
+    ys = rng.uniform(-2.2, 2.2, ny)
+    if snap:
+        xs, ys = np.round(xs * 4) / 4, np.round(ys * 4) / 4
+    order = rng.integers(3)
+    if order == 0:
+        xs = np.sort(xs)
+    elif order == 1:
+        xs = np.sort(xs)[::-1]
+    if nx and rng.random() < 0.15:
+        xs[rng.integers(nx)] = np.nan
+    if ny and rng.random() < 0.15:
+        ys[rng.integers(ny)] = np.nan
+    return xs, ys
+
+
+def _raycast_grid(xs, ys, buf) -> np.ndarray:
     gx, gy = np.meshgrid(xs, ys)
-    generic = geom.points_in_polygon_wkb(gx.ravel(), gy.ravel(), buf).reshape(ny, nx)
-    np.testing.assert_array_equal(grid_mask, generic)
+    return geom.points_in_polygon_wkb(gx.ravel(), gy.ravel(), buf).reshape(ys.size, xs.size)
+
+
+@settings(deadline=None, max_examples=100)
+@given(poly=tricky_multipolygon(), seed=st.integers(0, 2**31 - 1))
+def test_scanline_pip_bitidentical_to_raycast(poly, seed):
+    buf, snap = poly
+    xs, ys = _tricky_grid(seed, snap)
+    want = _raycast_grid(xs, ys, buf)
+    np.testing.assert_array_equal(geom.points_in_polygon_grid(xs, ys, buf), want)
+    edges = geom.polygon_edges(buf)
+    np.testing.assert_array_equal(geom.points_in_polygon_grid(xs, ys, edges), want)
+
+
+@settings(deadline=None, max_examples=100)
+@given(poly=tricky_multipolygon(), seed=st.integers(0, 2**31 - 1), cells=st.integers(1, 40))
+def test_grid_pip_row_blocks_match_one_block(poly, seed, cells):
+    buf, snap = poly
+    xs, ys = _tricky_grid(seed, snap)
+    whole = geom.points_in_polygon_grid(xs, ys, buf)
+    with pytest.MonkeyPatch.context() as mp:
+        # a few rows (down to one) per block: every grid crosses block edges
+        mp.setattr(geom, "PIP_BLOCK_CELLS", cells)
+        blocked = geom.points_in_polygon_grid(xs, ys, buf)
+    np.testing.assert_array_equal(blocked, whole)
+    np.testing.assert_array_equal(blocked, _raycast_grid(xs, ys, buf))
 
 
 # --- quadtree cells ------------------------------------------------------------
