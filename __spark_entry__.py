@@ -535,6 +535,18 @@ def _images_df(spark, n=120):
     return syn.spark_images_df(spark, n)
 
 
+def _aois_df(spark, n=40):
+    """Synthetic AOIs in the zonal contract (aoi_id, aoi_geometry,
+    aoi_xmin..aoi_ymax)."""
+    from rasteret_spark.sources import synthetic as syn
+
+    return spark.createDataFrame(syn.aois_table(n).to_pandas()).select(
+        "aoi_id", F.col("geometry").alias("aoi_geometry"),
+        F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
+        F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
+    )
+
+
 def _gen_fingerprint() -> str:
     """Cache key for /tmp blob/oracle artifacts — hashes the WHOLE encode
     path (generator + TIFF writer + mini-raster writer + codecs) via the
@@ -1078,43 +1090,17 @@ def q40_image_enrich(spark, sf_dir):
 
 
 def q41_image_zonal(spark, sf_dir):
-    from rasteret_spark.operators import decode, spatial_join as sj
-    from rasteret_spark.sources import synthetic as syn
+    from rasteret_spark.operators import decode
 
-    images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
-    aoi = spark.createDataFrame(syn.aois_table(40).to_pandas()).select(
-        "aoi_id", F.col("geometry").alias("aoi_geometry"),
-        F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
-        F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
-    )
-    cands = sj.bbox_join(img_light, aoi, res=7)
-    refined = sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
-        "image_id", "aoi_id", "aoi_geometry",
-        "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax",
-    )
-    return decode.zonal_stats(refined, images.select("image_id", "bytes", "caption"))
+    return decode.zonal_join(_images_df(spark), _aois_df(spark), res=7)
 
 
 def q42_image_point_sample(spark, sf_dir):
-    from rasteret_spark.operators import sampling, spatial_join as sj
+    from rasteret_spark.operators import sampling
     from rasteret_spark.sources import synthetic as syn
 
-    images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     pts = spark.createDataFrame(syn.points_table(200).to_pandas())
-    cands = sj.point_in_bbox_join(pts, img_light, res=8).select(
-        "point_index", "x", "y", "image_id"
-    )
-    return sampling.sample_points(cands, images.select("image_id", "bytes"), max_ring=4)
+    return sampling.sample_join(_images_df(spark), pts, res=8, max_ring=4)
 
 
 def q43_image_dedup_phash(spark, sf_dir):
@@ -1236,28 +1222,9 @@ def q49_image_latest_sample(spark, sf_dir):
 def q50_image_zonal_bands(spark, sf_dir):
     """Band-parameterized zonal extraction (bands 0..2; images carry 1-3
     planar bands — rows fan out per AVAILABLE band)."""
-    from rasteret_spark.operators import decode, spatial_join as sj
-    from rasteret_spark.sources import synthetic as syn
+    from rasteret_spark.operators import decode
 
-    images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
-    aoi = spark.createDataFrame(syn.aois_table(40).to_pandas()).select(
-        "aoi_id", F.col("geometry").alias("aoi_geometry"),
-        F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
-        F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
-    )
-    cands = sj.bbox_join(img_light, aoi, res=7)
-    refined = sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
-        "image_id", "aoi_id", "aoi_geometry",
-        "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax",
-    )
-    return decode.zonal_stats(
-        refined, images.select("image_id", "bytes", "caption"), bands=(0, 1, 2)
-    )
+    return decode.zonal_join(_images_df(spark), _aois_df(spark), res=7, bands=(0, 1, 2))
 
 
 def q52_ivf_ann(spark, sf_dir):
@@ -1439,31 +1406,14 @@ def q62_tiff_enrich_zonal(spark, sf_dir):
     fixtures validated offline in tests/test_tiff.py).  Emits per-(image,
     aoi, band) zonal stats joined with the parsed header facts."""
     from rasteret_spark.operators import decode
-    from rasteret_spark.operators import spatial_join as sj
     from rasteret_spark.operators.enrich import enrich_headers
-    from rasteret_spark.sources import synthetic as syn
 
     images = _tiff_images_cached(spark, 96)
     enriched = enrich_headers(images).select(
         "image_id", "meta.container", "meta.byte_order",
         F.col("meta.compression").alias("codec"), "meta.predictor",
     )
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
-    aoi = spark.createDataFrame(syn.aois_table(40).to_pandas()).select(
-        "aoi_id", F.col("geometry").alias("aoi_geometry"),
-        F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
-        F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
-    )
-    cands = sj.bbox_join(img_light, aoi, res=7)
-    refined = sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
-        "image_id", "aoi_id", "aoi_geometry",
-        "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax",
-    )
-    zs = decode.zonal_stats(refined, images.select("image_id", "bytes", "caption"))
+    zs = decode.zonal_join(images, _aois_df(spark), res=7)
     return zs.join(F.broadcast(enriched), "image_id").select(
         "image_id", "aoi_id", "band", "container", "byte_order", "codec",
         "predictor", "px_count", "valid_count", "v_mean", "status",
@@ -2233,22 +2183,12 @@ def q66_pixel_series(spark, sf_dir):
     (operators/sampling.point_time_series; fold is pure Catalyst
     array_sort + aggregate).  Pinned vs a pandas fold of the flat samples
     in tests/test_collection.py::test_pixel_series_matches_flat_samples."""
-    from rasteret_spark.operators import sampling, spatial_join as sj
+    from rasteret_spark.operators import sampling
     from rasteret_spark.sources import synthetic as syn
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     pts = spark.createDataFrame(syn.points_table(200).to_pandas())
-    cands = sj.point_in_bbox_join(pts, img_light, res=8).select(
-        "point_index", "x", "y", "image_id"
-    )
-    samples = sampling.sample_points(
-        cands, images.select("image_id", "bytes"), bands=(0,)
-    )
+    samples = sampling.sample_join(images, pts, res=8, bands=(0,))
     series = sampling.point_time_series(
         samples, images.select("image_id", "datetime")
     )
@@ -2293,7 +2233,7 @@ def entry(spark: SparkSession) -> DataFrame:
     per-image tile-dedup decode + ring-fallback sampling -> metadata join-back.
     Exercises decode + cell join + tile assignment (the headline metric path).
     """
-    from rasteret_spark.operators import sampling, spatial_join as sj
+    from rasteret_spark.operators import sampling
     from rasteret_spark.sources import synthetic as syn
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -2304,15 +2244,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("event_type").alias("station_id"),
     )
     images = syn.spark_images_df(spark, 150)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
-    cands = sj.point_in_bbox_join(points, img_light, res=8).select(
-        "point_index", "x", "y", "image_id"
-    )
-    samples = sampling.sample_points(cands, images.select("image_id", "bytes"), max_ring=4)
+    samples = sampling.sample_join(images, points, res=8, max_ring=4)
     meta = images.select("image_id", "caption", "datetime")
     return (
         samples.join(F.broadcast(meta), "image_id")

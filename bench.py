@@ -47,28 +47,17 @@ def headline_pipeline(spark, images_path: str):
     """The metric path: enrich -> cell join -> refine -> decode/mask/reduce."""
     from pyspark.sql import functions as F
 
-    from rasteret_spark.operators import decode, enrich, spatial_join as sj
+    from rasteret_spark.operators import decode
     from rasteret_spark.sources.synthetic import aois_table
 
-    images = spark.read.parquet(images_path)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
+    # captions stay out of the metric path (zonal_join fills "")
+    images = spark.read.parquet(images_path).drop("caption")
     aoi = spark.createDataFrame(aois_table(N_AOIS).to_pandas()).select(
         "aoi_id", F.col("geometry").alias("aoi_geometry"),
         F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
         F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
     )
-    cands = sj.bbox_join(img_light, aoi, res=7, salts=4)
-    refined = sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
-        "image_id", "aoi_id", "aoi_geometry",
-        "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax",
-    )
-    return decode.zonal_stats(
-        refined, images.select("image_id", "bytes").withColumn("caption", F.lit(""))
-    )
+    return decode.zonal_join(images, aoi, res=7, salts=4)
 
 
 def enrich_pipeline(spark, images_path: str):
@@ -85,22 +74,12 @@ def enrich_pipeline(spark, images_path: str):
 
 
 def sample_pipeline(spark, images_path: str):
-    from pyspark.sql import functions as F
-
-    from rasteret_spark.operators import sampling, spatial_join as sj
+    from rasteret_spark.operators import sampling
     from rasteret_spark.sources.synthetic import points_table
 
     images = spark.read.parquet(images_path)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     pts = spark.createDataFrame(points_table(N_POINTS).to_pandas())
-    cands = sj.point_in_bbox_join(pts, img_light, res=8).select(
-        "point_index", "x", "y", "image_id"
-    )
-    return sampling.sample_points(cands, images.select("image_id", "bytes"), max_ring=3)
+    return sampling.sample_join(images, pts, res=8, max_ring=3)
 
 
 BENCH_QUERIES = [

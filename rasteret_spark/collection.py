@@ -17,6 +17,11 @@ until a Spark action runs (or a driver-side iterator like
 ``chip_batches`` is consumed).  The one exception: building a zonal, sample,
 mosaic or chip plan runs its candidate join once, to size and checkpoint the
 grouped side (``decode.grouped_side_choice``).
+
+Zonal and point-sample methods hand the stored records straight to
+``decode.zonal_join`` / ``sampling.sample_join``, which own candidate
+generation and the bytes-or-href payload choice, so blob and remote
+(href-only) collections take the same paths, checkpointed or not.
 """
 
 from __future__ import annotations
@@ -25,15 +30,6 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
-
-
-def _light(records: DataFrame) -> DataFrame:
-    return records.select(
-        "image_id",
-        *(["datetime"] if "datetime" in records.columns else []),
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
 
 
 class Collection:
@@ -215,8 +211,8 @@ class Collection:
         self, aois: DataFrame, bands=(0,), res: int = 7,
         resume_dir: str | None = None,
     ) -> DataFrame:
-        """Zonal statistics per (image, AOI, band) — the ``get_gdf`` analogue.
-        ``aois`` needs aoi_id, aoi_geometry (WKB), aoi_xmin/_ymin/_xmax/_ymax.
+        """Zonal statistics per (image, AOI, band) — the ``get_gdf`` analogue
+        (``decode.zonal_join`` over the records).  ``aois`` needs aoi_id, aoi_geometry (WKB), aoi_xmin/_ymin/_xmax/_ymax.
 
         ``resume_dir`` switches to the CHECKPOINTED path: per-partition
         lineage is committed under that directory and a killed job resumes
@@ -224,73 +220,41 @@ class Collection:
         flagship API surface of the engine's resume protocol.  The resumable
         path is band-0 (the pipeline's contract); pass ``bands`` only on the
         direct path."""
-        from rasteret_spark.operators import decode, spatial_join as sj
+        from rasteret_spark.operators import decode
 
         if resume_dir is not None:
             from rasteret_spark.plans.pipelines import resumable_zonal
 
             if tuple(bands) != (0,):
                 raise ValueError("resume_dir path computes band 0 (pipeline contract)")
-            images = self.records.select(
-                "image_id", "bytes", "caption",
-                F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-                F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-            )
             # drop the internal bucket column: the facade contract is the
             # same schema on both the direct and checkpointed paths
             return resumable_zonal(
-                self.spark, images, aois, resume_dir, res=res
+                self.spark, self.records, aois, resume_dir, res=res
             ).drop("part_id")
-
-        cands = sj.bbox_join(_light(self.records), aois, res=res)
-        pairs = (
-            sj.refine_rect_polygon(cands)
-            .filter(F.col("intersects"))
-            .select("image_id", "aoi_id", "aoi_geometry",
-                    "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax")
-        )
-        # remote collections (from_hrefs(materialize=False)) carry href, not
-        # bytes — zonal_stats then reads windows through ranged fetches
-        recs = self.records
-        if "caption" not in recs.columns:
-            recs = recs.withColumn("caption", F.lit(""))
-        payload = "bytes" if "bytes" in recs.columns else "href"
-        cols = ["image_id", payload, "caption"]
-        if "meta" in recs.columns:  # pre-enriched: skip per-window header reads
-            cols.append("meta")
-        return decode.zonal_stats(pairs, recs.select(*cols), bands=bands)
+        return decode.zonal_join(self.records, aois, res=res, bands=bands)
 
     def sample_points(
         self, points: DataFrame, bands=(0,), max_ring: int = 0,
         neighborhood: int = 0, res: int = 8, resume_dir: str | None = None,
     ) -> DataFrame:
-        """Pixel values at points — ``Collection.sample_points`` analogue.
-        ``points`` needs point_index, x, y (lon/lat).  ``resume_dir``
-        switches to the checkpointed path (band 0), mirroring
-        :meth:`zonal`."""
-        from rasteret_spark.operators import sampling, spatial_join as sj
+        """Pixel values at points — ``Collection.sample_points`` analogue
+        (``sampling.sample_join`` over the records).  ``points`` needs
+        point_index, x, y (lon/lat).  ``resume_dir`` switches to the
+        checkpointed path (band 0), mirroring :meth:`zonal`."""
+        from rasteret_spark.operators import sampling
 
         if resume_dir is not None:
             from rasteret_spark.plans.pipelines import resumable_sample
 
             if tuple(bands) != (0,):
                 raise ValueError("resume_dir path computes band 0 (pipeline contract)")
-            images = self.records.select(
-                "image_id", "bytes",
-                F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-                F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-            )
             return resumable_sample(
-                self.spark, images, points, resume_dir,
+                self.spark, self.records, points, resume_dir,
                 max_ring=max_ring, neighborhood=neighborhood, res=res,
             ).drop("part_id")
-
-        cands = sj.point_in_bbox_join(points, _light(self.records), res=res).select(
-            "point_index", "x", "y", "image_id"
-        )
-        payload = "bytes" if "bytes" in self.records.columns else "href"
-        return sampling.sample_points(
-            cands, self.records.select("image_id", payload),
+        return sampling.sample_join(
+            self.records, points, res=res,
             max_ring=max_ring, bands=bands, neighborhood=neighborhood,
         )
 
@@ -329,7 +293,7 @@ class Collection:
         ``bbox`` is always lon/lat; ``grid_epsg`` picks the grid CRS
         (None = lon/lat, "auto" = most-common native CRS of the records,
         int = that CRS).  For projected grids ``xres`` is in grid units."""
-        from rasteret_spark.operators import chips, raster_mosaic as rmo
+        from rasteret_spark.operators import chips, raster_mosaic as rmo, spatial_join as sj
 
         sub = self.subset(bbox=bbox, date_range=date_range)
         # "auto" detects over the SUBSET actually mosaicked (the reference
@@ -345,7 +309,7 @@ class Collection:
             else max_images_per_chip
         )
         pairs = rmo.chip_candidates(
-            grid, _light(sub.records),
+            grid, sj.image_light(sub.records),
             sub.records.select("image_id", "datetime", "bytes"),
             max_images_per_chip=cap,
         )
@@ -442,7 +406,7 @@ class Collection:
         query bbox — the ``to_torchgeo_dataset`` analogue.  Pair with
         ``operators.assemble.chip_batches`` for DataLoader-style batches.
         ``grid_epsg`` as in :meth:`mosaic` (None / "auto" / int)."""
-        from rasteret_spark.operators import chips as chp
+        from rasteret_spark.operators import chips as chp, spatial_join as sj
 
         gbox, gxres, epsg = self._resolve_grid(bbox, xres, grid_epsg)
         reqs = chp.chip_requests(
@@ -450,7 +414,7 @@ class Collection:
             seed=seed, grid_epsg=epsg,
         )
         return chp.chip_serve(
-            reqs, _light(self.records),
+            reqs, sj.image_light(self.records),
             self.records.select("image_id", "datetime", "bytes"),
             t_start=t_start, t_end=t_end, t_step=t_step, bands=bands, method=method,
         )
@@ -490,14 +454,10 @@ class Collection:
         """Per-point temporal drill: sample every containing image and fold
         the valid observations into one chronological series row per
         (point, band) — `operators/sampling.point_time_series`."""
-        from rasteret_spark.operators import sampling, spatial_join as sj
+        from rasteret_spark.operators import sampling
 
-        cands = sj.point_in_bbox_join(points, _light(self.records), res=8).select(
-            "point_index", "x", "y", "image_id"
-        )
-        samples = sampling.sample_points(
-            cands, self.records.select("image_id", "bytes"),
-            max_ring=max_ring, bands=tuple(bands),
+        samples = sampling.sample_join(
+            self.records, points, res=8, max_ring=max_ring, bands=tuple(bands)
         )
         return sampling.point_time_series(
             samples, self.records.select("image_id", "datetime")

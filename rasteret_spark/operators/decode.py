@@ -10,6 +10,11 @@ are the only ones decoded.  All work happens inside ``mapInPandas`` batches;
 the DataFrame plan stays declarative so Catalyst prunes columns and pushes
 filters below these stages.
 
+``zonal_join(images, aois)`` is the way in to zonal extraction: it takes the
+stored image table and the AOI table and owns candidate generation (cell
+join, exact refine, payload choice) before the decode.  ``zonal_stats`` is
+the decode stage over already-refined pairs.
+
 Masking semantics match the reference: a pixel contributes iff its center is
 inside the AOI polygon AND its value is not nodata (valid_mask = coverage ∧
 geometry ∧ nodata, `src/rasteret/fetch/cog.py:1642-1692`); fill never promotes
@@ -87,11 +92,11 @@ IMAGE_STATS_SCHEMA = (
 )
 
 
-def decode_image_stats(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def decode_image_stats(df: DataFrame) -> DataFrame:
     """Decode every image fully (all tiles via coalesced range reads) and emit
     per-image pixel stats.  Input needs columns: image_id, bytes, fmt, caption."""
     cols = ["image_id", "bytes", "fmt", "caption"]
-    df = df.repartition(_decode_parallelism(df, parallelism), "image_id")
+    df = df.repartition(_decode_parallelism(df), "image_id")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -204,23 +209,78 @@ def grouped_side_choice(agg: DataFrame, list_col: str) -> tuple[DataFrame, bool]
     return agg, int(n_pairs) <= BROADCAST_PAIRS_LIMIT
 
 
-def _decode_parallelism(df: DataFrame, parallelism: int | None) -> int:
+def _decode_parallelism(df: DataFrame) -> int:
     """Decode stages are compute-bound, not byte-bound: AQE's size-based
     partition coalescing would pack a whole image table (tiny in bytes,
     heavy in CPU) onto a couple of tasks.  Pin an explicit hash repartition
     so every core decodes."""
-    if parallelism is not None:
-        return parallelism
     return df.sparkSession.sparkContext.defaultParallelism * 2
+
+
+def blob_source(images: DataFrame):
+    """(payload column, opener) of an image table.  ``bytes`` wins when
+    present; otherwise the table is remote and ``href`` rows open as lazy
+    ranged-fetch facades — header prefix + coalesced tile ranges only,
+    nothing downloads whole (the reference's COG access pattern).  The
+    ranged-reader registry is snapshotted here, at plan build:
+    driver-registered schemes travel by closure (executors import this
+    module fresh)."""
+    if "bytes" in images.columns:
+        return "bytes", bytes
+    if "href" not in images.columns:
+        raise ValueError("images needs a 'bytes' or 'href' column")
+    from rasteret_spark.sources.fetch import _RANGED_READERS
+
+    readers = dict(_RANGED_READERS)
+
+    def open_href(href):
+        from rasteret_spark.sources.fetch import RangedBlob
+
+        return RangedBlob(str(href), readers)
+
+    return "href", open_href
+
+
+def zonal_join(
+    images: DataFrame,
+    aois: DataFrame,
+    *,
+    res: int = 7,
+    salts: int = 0,
+    bands: tuple[int, ...] | list[int] | None = None,
+) -> DataFrame:
+    """Zonal statistics per (image, AOI, requested band) from the stored
+    tables — the pipeline's one composition, owning candidate generation.
+
+    ``images``: image_id, xmin/ymin/xmax/ymax, ``bytes`` or ``href``, and
+    optionally ``caption`` (default "") and a pre-enriched ``meta`` struct
+    (kept: windows then plan from it without header reads).  ``aois``:
+    aoi_id, aoi_geometry (WKB), aoi_xmin/_ymin/_xmax/_ymax.
+
+    The plan is the reference's bbox prefilter + exact per-pair refine
+    (`src/rasteret/core/collection.py:225-239`, `execution.py:244-297`):
+    ``spatial_join.bbox_join`` over light columns at cell level ``res``
+    (``salts`` > 0 salts the hot cells), ``refine_rect_polygon`` drops
+    bbox-only overlaps, then ``zonal_stats`` decodes.  Returns
+    ``ZONAL_SCHEMA`` rows."""
+    from rasteret_spark.operators import spatial_join as sj
+
+    cands = sj.bbox_join(sj.image_light(images), aois, res=res, salts=salts)
+    pairs = sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
+        "image_id", "aoi_id", "aoi_geometry", "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax"
+    )
+    if "caption" not in images.columns:
+        images = images.withColumn("caption", F.lit(""))
+    return zonal_stats(pairs, images, bands=bands)
 
 
 def zonal_stats(
     pairs: DataFrame,
     images: DataFrame,
-    parallelism: int | None = None,
     bands: tuple[int, ...] | list[int] | None = None,
 ) -> DataFrame:
-    """Zonal extraction with scale-aware dataflow.
+    """Zonal extraction over refined candidate pairs (``zonal_join`` builds
+    them; call that instead).
 
     ``pairs`` is the refined candidate set carrying LIGHT columns only
     (image_id, aoi_id, aoi_geometry WKB + aoi bbox) — blobs never ride
@@ -248,22 +308,10 @@ def zonal_stats(
             F.struct("aoi_id", "aoi_geometry", "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax")
         ).alias("_aois")
     )
+    # with pre-enriched ``meta`` the per-window header reads disappear
     has_meta = "meta" in images.columns
-    has_bytes = "bytes" in images.columns
-    # remote mode: an href column (and no bytes) reads every window through
-    # ranged fetches — header prefix + coalesced tile ranges only, nothing
-    # downloads whole (the reference's COG access pattern; with pre-enriched
-    # ``meta`` the header reads disappear too)
-    payload_col = "bytes" if has_bytes else "href"
-    if payload_col not in images.columns:
-        raise ValueError("images needs a 'bytes' or 'href' column")
+    payload_col, open_blob = blob_source(images)
     cols = ["image_id", payload_col, "caption"] + (["meta"] if has_meta else [])
-    if not has_bytes:
-        from rasteret_spark.sources.fetch import _RANGED_READERS
-
-        # snapshot at plan build: driver-registered schemes travel by
-        # closure (executors import this module fresh)
-        ranged_readers = dict(_RANGED_READERS)
     agg, use_broadcast = grouped_side_choice(agg, "_aois")
     if use_broadcast:
         # the grouped AOI side is small next to the blobs (size-guarded):
@@ -273,7 +321,7 @@ def zonal_stats(
         src = images.select(*cols).join(F.broadcast(agg), "image_id")
     else:
         src = images.select(*cols).join(agg, "image_id")
-        src = src.repartition(_decode_parallelism(src, parallelism), "image_id")
+        src = src.repartition(_decode_parallelism(src), "image_id")
 
     want_bands = tuple(bands) if bands is not None else (0,)
 
@@ -306,13 +354,7 @@ def zonal_stats(
             ):
                 try:
                     meta = mr.MiniRasterMeta.from_row(meta_row) if meta_row is not None else None
-                    if not has_bytes:  # href row -> lazy ranged-fetch facade
-                        from rasteret_spark.sources.fetch import RangedBlob
-
-                        blob = RangedBlob(str(blob), ranged_readers)
-                    else:
-                        blob = bytes(blob)
-                    reader = mr.CachedReader(blob, meta)
+                    reader = mr.CachedReader(open_blob(blob), meta)
                     meta = reader.meta
                     img_bands = [b for b in want_bands if b < meta.n_bands]
                 except Exception as e:  # header/blob-level failure
@@ -457,7 +499,7 @@ def psnr_check(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     df = df.select("image_id", "bytes", "fmt")
-    df = df.repartition(_decode_parallelism(df, None), "image_id")
+    df = df.repartition(_decode_parallelism(df), "image_id")
     return df.mapInPandas(
         run, schema="image_id string, fmt string, exact boolean, psnr_db double, lossless boolean"
     )

@@ -111,7 +111,6 @@ def validate_contract(df: DataFrame, required: tuple[str, ...] = (
 
 def enrich_headers_remote(
     df: DataFrame, url_col: str = "href", out_col: str = "meta",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Header-cache enrichment over RANGED fetches: each row's header parses
     through a handful of ranged reads against its href — KBs per image, no
@@ -132,7 +131,7 @@ def enrich_headers_remote(
             T.StructField("enrich_status", T.StringType()),
         ]
     )
-    df = df.repartition(_decode_parallelism(df, parallelism), url_col)
+    df = df.repartition(_decode_parallelism(df), url_col)
     readers = dict(_RANGED_READERS)  # snapshot: driver-registered schemes
     # must travel to executors by closure, like fetch_blobs' fetchers
 

@@ -4,7 +4,7 @@ Spark re-expression of rasteret's 4-phase point sampler
 (`src/rasteret/core/raster_accessor.py:340-1046` + planning helpers
 `src/rasteret/core/point_sample_helpers.py:59-249`):
 
-  phase 1 (plan)   — the candidate join (points x images) is done upstream by
+  phase 1 (plan)   — the candidate join (points x images):
                      ``spatial_join.point_in_bbox_join`` over LIGHT columns
                      (no blobs in the cell-join shuffle);
   phase 2 (group)  — candidates collapse to one row per image
@@ -20,6 +20,10 @@ Spark re-expression of rasteret's 4-phase point sampler
                      ring scan is VECTORIZED across points: per radius k, ALL
                      still-unresolved points gather their ring pixels at once
                      through the shared tile cache (no per-point window loop).
+
+``sample_join(images, points)`` is the way in: it takes the stored image
+table and the probe points and runs all four phases; ``sample_points`` is
+phases 2-4 over already-joined candidates.
 
 Error containment (R12): a corrupt blob yields per-point quarantine rows with
 a ``status`` column instead of failing the task — mirroring the reference's
@@ -286,16 +290,45 @@ def _quarantine_rows(image_id, pts, msg: str, neighborhood: int) -> dict:
     return out
 
 
+def sample_join(
+    images: DataFrame,
+    points: DataFrame,
+    *,
+    res: int = 8,
+    max_ring: int = 0,
+    bands: tuple[int, ...] | list[int] | None = None,
+    neighborhood: int = 0,
+) -> DataFrame:
+    """Pixel samples at points from the stored tables — the pipeline's one
+    composition, owning candidate generation.
+
+    ``images``: image_id, xmin/ymin/xmax/ymax and ``bytes`` or ``href``
+    (remote: windows read through ranged fetches).  ``points``:
+    point_index, x, y (lon/lat).  ``spatial_join.point_in_bbox_join`` pairs
+    every point with each image whose bbox contains it, at cell level
+    ``res``; ``sample_points`` then
+    reads the pixels (``max_ring``, ``bands``, ``neighborhood`` as there).
+    Returns SAMPLES_SCHEMA rows."""
+    from rasteret_spark.operators import spatial_join as sj
+
+    cands = sj.point_in_bbox_join(
+        points.select("point_index", "x", "y"), sj.image_light(images), res=res
+    ).select("point_index", "x", "y", "image_id")
+    return sample_points(
+        cands, images, max_ring=max_ring, bands=bands, neighborhood=neighborhood
+    )
+
+
 def sample_points(
     candidates: DataFrame,
     images: DataFrame,
     max_ring: int = 0,
-    parallelism: int | None = None,
     bands: tuple[int, ...] | list[int] | None = None,
     neighborhood: int = 0,
 ) -> DataFrame:
     """``candidates``: light output of ``point_in_bbox_join``
-    (point_index, x, y, image_id — NO bytes).  ``images``: (image_id, bytes).
+    (point_index, x, y, image_id — NO bytes; ``sample_join`` builds them,
+    call that instead).  ``images``: image_id + ``bytes`` or ``href``.
     Returns SAMPLES_SCHEMA rows, one per candidate pair per requested band
     (bands missing from an image are skipped).  ``neighborhood=n`` (odd n)
     appends an n x n edge-clamped window per in-bounds sample as an
@@ -308,22 +341,12 @@ def sample_points(
     from rasteret_spark.operators.decode import (
         _decode_parallelism,
         _err_status,
+        blob_source,
         grouped_side_choice,
     )
 
     want_bands = tuple(bands) if bands is not None else (0,)
-    # remote mode (href column, no bytes): windows read through ranged
-    # fetches, mirroring zonal_stats — snapshot the reader registry at
-    # build so driver-registered schemes reach executors
-    has_bytes = "bytes" in images.columns
-    payload_col = "bytes" if has_bytes else "href"
-    if payload_col not in images.columns:
-        raise ValueError("images needs a 'bytes' or 'href' column")
-    ranged_readers = None
-    if not has_bytes:
-        from rasteret_spark.sources.fetch import _RANGED_READERS
-
-        ranged_readers = dict(_RANGED_READERS)
+    payload_col, open_blob = blob_source(images)
     agg = candidates.groupBy("image_id").agg(
         F.collect_list(F.struct("point_index", "x", "y")).alias("_pts")
     )
@@ -335,7 +358,7 @@ def sample_points(
         src = images.select("image_id", payload_col).join(F.broadcast(agg), "image_id")
     else:
         src = images.select("image_id", payload_col).join(agg, "image_id")
-        src = src.repartition(_decode_parallelism(src, parallelism), "image_id")
+        src = src.repartition(_decode_parallelism(src), "image_id")
 
     schema = SAMPLES_SCHEMA + (NEIGHBORHOOD_COL if neighborhood > 0 else "")
     col_names = [f.strip().split(" ")[0] for f in schema.split(", ")]
@@ -345,13 +368,7 @@ def sample_points(
             parts: list[dict] = []
             for image_id, blob, pts in zip(pdf["image_id"], pdf[payload_col], pdf["_pts"]):
                 try:
-                    if not has_bytes:  # href -> lazy ranged-fetch facade
-                        from rasteret_spark.sources.fetch import RangedBlob
-
-                        blob = RangedBlob(str(blob), ranged_readers)
-                    else:
-                        blob = bytes(blob)
-                    reader = mr.CachedReader(blob)
+                    reader = mr.CachedReader(open_blob(blob))
                     parts.append(
                         _sample_image(image_id, reader, pts, max_ring, want_bands, neighborhood)
                     )

@@ -95,6 +95,18 @@ def explode_cover(
     )
 
 
+def image_light(images: DataFrame) -> DataFrame:
+    """The image side of a cell join from a stored image table: ``image_id``,
+    ``datetime`` when present (the chip paths' temporal stack), and the
+    footprint bbox as ``img_xmin``..``img_ymax`` — light columns only, so no
+    blob rides through the join's shuffles."""
+    return images.select(
+        "image_id",
+        *(["datetime"] if "datetime" in images.columns else []),
+        *(F.col(c).alias(f"img_{c}") for c in ("xmin", "ymin", "xmax", "ymax")),
+    )
+
+
 def bbox_overlap(a: str, b: str) -> Column:
     """Exact bbox-overlap predicate on two bbox column prefixes
     (`{a}_xmin`...), same expression as rasteret `_bbox_overlap_expr`
@@ -173,14 +185,10 @@ def point_in_bbox_join(
 
 
 # --- exact polygon refine (the only Python stage) ------------------------------
-def refine_rect_polygon(
-    cands: DataFrame,
-    rect_prefix: str = "img",
-    poly_col: str = "aoi_geometry",
-    out_col: str = "intersects",
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Exact rectangle x polygon refine for candidate pairs (Arrow-batched).
+def refine_rect_polygon(cands: DataFrame) -> DataFrame:
+    """Exact rectangle x polygon refine for ``bbox_join`` candidate pairs
+    (Arrow-batched): adds boolean ``intersects`` — the ``img_`` bbox
+    against the ``aoi_geometry`` WKB.
 
     Partitioning: the refine fuses into whatever stage produces the
     candidates (usually the cell join's scan/shuffle stage) — adding a
@@ -193,10 +201,7 @@ def refine_rect_polygon(
     from rasteret_spark import geom
     from rasteret_spark.operators.util import spread_compute
 
-    if parallelism is not None:
-        cands = cands.repartition(parallelism)
-    else:
-        cands = spread_compute(cands)
+    cands = spread_compute(cands)
 
     import numpy as np
 
@@ -216,10 +221,9 @@ def refine_rect_polygon(
         return pd.Series(out)
 
     return cands.withColumn(
-        out_col,
+        "intersects",
         _refine(
-            F.col(f"{rect_prefix}_xmin"), F.col(f"{rect_prefix}_ymin"),
-            F.col(f"{rect_prefix}_xmax"), F.col(f"{rect_prefix}_ymax"),
-            F.col(poly_col),
+            F.col("img_xmin"), F.col("img_ymin"), F.col("img_xmax"), F.col("img_ymax"),
+            F.col("aoi_geometry"),
         ),
     )

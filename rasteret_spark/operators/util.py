@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_compute(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def spread_compute(df: DataFrame) -> DataFrame:
     """Explicit compute repartition before a CPU-heavy stage — but ONLY when
     the input is under-split.
 
@@ -16,7 +16,7 @@ def spread_compute(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     repartition is CONDITIONAL: a big table already split across >= cores
     partitions passes through untouched, so at real scale this never adds a
     full-table shuffle just to rearrange work that is already parallel."""
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     try:  # planning-only peek at the scan's split count (no job runs)
         cur = df.rdd.getNumPartitions()
     except Exception:

@@ -1,19 +1,20 @@
 """Checkpointed end-to-end pipelines: the flagship flows under the lineage
 runner, resumable at partition granularity (north-rule requirement).
 
-``resumable_zonal`` buckets the image table by image_id hash, runs the full
-cell-join -> refine -> decode -> zonal chain per remaining bucket, and
-commits per-partition outputs + log rows through ``lineage.checkpointed_run``
-— a killed job re-processes only unlogged buckets, and re-processing a
-bucket is idempotent (dynamic partition overwrite).
+``resumable_zonal`` buckets the stored image table by image_id hash, runs
+``decode.zonal_join`` (cell join -> refine -> decode -> zonal) per remaining
+bucket, and commits per-partition outputs + log rows through
+``lineage.checkpointed_run`` — a killed job re-processes only unlogged
+buckets, and re-processing a bucket is idempotent (dynamic partition
+overwrite).  ``resumable_sample`` does the same around
+``sampling.sample_join``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: N812
 
-from rasteret_spark.operators import decode, spatial_join as sj
+from rasteret_spark.operators import decode, sampling
 from rasteret_spark.plans import lineage
 
 
@@ -25,24 +26,13 @@ def resumable_zonal(
     res: int = 7,
     n_parts: int = 32,
 ) -> DataFrame:
-    """images: (image_id, bytes, caption, img_xmin..ymax);
+    """images: the stored image table, as ``decode.zonal_join`` takes it;
     aois: (aoi_id, aoi_geometry, aoi_xmin..ymax).  Returns the full zonal
-    output, computing only buckets missing from the checkpoint log."""
+    output (band 0), computing only buckets missing from the checkpoint
+    log."""
 
     def transform(bucketed_images: DataFrame) -> DataFrame:
-        img_light = bucketed_images.select(
-            "image_id", "part_id", "img_xmin", "img_ymin", "img_xmax", "img_ymax"
-        )
-        cands = sj.bbox_join(img_light, aois, res=res)
-        pairs = (
-            sj.refine_rect_polygon(cands)
-            .filter(F.col("intersects"))
-            .select("image_id", "aoi_id", "aoi_geometry",
-                    "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax")
-        )
-        z = decode.zonal_stats(
-            pairs, bucketed_images.select("image_id", "bytes", "caption")
-        )
+        z = decode.zonal_join(bucketed_images, aois, res=res)
         # re-attach the bucket id for the partitioned write
         part = bucketed_images.select("image_id", "part_id")
         return z.join(part, "image_id")
@@ -64,25 +54,18 @@ def resumable_sample(
     n_parts: int = 32,
 ) -> DataFrame:
     """Checkpointed point-sampling: the zonal pipeline's sibling for the
-    R7 sampler path.  images: (image_id, bytes, img_xmin..ymax);
-    points: (point_index, x, y).  Buckets by image_id — a bucket's images
-    candidate-join against ALL points (points are the small broadcastable
-    side), sample, and commit; a killed job re-runs only unlogged buckets.
-    (No persist on points/aois: ``checkpointed_run`` invokes the transform
-    in exactly one write job, so a cache would be pure overhead and would
-    leak executor storage on the caller's DataFrame.)"""
-    from rasteret_spark.operators import sampling
+    R7 sampler path.  images: the stored image table, as
+    ``sampling.sample_join`` takes it; points: (point_index, x, y).
+    Buckets by image_id — a bucket's images candidate-join against ALL
+    points (points are the small broadcastable side), sample, and commit;
+    a killed job re-runs only unlogged buckets.  (No persist on
+    points/aois: ``checkpointed_run`` invokes the transform in exactly one
+    write job, so a cache would be pure overhead and would leak executor
+    storage on the caller's DataFrame.)"""
 
     def transform(bucketed_images: DataFrame) -> DataFrame:
-        img_light = bucketed_images.select(
-            "image_id", "part_id", "img_xmin", "img_ymin", "img_xmax", "img_ymax"
-        )
-        cands = sj.point_in_bbox_join(points, img_light, res=res).select(
-            "point_index", "x", "y", "image_id"
-        )
-        s = sampling.sample_points(
-            cands, bucketed_images.select("image_id", "bytes"),
-            max_ring=max_ring, neighborhood=neighborhood,
+        s = sampling.sample_join(
+            bucketed_images, points, res=res, max_ring=max_ring, neighborhood=neighborhood
         )
         part = bucketed_images.select("image_id", "part_id")
         return s.join(part, "image_id")

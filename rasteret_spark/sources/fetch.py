@@ -402,7 +402,6 @@ def fetch_blobs(
     df: DataFrame,
     url_col: str = "href",
     out_col: str = "bytes",
-    parallelism: int | None = None,
     attempts: int = 3,
     base_delay: float = 0.2,
 ) -> DataFrame:
@@ -433,7 +432,7 @@ def fetch_blobs(
             T.StructField("fetch_attempts", T.IntegerType()),
         ]
     )
-    df = df.repartition(_decode_parallelism(df, parallelism), url_col)
+    df = df.repartition(_decode_parallelism(df), url_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

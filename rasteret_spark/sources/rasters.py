@@ -9,7 +9,7 @@ each header through the container dispatch, decodes band 0 for the
 perceptual hash, and derives the lon/lat footprint from the raster's
 transform + CRS.  No driver I/O, no per-row Python in later stages — the
 output table is the same contract every operator already consumes
-(`enrich_headers``, ``zonal_stats``, ``chips``, dedup, ...).
+(``enrich_headers``, ``decode.zonal_join``, ``chips``, dedup, ...).
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ def ingest_rasters(
     spark: SparkSession,
     pattern: str,
     caption: str = "",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Ingest raster files matching ``pattern`` (glob; e.g.
     ``/data/scenes/*.tif``) into the contract images table.
@@ -45,7 +44,7 @@ def ingest_rasters(
     )
 
     raw = spark.read.format("binaryFile").load(pattern)
-    raw = raw.repartition(_decode_parallelism(raw, parallelism), "path")
+    raw = raw.repartition(_decode_parallelism(raw), "path")
 
     def run(batches):
         import os

@@ -69,22 +69,12 @@ def stream_sample_points(
     OVERWRITE — a replayed epoch overwrites its own output instead of
     appending duplicates, making the sink idempotent and therefore
     effectively exactly-once."""
-    from rasteret_spark.operators import sampling, spatial_join as sj
+    from rasteret_spark.operators import sampling
 
     points = points.persist()
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        img_light = batch_df.select(
-            "image_id",
-            F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-            F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-        )
-        cands = sj.point_in_bbox_join(points, img_light, res=8).select(
-            "point_index", "x", "y", "image_id"
-        )
-        out = sampling.sample_points(
-            cands, batch_df.select("image_id", "bytes"), max_ring=max_ring
-        )
+        out = sampling.sample_join(batch_df, points, res=8, max_ring=max_ring)
         _overwrite_epoch_partition(
             out.withColumn("epoch", F.lit(int(epoch_id))), out_path
         )

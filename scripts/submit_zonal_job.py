@@ -13,9 +13,11 @@ The job generates the synthetic image+caption table DISTRIBUTED (executors
 build their own partitions — the driver never materializes blobs; swap
 ``--images-path`` for a real partitioned-parquet/Iceberg-style table), runs
 cell-cover spatial join -> refine -> decode -> zonal aggregation through the
-checkpointed lineage runner, and writes partitioned parquet.  Re-running
-with --resume after a kill re-processes only buckets missing from the log
-(partition-granular resume, `plans/lineage.py`).
+checkpointed lineage runner (``plans.pipelines.resumable_zonal`` around
+``decode.zonal_join``, fed the stored image table as is), and writes
+partitioned parquet.  Re-running with --resume after a kill re-processes
+only buckets missing from the log (partition-granular resume,
+`plans/lineage.py`).
 
 Mirrors the reference's CLI entry surface (rasteret's console entry points
 drive collection create/query, `pyproject.toml` scripts table) re-expressed
@@ -64,11 +66,6 @@ def main() -> int:
         images = spark.read.parquet(args.images_path)
     else:
         images = syn.images_df(spark, args.images, seed=args.seed)
-    images = images.select(
-        "image_id", "bytes", "caption",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     aois = spark.createDataFrame(syn.aois_table(args.aois, seed=args.seed).to_pandas()).select(
         "aoi_id", F.col("geometry").alias("aoi_geometry"),
         F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),

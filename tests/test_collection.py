@@ -393,9 +393,8 @@ def test_pixel_series_matches_flat_samples(spark, coll, points_pdf, images_pdf):
 
     # manual fold from the flat surface
     from rasteret_spark.operators import sampling, spatial_join as sj
-    from rasteret_spark.collection import _light
 
-    cands = sj.point_in_bbox_join(pts, _light(coll.records), res=8).select(
+    cands = sj.point_in_bbox_join(pts, sj.image_light(coll.records), res=8).select(
         "point_index", "x", "y", "image_id"
     )
     flat = sampling.sample_points(

@@ -1,0 +1,111 @@
+"""One composition per pipeline: only ``decode.zonal_join`` and
+``sampling.sample_join`` chain candidate generation into the decode.
+
+Every other caller goes through the entries, so changing how candidates
+are generated is a change to those two functions, not to every pipeline.
+An AST scan of the library and its runnable surfaces finds each call of the
+chain's primitives, resolving import aliases."""
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+SCANNED = [
+    *sorted((REPO / "rasteret_spark").rglob("*.py")),
+    REPO / "__spark_entry__.py",
+    REPO / "bench.py",
+    *sorted((REPO / "scripts").rglob("*.py")),
+]
+OPS = "rasteret_spark.operators"
+# primitive -> the only modules that may call it
+ALLOWED = {
+    f"{OPS}.spatial_join.refine_rect_polygon": {"rasteret_spark/operators/decode.py"},
+    f"{OPS}.decode.zonal_stats": {"rasteret_spark/operators/decode.py"},
+    f"{OPS}.sampling.sample_points": {"rasteret_spark/operators/sampling.py"},
+}
+# (file, enclosing function) call sites kept on purpose
+ALLOWLIST = {
+    # q49 dedups the candidates to the latest image per point
+    # (asof.latest_per_key) between the join and the decode — a step the
+    # sample entry does not own
+    ("__spark_entry__.py", "q49_image_latest_sample", f"{OPS}.sampling.sample_points"),
+}
+
+
+def _module_name(rel: str) -> str:
+    return rel[: -len(".py")].replace("/", ".").removesuffix(".__init__")
+
+
+def _aliases(tree: ast.Module, module: str) -> dict[str, str]:
+    """Local name -> dotted path, from every import in the file (any scope)
+    plus the file's own top-level definitions."""
+    out = {
+        n.name: f"{module}.{n.name}"
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    }
+    pkg = module.rsplit(".", 1)[0]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    out[a.asname] = a.name
+                else:
+                    out[a.name.split(".")[0]] = a.name.split(".")[0]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = pkg.rsplit(".", node.level - 1)[0] if node.level > 1 else pkg
+                base = f"{parent}.{base}" if base else parent
+            for a in node.names:
+                out[a.asname or a.name] = f"{base}.{a.name}"
+    return out
+
+
+def _dotted(func: ast.expr, aliases: dict[str, str]) -> str | None:
+    parts = []
+    while isinstance(func, ast.Attribute):
+        parts.append(func.attr)
+        func = func.value
+    if not isinstance(func, ast.Name):
+        return None
+    return ".".join([aliases.get(func.id, func.id), *reversed(parts)])
+
+
+def _calls(path: Path):
+    """(rel path, enclosing top-level function, resolved callee) per call."""
+    rel = path.relative_to(REPO).as_posix()
+    tree = ast.parse(path.read_text(), filename=str(path))
+    aliases = _aliases(tree, _module_name(rel))
+    for top in tree.body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                yield rel, owner, _dotted(node.func, aliases), node.lineno
+
+
+def test_chain_primitives_called_only_from_the_entries():
+    offenders = [
+        f"{rel}:{line} calls {callee}"
+        for path in SCANNED
+        for rel, owner, callee, line in _calls(path)
+        if callee in ALLOWED
+        and rel not in ALLOWED[callee]
+        and (rel, owner, callee) not in ALLOWLIST
+    ]
+    assert not offenders, (
+        "hand-written zonal/sample chain outside decode.zonal_join / "
+        "sampling.sample_join: " + ", ".join(offenders)
+    )
+
+
+def test_scan_sees_the_entries_and_the_allowlisted_site():
+    """Guards the scanner itself: the entries' own calls and q49 resolve."""
+    seen = {(rel, owner, callee) for path in SCANNED for rel, owner, callee, _ in _calls(path)}
+    assert ("rasteret_spark/operators/decode.py", "zonal_join",
+            f"{OPS}.decode.zonal_stats") in seen
+    assert ("rasteret_spark/operators/decode.py", "zonal_join",
+            f"{OPS}.spatial_join.refine_rect_polygon") in seen
+    assert ("rasteret_spark/operators/sampling.py", "sample_join",
+            f"{OPS}.sampling.sample_points") in seen
+    assert ALLOWLIST <= seen

@@ -10,9 +10,7 @@ from rasteret_spark.streaming import images as stream_img
 
 def _frames(spark, images_pdf, aois_pdf):
     images = spark.createDataFrame(
-        images_pdf[["image_id", "bytes", "caption", "xmin", "ymin", "xmax", "ymax"]].rename(
-            columns={c: f"img_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]}
-        )
+        images_pdf[["image_id", "bytes", "caption", "xmin", "ymin", "xmax", "ymax"]]
     )
     aois = spark.createDataFrame(
         aois_pdf.rename(
@@ -96,9 +94,7 @@ def test_resumable_sample_partial_then_complete(spark, images_pdf, points_pdf, t
     """Sampler sibling of the resumable zonal: kill-after-half resumes to
     the exact single-shot result, and matches the direct operator."""
     images = spark.createDataFrame(
-        images_pdf[["image_id", "bytes", "xmin", "ymin", "xmax", "ymax"]].rename(
-            columns={c: f"img_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]}
-        )
+        images_pdf[["image_id", "bytes", "xmin", "ymin", "xmax", "ymax"]]
     )
     pts = spark.createDataFrame(points_pdf[["point_index", "x", "y"]])
     ref = pipelines.resumable_sample(

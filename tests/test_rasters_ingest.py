@@ -103,10 +103,10 @@ def test_cli_ingest_command(spark, scene_dir, tmp_path):
     assert back.count() == 4
 
 
-def test_remote_collection_zonal_matches_materialized(spark, scene_dir):
+def test_remote_collection_zonal_matches_materialized(spark, scene_dir, tmp_path):
     """from_hrefs(materialize=False): an href-only collection runs enrich +
     zonal through ranged file reads, row-equal to the fully materialized
-    collection."""
+    collection — on the checkpointed (resume_dir) path too."""
     d, _ = scene_dir
     ingested = rasters.ingest_rasters(spark, f"{d}/scene_*.tif").filter(
         F.col("ingest_status") == "ok"
@@ -132,6 +132,11 @@ def test_remote_collection_zonal_matches_materialized(spark, scene_dir):
     if len(a):
         for col in ("px_count", "valid_count", "v_sum", "status"):
             pd.testing.assert_series_equal(a[col], b[col], check_names=False)
+
+    # checkpointed path: same rows as the direct remote path
+    r = remote.zonal(aois, resume_dir=str(tmp_path / "zonal_ckpt")).toPandas()
+    r = r.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(r, b[r.columns])
 
     # pre-enriched remote: meta travels, zonal skips header reads
     enriched = remote.enrich()
@@ -236,9 +241,10 @@ def test_ranged_blob_retries_transient_errors():
     assert calls["n"] == 1  # permanent: no retry latency
 
 
-def test_remote_point_sampling_matches_materialized(spark, scene_dir):
+def test_remote_point_sampling_matches_materialized(spark, scene_dir, tmp_path):
     """sample_points over an href-only collection (ranged window reads)
-    equals the bytes path value-for-value."""
+    equals the bytes path value-for-value — on the checkpointed
+    (resume_dir) path too."""
     from rasteret_spark.sources import synthetic as syn2
 
     d, _ = scene_dir
@@ -262,3 +268,15 @@ def test_remote_point_sampling_matches_materialized(spark, scene_dir):
     assert len(a) == len(b) > 0, "no sampled points — fixture drift"
     for col in ("value", "status"):
         pd.testing.assert_series_equal(a[col], b[col], check_names=False)
+
+    # checkpointed path: same rows as the direct remote path
+    r = remote.sample_points(pts, max_ring=2, resume_dir=str(tmp_path / "sample_ckpt"))
+    r = r.toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(r, b[r.columns])
+
+    # per-point temporal drill reads the same pixels through ranged fetches
+    key = ["point_index", "band"]
+    sa = local.pixel_series(pts).toPandas().sort_values(key).reset_index(drop=True)
+    sb = remote.pixel_series(pts).toPandas().sort_values(key).reset_index(drop=True)
+    assert len(sa) > 0
+    pd.testing.assert_frame_equal(sa, sb)
