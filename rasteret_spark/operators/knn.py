@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from rasteret_spark.operators.spatial_join import cell_of_point_col, pack_cell, _n
+from rasteret_spark.operators.spatial_join import _axis_cell, _n, cell_of_point_col, pack_cell
 
 
 def _ring_cells(
@@ -33,11 +33,9 @@ def _ring_cells(
     round r never re-scans the (2k+1)^2 disk already examined by round r-1.
     Caller must keep 2k+1 <= n to avoid wrap-around duplicate cells."""
     n = _n(res)
-    ix = F.floor((F.col(x) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((F.col(y) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1))
-    df = df.withColumn("_cix", ix).withColumn("_ciy", iy)
+    df = df.withColumn("_cix", _axis_cell(F.col(x), 180.0, res)).withColumn(
+        "_ciy", _axis_cell(F.col(y), 90.0, res)
+    )
     df = df.withColumn("_dx", F.explode(F.sequence(F.lit(-k), F.lit(k))))
     df = df.withColumn("_dy", F.explode(F.sequence(F.lit(-k), F.lit(k))))
     if inner > 0:

@@ -1,76 +1,8 @@
-"""Unit tests for the quadtree cell grid and WKB/PIP geometry kernels."""
+"""Unit tests for the WKB/PIP geometry kernels."""
 
 import numpy as np
 
-from rasteret_spark import geom, grid
-
-
-def test_cell_roundtrip():
-    c = grid.cell_of_point(np.array([12.5]), np.array([-33.2]), 9)[0]
-    assert int(grid.cell_res(c)) == 9
-    x0, y0, x1, y1 = grid.cell_bounds(c)
-    assert x0 <= 12.5 < x1 and y0 <= -33.2 < y1
-
-
-def test_parent_child_consistency():
-    c = int(grid.cell_of_point(np.array([100.0]), np.array([45.0]), 10)[0])
-    p = int(grid.parent(np.int64(c)))
-    assert c in grid.children(p)
-    assert int(grid.cell_res(np.int64(p))) == 9
-
-
-def test_ancestors_chain():
-    c = grid.cell_of_point(np.array([1.0]), np.array([1.0]), 5)
-    chain = grid.ancestors(c, min_res=2)
-    assert len(chain) == 4  # res 5,4,3,2
-    assert [int(grid.cell_res(a)[0]) for a in chain] == [5, 4, 3, 2]
-
-
-def test_k_ring_size_and_wrap():
-    c = int(grid.cell_of_point(np.array([0.0]), np.array([0.0]), 6)[0])
-    ring = grid.k_ring(c, 1)
-    assert len(ring) == 9
-    assert c in ring
-    # antimeridian wrap: cell at ix=0 still has 9 neighbours
-    edge = int(grid.cell_id(6, 0, 30))
-    assert len(grid.k_ring(edge, 1)) == 9
-    # pole clamp: iy=0 loses a row
-    pole = int(grid.cell_id(6, 5, 0))
-    assert len(grid.k_ring(pole, 1)) == 6
-
-
-def test_ring_distance_wraps():
-    a = grid.cell_id(6, 0, 10)
-    b = grid.cell_id(6, 63, 10)
-    assert int(grid.ring_distance(a, b)) == 1
-
-
-def test_cover_bbox_and_compact_uncompact():
-    cells = grid.cover_bbox(-1.0, -1.0, 1.0, 1.0, 8)
-    x0, y0, x1, y1 = grid.cell_bounds(cells)
-    assert (x1 >= -1.0).all() and (x0 <= 1.0).all()
-    # a full parent block compacts
-    p = int(grid.cell_id(4, 3, 7))
-    kids = np.array(grid.children(p), dtype=np.int64)
-    comp = grid.compact(kids)
-    assert list(comp) == [p]
-    assert sorted(grid.uncompact(comp, 5)) == sorted(kids)
-
-
-def test_compact_partial_blocks_stay():
-    p = int(grid.cell_id(4, 3, 7))
-    kids = np.array(grid.children(p)[:3], dtype=np.int64)
-    comp = grid.compact(kids)
-    assert sorted(comp) == sorted(kids)
-
-
-def test_compact_recursive():
-    gp = int(grid.cell_id(3, 1, 1))
-    level2 = []
-    for k in grid.children(gp):
-        level2.extend(grid.children(k))
-    comp = grid.compact(np.array(level2, dtype=np.int64))
-    assert list(comp) == [gp]
+from rasteret_spark import geom
 
 
 def test_wkb_point_polygon_roundtrip():

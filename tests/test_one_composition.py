@@ -4,7 +4,8 @@
 Every other caller goes through the entries, so changing how candidates
 are generated is a change to those two functions, not to every pipeline.
 An AST scan of the library and its runnable surfaces finds each call of the
-chain's primitives, resolving import aliases."""
+chain's primitives, resolving import aliases.  The same scan checks that no
+operator module is kept alive by its tests alone."""
 
 import ast
 from pathlib import Path
@@ -15,6 +16,14 @@ SCANNED = [
     REPO / "__spark_entry__.py",
     REPO / "bench.py",
     *sorted((REPO / "scripts").rglob("*.py")),
+]
+# every non-test importer: the library and each runnable surface
+IMPORTERS = [
+    *sorted((REPO / "rasteret_spark").rglob("*.py")),
+    REPO / "__spark_entry__.py",
+    *sorted(REPO.glob("bench*.py")),
+    *sorted((REPO / "scripts").rglob("*.py")),
+    *sorted((REPO / "perfbench").rglob("*.py")),
 ]
 OPS = "rasteret_spark.operators"
 # primitive -> the only modules that may call it
@@ -36,6 +45,17 @@ def _module_name(rel: str) -> str:
     return rel[: -len(".py")].replace("/", ".").removesuffix(".__init__")
 
 
+def _import_base(node: ast.ImportFrom, module: str) -> str:
+    """Absolute dotted module of a ``from ... import``, relative ones
+    resolved against the importing ``module``."""
+    base = node.module or ""
+    if node.level:
+        pkg = module.rsplit(".", 1)[0]
+        parent = pkg.rsplit(".", node.level - 1)[0] if node.level > 1 else pkg
+        base = f"{parent}.{base}" if base else parent
+    return base
+
+
 def _aliases(tree: ast.Module, module: str) -> dict[str, str]:
     """Local name -> dotted path, from every import in the file (any scope)
     plus the file's own top-level definitions."""
@@ -44,7 +64,6 @@ def _aliases(tree: ast.Module, module: str) -> dict[str, str]:
         for n in tree.body
         if isinstance(n, (ast.FunctionDef, ast.ClassDef))
     }
-    pkg = module.rsplit(".", 1)[0]
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
@@ -53,10 +72,7 @@ def _aliases(tree: ast.Module, module: str) -> dict[str, str]:
                 else:
                     out[a.name.split(".")[0]] = a.name.split(".")[0]
         elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                parent = pkg.rsplit(".", node.level - 1)[0] if node.level > 1 else pkg
-                base = f"{parent}.{base}" if base else parent
+            base = _import_base(node, module)
             for a in node.names:
                 out[a.asname or a.name] = f"{base}.{a.name}"
     return out
@@ -109,3 +125,40 @@ def test_scan_sees_the_entries_and_the_allowlisted_site():
     assert ("rasteret_spark/operators/sampling.py", "sample_join",
             f"{OPS}.sampling.sample_points") in seen
     assert ALLOWLIST <= seen
+
+
+def _imported(path: Path) -> set[str]:
+    """Every dotted name a file imports: ``import a.b`` gives ``a.b``,
+    ``from a import b`` gives ``a.b`` (a module or a name inside ``a``)."""
+    rel = path.relative_to(REPO).as_posix()
+    tree = ast.parse(path.read_text(), filename=str(path))
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = _import_base(node, _module_name(rel))
+            out.update(f"{base}.{a.name}" for a in node.names)
+    return out
+
+
+def test_every_operator_module_has_a_non_test_importer():
+    """A module under ``operators/`` that only ``tests/`` import is dead
+    library code: delete it with its tests instead of keeping it tested."""
+    imports = {
+        path.relative_to(REPO).as_posix(): _imported(path) for path in IMPORTERS
+    }
+    orphans = []
+    for mod_path in sorted((REPO / "rasteret_spark" / "operators").glob("*.py")):
+        if mod_path.stem == "__init__":
+            continue
+        own = mod_path.relative_to(REPO).as_posix()
+        mod = _module_name(own)
+        if not any(
+            name == mod or name.startswith(f"{mod}.")
+            for rel, names in imports.items()
+            if rel != own
+            for name in names
+        ):
+            orphans.append(mod)
+    assert not orphans, "operator modules with no caller outside tests/: " + ", ".join(orphans)

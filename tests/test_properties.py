@@ -11,8 +11,6 @@ Properties pinned:
     vertices and pixel centres on shared grid values, ascending, descending
     and unsorted columns, NaN coordinates and grids split into many row
     blocks, and its ``polygon_edges`` input form equals its WKB form;
-  * quadtree cells: pack/unpack identity, parent containment, cover_bbox
-    covers every sampled interior point, compact/uncover equivalence;
   * CRS: forward/inverse identity for every builtin projection family;
   * byte-range coalescing: coverage + gap/size bounds.
 """
@@ -21,7 +19,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from rasteret_spark import crs, geom, grid
+from rasteret_spark import crs, geom
 from rasteret_spark.format import codecs, miniraster as mr
 
 # keep the whole file under ~20 s: small example counts, no deadline flake
@@ -163,56 +161,6 @@ def test_grid_pip_row_blocks_match_one_block(poly, seed, cells):
         blocked = geom.points_in_polygon_grid(xs, ys, buf)
     np.testing.assert_array_equal(blocked, whole)
     np.testing.assert_array_equal(blocked, _raycast_grid(xs, ys, buf))
-
-
-# --- quadtree cells ------------------------------------------------------------
-@settings(**SETTINGS)
-@given(
-    res=st.integers(0, 24),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_cell_pack_unpack_and_parent(res, seed):
-    rng = np.random.default_rng(seed)
-    n = 1 << res
-    ix = int(rng.integers(0, n))
-    iy = int(rng.integers(0, n))
-    c = grid.cell_id(res, ix, iy)
-    assert grid.cell_res(c) == res and grid.cell_ix(c) == ix and grid.cell_iy(c) == iy
-    if res > 0:
-        p = grid.parent(c)
-        assert grid.cell_res(p) == res - 1
-        assert grid.cell_ix(p) == ix // 2 and grid.cell_iy(p) == iy // 2
-        # the child's bounds nest inside the parent's
-        cx0, cy0, cx1, cy1 = grid.cell_bounds(c)
-        px0, py0, px1, py1 = grid.cell_bounds(p)
-        assert px0 <= cx0 and py0 <= cy0 and cx1 <= px1 and cy1 <= py1
-
-
-@settings(**SETTINGS)
-@given(seed=st.integers(0, 2**31 - 1), res=st.integers(1, 10))
-def test_cover_bbox_covers_interior_points(seed, res):
-    rng = np.random.default_rng(seed)
-    x0, y0 = rng.uniform(-170, 160), rng.uniform(-80, 70)
-    x1, y1 = x0 + rng.uniform(0.01, 9.0), y0 + rng.uniform(0.01, 9.0)
-    cells = set(grid.cover_bbox(x0, y0, x1, y1, res).tolist())
-    for _ in range(20):
-        px = rng.uniform(x0, x1)
-        py = rng.uniform(y0, y1)
-        assert int(grid.cell_of_point(px, py, res)) in cells
-    compacted = grid.compact(np.array(sorted(cells), dtype=np.int64))
-    assert len(compacted) <= len(cells)
-    # every original cell is itself in the compacted set or has an ancestor there
-    comp = set(compacted.tolist())
-    for c in cells:
-        cur, ok = c, False
-        for _ in range(res + 1):
-            if cur in comp:
-                ok = True
-                break
-            if grid.cell_res(cur) == 0:
-                break
-            cur = grid.parent(cur)
-        assert ok
 
 
 # --- CRS forward/inverse identity ----------------------------------------------
