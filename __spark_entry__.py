@@ -220,7 +220,7 @@ def q11_cell_assign(spark, sf_dir):
 
     pts = _event_points(spark, sf_dir)
     return (
-        pts.withColumn("cell", cell_of_point_col(F.col("x"), F.col("y"), 7))
+        pts.withColumn("cell", F.expr(cell_of_point_col("x", "y", 7)))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -275,7 +275,7 @@ def q15_latest_event_per_cell(spark, sf_dir):
     from rasteret_spark.operators.spatial_join import cell_of_point_col
 
     pts = _event_points(spark, sf_dir).withColumn(
-        "cell", cell_of_point_col(F.col("x"), F.col("y"), 5)
+        "cell", F.expr(cell_of_point_col("x", "y", 5))
     )
     return latest_per_key(pts, ["cell"], order_col="ts", tie_break="event_id").select(
         "cell", "event_id"

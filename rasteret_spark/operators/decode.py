@@ -28,7 +28,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark import crs, geom
@@ -187,25 +187,29 @@ def grouped_side_choice(agg: DataFrame, list_col: str) -> tuple[DataFrame, bool]
     """Broadcast-vs-shuffle decision for a grouped probe side WITHOUT
     re-executing the upstream candidate join.
 
-    The grouped side is local-checkpointed eagerly and the decision is one
-    sum of list sizes over the checkpoint — the expensive candidate join
-    (cell join + exact refine) executes exactly once whichever path wins,
-    and the checkpoint is the very thing the winning join then consumes.
-    At or below ``BROADCAST_PAIRS_LIMIT`` pairs the grouped side broadcasts
-    (blobs never shuffle); above it the plan switches to a shuffle join on
-    image_id, which scales to 10^9+ pairs where an unconditional broadcast
-    would blow the driver.  Leaving the choice to AQE does not work: it
-    picks the broadcast only after the blob side has already shuffled.
+    The grouped side is local-checkpointed eagerly, and the decision is the
+    sum of list sizes that a ``DataFrame.observe`` ``Observation`` counts
+    while the checkpoint is written — the expensive candidate join (cell
+    join + exact refine) executes exactly once whichever path wins, no
+    second query reads the checkpoint back, and the checkpoint is the very
+    thing the winning join then consumes.  An empty grouped side observes a
+    null sum: 0 pairs.  At or below ``BROADCAST_PAIRS_LIMIT`` pairs the
+    grouped side broadcasts (blobs never shuffle); above it the plan
+    switches to a shuffle join on image_id, which scales to 10^9+ pairs
+    where an unconditional broadcast would blow the driver.  Leaving the
+    choice to AQE does not work: it picks the broadcast only after the blob
+    side has already shuffled.
 
     The checkpoint lives exactly as long as the plans that reference it —
     Spark's ContextCleaner frees its blocks once they are unreachable — so
     what a plan computes and costs does not depend on which plans were
     built after it.  The trade: checkpoint blocks are not replicated, so a
     lost executor fails the query instead of recomputing the grouped side
-    (``knn.knn_ring_expand`` makes the same trade).  Returns
+    (``knn.knn_cells`` makes the same trade).  Returns
     (agg, use_broadcast)."""
-    agg = agg.localCheckpoint(eager=True)
-    n_pairs = agg.select(F.sum(F.size(F.col(list_col)))).first()[0] or 0
+    pairs = Observation()
+    agg = agg.observe(pairs, F.sum(F.size(list_col)).alias("n")).localCheckpoint(eager=True)
+    n_pairs = pairs.get["n"] or 0
     return agg, int(n_pairs) <= BROADCAST_PAIRS_LIMIT
 
 
@@ -300,8 +304,8 @@ def zonal_stats(
     (`src/rasteret/core/execution.py:244-297`) in distributed form.
 
     Building the plan runs the candidate join once: the grouped AOI side is
-    local-checkpointed and its pair count picks broadcast vs shuffle join
-    (``grouped_side_choice``).
+    local-checkpointed, and its pair count, observed while the checkpoint is
+    written, picks broadcast vs shuffle join (``grouped_side_choice``).
     """
     agg = pairs.groupBy("image_id").agg(
         F.collect_list(

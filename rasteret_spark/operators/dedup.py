@@ -125,7 +125,7 @@ def minhash_lsh_pairs(
         .union(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sh = _spread(df.join(need, id_col, "left_semi")).select(
+    sh = _spread(df).join(need, id_col, "left_semi").select(
         F.col(id_col), F.array_distinct(_shingles(text_col, shingle_n)).alias("sh")
     )
     pairs = (

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from rasteret_spark.operators.spatial_join import _axis_cell, _n, cell_of_point_col, pack_cell
+from rasteret_spark.operators.spatial_join import _axis_cell, _n, _q, cell_of_point_col, pack_cell
 
 
 def _ring_cells(
@@ -33,19 +33,17 @@ def _ring_cells(
     round r never re-scans the (2k+1)^2 disk already examined by round r-1.
     Caller must keep 2k+1 <= n to avoid wrap-around duplicate cells."""
     n = _n(res)
-    df = df.withColumn("_cix", _axis_cell(F.col(x), 180.0, res)).withColumn(
-        "_ciy", _axis_cell(F.col(y), 90.0, res)
-    )
-    df = df.withColumn("_dx", F.explode(F.sequence(F.lit(-k), F.lit(k))))
-    df = df.withColumn("_dy", F.explode(F.sequence(F.lit(-k), F.lit(k))))
-    if inner > 0:
-        df = df.filter(F.greatest(F.abs(F.col("_dx")), F.abs(F.col("_dy"))) >= inner)
-    df = df.withColumn("_ix", F.pmod(F.col("_cix") + F.col("_dx"), F.lit(n)))
-    df = df.withColumn("_iy", F.col("_ciy") + F.col("_dy")).filter(
-        (F.col("_iy") >= 0) & (F.col("_iy") < n)
-    )
-    return df.withColumn(out, pack_cell(res, F.col("_ix"), F.col("_iy"))).drop(
-        "_cix", "_ciy", "_dx", "_dy", "_ix", "_iy"
+    keep = [_q(c) for c in df.columns]
+    span = f"explode(sequence({-k}, {k}))"
+    shell = f"greatest(abs(_dx), abs(_dy)) >= {inner} AND " if inner > 0 else ""
+    return (
+        df.selectExpr(
+            *keep, f"{_axis_cell(_q(x), 180.0, res)} AS _cix",
+            f"{_axis_cell(_q(y), 90.0, res)} AS _ciy", f"{span} AS _dx",
+        )
+        .selectExpr(*keep, "_cix", "_ciy", "_dx", f"{span} AS _dy")
+        .filter(f"{shell}_ciy + _dy >= 0 AND _ciy + _dy < {n}")
+        .selectExpr(*keep, f"{pack_cell(res, f'pmod(_cix + _dx, {n})', '_ciy + _dy')} AS {_q(out)}")
     )
 
 
@@ -118,7 +116,7 @@ def knn_cells(
     ring_cap = max(1, n // 4) if max_ring is None else min(max_ring, max(1, n // 4))
 
     t_cells = targets.select(target_id, tx, ty).withColumn(
-        "cell", cell_of_point_col(F.col(tx), F.col(ty), res)
+        "cell", F.expr(cell_of_point_col(_q(tx), _q(ty), res))
     )
     t_cells = t_cells.persist()
 

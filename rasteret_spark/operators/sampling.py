@@ -10,7 +10,7 @@ Spark re-expression of rasteret's 4-phase point sampler
   phase 2 (group)  — candidates collapse to one row per image
                      (``collect_list`` of point structs), then join the image
                      ``bytes`` so each blob moves through at most one shuffle;
-  phase 3 (lookup) — inside ``mapInPandas``: inverse-affine all points at
+  phase 3 (lookup) — inside ``mapInArrow``: inverse-affine all points at
                      once, decode each touched tile ONCE via a per-image
                      CachedReader (A9 tile dedup), gather values, flag nodata;
   phase 4 (ring)   — nodata points fall back to an expanding Chebyshev ring
@@ -36,7 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -49,6 +49,15 @@ SAMPLES_SCHEMA = (
     "sample_col int, sample_row int, status string"
 )
 NEIGHBORHOOD_COL = ", neighborhood array<double>"
+# the same columns as Arrow types: the sampling kernel builds its output
+# batches against these, straight from numpy
+SAMPLES_ARROW = pa.schema([
+    ("point_index", pa.int64()), ("image_id", pa.string()), ("band", pa.int32()),
+    ("px_col", pa.int32()), ("px_row", pa.int32()), ("in_bounds", pa.bool_()),
+    ("value", pa.float64()), ("valid", pa.bool_()), ("ring_steps", pa.int32()),
+    ("sample_col", pa.int32()), ("sample_row", pa.int32()), ("status", pa.string()),
+])
+NEIGHBORHOOD_FIELD = pa.field("neighborhood", pa.list_(pa.float64()))
 
 
 def _gather_pixels(
@@ -153,50 +162,46 @@ def _neighborhood_windows(
     in_bounds: np.ndarray,
     rows: np.ndarray,
     cols: np.ndarray,
-) -> np.ndarray:
+) -> tuple[np.ndarray, np.ndarray]:
     """Edge-clamped n x n windows for all in-bounds points, gathered in one
     vectorized pass (the reference's neighbourhood_values,
     `src/rasteret/types.py:36-40`; clamped offsets
-    `core/point_sample_helpers.py:158-229`), row-major flattened."""
+    `core/point_sample_helpers.py:158-229`), row-major flattened.
+
+    Returns ``(lens, vals)``: each point's window length (-1, a null
+    window, for an out-of-bounds point) and the in-bounds points' windows
+    back to back — the offsets and child values of an Arrow list column,
+    with no per-point Python list."""
     meta = reader.meta
-    n = len(rows)
     half = neighborhood // 2
     wh = min(neighborhood, meta.height)
     ww = min(neighborhood, meta.width)
-    nb_arr = np.empty(n, dtype=object)
+    lens = np.where(in_bounds, wh * ww, -1)
     idx = np.nonzero(in_bounds)[0]
-    if len(idx):
-        rr0 = np.clip(rows[idx] - half, 0, meta.height - 1)
-        cc0 = np.clip(cols[idx] - half, 0, meta.width - 1)
-        rr0 = np.minimum(rr0, max(meta.height - neighborhood, 0))
-        cc0 = np.minimum(cc0, max(meta.width - neighborhood, 0))
-        rr = (rr0[:, None] + np.arange(wh))[:, :, None]  # (p, wh, 1)
-        cc = (cc0[:, None] + np.arange(ww))[:, None, :]  # (p, 1, ww)
-        rr, cc = np.broadcast_arrays(rr, cc)
-        vals = _gather_pixels(reader, band, rr.reshape(-1), cc.reshape(-1)).reshape(
-            len(idx), wh * ww
-        )
-        # C-speed list materialization: ndarray.tolist() converts the whole
-        # row at once (vs a Python float() per pixel — this is the hot loop
-        # of every neighborhood query)
-        rows_as_lists = vals.astype(np.float64).tolist()
-        for j, i in enumerate(idx):
-            nb_arr[i] = rows_as_lists[j]
-    for i in np.nonzero(~in_bounds)[0]:
-        nb_arr[i] = None
-    return nb_arr
+    if not len(idx):
+        return lens, np.empty(0)
+    rr0 = np.clip(rows[idx] - half, 0, meta.height - 1)
+    cc0 = np.clip(cols[idx] - half, 0, meta.width - 1)
+    rr0 = np.minimum(rr0, max(meta.height - neighborhood, 0))
+    cc0 = np.minimum(cc0, max(meta.width - neighborhood, 0))
+    rr = (rr0[:, None] + np.arange(wh))[:, :, None]  # (p, wh, 1)
+    cc = (cc0[:, None] + np.arange(ww))[:, None, :]  # (p, 1, ww)
+    rr, cc = np.broadcast_arrays(rr, cc)
+    return lens, _gather_pixels(reader, band, rr.reshape(-1), cc.reshape(-1))
 
 
 def _sample_image(
-    image_id, reader: mr.CachedReader, pts, max_ring: int,
+    image_id, reader: mr.CachedReader, point_index, x, y, max_ring: int,
     bands: tuple[int, ...] = (0,), neighborhood: int = 0,
 ) -> dict:
+    """Samples of one image's points (``point_index``, lon ``x``, lat ``y``
+    arrays): one column array per output column, rows band-major.  With
+    ``neighborhood`` the windows come as ``nb_len`` / ``nb_vals``
+    (``_neighborhood_windows``)."""
     meta = reader.meta
     a, _, c, _, e, f = meta.transform
     xs, ys = crs.from_lonlat(
-        meta.epsg,
-        np.asarray([p["x"] for p in pts], dtype=float),
-        np.asarray([p["y"] for p in pts], dtype=float),
+        meta.epsg, np.asarray(x, dtype=float), np.asarray(y, dtype=float)
     )
     fcols = (xs - c) / a
     frows = (ys - f) / e
@@ -204,16 +209,16 @@ def _sample_image(
     rows = np.floor(frows).astype(np.int64)
     in_bounds = (cols >= 0) & (cols < meta.width) & (rows >= 0) & (rows < meta.height)
 
-    n = len(pts)
+    n = len(xs)
     img_bands = [b for b in bands if b < meta.n_bands]
     parts: dict[str, list] = {k: [] for k in (
         "point_index", "image_id", "band", "px_col", "px_row", "in_bounds",
         "value", "valid", "ring_steps", "sample_col", "sample_row", "status",
     )}
     if neighborhood > 0:
-        parts["neighborhood"] = []
+        parts["nb_len"], parts["nb_vals"] = [], []
 
-    pidx = np.asarray([p["point_index"] for p in pts], dtype=np.int64)
+    pidx = np.asarray(point_index, dtype=np.int64)
     for band in img_bands:
         value = np.full(n, np.nan)
         valid = np.zeros(n, dtype=bool)
@@ -252,25 +257,27 @@ def _sample_image(
         parts["px_col"].append(cols.astype(np.int32))
         parts["px_row"].append(rows.astype(np.int32))
         parts["in_bounds"].append(in_bounds)
-        parts["value"].append(value)  # NaN -> null via pandas
+        parts["value"].append(value)  # non-finite -> null in _samples_batch
         parts["valid"].append(valid)
         parts["ring_steps"].append(ring_steps)
         parts["sample_col"].append(s_col.astype(np.int32))
         parts["sample_row"].append(s_row.astype(np.int32))
         parts["status"].append(np.full(n, "ok", dtype=object))
         if neighborhood > 0:
-            parts["neighborhood"].append(
-                _neighborhood_windows(reader, band, neighborhood, in_bounds, rows, cols)
+            nb_len, nb_vals = _neighborhood_windows(
+                reader, band, neighborhood, in_bounds, rows, cols
             )
+            parts["nb_len"].append(nb_len)
+            parts["nb_vals"].append(nb_vals)
 
     return {k: np.concatenate(v) if v else np.array([]) for k, v in parts.items()}
 
 
-def _quarantine_rows(image_id, pts, msg: str, neighborhood: int) -> dict:
+def _quarantine_rows(image_id, point_index, msg: str, neighborhood: int) -> dict:
     """Per-point status rows for an image whose blob failed to decode."""
-    n = len(pts)
+    n = len(point_index)
     out = {
-        "point_index": np.asarray([p["point_index"] for p in pts], dtype=np.int64),
+        "point_index": np.asarray(point_index, dtype=np.int64),
         "image_id": np.full(n, image_id, dtype=object),
         "band": np.full(n, -1, dtype=np.int32),
         "px_col": np.full(n, -1, dtype=np.int32),
@@ -284,10 +291,67 @@ def _quarantine_rows(image_id, pts, msg: str, neighborhood: int) -> dict:
         "status": np.full(n, msg, dtype=object),
     }
     if neighborhood > 0:
-        nb = np.empty(n, dtype=object)
-        nb[:] = None
-        out["neighborhood"] = nb
+        out["nb_len"], out["nb_vals"] = np.full(n, -1), np.empty(0)
     return out
+
+
+def _samples_batch(parts: list[dict], schema: pa.Schema) -> pa.RecordBatch:
+    """One output batch from per-image column arrays, typed by ``schema``
+    (``SAMPLES_ARROW``, plus ``NEIGHBORHOOD_FIELD`` when windows are on).
+    Null semantics: a non-finite ``value`` is null, and so is a NaN inside
+    a window; an out-of-bounds or quarantined point's window is null."""
+    parts = [p for p in parts if len(p["point_index"])]
+    if not parts:
+        return pa.RecordBatch.from_pylist([], schema=schema)
+    col = {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
+    arrays = [
+        pa.array(col["value"], mask=~np.isfinite(col["value"])) if f.name == "value"
+        else pa.array(col[f.name], type=f.type)
+        for f in SAMPLES_ARROW
+    ]
+    if "nb_len" in col:
+        lens, vals = col["nb_len"], col["nb_vals"]
+        offsets = np.concatenate([[0], np.cumsum(np.maximum(lens, 0))]).astype(np.int32)
+        arrays.append(pa.ListArray.from_arrays(
+            offsets, pa.array(vals, type=pa.float64(), mask=np.isnan(vals)),
+            mask=pa.array(lens < 0),
+        ))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _sample_batches(
+    batches: Iterator[pa.RecordBatch], payload_col: str, open_blob, max_ring: int,
+    bands: tuple[int, ...], neighborhood: int,
+) -> Iterator[pa.RecordBatch]:
+    """The sampling kernel: per grouped-side row (``image_id``, payload,
+    ``_pts`` list of point structs) slice the image's points straight out
+    of the list's offsets and child arrays, sample them, and emit one
+    ``RecordBatch`` per input batch."""
+    from rasteret_spark.operators.decode import _err_status
+
+    schema = SAMPLES_ARROW
+    if neighborhood > 0:
+        schema = schema.append(NEIGHBORHOOD_FIELD)
+    for rb in batches:
+        pts = rb.column("_pts")
+        offs = pts.offsets.to_numpy()
+        offs = offs - offs[0]
+        st = pts.flatten()
+        fields = {f.name: a.to_numpy(zero_copy_only=False) for f, a in zip(st.type, st.flatten())}
+        pidx, xs, ys = fields["point_index"], fields["x"], fields["y"]
+        parts = []
+        for i, (image_id, blob) in enumerate(
+            zip(rb.column("image_id").to_pylist(), rb.column(payload_col).to_pylist())
+        ):
+            sl = slice(offs[i], offs[i + 1])
+            try:
+                reader = mr.CachedReader(open_blob(blob))
+                parts.append(_sample_image(
+                    image_id, reader, pidx[sl], xs[sl], ys[sl], max_ring, bands, neighborhood
+                ))
+            except Exception as e:  # quarantine rows, not a task failure
+                parts.append(_quarantine_rows(image_id, pidx[sl], _err_status(e), neighborhood))
+        yield _samples_batch(parts, schema)
 
 
 def sample_join(
@@ -336,11 +400,13 @@ def sample_points(
     candidate point (status column) instead of failing the stage.
 
     Building the plan runs the candidate join once: the grouped point side
-    is local-checkpointed and its pair count picks broadcast vs shuffle join
-    (``decode.grouped_side_choice``)."""
+    is local-checkpointed, and its pair count, observed while the checkpoint
+    is written, picks broadcast vs shuffle join
+    (``decode.grouped_side_choice``).  The kernel (``_sample_batches``) runs
+    in ``mapInArrow``: no pandas conversion of the grouped points on the way
+    in or of the samples on the way out."""
     from rasteret_spark.operators.decode import (
         _decode_parallelism,
-        _err_status,
         blob_source,
         grouped_side_choice,
     )
@@ -361,32 +427,11 @@ def sample_points(
         src = src.repartition(_decode_parallelism(src), "image_id")
 
     schema = SAMPLES_SCHEMA + (NEIGHBORHOOD_COL if neighborhood > 0 else "")
-    col_names = [f.strip().split(" ")[0] for f in schema.split(", ")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: list[dict] = []
-            for image_id, blob, pts in zip(pdf["image_id"], pdf[payload_col], pdf["_pts"]):
-                try:
-                    reader = mr.CachedReader(open_blob(blob))
-                    parts.append(
-                        _sample_image(image_id, reader, pts, max_ring, want_bands, neighborhood)
-                    )
-                except Exception as e:  # quarantine rows, not a task failure
-                    parts.append(
-                        _quarantine_rows(image_id, pts, _err_status(e), neighborhood)
-                    )
-            parts = [p for p in parts if len(p["point_index"])]
-            if parts:
-                out = pd.DataFrame(
-                    {c: np.concatenate([p[c] for p in parts]) for c in col_names}
-                )
-                out["value"] = out["value"].where(np.isfinite(out["value"]), None)
-                yield out
-            else:
-                yield pd.DataFrame({c: [] for c in col_names})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _sample_batches(batches, payload_col, open_blob, max_ring, want_bands, neighborhood)
 
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema=schema)
 
 
 def point_time_series(

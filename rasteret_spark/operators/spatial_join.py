@@ -8,9 +8,12 @@ The Spark generalization of rasteret's bbox-prune + exact-refine join pattern
 evaluation `src/rasteret/core/execution.py:244-297`), redesigned for shuffle
 efficiency at 10^12-row scale:
 
-  1. Both sides are covered with quadtree cells at one fixed resolution,
-     using NATIVE column expressions only (floor arithmetic + ``sequence`` +
-     ``explode``) — the candidate generation never leaves the JVM, so
+  1. Both sides are covered with quadtree cells at one fixed resolution.
+     The cell math is built as SQL text (``_axis_cell`` / ``pack_cell``:
+     floor arithmetic + ``sequence`` + ``explode``), the one copy of it, so
+     each cell expression costs the driver one Py4J round trip instead of
+     one per ``Column`` node; it is parsed into the same JVM-native
+     expressions — candidate generation never leaves the JVM, so
      Catalyst/AQE own the join strategy and whole-stage codegen applies.
   2. The cell equi-join produces each candidate pair once thanks to the
      canonical-cell rule: a pair is emitted only from the cell containing the
@@ -38,7 +41,7 @@ when the cell join is a broadcast hash join neither changes task sizes.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 RES_SHIFT = 52
@@ -49,18 +52,31 @@ def _n(res: int) -> int:
     return 1 << res
 
 
-def pack_cell(res: int, ix: Column, iy: Column) -> Column:
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _d(v: float) -> str:
+    """A double literal in SQL text: a bare ``180.0`` parses as a decimal."""
+    return f"{float(v)!r}D"
+
+
+def pack_cell(res: int, ix: str, iy: str) -> str:
+    """SQL text of the packed cell id of integer cell indices ``ix``/``iy``
+    (SQL text): ``res << 52 | ix << 26 | iy`` as bigint arithmetic.  For a
+    fixed ``ix`` the ids of consecutive ``iy`` are consecutive integers."""
     return (
-        F.lit(res).cast("long") * F.lit(1 << RES_SHIFT).cast("long")
-        + ix.cast("long") * F.lit(1 << IX_SHIFT).cast("long")
-        + iy.cast("long")
+        f"({res}L * {1 << RES_SHIFT}L + CAST({ix} AS BIGINT) * {1 << IX_SHIFT}L"
+        f" + CAST({iy} AS BIGINT))"
     )
 
 
-def _axis_cell(v: Column, half_span: float, res: int) -> Column:
-    """Clamped cell index of a coordinate on one axis (``half_span`` 180 for
-    lon, 90 for lat): floor of the coordinate's position on the
-    ``2**res``-cell axis, clamped to ``[0, 2**res - 1]``.
+def _axis_cell(v: str, half_span: float, res: int) -> str:
+    """SQL text of the clamped cell index of a coordinate (SQL text ``v``)
+    on one axis (``half_span`` 180 for lon, 90 for lat): floor of the
+    coordinate's position on the ``2**res``-cell axis, clamped to
+    ``[0, 2**res - 1]``.
 
     No epsilon shrink on a bbox max edge: the containment predicate is
     closed (x <= xmax), so a point lying exactly on a cell boundary that is
@@ -69,17 +85,16 @@ def _axis_cell(v: Column, half_span: float, res: int) -> Column:
     candidate cell per axis; canonical-cell dedup and the exact refine
     filter keep the output identical otherwise."""
     n = _n(res)
-    return F.least(
-        F.greatest(
-            F.floor((v + F.lit(half_span)) / F.lit(2 * half_span) * F.lit(float(n))), F.lit(0)
-        ),
-        F.lit(n - 1),
+    return (
+        f"least(greatest(floor(({v} + {_d(half_span)}) / {_d(2 * half_span)}"
+        f" * {_d(n)}), 0), {n - 1})"
     )
 
 
-def cell_of_point_col(lon: Column, lat: Column, res: int) -> Column:
-    """Native-expression cell id of a point: ``pack_cell`` of its two
-    ``_axis_cell`` indices."""
+def cell_of_point_col(lon: str, lat: str, res: int) -> str:
+    """SQL text of a point's cell id (``lon``/``lat`` SQL text, e.g. a
+    quoted column name): ``pack_cell`` of its two ``_axis_cell`` indices.
+    Wrap it in ``F.expr`` for a Column."""
     return pack_cell(res, _axis_cell(lon, 180.0, res), _axis_cell(lat, 90.0, res))
 
 
@@ -93,18 +108,25 @@ def explode_cover(
     cell_name: str = "cell",
 ) -> DataFrame:
     """Explode a bbox into its covering cells at ``res`` — JVM-native
-    (sequence x sequence), no UDF.  Adds ``cell_name`` column."""
-    df = (
-        df.withColumn("_ix0", _axis_cell(F.col(xmin), 180.0, res))
-        .withColumn("_ix1", F.greatest(_axis_cell(F.col(xmax), 180.0, res), F.col("_ix0")))
-        .withColumn("_iy0", _axis_cell(F.col(ymin), 90.0, res))
-        .withColumn("_iy1", F.greatest(_axis_cell(F.col(ymax), 90.0, res), F.col("_iy0")))
-    )
-    df = df.withColumn("_ix", F.explode(F.sequence("_ix0", "_ix1"))).withColumn(
-        "_iy", F.explode(F.sequence("_iy0", "_iy1"))
-    )
-    return df.withColumn(cell_name, pack_cell(res, F.col("_ix"), F.col("_iy"))).drop(
-        "_ix0", "_ix1", "_iy0", "_iy1", "_ix", "_iy"
+    (sequence x sequence), no UDF.  Adds ``cell_name`` column.
+
+    Three ``selectExpr`` steps: the four axis indices, the x explode, then
+    the y explode as one ``sequence`` of packed ids (consecutive for a
+    fixed x)."""
+    keep = [_q(c) for c in df.columns]
+    ix0, iy0 = _axis_cell(_q(xmin), 180.0, res), _axis_cell(_q(ymin), 90.0, res)
+    return (
+        df.selectExpr(
+            *keep,
+            f"{ix0} AS _ix0", f"greatest({_axis_cell(_q(xmax), 180.0, res)}, {ix0}) AS _ix1",
+            f"{iy0} AS _iy0", f"greatest({_axis_cell(_q(ymax), 90.0, res)}, {iy0}) AS _iy1",
+        )
+        .selectExpr(*keep, "_iy0", "_iy1", "explode(sequence(_ix0, _ix1)) AS _ix")
+        .selectExpr(
+            *keep,
+            f"explode(sequence({pack_cell(res, '_ix', '_iy0')}, {pack_cell(res, '_ix', '_iy1')}))"
+            f" AS {_q(cell_name)}",
+        )
     )
 
 
@@ -120,15 +142,13 @@ def image_light(images: DataFrame) -> DataFrame:
     )
 
 
-def bbox_overlap(a: str, b: str) -> Column:
-    """Exact bbox-overlap predicate on two bbox column prefixes
-    (`{a}_xmin`...), same expression as rasteret `_bbox_overlap_expr`
-    (`src/rasteret/core/collection.py:225-239`)."""
+def bbox_overlap(a: str, b: str) -> str:
+    """SQL text of the exact bbox-overlap predicate on two bbox column
+    prefixes (`{a}_xmin`...), same expression as rasteret
+    `_bbox_overlap_expr` (`src/rasteret/core/collection.py:225-239`)."""
     return (
-        (F.col(f"{a}_xmax") >= F.col(f"{b}_xmin"))
-        & (F.col(f"{a}_xmin") <= F.col(f"{b}_xmax"))
-        & (F.col(f"{a}_ymax") >= F.col(f"{b}_ymin"))
-        & (F.col(f"{a}_ymin") <= F.col(f"{b}_ymax"))
+        f"{_q(a + '_xmax')} >= {_q(b + '_xmin')} AND {_q(a + '_xmin')} <= {_q(b + '_xmax')}"
+        f" AND {_q(a + '_ymax')} >= {_q(b + '_ymin')} AND {_q(a + '_ymin')} <= {_q(b + '_ymax')}"
     )
 
 
@@ -151,16 +171,18 @@ def bbox_join(
     ac = explode_cover(aois, "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax", res, "cell")
     join_keys = ["cell"]
     if salts > 0:
-        ic = ic.withColumn("salt", F.pmod(F.xxhash64(F.col("image_id")), F.lit(salts)))
-        ac = ac.withColumn("salt", F.explode(F.array([F.lit(s) for s in range(salts)])))
+        ic = ic.selectExpr("*", f"pmod(xxhash64(image_id), {salts}) AS salt")
+        ac = ac.selectExpr("*", f"explode(sequence(0, {salts - 1})) AS salt")
         join_keys = ["cell", "salt"]
-    j = ic.join(ac, join_keys, "inner")
     # canonical cell: the one containing the intersection's min corner
-    inter_x = F.greatest(F.col(f"{img_prefix}_xmin"), F.col("aoi_xmin"))
-    inter_y = F.greatest(F.col(f"{img_prefix}_ymin"), F.col("aoi_ymin"))
-    j = j.filter(F.col("cell") == cell_of_point_col(inter_x, inter_y, res))
-    j = j.filter(bbox_overlap(img_prefix, "aoi"))
-    return j.drop(*join_keys)
+    inter_x = f"greatest({_q(img_prefix + '_xmin')}, aoi_xmin)"
+    inter_y = f"greatest({_q(img_prefix + '_ymin')}, aoi_ymin)"
+    return (
+        ic.join(ac, join_keys, "inner")
+        .filter(f"cell = {cell_of_point_col(inter_x, inter_y, res)}"
+                f" AND {bbox_overlap(img_prefix, 'aoi')}")
+        .drop(*join_keys)
+    )
 
 
 def point_in_bbox_join(points: DataFrame, images: DataFrame, res: int = 7) -> DataFrame:
@@ -171,15 +193,12 @@ def point_in_bbox_join(points: DataFrame, images: DataFrame, res: int = 7) -> Da
     rasteret's candidate-point prefilter
     (`src/rasteret/core/point_sample_helpers.py:37-56`)."""
     ic = explode_cover(images, "img_xmin", "img_ymin", "img_xmax", "img_ymax", res, "cell")
-    pc = points.withColumn("cell", cell_of_point_col(F.col("x"), F.col("y"), res))
-    j = pc.join(ic, "cell", "inner")
-    j = j.filter(
-        (F.col("x") >= F.col("img_xmin"))
-        & (F.col("x") <= F.col("img_xmax"))
-        & (F.col("y") >= F.col("img_ymin"))
-        & (F.col("y") <= F.col("img_ymax"))
+    pc = points.selectExpr("*", f"{cell_of_point_col(_q('x'), _q('y'), res)} AS cell")
+    return (
+        pc.join(ic, "cell", "inner")
+        .filter("x >= img_xmin AND x <= img_xmax AND y >= img_ymin AND y <= img_ymax")
+        .drop("cell")
     )
-    return j.drop("cell")
 
 
 # --- exact polygon refine (the only Python stage) ------------------------------
@@ -189,19 +208,17 @@ def refine_rect_polygon(cands: DataFrame) -> DataFrame:
     against the ``aoi_geometry`` WKB.
 
     Partitioning: the refine fuses into whatever stage produces the
-    candidates (usually the cell join's scan/shuffle stage) — adding a
-    dedicated exchange + python stage costs more in task-dispatch floor
+    candidates (the cell join's shuffle stage, or its streamed side under a
+    broadcast join), and that stage already sets the partitioning — adding
+    a dedicated exchange + python stage costs more in task-dispatch floor
     than the vectorized kernel itself (the whole 39k-row bench refine is
     68 ms single-core; a separate 32-task pandas stage costs ~1 s on this
-    host).  Only an UNDER-SPLIT input (fewer partitions than cores — e.g.
-    a one-split scan feeding a big explode) gets a conditional round-robin
-    spread, same policy as ``util.spread_compute``."""
-    from rasteret_spark import geom
-    from rasteret_spark.operators.util import spread_compute
-
-    cands = spread_compute(cands)
-
+    host).  Nothing peeks at the candidates' partition count: on a join,
+    ``df.rdd`` executes the join's stages under AQE, a Spark job at plan
+    build."""
     import numpy as np
+
+    from rasteret_spark import geom
 
     @F.pandas_udf("boolean")
     def _refine(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series,
@@ -219,9 +236,5 @@ def refine_rect_polygon(cands: DataFrame) -> DataFrame:
         return pd.Series(out)
 
     return cands.withColumn(
-        "intersects",
-        _refine(
-            F.col("img_xmin"), F.col("img_ymin"), F.col("img_xmax"), F.col("img_ymax"),
-            F.col("aoi_geometry"),
-        ),
+        "intersects", _refine("img_xmin", "img_ymin", "img_xmax", "img_ymax", "aoi_geometry")
     )

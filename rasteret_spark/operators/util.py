@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# an Exchange node (shuffle or broadcast) in a physical plan's text
+_EXCHANGE = re.compile(r"^[\s:+|*()\d-]*(Broadcast|Shuffle)?Exchange\b", re.M)
 
 
 def spread_compute(df: DataFrame) -> DataFrame:
@@ -15,9 +20,17 @@ def spread_compute(df: DataFrame) -> DataFrame:
     compute (matches the decode path's policy, `operators/decode.py`).  The
     repartition is CONDITIONAL: a big table already split across >= cores
     partitions passes through untouched, so at real scale this never adds a
-    full-table shuffle just to rearrange work that is already parallel."""
+    full-table shuffle just to rearrange work that is already parallel.
+
+    No job runs: the split count is read from ``df.rdd`` only when the
+    physical plan has no Exchange, where that is planning-only.  Under AQE,
+    ``df.rdd`` on a plan with an Exchange (a shuffle or broadcast join)
+    executes its stages, so such an input passes through untouched —
+    spread its scan before the join instead."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    try:  # planning-only peek at the scan's split count (no job runs)
+    try:
+        if _EXCHANGE.search(df._jdf.queryExecution().executedPlan().toString()):
+            return df
         cur = df.rdd.getNumPartitions()
     except Exception:
         cur = 1

@@ -75,7 +75,7 @@ def test_explode_cover_contains_point_cells(spark):
     per_res = [
         sj.explode_cover(df.filter(F.col("res") == r), "xmin", "ymin", "xmax", "ymax", r)
         .groupBy("row")
-        .agg(F.max(F.col("cell") == sj.cell_of_point_col(F.col("px"), F.col("py"), r))
+        .agg(F.max(F.col("cell") == F.expr(sj.cell_of_point_col("px", "py", r)))
              .alias("hit"))
         for r in RESES
     ]

@@ -100,7 +100,10 @@ def test_sample_truth_rows_match_real_reader():
                 pts.append({"point_index": k, "x": float(lon), "y": float(lat)})
                 k += 1
         reader = mr.CachedReader(bytes(row["bytes"]))
-        want = _sample_image(t["image_id"], reader, pts, max_ring=4, bands=(0,))
+        want = _sample_image(
+            t["image_id"], reader, [p["point_index"] for p in pts],
+            [p["x"] for p in pts], [p["y"] for p in pts], max_ring=4, bands=(0,),
+        )
         got = truth._sample_truth_rows(t, pts, max_ring=4, band=0)
         assert len(got) == len(want["point_index"])
         for j, g in enumerate(got):
