@@ -1163,18 +1163,10 @@ def _chips_df(spark):
 
 
 def _chip_pairs(spark):
-    from rasteret_spark.operators import raster_mosaic as rmo
+    from rasteret_spark.operators import raster_mosaic as rmo, spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
-    return rmo.chip_candidates(
-        _chips_df(spark), img_light, images.select("image_id", "datetime", "bytes"),
-        res=7, max_images_per_chip=rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
-    )
+    return rmo.chip_candidates(_chips_df(spark), sj.image_light(images), images, res=7)
 
 
 def q48_image_mosaic(spark, sf_dir):
@@ -1185,9 +1177,7 @@ def q48_image_mosaic(spark, sf_dir):
     diffs it against the pre-encode truth mirror (sources/truth.py)."""
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    out = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None  # capped in _chip_pairs
-    )
+    out = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     return out.select(
         "chip_id", "band", "n_images", "n_contributing", "filled", "v_sum",
     )
@@ -1202,13 +1192,8 @@ def q49_image_latest_sample(spark, sf_dir):
     from rasteret_spark.sources import synthetic as syn
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id", "datetime",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     pts = spark.createDataFrame(syn.points_table(200).to_pandas())
-    cands = sj.point_in_bbox_join(pts, img_light, res=8).select(
+    cands = sj.point_in_bbox_join(pts, sj.image_light(images), res=8).select(
         "point_index", "x", "y", "image_id", "datetime"
     )
     winners = latest_per_key(
@@ -1247,9 +1232,7 @@ def q51_image_chip_stack(spark, sf_dir):
     the reference's stacked chip serving (`torchgeo.py:997-1236`)."""
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    out = rmo.chip_stack_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None  # capped upstream
-    )
+    out = rmo.chip_stack_pixels(_chip_pairs(spark), bands=(0, 1))
     return out.select("chip_id", "t_index", "image_id", "band", "filled")
 
 
@@ -1260,19 +1243,14 @@ def q53_chip_serve(spark, sf_dir):
     pinned against a driver oracle in tests/test_chips.py."""
     import datetime as dt
 
-    from rasteret_spark.operators import chips
+    from rasteret_spark.operators import chips, spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id", "datetime",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     reqs = chips.chip_requests(
         spark, HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, random_n=8, seed=42
     )
     out = chips.chip_serve(
-        reqs, img_light, images.select("image_id", "datetime", "bytes"),
+        reqs, sj.image_light(images), images,
         t_start=dt.datetime(2023, 2, 1), t_end=dt.datetime(2023, 6, 1),
         t_step=2, bands=(0,),
     )
@@ -1285,22 +1263,12 @@ def q54_image_mosaic_average(spark, sf_dir):
     `src/rasteret/core/utils.py:215-344`) — downsample regime: chip pixels
     are 4x coarser than q48's, so each target pixel genuinely averages
     multiple source centers.  Kernel pinned in tests/test_resampling.py."""
-    from rasteret_spark.operators import chips, raster_mosaic as rmo
+    from rasteret_spark.operators import chips, raster_mosaic as rmo, spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     coarse = chips.chip_requests(spark, HOTSPOT_BBOX, 16, 0.004, stride=16)
-    pairs = rmo.chip_candidates(
-        coarse, img_light, images.select("image_id", "datetime", "bytes"), res=7,
-        max_images_per_chip=rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
-    )
-    out = rmo.first_valid_mosaic_pixels(
-        pairs, bands=(0,), method="average", max_images_per_chip=None
-    )
+    pairs = rmo.chip_candidates(coarse, sj.image_light(images), images, res=7)
+    out = rmo.first_valid_mosaic_pixels(pairs, bands=(0,), method="average")
     return out.select(
         "chip_id", "band", "n_images", "n_contributing", "filled",
         "v_sum", "status",
@@ -1315,21 +1283,13 @@ def q60_image_mosaic_native_grid(spark, sf_dir):
     the output.  Grid math, candidate join and kernel pinned bit-exact vs a
     full-decode oracle in tests/test_native_grid.py."""
     from rasteret_spark import crs
-    from rasteret_spark.operators import chips, raster_mosaic as rmo
+    from rasteret_spark.operators import chips, raster_mosaic as rmo, spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     gbox = crs.bbox_from_lonlat(32633, *HOTSPOT_BBOX)
     grid = chips.chip_requests(spark, gbox, 32, 100.0, stride=32, grid_epsg=32633)
-    pairs = rmo.chip_candidates(
-        grid, img_light, images.select("image_id", "datetime", "bytes"), res=7,
-        max_images_per_chip=rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
-    )
-    out = rmo.first_valid_mosaic_pixels(pairs, bands=(0,), max_images_per_chip=None)
+    pairs = rmo.chip_candidates(grid, sj.image_light(images), images, res=7)
+    out = rmo.first_valid_mosaic_pixels(pairs, bands=(0,))
     return out.select(
         "chip_id", "band", "grid_epsg", "n_images", "n_contributing", "filled",
         "v_sum", "capped", "status",
@@ -1343,20 +1303,12 @@ def q61_chip_augment(spark, sf_dir):
     — plan-asserted in tests/test_augment.py), then per-plane checksums.
     The JVM-side analogue of the reference adapter's torchvision transform
     hook (`src/rasteret/integrations/torchgeo.py:292-299`)."""
-    from rasteret_spark.operators import augment as ag, chips
+    from rasteret_spark.operators import augment as ag, chips, spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id", "datetime",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     grid = chips.chip_requests(spark, HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES,
                                stride=CHIP_STRIDE)
-    stack = chips.chip_serve(
-        grid, img_light, images.select("image_id", "datetime", "bytes"),
-        max_images_per_chip=4,
-    )
+    stack = chips.chip_serve(grid, sj.image_light(images), images, max_images_per_chip=4)
     aug = ag.augment_chips(
         stack.filter(F.col("status") == "ok"),
         ops=("identity", "hflip", "vflip", "rot90"),
@@ -1520,9 +1472,7 @@ def q69_gap_fill(spark, sf_dir):
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators.timeseries import gap_fill
 
-    stack = rmo.chip_stack_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    stack = rmo.chip_stack_pixels(_chip_pairs(spark), bands=(0, 1))
     out = gap_fill(stack.filter(F.col("status") == "ok"))
     return out.select(
         "chip_id", "t_index", "image_id", "band", "n_missing", "n_filled",
@@ -1548,9 +1498,7 @@ def q70_class_stats(spark, sf_dir):
     from rasteret_spark.operators.labels import class_stats, label_masks
     from rasteret_spark.sources import synthetic as syn
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     aois = spark.createDataFrame(syn.aois_table(40).to_pandas())
     masks = label_masks(_chips_df(spark), aois, class_col="crop")
     return class_stats(
@@ -1570,9 +1518,7 @@ def q71_focal_filters(spark, sf_dir):
     from rasteret_spark.operators import focal
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     fm = focal.focal_stats(mosaic, stat="mean", radius=1, out_col="fm")
     sb = focal.sobel(fm, value_col="fm", out_col="sb")
 
@@ -1614,9 +1560,7 @@ def q72_change_detect(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    stack = rmo.chip_stack_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    stack = rmo.chip_stack_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.change_detect(
         stack, CHANGE_SPLIT_TS, stat="median", threshold=CHANGE_THRESHOLD
     )
@@ -1652,9 +1596,7 @@ def q74_terrain(spark, sf_dir):
     from rasteret_spark.operators import focal
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     # only the gradient surfaces feed the query's output columns below;
     # requesting slope/aspect/hillshade too made the per-pixel struct carry
     # three trig expressions Catalyst cannot prune through the transform
@@ -1703,9 +1645,7 @@ def q75_chip_stats(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.chip_stats(mosaic, probs=(0.25, 0.5, 0.75))
     return out.select(
         "chip_id", "band", "n_valid", "null_frac", "vmin", "vmax",
@@ -1723,9 +1663,7 @@ def q77_spatial_stats(spark, sf_dir):
     from rasteret_spark.operators import focal
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     return focal.spatial_stats(mosaic).select(
         "chip_id", "band", "n_valid", "w_pairs", "morans_i", "gearys_c",
     )
@@ -1805,9 +1743,7 @@ def q78_qa_mask(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.qa_mask(mosaic, data_band=0, qa_band=1, bit=QA_BIT)
     return out.select(
         "chip_id", "qa_valid", "qa_flagged", "kept_px",
@@ -1824,9 +1760,7 @@ def q79_stretch(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.stretch(mosaic, p_lo=0.02, p_hi=0.98)
     return out.select(
         "chip_id", "band", "cut_lo", "cut_hi", "clip_lo_px", "clip_hi_px",
@@ -1843,9 +1777,7 @@ def q80_chip_histogram(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.chip_histogram(
         mosaic, lo=HIST_LO, hi=HIST_HI, n_bins=HIST_BINS
     )
@@ -1864,9 +1796,7 @@ def q81_train_split(spark, sf_dir):
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import splits
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out = splits.assign_split(mosaic, key_col="chip_id")
     return out.select(
         "chip_id", "band", "split",
@@ -1890,21 +1820,14 @@ def q82_cog_export(spark, sf_dir):
     from rasteret_spark.operators import chips as ch
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import raster_sink as rsink
+    from rasteret_spark.operators import spatial_join as sj
 
     images = _images_df(spark)
-    img_light = images.select(
-        "image_id",
-        F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-        F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-    )
     grid = ch.chip_requests(
         spark, HOTSPOT_BBOX, COG_SIZE, COG_RES, stride=COG_STRIDE
     )
-    pairs = rmo.chip_candidates(
-        grid, img_light, images.select("image_id", "datetime", "bytes"),
-        res=7, max_images_per_chip=rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
-    )
-    px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1), max_images_per_chip=None)
+    pairs = rmo.chip_candidates(grid, sj.image_light(images), images, res=7)
+    px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1))
     out_dir = (
         f"/tmp/rasteret_spark_oracle/"
         f"cogs_{COG_SIZE}_{COG_RES}_{COG_STRIDE}_{_gen_fingerprint()}"
@@ -1967,9 +1890,7 @@ def q83_shard_export(spark, sf_dir):
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import shard_sink as ss
 
-    px = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None  # capped upstream
-    )
+    px = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     out_dir = f"/tmp/rasteret_spark_oracle/shards_4_{_gen_fingerprint()}"
     man = ss.write_tar_shards(px, out_dir, n_shards=4)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
@@ -1991,9 +1912,7 @@ def q85_global_band_stats(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    px = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None  # capped upstream
-    ).filter(F.col("values").isNotNull())
+    px = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1)).filter(F.col("values").isNotNull())
     return bm.global_band_stats(px, deterministic=True)
 
 
@@ -2028,9 +1947,7 @@ def q73_temporal_trend(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    stack = rmo.chip_stack_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    stack = rmo.chip_stack_pixels(_chip_pairs(spark), bands=(0, 1))
     out = bm.temporal_trend(stack)
 
     def _wsum(col):
@@ -2139,9 +2056,7 @@ def q64_band_index(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    mosaic = rmo.first_valid_mosaic_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    mosaic = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
     nd = bm.normalized_difference(mosaic, 1, 0)
     masked = bm.threshold_mask(nd, "nd", lo=0.0)
     return masked.select(
@@ -2160,9 +2075,7 @@ def q65_temporal_median(spark, sf_dir):
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
-    stack = rmo.chip_stack_pixels(
-        _chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-    )
+    stack = rmo.chip_stack_pixels(_chip_pairs(spark), bands=(0, 1))
     med = bm.temporal_composite(stack, stat="median")
     valid = F.filter(F.col("composite"), lambda v: v.isNotNull())
     return med.select(

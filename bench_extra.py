@@ -65,16 +65,12 @@ def main() -> None:
         timed(spark, "q74_full", lambda: E.queries()["q74_terrain"](spark, SF_DIR))
         timed(
             spark, "q74_mosaic_only",
-            lambda: rmo.first_valid_mosaic_pixels(
-                E._chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-            ),
+            lambda: rmo.first_valid_mosaic_pixels(E._chip_pairs(spark), bands=(0, 1)),
         )
         timed(
             spark, "q74_terrain_nosum",
             lambda: focal.terrain(
-                rmo.first_valid_mosaic_pixels(
-                    E._chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-                ),
+                rmo.first_valid_mosaic_pixels(E._chip_pairs(spark), bands=(0, 1)),
                 outs=("dzdx", "dzdy", "slope", "aspect", "hillshade"),
             ).select("chip_id", "band", "dzdx"),
         )
@@ -83,9 +79,7 @@ def main() -> None:
     if on("stack"):
         timed(
             spark, "stack_only",
-            lambda: rmo.chip_stack_pixels(
-                E._chip_pairs(spark), bands=(0, 1), max_images_per_chip=None
-            ),
+            lambda: rmo.chip_stack_pixels(E._chip_pairs(spark), bands=(0, 1)),
         )
 
     # --- zonal pipeline decomposition --------------------------------------
@@ -104,17 +98,12 @@ def main() -> None:
             from rasteret_spark.sources.synthetic import aois_table
 
             images = spark.read.parquet(images_path)
-            img_light = images.select(
-                "image_id",
-                F.col("xmin").alias("img_xmin"), F.col("ymin").alias("img_ymin"),
-                F.col("xmax").alias("img_xmax"), F.col("ymax").alias("img_ymax"),
-            )
             aoi = spark.createDataFrame(aois_table(200).to_pandas()).select(
                 "aoi_id", F.col("geometry").alias("aoi_geometry"),
                 F.col("xmin").alias("aoi_xmin"), F.col("ymin").alias("aoi_ymin"),
                 F.col("xmax").alias("aoi_xmax"), F.col("ymax").alias("aoi_ymax"),
             )
-            cands = sj.bbox_join(img_light, aoi, res=7, salts=4)
+            cands = sj.bbox_join(sj.image_light(images), aoi, res=7, salts=4)
             return sj.refine_rect_polygon(cands).filter(F.col("intersects")).select(
                 "image_id", "aoi_id", "aoi_geometry",
                 "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax",

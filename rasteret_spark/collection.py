@@ -19,9 +19,10 @@ mosaic or chip plan runs its candidate join once, to size and checkpoint the
 grouped side (``decode.grouped_side_choice``).
 
 Zonal and point-sample methods hand the stored records straight to
-``decode.zonal_join`` / ``sampling.sample_join``, which own candidate
-generation and the bytes-or-href payload choice, so blob and remote
-(href-only) collections take the same paths, checkpointed or not.
+``decode.zonal_join`` / ``sampling.sample_join``, mosaic and chip methods
+to ``raster_mosaic.chip_candidates`` / ``chips.chip_serve``; each owns
+candidate generation and the bytes-or-href payload choice, so blob and
+remote (href-only) collections take the same paths.
 """
 
 from __future__ import annotations
@@ -302,20 +303,15 @@ class Collection:
         # full collection's majority CRS differs
         gbox, gxres, epsg = sub._resolve_grid(bbox, xres, grid_epsg)
         grid = chips.chip_requests(self.spark, gbox, size, gxres, grid_epsg=epsg)
-        # depth cap applied in chip_candidates, on light columns pre-payload
         cap = (
             rmo.DEFAULT_MAX_IMAGES_PER_CHIP
             if max_images_per_chip is None
             else max_images_per_chip
         )
         pairs = rmo.chip_candidates(
-            grid, sj.image_light(sub.records),
-            sub.records.select("image_id", "datetime", "bytes"),
-            max_images_per_chip=cap,
+            grid, sj.image_light(sub.records), sub.records, max_images_per_chip=cap
         )
-        return rmo.first_valid_mosaic_pixels(
-            pairs, bands=bands, method=method, max_images_per_chip=None
-        )
+        return rmo.first_valid_mosaic_pixels(pairs, bands=bands, method=method)
 
     def to_cogs(
         self, out_dir: str, bbox, size: int, xres: float, bands=(0,),
@@ -414,8 +410,7 @@ class Collection:
             seed=seed, grid_epsg=epsg,
         )
         return chp.chip_serve(
-            reqs, sj.image_light(self.records),
-            self.records.select("image_id", "datetime", "bytes"),
+            reqs, sj.image_light(self.records), self.records,
             t_start=t_start, t_end=t_end, t_step=t_step, bands=bands, method=method,
         )
 

@@ -26,10 +26,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from rasteret_spark.operators.raster_mosaic import (
-    CHIP_COLS,
-    DEFAULT_MAX_IMAGES_PER_CHIP,
-)
+from rasteret_spark.operators import raster_mosaic as rmo
 
 _HASH_BUCKETS = 1 << 30
 
@@ -138,43 +135,34 @@ def slice_time_steps(
 def chip_serve(
     chips: DataFrame,
     images_light: DataFrame,
-    images_payload: DataFrame,
+    images: DataFrame,
     t_start=None,
     t_end=None,
     t_step: int = 1,
     bands: tuple[int, ...] | list[int] = (0,),
     method: str = "nearest",
-    max_images_per_chip: int | None = DEFAULT_MAX_IMAGES_PER_CHIP,
+    max_images_per_chip: int | None = rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
     res: int = 7,
 ) -> DataFrame:
     """Serve [T, C, H, W] chip stacks for a chip-request table.
 
     ``chips``: CHIP_COLS rows (from ``chip_requests`` or hand-built).
-    ``images_light``: image_id, datetime, img_xmin/_ymin/_xmax/_ymax — NO
-    blobs.  ``images_payload``: image_id, datetime, bytes.
+    ``images_light``: ``spatial_join.image_light`` of the image table —
+    NO blobs.  ``images``: the stored table (image_id, datetime, ``bytes``
+    or ``href``).
 
-    Plan: cell-cover candidate join on light columns -> temporal interval +
-    step slice (still light) -> grouped payload join under the size-guarded
-    broadcast (each surviving blob shuffles once, into its chip group — see
-    ``raster_mosaic.join_payload_grouped``) -> ``chip_stack_pixels``.
-    Matches the reference adapter's select-then-fetch ordering
+    Plan: the two steps of ``raster_mosaic.chip_candidates`` with the
+    temporal interval + step slice between them — light candidates from the
+    cell-cover join -> ``slice_time_steps`` (still light) -> depth cap
+    (newest ``max_images_per_chip``, ``None`` keeps all) + grouped payload
+    join under the size-guarded broadcast (each surviving blob shuffles
+    once, into its chip group) -> ``chip_stack_pixels``.  Matches the
+    reference adapter's select-then-fetch ordering
     (`torchgeo.py:1016-1061`).  Building the plan runs the candidate join
     once to size and local-checkpoint the grouped side
     (``decode.grouped_side_choice``).
     """
-    from rasteret_spark.operators import raster_mosaic as rmo
-    from rasteret_spark.operators.spatial_join import bbox_join
-
-    extra = ["grid_epsg"] if "grid_epsg" in chips.columns else []
-    cands = bbox_join(images_light, rmo.chips_as_aois(chips), res=res).select(
-        *CHIP_COLS, *extra, "image_id", "datetime"
-    )
+    cands = rmo._light_candidates(chips, images_light, images, res)
     cands = slice_time_steps(cands, t_start, t_end, t_step)
-    if max_images_per_chip is not None:
-        # depth cap on LIGHT columns, before the payload join — dropped time
-        # steps never shuffle their blobs (same rule as the t-step slice)
-        cands = rmo._depth_cap(cands, max_images_per_chip, newest_first=True)
-    pairs = rmo.join_payload_grouped(cands.drop("datetime"), images_payload)
-    return rmo.chip_stack_pixels(
-        pairs, bands=bands, method=method, max_images_per_chip=None
-    )
+    pairs = rmo._capped_payload(cands, images, max_images_per_chip)
+    return rmo.chip_stack_pixels(pairs, bands=bands, method=method)

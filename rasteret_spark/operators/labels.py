@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark import crs, geom
-from rasteret_spark.operators.chips import CHIP_COLS
-from rasteret_spark.operators.raster_mosaic import GRID_COLS_SCHEMA
+from rasteret_spark.operators.raster_mosaic import CHIP_COLS, GRID_COLS_SCHEMA
 
 LABEL_SCHEMA = (
     "chip_id string, n_polys int, n_labeled bigint, mask array<int>, "

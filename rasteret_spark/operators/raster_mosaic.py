@@ -15,16 +15,22 @@ Spark re-expression of the reference's pixel compositing paths:
 Plan shape (scale discipline):
 
   1. Candidate (chip x image) pairs come from the native cell-cover
-     ``bbox_join`` upstream — LIGHT columns only, no blobs in that shuffle.
-  2. Pairs join image payloads on ``image_id``, then group by ``chip_id``:
-     each blob moves through exactly ONE shuffle, into the chip group that
-     composites it.  Chips are independent -> perfectly parallel across
-     executors; group size is bounded by the temporal depth of the stack,
-     not by dataset size.
+     ``bbox_join`` — LIGHT columns only, no blobs in that shuffle.  This
+     light-candidate step is shared by ``chip_candidates`` and
+     ``chips.chip_serve``.
+  2. One cap + payload step, also shared: a window over (chip_id) keeps
+     each chip's ``max_images_per_chip`` newest candidates, still on light
+     columns, then the survivors join the payload column that
+     ``decode.blob_source`` picks (``bytes``, or ``href`` for a remote
+     table) and group by ``chip_id``: each kept blob moves through exactly
+     ONE shuffle, into the chip group that composites it.  Chips are
+     independent -> perfectly parallel across executors; group size is
+     bounded by the cap, not by dataset size.
   3. ``applyInPandas`` composites one chip per group with vectorized numpy;
-     images are sorted INSIDE the kernel by (datetime desc, image_id) so the
+     images are sorted INSIDE the kernel by (datetime, image_id) so the
      result is independent of upstream row order (mosaic order-invariance,
-     SURVEY.md §7 "hard parts").
+     SURVEY.md §7 "hard parts").  The kernels neither cap nor pick a
+     payload column: they open each row with ``blob_source``'s opener.
 
 The target grid is axis-aligned in the GRID CRS — ``chip_id, xmin, ymax,
 xres, yres, width, height`` with x = xmin + (col+0.5)*xres,
@@ -41,11 +47,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark import crs
 from rasteret_spark.format import miniraster as mr
+from rasteret_spark.operators.decode import _err_status, blob_source, grouped_side_choice
 from rasteret_spark.operators.util import nanlist
 
 CHIP_COLS = ("chip_id", "chip_xmin", "chip_ymax", "chip_xres", "chip_yres",
@@ -370,76 +377,50 @@ def reproject_to_grid(
     return fn(reader, band, *grid, grid_epsg=grid_epsg)
 
 
-def _sorted_group(pdf: pd.DataFrame, newest_first: bool) -> pd.DataFrame:
-    return pdf.sort_values(
+def _chip_header(pdf: pd.DataFrame, newest_first: bool = True):
+    """Per-chip header both kernels open a group with: the rows sorted by
+    (datetime, image_id) — newest first, or oldest first for the stack's
+    time axis — so the result is independent of upstream row order; the
+    ``capped`` flag; the grid tuple ``reproject_to_grid`` takes; and the
+    GRID_COLS_SCHEMA columns every output row carries.
+
+    ``capped``: ``n_candidates`` (the pre-cap per-chip count ``_depth_cap``
+    adds) exceeds the rows present, so a truncated chip is visible in the
+    output, never a silent drop.  Pairs built without the cap lack the
+    column and are never capped.  The grid CRS is the optional
+    ``grid_epsg`` column (absent -> lon/lat), constant per chip by
+    construction (one grid per request)."""
+    pdf = pdf.sort_values(
         ["datetime", "image_id"], ascending=[not newest_first, True]
     ).reset_index(drop=True)
-
-
-def _depth_cap(
-    pairs: DataFrame, max_images_per_chip: int, newest_first: bool
-) -> DataFrame:
-    """Cap the temporal depth BEFORE blobs group: a window over (chip_id) in
-    composite order keeps only the first N candidates, so a chip sitting
-    under a 10,000-scene archive does not drag 10,000 blobs into one group
-    when the newest handful fill it (the knob the reference's query-limited
-    chip reads expose).
-
-    Adds ``n_candidates`` (the PRE-cap per-chip candidate count, same
-    window — no extra shuffle) so downstream kernels can surface a
-    ``capped`` flag: a truncated chip is visible in the output, never a
-    silent drop.  A pre-existing ``n_candidates`` column is kept (the first
-    cap's count is the true total when capping twice)."""
-    order = [
-        F.col("datetime").desc() if newest_first else F.col("datetime").asc(),
-        F.col("image_id").asc(),
-    ]
-    w = Window.partitionBy("chip_id").orderBy(*order)
-    pairs = pairs.withColumn("_rn", F.row_number().over(w))
-    if "n_candidates" not in pairs.columns:
-        pairs = pairs.withColumn(
-            "n_candidates", F.count(F.lit(1)).over(Window.partitionBy("chip_id"))
-        )
-    return pairs.filter(F.col("_rn") <= max_images_per_chip).drop("_rn")
-
-
-def _grid_epsg_of(pdf: pd.DataFrame, r0: pd.Series) -> int:
-    """Grid CRS of a chip group: the optional ``grid_epsg`` column (absent ->
-    lon/lat).  Constant per chip by construction (one grid per request)."""
-    return int(r0["grid_epsg"]) if "grid_epsg" in pdf.columns else 4326
-
-
-def _grid_cols(r0: pd.Series, grid_epsg: int) -> dict:
-    return {
+    r0 = pdf.iloc[0]
+    ncand = int(r0["n_candidates"]) if "n_candidates" in pdf.columns else len(pdf)
+    gcols = {
         "chip_xmin": float(r0["chip_xmin"]),
         "chip_ymax": float(r0["chip_ymax"]),
         "chip_xres": float(r0["chip_xres"]),
         "chip_yres": float(r0["chip_yres"]),
         "chip_w": int(r0["chip_w"]),
         "chip_h": int(r0["chip_h"]),
-        "grid_epsg": int(grid_epsg),
+        "grid_epsg": int(r0["grid_epsg"]) if "grid_epsg" in pdf.columns else 4326,
     }
+    grid = tuple(gcols[c] for c in CHIP_COLS[1:])
+    return pdf, bool(ncand > len(pdf)), grid, gcols
 
 
 def first_valid_mosaic_pixels(
-    pairs_with_blobs: DataFrame,
+    pairs: DataFrame,
     bands: tuple[int, ...] | list[int] = (0,),
-    newest_first: bool = True,
     method: str = "nearest",
-    max_images_per_chip: int | None = DEFAULT_MAX_IMAGES_PER_CHIP,
 ) -> DataFrame:
     """Per-pixel first-valid composite per chip.
 
-    ``pairs_with_blobs`` columns: CHIP_COLS + image_id, datetime, bytes (one
-    row per candidate chip x image pair, blobs already joined).  For each
-    chip and band, images are visited newest-first (deterministic tie-break
-    on image_id) and each still-empty pixel takes the first valid value —
-    the reference's first-valid precedence (`torchgeo.py:958-995`).
-
-    ``max_images_per_chip`` (default ``DEFAULT_MAX_IMAGES_PER_CHIP``) bounds
-    the blobs shuffled into each chip group; pass ``None`` to disable.  The
-    cap trades completeness for boundedness — pick N >= the worst-case
-    cloud/nodata depth.
+    ``pairs`` columns: CHIP_COLS + image_id, datetime and ``bytes`` or
+    ``href`` (one row per candidate chip x image pair, payload already
+    joined — ``chip_candidates`` builds them, depth cap included).  For
+    each chip and band, images are visited newest-first (deterministic
+    tie-break on image_id) and each still-empty pixel takes the first valid
+    value — the reference's first-valid precedence (`torchgeo.py:958-995`).
 
     A corrupt blob is skipped (counted in ``n_failed``; ``status`` carries
     the first error) instead of failing the stage — per-record failure
@@ -447,39 +428,29 @@ def first_valid_mosaic_pixels(
     rows are self-describing: GRID_COLS_SCHEMA georeferencing rides along.
     """
     want_bands = tuple(bands)
-    if max_images_per_chip is not None:
-        pairs_with_blobs = _depth_cap(pairs_with_blobs, max_images_per_chip, newest_first)
+    payload_col, open_blob = blob_source(pairs)
 
     def composite(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _sorted_group(pdf, newest_first)
-        r0 = pdf.iloc[0]
-        # depth-cap visibility: n_candidates (pre-cap count from _depth_cap)
-        # vs rows actually present — a truncated chip reports capped=True
-        ncand = int(r0["n_candidates"]) if "n_candidates" in pdf.columns else len(pdf)
-        capped = bool(ncand > len(pdf))
-        w, h = int(r0["chip_w"]), int(r0["chip_h"])
-        grid = (float(r0["chip_xmin"]), float(r0["chip_ymax"]),
-                float(r0["chip_xres"]), float(r0["chip_yres"]), w, h)
-        gepsg = _grid_epsg_of(pdf, r0)
-        gcols = _grid_cols(r0, gepsg)
+        pdf, capped, grid, gcols = _chip_header(pdf)
+        w, h = gcols["chip_w"], gcols["chip_h"]
         out = []
         for band in want_bands:
             canvas = np.full((h, w), np.nan)
             contributing, n_failed, first_err = 0, 0, None
-            for _, row in pdf.iterrows():
+            for blob in pdf[payload_col]:
                 if not np.isnan(canvas).any():
                     break  # chip fully composited — skip remaining decodes
                 try:
-                    reader = mr.CachedReader(bytes(row["bytes"]))
+                    reader = mr.CachedReader(open_blob(blob))
                     if band >= reader.meta.n_bands:
                         continue
                     rep = reproject_to_grid(
-                        reader, band, *grid, method=method, grid_epsg=gepsg
+                        reader, band, *grid, method=method, grid_epsg=gcols["grid_epsg"]
                     )
                 except Exception as e:  # quarantine the image, keep the chip
                     n_failed += 1
                     if first_err is None:
-                        first_err = f"{type(e).__name__}: {e}"[:200]
+                        first_err = _err_status(e)
                     continue
                 need = np.isnan(canvas) & ~np.isnan(rep)
                 if need.any():
@@ -488,7 +459,7 @@ def first_valid_mosaic_pixels(
             filled = int((~np.isnan(canvas)).sum())
             out.append(
                 {
-                    "chip_id": r0["chip_id"],
+                    "chip_id": pdf.at[0, "chip_id"],
                     "band": band,
                     "n_images": int(len(pdf)),
                     "n_contributing": contributing,
@@ -503,62 +474,50 @@ def first_valid_mosaic_pixels(
             )
         return pd.DataFrame(out)
 
-    return pairs_with_blobs.groupBy("chip_id").applyInPandas(
-        composite, schema=MOSAIC_SCHEMA
-    )
+    return pairs.groupBy("chip_id").applyInPandas(composite, schema=MOSAIC_SCHEMA)
 
 
 def chip_stack_pixels(
-    pairs_with_blobs: DataFrame,
+    pairs: DataFrame,
     bands: tuple[int, ...] | list[int] = (0,),
     method: str = "nearest",
-    max_images_per_chip: int | None = DEFAULT_MAX_IMAGES_PER_CHIP,
 ) -> DataFrame:
     """[T, C, H, W] chip tensor, exploded as one row per (t, band).
 
-    Time steps are ordered oldest-first with image_id tie-break (stable
-    t_index regardless of input row order); every step is the image
-    reprojected onto the chip grid — the distributed layout of the
-    reference's stacked chip tensors (`torchgeo.py:997-1236`).
+    ``pairs`` as for ``first_valid_mosaic_pixels`` (``chip_candidates`` or
+    ``chips.chip_serve`` keep each chip's newest N scenes).  Time steps are
+    ordered oldest-first with image_id tie-break (stable t_index regardless
+    of input row order); every step is the image reprojected onto the chip
+    grid — the distributed layout of the reference's stacked chip tensors
+    (`torchgeo.py:997-1236`).
 
-    ``max_images_per_chip`` bounds the T depth (the NEWEST N scenes are
-    kept, then ordered oldest-first — the most training-relevant window);
-    ``None`` disables.  A corrupt blob keeps its t slot (time axis stays
-    stable) but emits quarantine rows with filled=0, values=null and the
-    error in ``status``.  GRID_COLS_SCHEMA georeferencing rides along."""
+    A corrupt blob keeps its t slot (time axis stays stable) but emits
+    quarantine rows with filled=0, values=null and the error in
+    ``status``.  GRID_COLS_SCHEMA georeferencing rides along."""
     want_bands = tuple(bands)
-    if max_images_per_chip is not None:
-        pairs_with_blobs = _depth_cap(
-            pairs_with_blobs, max_images_per_chip, newest_first=True
-        )
+    payload_col, open_blob = blob_source(pairs)
 
     def stack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _sorted_group(pdf, newest_first=False)
-        r0 = pdf.iloc[0]
-        ncand = int(r0["n_candidates"]) if "n_candidates" in pdf.columns else len(pdf)
-        capped = bool(ncand > len(pdf))
-        w, h = int(r0["chip_w"]), int(r0["chip_h"])
-        grid = (float(r0["chip_xmin"]), float(r0["chip_ymax"]),
-                float(r0["chip_xres"]), float(r0["chip_yres"]), w, h)
-        gepsg = _grid_epsg_of(pdf, r0)
-        gcols = _grid_cols(r0, gepsg)
+        pdf, capped, grid, gcols = _chip_header(pdf, newest_first=False)
         out = []
-        for t, (_, row) in enumerate(pdf.iterrows()):
+        for t, (image_id, ts, blob) in enumerate(
+            zip(pdf["image_id"], pdf["datetime"], pdf[payload_col])
+        ):
             base = {
-                "chip_id": r0["chip_id"],
+                "chip_id": pdf.at[0, "chip_id"],
                 "t_index": t,
-                "image_id": row["image_id"],
-                "datetime": row["datetime"],
+                "image_id": image_id,
+                "datetime": ts,
                 **gcols,
                 "capped": capped,
             }
             try:
-                reader = mr.CachedReader(bytes(row["bytes"]))
+                reader = mr.CachedReader(open_blob(blob))
                 for band in want_bands:
                     if band >= reader.meta.n_bands:
                         continue
                     rep = reproject_to_grid(
-                        reader, band, *grid, method=method, grid_epsg=gepsg
+                        reader, band, *grid, method=method, grid_epsg=gcols["grid_epsg"]
                     )
                     out.append(
                         {
@@ -571,19 +530,11 @@ def chip_stack_pixels(
                     )
             except Exception as e:  # quarantine the time step, keep the chip
                 out.append(
-                    {
-                        **base,
-                        "band": -1,
-                        "filled": 0,
-                        "values": None,
-                        "status": f"{type(e).__name__}: {e}"[:200],
-                    }
+                    {**base, "band": -1, "filled": 0, "values": None, "status": _err_status(e)}
                 )
         return pd.DataFrame(out)
 
-    return pairs_with_blobs.groupBy("chip_id").applyInPandas(
-        stack, schema=CHIP_STACK_SCHEMA
-    )
+    return pairs.groupBy("chip_id").applyInPandas(stack, schema=CHIP_STACK_SCHEMA)
 
 
 def most_common_epsg(images: DataFrame, epsg_col: str = "epsg") -> int:
@@ -659,6 +610,43 @@ def chips_as_aois(chips: DataFrame) -> DataFrame:
     return chips.mapInPandas(to_lonlat_bounds, schema=schema)
 
 
+def _light_candidates(
+    chips: DataFrame, images_light: DataFrame, images: DataFrame, res: int
+) -> DataFrame:
+    """The chip paths' one light-candidate step: (chip x image) pairs from
+    the cell-cover ``bbox_join`` over ``chips_as_aois``, as CHIP_COLS (+
+    ``grid_epsg``) + image_id + datetime — no payload.  ``datetime`` comes
+    from ``images_light`` when it carries it (``spatial_join.image_light``
+    of a stored table does), else from ``images`` by image_id."""
+    from rasteret_spark.operators.spatial_join import bbox_join
+
+    extra = ["grid_epsg"] if "grid_epsg" in chips.columns else []
+    cands = bbox_join(images_light, chips_as_aois(chips), res=res)
+    if "datetime" not in images_light.columns:
+        cands = cands.join(images.select("image_id", "datetime"), "image_id")
+    return cands.select(*CHIP_COLS, *extra, "image_id", "datetime")
+
+
+def _depth_cap(cands: DataFrame, max_images_per_chip: int) -> DataFrame:
+    """Cap the temporal depth BEFORE blobs join: one window over (chip_id)
+    in newest-first order (datetime desc, image_id asc) keeps each chip's
+    first N light candidates, so a chip sitting under a 10,000-scene
+    archive does not drag 10,000 blobs into one group when the newest
+    handful fill it (the knob the reference's query-limited chip reads
+    expose).
+
+    Adds ``n_candidates`` (the PRE-cap per-chip candidate count, whole-
+    partition frame of the same window — no second window, no extra
+    shuffle) so the kernels can surface a ``capped`` flag."""
+    over = "OVER (PARTITION BY chip_id ORDER BY `datetime` DESC, image_id ASC"
+    return cands.selectExpr(
+        "*",
+        f"row_number() {over}) AS _rn",
+        f"count(1) {over} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+        " AS n_candidates",
+    ).filter(f"_rn <= {int(max_images_per_chip)}").drop("_rn")
+
+
 def join_payload_grouped(cands: DataFrame, images_payload: DataFrame) -> DataFrame:
     """Join light (chip x image) candidates to blob payloads with the
     one-blob-shuffle guarantee: candidates group into one per-image chip
@@ -669,8 +657,6 @@ def join_payload_grouped(cands: DataFrame, images_payload: DataFrame) -> DataFra
     Above ``decode.BROADCAST_PAIRS_LIMIT`` pairs the plan falls back to a
     hash join on image_id (the 10^9-pair regime where broadcasting would
     blow the driver)."""
-    from rasteret_spark.operators.decode import grouped_side_choice
-
     chip_cols = [c for c in cands.columns if c != "image_id"]
     agg = cands.groupBy("image_id").agg(
         F.collect_list(F.struct(*chip_cols)).alias("_chips")
@@ -685,42 +671,49 @@ def join_payload_grouped(cands: DataFrame, images_payload: DataFrame) -> DataFra
     )
 
 
+def _capped_payload(
+    cands: DataFrame, images: DataFrame, max_images_per_chip: int | None
+) -> DataFrame:
+    """The chip paths' one cap + payload step: ``_depth_cap`` on the light
+    candidates (``None`` keeps every candidate), then the grouped payload
+    join against ``images`` projected to image_id, datetime and the column
+    ``decode.blob_source`` picks — so callers pass the stored table, blob
+    or remote."""
+    if max_images_per_chip is not None:
+        cands = _depth_cap(cands, max_images_per_chip)
+    payload_col, _ = blob_source(images)
+    return join_payload_grouped(
+        cands.drop("datetime"), images.select("image_id", "datetime", payload_col)
+    )
+
+
 def chip_candidates(
     chips: DataFrame,
     images_light: DataFrame,
-    images_payload: DataFrame,
+    images: DataFrame,
     res: int = 7,
-    max_images_per_chip: int | None = None,
-    newest_first: bool = True,
+    max_images_per_chip: int | None = DEFAULT_MAX_IMAGES_PER_CHIP,
 ) -> DataFrame:
-    """chips x images candidate pairs via the native cell-cover join, then
-    payload join — CHIP_COLS + image_id + datetime + bytes, blobs through
-    exactly one shuffle (the per-chip group; the payload join broadcasts
-    the grouped candidate list under the size guard, see
+    """chips x images pairs for the pixel kernels: the light-candidate step,
+    then the cap + payload step — CHIP_COLS + image_id + datetime + payload
+    (``bytes`` or ``href``) + ``n_candidates``, each kept blob through
+    exactly one shuffle (the per-chip group; the payload join broadcasts the
+    grouped candidate list under the size guard, see
     ``join_payload_grouped``).  ``chips`` needs CHIP_COLS; ``images_light``
-    needs image_id + img_xmin/_ymin/_xmax/_ymax; ``images_payload`` needs
-    image_id, datetime, bytes.
+    needs image_id + img_xmin/_ymin/_xmax/_ymax (``spatial_join.
+    image_light``); ``images`` is the stored table (image_id, datetime,
+    ``bytes`` or ``href``).
 
-    ``max_images_per_chip`` caps the temporal depth HERE, on light columns
-    (datetime joined without bytes), BEFORE any blob moves — under a
-    10,000-scene archive the dropped candidates never shuffle their
-    payloads.  Callers that cap here should pass ``max_images_per_chip=
-    None`` to the downstream pixel kernel (capping twice is correct but
-    windows the rows once more for nothing).
+    ``max_images_per_chip`` (default ``DEFAULT_MAX_IMAGES_PER_CHIP``) keeps
+    each chip's newest N candidates HERE, on light columns, BEFORE any blob
+    moves — under a 10,000-scene archive the dropped candidates never
+    shuffle their payloads; ``None`` keeps them all.  The cap trades
+    completeness for boundedness — pick N >= the worst-case cloud/nodata
+    depth.
 
     NOTE: the size guard runs the candidate join once at PLAN-BUILD time and
     local-checkpoints the grouped side (same contract as the zonal path's
     ``grouped_side_choice``); the checkpoint lives as long as the returned
     plan."""
-    from rasteret_spark.operators.spatial_join import bbox_join
-
-    extra = ["grid_epsg"] if "grid_epsg" in chips.columns else []
-    cands = bbox_join(images_light, chips_as_aois(chips), res=res).select(
-        *CHIP_COLS, *extra, "image_id"
-    )
-    if max_images_per_chip is not None:
-        light_dt = images_payload.select("image_id", "datetime")
-        cands = _depth_cap(
-            cands.join(light_dt, "image_id"), max_images_per_chip, newest_first
-        ).drop("datetime")
-    return join_payload_grouped(cands, images_payload)
+    cands = _light_candidates(chips, images_light, images, res)
+    return _capped_payload(cands, images, max_images_per_chip)

@@ -135,7 +135,7 @@ def test_augment_composes_with_chip_stack_rows(spark, images_pdf):
     payload = spark.createDataFrame(images_pdf[["image_id", "datetime", "bytes"]])
     pairs = rmo.chip_candidates(chips, img_light, payload, res=7,
                                 max_images_per_chip=3)
-    stack = rmo.chip_stack_pixels(pairs, bands=(0,), max_images_per_chip=None)
+    stack = rmo.chip_stack_pixels(pairs, bands=(0,))
     aug = ag.augment_chips(
         stack.filter(F.col("status") == "ok"), ops=("identity", "hflip")
     ).toPandas()

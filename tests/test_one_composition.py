@@ -1,10 +1,14 @@
 """One composition per pipeline: only ``decode.zonal_join`` and
-``sampling.sample_join`` chain candidate generation into the decode.
+``sampling.sample_join`` chain candidate generation into the decode, and
+only ``raster_mosaic``'s shared chip steps cap chip candidates and join
+their payloads.
 
 Every other caller goes through the entries, so changing how candidates
-are generated is a change to those two functions, not to every pipeline.
+are generated is a change to those functions, not to every pipeline.
 An AST scan of the library and its runnable surfaces finds each call of the
-chain's primitives, resolving import aliases.  The same scan checks that no
+chain's primitives, resolving import aliases, and each hand-written
+``F.col("xmin").alias("img_xmin")`` rename of the image footprint (the one
+copy is ``spatial_join.image_light``).  The same scan checks that no
 operator module is kept alive by its tests alone."""
 
 import ast
@@ -15,6 +19,7 @@ SCANNED = [
     *sorted((REPO / "rasteret_spark").rglob("*.py")),
     REPO / "__spark_entry__.py",
     REPO / "bench.py",
+    REPO / "bench_extra.py",
     *sorted((REPO / "scripts").rglob("*.py")),
 ]
 # every non-test importer: the library and each runnable surface
@@ -31,6 +36,8 @@ ALLOWED = {
     f"{OPS}.spatial_join.refine_rect_polygon": {"rasteret_spark/operators/decode.py"},
     f"{OPS}.decode.zonal_stats": {"rasteret_spark/operators/decode.py"},
     f"{OPS}.sampling.sample_points": {"rasteret_spark/operators/sampling.py"},
+    f"{OPS}.raster_mosaic._depth_cap": {"rasteret_spark/operators/raster_mosaic.py"},
+    f"{OPS}.raster_mosaic.join_payload_grouped": {"rasteret_spark/operators/raster_mosaic.py"},
 }
 # (file, enclosing function) call sites kept on purpose
 ALLOWLIST = {
@@ -38,7 +45,11 @@ ALLOWLIST = {
     # (asof.latest_per_key) between the join and the decode — a step the
     # sample entry does not own
     ("__spark_entry__.py", "q49_image_latest_sample", f"{OPS}.sampling.sample_points"),
+    # the zonal_cands_only stage times candidate generation without the decode
+    ("bench_extra.py", "main", f"{OPS}.spatial_join.refine_rect_polygon"),
 }
+# the one (file, function) that renames the footprint columns to img_*
+IMAGE_LIGHT = ("rasteret_spark/operators/spatial_join.py", "image_light")
 
 
 def _module_name(rel: str) -> str:
@@ -124,7 +135,48 @@ def test_scan_sees_the_entries_and_the_allowlisted_site():
             f"{OPS}.spatial_join.refine_rect_polygon") in seen
     assert ("rasteret_spark/operators/sampling.py", "sample_join",
             f"{OPS}.sampling.sample_points") in seen
+    for step in ("_depth_cap", "join_payload_grouped"):
+        assert ("rasteret_spark/operators/raster_mosaic.py", "_capped_payload",
+                f"{OPS}.raster_mosaic.{step}") in seen
     assert ALLOWLIST <= seen
+
+
+def _img_renames(path: Path):
+    """(rel path, enclosing top-level function, line) of every
+    ``F.col(...).alias("img_...")`` — an ``img_`` alias, plain or f-string,
+    on a bare column reference (computed bboxes are not renames)."""
+    rel = path.relative_to(REPO).as_posix()
+    tree = ast.parse(path.read_text(), filename=str(path))
+    aliases = _aliases(tree, _module_name(rel))
+    for top in tree.body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "alias"
+                and isinstance(node.func.value, ast.Call)
+                and _dotted(node.func.value.func, aliases) == "pyspark.sql.functions.col"
+                and node.args
+            ):
+                continue
+            name = node.args[0]
+            if isinstance(name, ast.JoinedStr) and name.values:
+                name = name.values[0]
+            if isinstance(name, ast.Constant) and str(name.value).startswith("img_"):
+                yield rel, owner, node.lineno
+
+
+def test_image_footprint_renamed_only_in_image_light():
+    sites = [site for path in SCANNED for site in _img_renames(path)]
+    assert IMAGE_LIGHT in {(rel, owner) for rel, owner, _ in sites}, (
+        "the scan no longer sees spatial_join.image_light's rename"
+    )
+    offenders = sorted({f"{rel}:{line}" for rel, owner, line in sites if (rel, owner) != IMAGE_LIGHT})
+    assert not offenders, (
+        "hand-written img_ rename instead of spatial_join.image_light: "
+        + ", ".join(offenders)
+    )
 
 
 def _imported(path: Path) -> set[str]:

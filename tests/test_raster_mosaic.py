@@ -7,13 +7,16 @@ windowed kernel, the same differential strategy the reference uses against
 rasterio.merge (`/root/reference/src/rasteret/core/rio_semantics.py:51-313`).
 """
 
+import re
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from rasteret_spark import crs
 from rasteret_spark.format import miniraster as mr
-from rasteret_spark.operators import raster_mosaic as rmo
+from rasteret_spark.operators import raster_mosaic as rmo, spatial_join as sj
 
 
 def _chips_pdf():
@@ -78,8 +81,54 @@ def _oracle_mosaic(images_pdf, chip: dict, band: int) -> np.ndarray:
     return canvas
 
 
+def _subtrees(plan: str, op: str) -> list[str]:
+    """Text of each ``op`` node's OWN subtree in a physical plan string
+    (indent-based walk — a flat [:N]-char window would bleed into sibling
+    nodes)."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if not ln.lstrip(" :+-").startswith(op):
+            continue
+        sub = [ln]
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            sub.append(lines[j])
+        out.append("\n".join(sub))
+    return out
+
+
+def _executed_plans(spark, fn) -> list[str]:
+    """Final physical plan of every SQL query ``fn`` executes — the plan
+    build's checkpoint and the action alike — read back from Spark's SQL
+    status store under a job description unique to this call."""
+    sc = spark.sparkContext
+    mark = f"executed-plans-{uuid.uuid4().hex}"
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    sc.setJobDescription(mark)
+    try:
+        fn()
+    finally:
+        sc.setJobDescription(None)
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    tail = store.executionsList(max(n - 50, 0), 50)
+    execs = [tail.apply(i) for i in range(tail.size())]
+    return [
+        e.physicalPlanDescription().split("== Initial Plan ==")[0]
+        for e in execs
+        if e.description() == mark
+    ]
+
+
 @pytest.fixture(scope="module")
-def mosaic_inputs(spark, images_pdf):
+def chip_tables(spark, images_pdf):
+    """(chips, light image side, payload) for ``chip_candidates``."""
     chips = spark.createDataFrame(_chips_pdf())
     img_light = spark.createDataFrame(
         images_pdf[["image_id", "xmin", "ymin", "xmax", "ymax"]].rename(
@@ -87,7 +136,12 @@ def mosaic_inputs(spark, images_pdf):
         )
     )
     payload = spark.createDataFrame(images_pdf[["image_id", "datetime", "bytes"]])
-    pairs = rmo.chip_candidates(chips, img_light, payload, res=7)
+    return chips, img_light, payload
+
+
+@pytest.fixture(scope="module")
+def mosaic_inputs(chip_tables):
+    pairs = rmo.chip_candidates(*chip_tables, res=7)
     pairs.persist().count()
     return pairs
 
@@ -195,14 +249,14 @@ def test_mosaic_fixture_exercises_south_up_and_cross_crs(images_pdf):
     assert hot["epsg"].nunique() > 1, "need mixed CRSes in range"
 
 
-def test_chip_stack_cap_keeps_newest_in_time_order(mosaic_inputs, images_pdf):
+def test_chip_stack_cap_keeps_newest_in_time_order(chip_tables, images_pdf):
     """T-depth bound on the stack: the NEWEST N scenes are kept, t_index
     still runs oldest-first over the kept set."""
     full = rmo.chip_stack_pixels(
-        mosaic_inputs, bands=(0,), max_images_per_chip=None
+        rmo.chip_candidates(*chip_tables, max_images_per_chip=None), bands=(0,)
     ).toPandas()
     capped = rmo.chip_stack_pixels(
-        mosaic_inputs, bands=(0,), max_images_per_chip=2
+        rmo.chip_candidates(*chip_tables, max_images_per_chip=2), bands=(0,)
     ).toPandas()
     assert not full["capped"].any(), "uncapped run must not flag truncation"
     dt_of = dict(zip(images_pdf["image_id"], images_pdf["datetime"]))
@@ -220,16 +274,16 @@ def test_chip_stack_cap_keeps_newest_in_time_order(mosaic_inputs, images_pdf):
         assert list(g["t_index"]) == list(range(len(g)))
 
 
-def test_mosaic_max_images_cap_bounds_group_depth(mosaic_inputs, images_pdf):
+def test_mosaic_max_images_cap_bounds_group_depth(chip_tables, images_pdf):
     """cap=1: only the newest candidate contributes per chip — equals the
     oracle run over just that image; n_images reflects the cap."""
     capped = rmo.first_valid_mosaic_pixels(
-        mosaic_inputs, bands=(0,), max_images_per_chip=1
+        rmo.chip_candidates(*chip_tables, max_images_per_chip=1), bands=(0,)
     ).toPandas()
     assert (capped["n_images"] == 1).all()
     # chips with >1 candidate must SAY they were truncated (no silent drop)
     full_counts = rmo.first_valid_mosaic_pixels(
-        mosaic_inputs, bands=(0,), max_images_per_chip=None
+        rmo.chip_candidates(*chip_tables, max_images_per_chip=None), bands=(0,)
     ).toPandas().set_index("chip_id")["n_images"]
     for _, row in capped.iterrows():
         assert bool(row["capped"]) == (int(full_counts[row["chip_id"]]) > 1)
@@ -259,44 +313,21 @@ def test_mosaic_max_images_cap_bounds_group_depth(mosaic_inputs, images_pdf):
         np.testing.assert_array_equal(vals[~np.isnan(want)], want[~np.isnan(want)])
 
 
-def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf, monkeypatch):
+def test_payload_join_grouped_broadcast_vs_shuffle_parity(chip_tables, monkeypatch):
     """The size-guarded grouped payload join: broadcast mode keeps blobs out
     of the join shuffle entirely (no sort-merge join; the broadcast side is
     the per-image chip LIST), the above-bound shuffle mode produces
     identical rows — same guarantee the zonal path has."""
     from rasteret_spark.operators import decode
 
-    chips = spark.createDataFrame(_chips_pdf())
-    img_light = spark.createDataFrame(
-        images_pdf[["image_id", "xmin", "ymin", "xmax", "ymax"]].rename(
-            columns={c: f"img_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]}
-        )
-    )
-    payload = spark.createDataFrame(images_pdf[["image_id", "datetime", "bytes"]])
+    chips, img_light, payload = chip_tables
 
     bc = rmo.chip_candidates(chips, img_light, payload, res=7)
     plan = bc._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, "broadcast path must not shuffle blobs"
     assert "BroadcastExchange" in plan
 
-    def broadcast_subtrees(p: str) -> list[str]:
-        """Text of each BroadcastExchange node's OWN subtree (indent-based
-        walk — a flat [:N]-char window would bleed into sibling nodes)."""
-        lines = p.splitlines()
-        depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
-        out = []
-        for i, ln in enumerate(lines):
-            if "BroadcastExchange" not in ln:
-                continue
-            sub = [ln]
-            for j in range(i + 1, len(lines)):
-                if depth[j] <= depth[i]:
-                    break
-                sub.append(lines[j])
-            out.append("\n".join(sub))
-        return out
-
-    subs = broadcast_subtrees(plan)
+    subs = _subtrees(plan, "BroadcastExchange")
     # SOME broadcast side must be the grouped chip list (other broadcasts —
     # e.g. an auto-broadcast cell-cover side — may legitimately exist)...
     assert any("_chips" in s for s in subs), (
@@ -322,4 +353,33 @@ def test_payload_join_grouped_broadcast_vs_shuffle_parity(spark, images_pdf, mon
     pd.testing.assert_frame_equal(
         ma.sort_values(key).reset_index(drop=True),
         mb.sort_values(key).reset_index(drop=True),
+    )
+
+
+def test_default_chip_plan_caps_light_candidates_once(spark, images_pdf, tmp_path):
+    """Default call shape on a stored table: across everything the build
+    and the action execute there is exactly one Window over ``chip_id`` —
+    the depth cap, row number and pre-cap count in one node — and no
+    payload column reaches it: the cap sorts light candidates, never blob
+    rows."""
+    path = str(tmp_path / "images")
+    spark.createDataFrame(images_pdf).write.parquet(path)
+    images = spark.read.parquet(path)
+    chips = spark.createDataFrame(_chips_pdf())
+    plans = _executed_plans(
+        spark,
+        lambda: rmo.first_valid_mosaic_pixels(
+            rmo.chip_candidates(chips, sj.image_light(images), images)
+        ).collect(),
+    )
+    assert len(plans) >= 2, "expected the build's checkpoint and the action"
+    windows = [
+        sub
+        for plan in plans
+        for sub in _subtrees(plan, "Window [")
+        if re.search(r"\], \[chip_id#\d+\], \[", sub.splitlines()[0])
+    ]
+    assert len(windows) == 1, windows
+    assert not re.search(r"\b(bytes|href)#", windows[0]), (
+        "the depth-cap window must not carry the payload"
     )

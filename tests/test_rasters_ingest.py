@@ -147,6 +147,35 @@ def test_remote_collection_zonal_matches_materialized(spark, scene_dir, tmp_path
     assert len(c) == len(a)
 
 
+def test_remote_collection_chips_match_materialized(spark, scene_dir):
+    """Mosaic and chip stacks over an href-only collection
+    (``from_hrefs(materialize=False)``) read through ranged fetches and
+    equal the materialized collection's rows."""
+    d, _ = scene_dir
+    ingested = rasters.ingest_rasters(spark, f"{d}/scene_*.tif").filter(
+        F.col("ingest_status") == "ok"
+    )
+    meta_cols = [c for c in ingested.columns if c not in ("bytes", "path",
+                                                          "ingest_status")]
+    refs_pdf = ingested.select(*meta_cols, "path").toPandas()
+    refs_pdf["href"] = "file://" + refs_pdf["path"].str.replace("file:", "", regex=False)
+    refs = spark.createDataFrame(refs_pdf.drop(columns=["path"]))
+    local = Collection(spark, ingested.drop("path", "ingest_status"))
+    remote = Collection.from_hrefs(spark, refs, materialize=False)
+    assert "bytes" not in remote.records.columns
+
+    bbox = (13.3, 52.54, 13.38, 52.6)
+    for call, key in (
+        (lambda c: c.mosaic(bbox, 16, 0.002), ["chip_id", "band"]),
+        (lambda c: c.chips(bbox, 16, 0.002), ["chip_id", "t_index", "band"]),
+    ):
+        a = call(local).toPandas().sort_values(key).reset_index(drop=True)
+        b = call(remote).toPandas().sort_values(key).reset_index(drop=True)
+        assert len(a) > 0 and (a["filled"] > 0).any(), "no pixels — fixture drift"
+        assert (a["status"] == "ok").all()
+        pd.testing.assert_frame_equal(a, b)
+
+
 def test_chunky_rgb_tiff_ingests(spark, tmp_path):
     """Interleaved RGB (PlanarConfiguration=1) — the most common real-world
     TIFF layout — must ingest, not quarantine (metadata at TIFF fidelity,

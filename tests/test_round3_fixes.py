@@ -264,39 +264,3 @@ def test_feature_extract_tiny_image_no_nan(spark):
     feats = np.asarray(got["features"], dtype=float)
     assert len(feats) == multimodal.FEATURE_DIM
     assert np.isfinite(feats).all(), "degenerate grid cells must not be NaN"
-
-
-def test_depth_cap_prejoin_equivalent_to_kernel_cap(spark, images_pdf):
-    """chip_candidates(max_images_per_chip=N) + kernel cap None must equal
-    kernel cap N on uncapped candidates — same rows, blobs just don't ride
-    the capping window in the new plan."""
-    import pandas as pd
-
-    from rasteret_spark.operators import raster_mosaic as rmo
-
-    images = spark.createDataFrame(images_pdf)
-    img_light = images.selectExpr(
-        "image_id", "xmin as img_xmin", "ymin as img_ymin",
-        "xmax as img_xmax", "ymax as img_ymax",
-    )
-    payload = images.select("image_id", "datetime", "bytes")
-    im = images_pdf.iloc[0]
-    chip = pd.DataFrame([{
-        "chip_id": "c0", "chip_xmin": float(im["xmin"]),
-        "chip_ymax": float(im["ymax"]), "chip_xres": 0.001, "chip_yres": 0.001,
-        "chip_w": 8, "chip_h": 8,
-    }])
-    chips_df = spark.createDataFrame(chip)
-    new = rmo.first_valid_mosaic_pixels(
-        rmo.chip_candidates(chips_df, img_light, payload, max_images_per_chip=2),
-        bands=(0,), max_images_per_chip=None,
-    ).toPandas()
-    old = rmo.first_valid_mosaic_pixels(
-        rmo.chip_candidates(chips_df, img_light, payload),
-        bands=(0,), max_images_per_chip=2,
-    ).toPandas()
-    key = ["chip_id", "band"]
-    pd.testing.assert_frame_equal(
-        new.sort_values(key).reset_index(drop=True),
-        old.sort_values(key).reset_index(drop=True),
-    )

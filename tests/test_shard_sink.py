@@ -67,7 +67,7 @@ def shard_pixels(spark, images_pdf):
     )
     payload = spark.createDataFrame(images_pdf[["image_id", "datetime", "bytes"]])
     pairs = rmo.chip_candidates(chips, img_light, payload, res=7)
-    px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1), max_images_per_chip=None)
+    px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1))
     px.persist().count()
     return px
 
