@@ -6,7 +6,10 @@
                   takes (spark, sf_dir) and returns a DataFrame.
 ``oracle_sql()``— DuckDB-runnable ANSI SQL equivalents over the same tables.
                   Image-engine queries over synthetic binary blobs and the
-                  approximate (LSH) operators are rows-only (no oracle entry).
+                  approximate (LSH/ANN) operators read truth parquets from
+                  the top-level ``oracles`` package (imported only inside
+                  ``oracle_sql()``, never shipped with the library); q63 is
+                  rows-only (no oracle entry).
 
 Design notes for oracle exactness:
   * money sums are computed in integer cents (ROUND(x*100) -> BIGINT) so
@@ -527,12 +530,35 @@ def q26_chip_stack(spark, sf_dir):
 
 
 # ==============================================================================
-# rows-only queries (no SQL oracle): image engine over synthetic blobs + LSH ops
+# image engine over synthetic blobs + LSH/ANN ops (oracles: oracles/truth.py)
 # ==============================================================================
+def _cached_images(spark, make_df, name: str, n: int, seed: int = 42):
+    """A synthetic images table (``make_df(spark, n, seed)``), generated and
+    encoded once per machine and read back as parquet: input prep kept out
+    of every query wall, and no driver-side rows shipped inside tasks.
+    Keyed on the encode-path fingerprint, so a codec or writer edit
+    regenerates; written to a temp directory and renamed, so a reader never
+    sees a partial table."""
+    import os
+    import shutil
+
+    from rasteret_spark.sources.synthetic import generator_fingerprint
+
+    path = f"/tmp/rasteret_spark_oracle/{name}_{n}_{seed}_{generator_fingerprint()}.parquet"
+    if not os.path.exists(path):
+        tmp = f"{path}.tmp.{os.getpid()}"
+        make_df(spark, n, seed).write.mode("overwrite").parquet(tmp)
+        try:
+            os.replace(tmp, path)
+        except OSError:  # a concurrent writer renamed its copy first
+            shutil.rmtree(tmp, ignore_errors=True)
+    return spark.read.parquet(path)
+
+
 def _images_df(spark, n=120):
     from rasteret_spark.sources import synthetic as syn
 
-    return syn.spark_images_df(spark, n)
+    return _cached_images(spark, syn.spark_images_df, "images", n)
 
 
 def _aois_df(spark, n=40):
@@ -547,536 +573,12 @@ def _aois_df(spark, n=40):
     )
 
 
-def _gen_fingerprint() -> str:
-    """Cache key for /tmp blob/oracle artifacts — hashes the WHOLE encode
-    path (generator + TIFF writer + mini-raster writer + codecs) via the
-    shared helper, so an edit anywhere the bytes come from regenerates."""
-    from rasteret_spark.sources.synthetic import generator_fingerprint
-
-    return generator_fingerprint()
-
-
-def _ensure_images_meta_parquet(n: int = 120, seed: int = 42) -> str:
-    """Materialize the generator-truth image metadata (no blobs, no header
-    parsing — see synthetic.images_meta_pdf) as a deterministic parquet so
-    DuckDB can oracle the SQL-expressible image queries (q40/q43).  Written
-    idempotently from BOTH the query side and oracle_sql(), so whichever
-    the driver calls first creates it."""
-    import os
-
-    path = (
-        f"/tmp/rasteret_spark_oracle/images_meta_{n}_{seed}_{_gen_fingerprint()}"
-        ".parquet"
-    )
-    if not os.path.exists(path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from rasteret_spark.sources import synthetic as syn
-
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pq.write_table(
-            pa.Table.from_pandas(syn.images_meta_pdf(n, seed),
-                                 preserve_index=False),
-            tmp,
-        )
-        os.replace(tmp, path)
-    return path
-
-
-def _ensure_truth_parquet(name: str, builder) -> str:
-    """Materialize a generator-truth result frame (see sources/truth.py) as
-    a deterministic parquet for the DuckDB side of a pixel-valued oracle.
-    Written idempotently from BOTH the query side and oracle_sql().  The
-    cache key hashes the truth module on top of the encode-path fingerprint,
-    so an edit to either regenerates.  Float columns write NaN as NULL to
-    match Spark's nullable doubles."""
-    import hashlib
-    import inspect
-    import os
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from rasteret_spark.sources import truth as truth_mod
-
-    tkey = hashlib.md5(inspect.getsource(truth_mod).encode()).hexdigest()[:8]
-    # the builder's own source + the shared grid constants pin the PARAMETERS
-    # into the cache key (the closure source contains every literal; the
-    # constants cover names referenced from module scope) — editing either
-    # regenerates instead of silently reusing a stale frame
-    pkey = hashlib.md5(
-        (
-            inspect.getsource(builder)
-            + repr((HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, CHIP_STRIDE))
-        ).encode()
-    ).hexdigest()[:8]
-    path = (
-        f"/tmp/rasteret_spark_oracle/{name}_{_gen_fingerprint()}_{tkey}_{pkey}.parquet"
-    )
-    if not os.path.exists(path):
-        pdf = builder()
-        cols = []
-        fields = []
-        for c in pdf.columns:
-            s = pdf[c]
-            if s.dtype.kind == "f":
-                arr = pa.array(
-                    [None if pd.isna(x) else float(x) for x in s],
-                    type=pa.float64(),
-                )
-            else:
-                arr = pa.Array.from_pandas(s)
-            cols.append(arr)
-            fields.append(pa.field(c, arr.type))
-        tbl = pa.Table.from_arrays(cols, schema=pa.schema(fields))
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _ensure_zonal_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import zonal_truth_pdf
-
-        return zonal_truth_pdf(120, 40)
-
-    return _ensure_truth_parquet("zonal_truth_120_40", build)
-
-
-def _ensure_psnr_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import psnr_truth_pdf
-
-        return psnr_truth_pdf(120)
-
-    return _ensure_truth_parquet("psnr_truth_120", build)
-
-
-def _ensure_sample_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import sample_truth_pdf
-
-        return sample_truth_pdf(120, 200, max_ring=4)
-
-    return _ensure_truth_parquet("sample_truth_120_200", build)
-
-
-def _ensure_latest_sample_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import sample_truth_pdf
-
-        return sample_truth_pdf(120, 200, max_ring=4, latest_only=True)
-
-    return _ensure_truth_parquet("latest_sample_truth_120_200", build)
-
-
-def _ensure_mosaic_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import mosaic_truth_pdf
-
-        return mosaic_truth_pdf(HOTSPOT_BBOX, 32, 0.001, stride=35, bands=(0, 1))
-
-    return _ensure_truth_parquet("mosaic_truth", build)
-
-
-def _ensure_mosaic_avg_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import mosaic_truth_pdf
-
-        return mosaic_truth_pdf(
-            HOTSPOT_BBOX, 16, 0.004, stride=16, bands=(0,), method="average"
-        )
-
-    return _ensure_truth_parquet("mosaic_avg_truth", build)
-
-
-def _ensure_mosaic_native_truth() -> str:
-    def build():
-        from rasteret_spark import crs
-        from rasteret_spark.sources.truth import mosaic_truth_pdf
-
-        gbox = crs.bbox_from_lonlat(32633, *HOTSPOT_BBOX)
-        return mosaic_truth_pdf(gbox, 32, 100.0, stride=32, grid_epsg=32633)
-
-    return _ensure_truth_parquet("mosaic_native_truth", build)
-
-
-def _ensure_cog_export_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import cog_export_truth_pdf
-
-        return cog_export_truth_pdf(
-            HOTSPOT_BBOX, 96, 0.001, stride=96, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("cog_export_truth", build)
-
-
-def _ensure_shard_export_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import shard_export_truth_pdf
-
-        return shard_export_truth_pdf(
-            HOTSPOT_BBOX, 32, 0.001, stride=35, n_shards=4, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("shard_export_truth", build)
-
-
-def _ensure_image_shard_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import image_shard_truth_pdf
-
-        return image_shard_truth_pdf(n_shards=4, n_images=120)
-
-    return _ensure_truth_parquet("image_shard_truth", build)
-
-
-def _ensure_global_band_stats_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import global_band_stats_truth_pdf
-
-        return global_band_stats_truth_pdf(
-            HOTSPOT_BBOX, 32, 0.001, stride=35, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("global_band_stats_truth", build)
-
-
-def _ensure_chip_stack_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import chip_stack_truth_pdf
-
-        return chip_stack_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("chip_stack_truth", build)
-
-
-def _ensure_chip_serve_truth() -> str:
-    def build():
-        import datetime as dt
-
-        from rasteret_spark.sources.truth import chip_stack_truth_pdf
-
-        return chip_stack_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, random_n=8, chip_seed=42,
-            t_start=dt.datetime(2023, 2, 1), t_end=dt.datetime(2023, 6, 1),
-            t_step=2, bands=(0,), with_status=True,
-        )
-
-    return _ensure_truth_parquet("chip_serve_truth", build)
-
-
-def _ensure_augment_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import augment_truth_pdf
-
-        return augment_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            max_images_per_chip=4,
-        )
-
-    return _ensure_truth_parquet("augment_truth", build)
-
-
-def _ensure_band_index_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import band_index_truth_pdf
-
-        return band_index_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            band_a=1, band_b=0, lo=0.0,
-        )
-
-    return _ensure_truth_parquet("band_index_truth", build)
-
-
-def _ensure_change_detect_truth() -> str:
-    def build():
-        import datetime as dt
-
-        from rasteret_spark.sources.truth import change_detect_truth_pdf
-
-        return change_detect_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            split=dt.datetime(2023, 3, 20),
-            threshold=CHANGE_THRESHOLD, bands=(0, 1),
-        )
-
-    # split/threshold live in THIS module, outside the truth-module hash —
-    # bake them into the cache key so edits regenerate
-    return _ensure_truth_parquet(
-        f"change_detect_truth_{CHANGE_SPLIT_TS[:10]}_{CHANGE_THRESHOLD:g}",
-        build,
-    )
-
-
-def _ensure_spatial_stats_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import spatial_stats_truth_pdf
-
-        return spatial_stats_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            bands=(0, 1),
-        )
-
-    return _ensure_truth_parquet("spatial_stats_truth", build)
-
-
-def _ensure_build_overviews_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import build_overviews_truth_pdf
-
-        return build_overviews_truth_pdf(96, factors=(2, 4))
-
-    return _ensure_truth_parquet("build_overviews_truth_96", build)
-
-
-def _ensure_chip_stats_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import chip_stats_truth_pdf
-
-        return chip_stats_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            probs=(0.25, 0.5, 0.75), bands=(0, 1),
-        )
-
-    return _ensure_truth_parquet("chip_stats_truth", build)
-
-
-def _ensure_qa_mask_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import qa_mask_truth_pdf
-
-        return qa_mask_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            data_band=0, qa_band=1, bit=QA_BIT,
-        )
-
-    # the bit constant lives in THIS module, outside the truth-module hash
-    return _ensure_truth_parquet(f"qa_mask_truth_b{QA_BIT}", build)
-
-
-def _ensure_stretch_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import stretch_truth_pdf
-
-        return stretch_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            p_lo=0.02, p_hi=0.98, bands=(0, 1),
-        )
-
-    return _ensure_truth_parquet("stretch_truth", build)
-
-
-def _ensure_chip_histogram_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import chip_histogram_truth_pdf
-
-        return chip_histogram_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            lo=HIST_LO, hi=HIST_HI, n_bins=HIST_BINS, bands=(0, 1),
-        )
-
-    # bin params live in THIS module — bake them into the cache key
-    return _ensure_truth_parquet(
-        f"chip_histogram_truth_{HIST_LO:g}_{HIST_HI:g}_{HIST_BINS}", build
-    )
-
-
-def _ensure_train_split_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import train_split_truth_pdf
-
-        return train_split_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            bands=(0, 1),
-        )
-
-    return _ensure_truth_parquet("train_split_truth", build)
-
-
-def _ensure_terrain_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import terrain_truth_pdf
-
-        return terrain_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            steep_tan2=STEEP_TAN2, bands=(0, 1),
-        )
-
-    # the threshold constant lives in THIS module, outside the truth-module
-    # hash — bake it into the cache key so edits regenerate
-    return _ensure_truth_parquet(f"terrain_truth_{STEEP_TAN2:g}", build)
-
-
-def _ensure_temporal_trend_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import temporal_trend_truth_pdf
-
-        return temporal_trend_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            bands=(0, 1),
-        )
-
-    return _ensure_truth_parquet("temporal_trend_truth", build)
-
-
-def _ensure_temporal_median_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import temporal_median_truth_pdf
-
-        return temporal_median_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("temporal_median_truth", build)
-
-
-def _ensure_pixel_series_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import pixel_series_truth_pdf
-
-        return pixel_series_truth_pdf(120, 200)
-
-    return _ensure_truth_parquet("pixel_series_truth", build)
-
-
-def _ensure_tiff_zonal_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import tiff_zonal_truth_pdf
-
-        return tiff_zonal_truth_pdf(96, 40)
-
-    return _ensure_truth_parquet("tiff_zonal_truth_96_40", build)
-
-
 # The documents/embeddings truth mirrors are pinned to sf0.01 — the driver
 # contract runs the correctness diff at sf=0.01 by definition (the
 # pre-registered DuckDB views read that directory), and oracle_sql() is a
 # static string surface with no sf parameter.  A gate run at any other sf
 # would mismatch these four oracles by construction.
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
-
-
-def _ensure_simhash_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import simhash_truth_pdf
-
-        return simhash_truth_pdf(ORACLE_SF_DIR, max_hamming=10)
-
-    return _ensure_truth_parquet("simhash_truth_sf001", build)
-
-
-def _ensure_minhash_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import minhash_truth_pdf
-
-        return minhash_truth_pdf(
-            ORACLE_SF_DIR, num_perm=16, bands=4, jaccard_threshold=0.3
-        )
-
-    return _ensure_truth_parquet("minhash_truth_sf001", build)
-
-
-def _ensure_lsh_topk_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import lsh_topk_truth_pdf
-
-        return lsh_topk_truth_pdf(ORACLE_SF_DIR, k=3, dim=64,
-                                  n_bits=4, n_tables=8)
-
-    return _ensure_truth_parquet("lsh_topk_truth_sf001", build)
-
-
-def _ensure_ivf_topk_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import ivf_topk_truth_pdf
-
-        return ivf_topk_truth_pdf(ORACLE_SF_DIR, k=3,
-                                  n_clusters=16, nprobe=6)
-
-    return _ensure_truth_parquet("ivf_topk_truth_sf001", build)
-
-
-def _ensure_feature_pairs_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import image_feature_pairs_truth_pdf
-
-        return image_feature_pairs_truth_pdf(120, threshold=0.999,
-                                             n_bits=6, n_tables=6)
-
-    return _ensure_truth_parquet("feature_pairs_truth_120", build)
-
-
-def _ensure_label_masks_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import label_masks_truth_pdf
-
-        return label_masks_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE, n_aois=40
-        )
-
-    return _ensure_truth_parquet("label_masks_truth", build)
-
-
-def _ensure_gap_fill_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import gap_fill_truth_pdf
-
-        return gap_fill_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("gap_fill_truth", build)
-
-
-def _ensure_class_stats_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import class_stats_truth_pdf
-
-        return class_stats_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE, bands=(0, 1)
-        )
-
-    return _ensure_truth_parquet("class_stats_truth", build)
-
-
-def _ensure_focal_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import focal_truth_pdf
-
-        return focal_truth_pdf(
-            HOTSPOT_BBOX, CHIP_SIZE, CHIP_RES, stride=CHIP_STRIDE,
-            bands=(0, 1), radius=1,
-        )
-
-    return _ensure_truth_parquet("focal_truth", build)
-
-
-def _ensure_overview_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import overview_truth_pdf
-
-        return overview_truth_pdf(96)
-
-    return _ensure_truth_parquet("overview_truth_96", build)
-
-
-def _ensure_zonal_bands_truth() -> str:
-    def build():
-        from rasteret_spark.sources.truth import zonal_truth_pdf
-
-        return zonal_truth_pdf(120, 40, bands=(0, 1, 2))
-
-    return _ensure_truth_parquet("zonal_bands_truth_120_40", build)
 
 
 def q40_image_enrich(spark, sf_dir):
@@ -1174,7 +676,7 @@ def q48_image_mosaic(spark, sf_dir):
     nearest-reproject onto the chip grid -> newest-first per-pixel composite.
     Pinned bit-exact by tests/test_raster_mosaic.py against a full-decode
     oracle, including mosaic order-invariance; the driver additionally
-    diffs it against the pre-encode truth mirror (sources/truth.py)."""
+    diffs it against the pre-encode truth mirror (oracles/truth.py)."""
     from rasteret_spark.operators import raster_mosaic as rmo
 
     out = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
@@ -1333,20 +835,11 @@ def q61_chip_augment(spark, sf_dir):
 
 
 def _tiff_images_cached(spark, n=96, seed=42):
-    """Deterministic TIFF images table, generated once per machine and read
-    back as parquet — input prep (pure-Python LZW encoding is the slow
-    part), kept out of every subsequent query/bench wall like bench.py's
-    ensure_images."""
-    import glob
-    import shutil
-
+    """Deterministic TIFF images table (pure-Python LZW encoding is the slow
+    part of generating it), cached like ``_images_df``."""
     from rasteret_spark.sources import synthetic as syn
 
-    path = f"/tmp/rs_tiff_images_{n}_{seed}_{_gen_fingerprint()}.parquet"
-    if not glob.glob(f"{path}/_SUCCESS"):
-        shutil.rmtree(path, ignore_errors=True)  # drop partial writes
-        syn.spark_tiff_images_df(spark, n, seed).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return _cached_images(spark, syn.spark_tiff_images_df, "tiff_images", n, seed)
 
 
 def q62_tiff_enrich_zonal(spark, sf_dir):
@@ -1556,7 +1049,7 @@ def q72_change_detect(spark, sf_dir):
     ``|delta| > threshold`` changed pixels — the deforestation screen.
     One vectorized numpy pass per group after the stack decode; DuckDB-oracled
     against an independent numpy two-epoch mirror from pre-encode
-    generator truth (sources/truth.change_detect_truth_pdf)."""
+    generator truth (oracles/truth.change_detect_truth_pdf)."""
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
@@ -1792,7 +1285,7 @@ def q81_train_split(spark, sf_dir):
     partitionings and appends, unlike randomSplit.  Each row carries its
     composite valid count and position-weighted fold so the oracle checks
     the split is bound to the RIGHT chip contents; the hash itself is
-    mirrored bit-equal from the public XXH64 spec in sources/truth.py."""
+    mirrored bit-equal from the public XXH64 spec in oracles/truth.py."""
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import splits
 
@@ -1814,13 +1307,14 @@ def q82_cog_export(spark, sf_dir):
     (`operators/raster_sink.write_cogs` — ONE shuffle, executor-side atomic
     writes, per-chip quarantine), then verify from the FILES alone
     (binaryFile scan -> IFD chain parse -> full decode).  The DuckDB oracle
-    (sources/truth.cog_export_truth_pdf) mirrors the float32 storage cast
+    (oracles/truth.cog_export_truth_pdf) mirrors the float32 storage cast
     and the overview ladder from pre-encode truth, so pixel sums from the
     written files are bit-exact, not approximate."""
     from rasteret_spark.operators import chips as ch
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import raster_sink as rsink
     from rasteret_spark.operators import spatial_join as sj
+    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     images = _images_df(spark)
     grid = ch.chip_requests(
@@ -1830,7 +1324,7 @@ def q82_cog_export(spark, sf_dir):
     px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1))
     out_dir = (
         f"/tmp/rasteret_spark_oracle/"
-        f"cogs_{COG_SIZE}_{COG_RES}_{COG_STRIDE}_{_gen_fingerprint()}"
+        f"cogs_{COG_SIZE}_{COG_RES}_{COG_STRIDE}_{generator_fingerprint()}"
     )
     man = rsink.write_cogs(px, out_dir)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
@@ -1885,13 +1379,14 @@ def q83_shard_export(spark, sf_dir):
     <chip>.json samples (`operators/shard_sink` — one shuffle, executor-
     side writes), then samples are verified from the FILES alone through
     the stdlib tarfile parser (an implementation the writer shares nothing
-    with).  Oracle: sources/truth.shard_export_truth_pdf mirrors the
+    with).  Oracle: oracles/truth.shard_export_truth_pdf mirrors the
     float32 stack and the XXH64 shard assignment from pre-encode truth."""
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import shard_sink as ss
+    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     px = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
-    out_dir = f"/tmp/rasteret_spark_oracle/shards_4_{_gen_fingerprint()}"
+    out_dir = f"/tmp/rasteret_spark_oracle/shards_4_{generator_fingerprint()}"
     man = ss.write_tar_shards(px, out_dir, n_shards=4)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
     if bad:
@@ -1907,7 +1402,7 @@ def q85_global_band_stats(spark, sf_dir):
     each row folds to scalars JVM-side, ONE tiny shuffle of partials.
     deterministic=True pins the float fold order (sorted per-chip
     partials) so the oracle compare is bit-exact; the default partial-sum
-    path is the 100 TB shape.  Oracle: sources/truth.
+    path is the 100 TB shape.  Oracle: oracles/truth.
     global_band_stats_truth_pdf mirrors the identical IEEE fold."""
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
@@ -1924,12 +1419,13 @@ def q84_image_caption_shards(spark, sf_dir):
     append-stable shard assignment, executor-side writes), then samples
     are verified from the FILES alone via the stdlib tarfile parser.
     Byte-for-byte caption equality is part of the contract.  Oracle:
-    sources/truth.image_shard_truth_pdf mirrors the float32 pixel sums,
+    oracles/truth.image_shard_truth_pdf mirrors the float32 pixel sums,
     captions and XXH64 shard assignment from pre-encode generator truth."""
     from rasteret_spark.operators import shard_sink as ss
+    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     images = _images_df(spark).select("image_id", "bytes", "caption")
-    out_dir = f"/tmp/rasteret_spark_oracle/imgshards_4_{_gen_fingerprint()}"
+    out_dir = f"/tmp/rasteret_spark_oracle/imgshards_4_{generator_fingerprint()}"
     man = ss.write_image_shards(images, out_dir, n_shards=4)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
     if bad:
@@ -1943,7 +1439,7 @@ def q73_temporal_trend(spark, sf_dir):
     value ~ days-since-first-scene at every pixel, the greening/drift
     screen.  ONE shuffle; the fold is a fixed-order numpy pass over
     a deterministically sorted observation array, so the DuckDB oracle
-    (sources/truth.temporal_trend_truth_pdf) matches bit-exactly."""
+    (oracles/truth.temporal_trend_truth_pdf) matches bit-exactly."""
     from rasteret_spark.operators import band_math as bm
     from rasteret_spark.operators import raster_mosaic as rmo
 
@@ -2269,9 +1765,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    import datetime as dt
+
+    from oracles import truth_parquet as truth
+    from rasteret_spark import crs
+
     ep = _EVENT_POINTS_SQL
     pb = _PART_BOXES_SQL
-    meta_pq = _ensure_images_meta_parquet()
+    meta_pq = truth("images_meta_pdf", n=120)
+    chips = dict(bbox=HOTSPOT_BBOX, size=CHIP_SIZE, xres=CHIP_RES, stride=CHIP_STRIDE)
     return {
         # image queries whose facts are SQL-expressible: the oracle reads
         # GENERATOR-truth metadata (materialized without touching a single
@@ -2289,7 +1791,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY phash
         """,
         # pixel-valued oracles: the DuckDB side reads PRE-ENCODE truth
-        # (sources/truth.py — the array the generator drew + numpy
+        # (oracles/truth.py — the array the generator drew + numpy
         # reductions, no codec/container/Reader anywhere), the Spark side
         # parses headers, range-reads tiles, decodes and masks distributed —
         # a bit-exact diff across the entire format + execution stack
@@ -2298,176 +1800,195 @@ def oracle_sql() -> dict[str, str]:
                    win_col, win_row, win_w, win_h,
                    px_count, valid_count,
                    v_sum, v_mean, v_min, v_max, status
-            FROM read_parquet('{_ensure_zonal_truth()}')
+            FROM read_parquet('{truth("zonal_truth_pdf", n_images=120, n_aois=40)}')
         """,
         "q44_image_psnr": f"""
             SELECT image_id, fmt, exact, psnr_db, lossless
-            FROM read_parquet('{_ensure_psnr_truth()}')
+            FROM read_parquet('{truth("psnr_truth_pdf", n=120)}')
         """,
         "q42_image_point_sample": f"""
             SELECT point_index, image_id, band, px_col, px_row, in_bounds,
                    value, valid, ring_steps, sample_col, sample_row, status
-            FROM read_parquet('{_ensure_sample_truth()}')
+            FROM read_parquet('{truth("sample_truth_pdf", n_images=120, n_points=200, max_ring=4)}')
         """,
         "q49_image_latest_sample": f"""
             SELECT point_index, image_id, band, px_col, px_row, in_bounds,
                    value, valid, ring_steps, sample_col, sample_row, status
-            FROM read_parquet('{_ensure_latest_sample_truth()}')
+            FROM read_parquet('{truth("sample_truth_pdf", n_images=120, n_points=200, max_ring=4,
+                                     latest_only=True)}')
         """,
         "q50_image_zonal_bands": f"""
             SELECT image_id, aoi_id, band, caption,
                    win_col, win_row, win_w, win_h,
                    px_count, valid_count,
                    v_sum, v_mean, v_min, v_max, status
-            FROM read_parquet('{_ensure_zonal_bands_truth()}')
+            FROM read_parquet('{truth("zonal_truth_pdf", n_images=120, n_aois=40, bands=(0, 1, 2))}')
         """,
         "q51_image_chip_stack": f"""
             SELECT chip_id, t_index, image_id, band, filled
-            FROM read_parquet('{_ensure_chip_stack_truth()}')
+            FROM read_parquet('{truth("chip_stack_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q53_chip_serve": f"""
             SELECT chip_id, t_index, image_id, band, filled, status
-            FROM read_parquet('{_ensure_chip_serve_truth()}')
+            FROM read_parquet('{truth(
+                "chip_stack_truth_pdf", bbox=HOTSPOT_BBOX, size=CHIP_SIZE, xres=CHIP_RES,
+                random_n=8, chip_seed=42, t_start=dt.datetime(2023, 2, 1),
+                t_end=dt.datetime(2023, 6, 1), t_step=2, bands=(0,), with_status=True)}')
         """,
         "q61_chip_augment": f"""
             SELECT chip_id, t_index, band, aug_op, chip_w, chip_h,
                    v_sum, weighted
-            FROM read_parquet('{_ensure_augment_truth()}')
+            FROM read_parquet('{truth("augment_truth_pdf", **chips, max_images_per_chip=4)}')
         """,
         "q45_simhash_near_dups": f"""
             SELECT id_a, id_b, hamming
-            FROM read_parquet('{_ensure_simhash_truth()}')
+            FROM read_parquet('{truth("simhash_truth_pdf", sf_dir=ORACLE_SF_DIR, max_hamming=10)}')
         """,
         "q46_minhash_lsh_pairs": f"""
             SELECT id_a, id_b
-            FROM read_parquet('{_ensure_minhash_truth()}')
+            FROM read_parquet('{truth("minhash_truth_pdf", sf_dir=ORACLE_SF_DIR, num_perm=16,
+                                     bands=4, jaccard_threshold=0.3)}')
         """,
         "q47_lsh_ann": f"""
             SELECT probe_id, neighbor_id, rank
-            FROM read_parquet('{_ensure_lsh_topk_truth()}')
+            FROM read_parquet('{truth("lsh_topk_truth_pdf", sf_dir=ORACLE_SF_DIR, k=3, dim=64,
+                                     n_bits=4, n_tables=8)}')
         """,
         "q52_ivf_ann": f"""
             SELECT probe_id, neighbor_id, rank
-            FROM read_parquet('{_ensure_ivf_topk_truth()}')
+            FROM read_parquet('{truth("ivf_topk_truth_pdf", sf_dir=ORACLE_SF_DIR, k=3,
+                                     n_clusters=16, nprobe=6)}')
         """,
         "q58_image_feature_pairs": f"""
             SELECT id_a, id_b
-            FROM read_parquet('{_ensure_feature_pairs_truth()}')
+            FROM read_parquet('{truth("image_feature_pairs_truth_pdf", n_images=120,
+                                     threshold=0.999, n_bits=6, n_tables=6)}')
         """,
         "q70_class_stats": f"""
             SELECT chip_id, band, class_id, n_px, n_valid, v_sum, v_mean
-            FROM read_parquet('{_ensure_class_stats_truth()}')
+            FROM read_parquet('{truth("class_stats_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q71_focal_filters": f"""
             SELECT chip_id, band, fm_filled, fm_wsum, sb_filled, sb_wsum
-            FROM read_parquet('{_ensure_focal_truth()}')
+            FROM read_parquet('{truth("focal_truth_pdf", **chips, bands=(0, 1), radius=1)}')
         """,
         "q72_change_detect": f"""
             SELECT chip_id, band, n_before, n_after,
                    delta_valid, delta_changed, delta_wsum
-            FROM read_parquet('{_ensure_change_detect_truth()}')
+            FROM read_parquet('{truth(
+                "change_detect_truth_pdf", **chips, threshold=CHANGE_THRESHOLD,
+                split=dt.datetime.fromisoformat(CHANGE_SPLIT_TS), bands=(0, 1))}')
         """,
         "q73_temporal_trend": f"""
             SELECT chip_id, band, n_t, slope_valid,
                    slope_wsum, intercept_wsum
-            FROM read_parquet('{_ensure_temporal_trend_truth()}')
+            FROM read_parquet('{truth("temporal_trend_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q74_terrain": f"""
             SELECT chip_id, band, grad_valid,
                    dzdx_wsum, dzdy_wsum, steep_px
-            FROM read_parquet('{_ensure_terrain_truth()}')
+            FROM read_parquet('{truth("terrain_truth_pdf", **chips, steep_tan2=STEEP_TAN2, bands=(0, 1))}')
         """,
         "q75_chip_stats": f"""
             SELECT chip_id, band, n_valid, null_frac, vmin, vmax,
                    at_max_px, q25, q50, q75
-            FROM read_parquet('{_ensure_chip_stats_truth()}')
+            FROM read_parquet('{truth("chip_stats_truth_pdf", **chips,
+                                     probs=(0.25, 0.5, 0.75), bands=(0, 1))}')
         """,
         "q76_build_overviews": f"""
             SELECT image_id, status, n_levels_in, n_levels_out, ov_checksum
-            FROM read_parquet('{_ensure_build_overviews_truth()}')
+            FROM read_parquet('{truth("build_overviews_truth_pdf", n_images=96, factors=(2, 4))}')
         """,
         "q77_spatial_stats": f"""
             SELECT chip_id, band, n_valid, w_pairs, morans_i, gearys_c
-            FROM read_parquet('{_ensure_spatial_stats_truth()}')
+            FROM read_parquet('{truth("spatial_stats_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q78_qa_mask": f"""
             SELECT chip_id, qa_valid, qa_flagged, kept_px, masked_wsum
-            FROM read_parquet('{_ensure_qa_mask_truth()}')
+            FROM read_parquet('{truth("qa_mask_truth_pdf", **chips, data_band=0, qa_band=1,
+                                     bit=QA_BIT)}')
         """,
         "q79_stretch": f"""
             SELECT chip_id, band, cut_lo, cut_hi, clip_lo_px, clip_hi_px,
                    stretch_wsum
-            FROM read_parquet('{_ensure_stretch_truth()}')
+            FROM read_parquet('{truth("stretch_truth_pdf", **chips, p_lo=0.02, p_hi=0.98,
+                                     bands=(0, 1))}')
         """,
         "q80_chip_histogram": f"""
             SELECT chip_id, band, h0, h1, h2, h3, h4, h5, h6, h7
-            FROM read_parquet('{_ensure_chip_histogram_truth()}')
+            FROM read_parquet('{truth("chip_histogram_truth_pdf", **chips, lo=HIST_LO, hi=HIST_HI,
+                                     n_bins=HIST_BINS, bands=(0, 1))}')
         """,
         "q81_train_split": f"""
             SELECT chip_id, band, split, n_valid, v_wsum
-            FROM read_parquet('{_ensure_train_split_truth()}')
+            FROM read_parquet('{truth("train_split_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q82_cog_export": f"""
             SELECT chip_id, band, width, height, n_overviews, filled, v_sum
-            FROM read_parquet('{_ensure_cog_export_truth()}')
+            FROM read_parquet('{truth("cog_export_truth_pdf", bbox=HOTSPOT_BBOX, size=COG_SIZE,
+                                     xres=COG_RES, stride=COG_STRIDE, bands=(0, 1))}')
         """,
         "q83_shard_export": f"""
             SELECT chip_id, shard_id, n_bands, height, width, filled, v_sum
-            FROM read_parquet('{_ensure_shard_export_truth()}')
+            FROM read_parquet('{truth("shard_export_truth_pdf", **chips, n_shards=4, bands=(0, 1))}')
         """,
         "q84_image_caption_shards": f"""
             SELECT image_id, shard_id, n_bands, height, width, filled,
                    v_sum, caption
-            FROM read_parquet('{_ensure_image_shard_truth()}')
+            FROM read_parquet('{truth("image_shard_truth_pdf", n_shards=4, n_images=120)}')
         """,
         "q85_global_band_stats": f"""
             SELECT band, n_chips, n_px, n_valid, mean, std, vmin, vmax
-            FROM read_parquet('{_ensure_global_band_stats_truth()}')
+            FROM read_parquet('{truth("global_band_stats_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q69_gap_fill": f"""
             SELECT chip_id, t_index, image_id, band,
                    n_missing, n_filled, weighted
-            FROM read_parquet('{_ensure_gap_fill_truth()}')
+            FROM read_parquet('{truth("gap_fill_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q68_label_masks": f"""
             SELECT chip_id, n_polys, n_labeled, checksum, status
-            FROM read_parquet('{_ensure_label_masks_truth()}')
+            FROM read_parquet('{truth("label_masks_truth_pdf", **chips, n_aois=40)}')
         """,
         "q67_overview_pixels": f"""
             SELECT image_id, factor, n_levels, level,
                    win_w, win_h, checksum, status
-            FROM read_parquet('{_ensure_overview_truth()}')
+            FROM read_parquet('{truth("overview_truth_pdf", n_images=96)}')
         """,
         "q62_tiff_enrich_zonal": f"""
             SELECT image_id, aoi_id, band, container, byte_order, codec,
                    predictor, px_count, valid_count, v_mean, status
-            FROM read_parquet('{_ensure_tiff_zonal_truth()}')
+            FROM read_parquet('{truth("tiff_zonal_truth_pdf", n_images=96, n_aois=40)}')
         """,
         "q64_band_index": f"""
             SELECT chip_id, nd_filled, nd_mean, nd_min, nd_max, n_nonneg
-            FROM read_parquet('{_ensure_band_index_truth()}')
+            FROM read_parquet('{truth("band_index_truth_pdf", **chips, band_a=1, band_b=0,
+                                     lo=0.0)}')
         """,
         "q65_temporal_median": f"""
             SELECT chip_id, band, n_t, n_valid_px, median_mean
-            FROM read_parquet('{_ensure_temporal_median_truth()}')
+            FROM read_parquet('{truth("temporal_median_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q66_pixel_series": f"""
             SELECT point_index, band, n_obs, t_first, t_last, v_mean
-            FROM read_parquet('{_ensure_pixel_series_truth()}')
+            FROM read_parquet('{truth("pixel_series_truth_pdf", n_images=120, n_points=200)}')
         """,
         "q48_image_mosaic": f"""
             SELECT chip_id, band, n_images, n_contributing, filled, v_sum
-            FROM read_parquet('{_ensure_mosaic_truth()}')
+            FROM read_parquet('{truth("mosaic_truth_pdf", **chips, bands=(0, 1))}')
         """,
         "q54_image_mosaic_average": f"""
             SELECT chip_id, band, n_images, n_contributing, filled, v_sum,
                    status
-            FROM read_parquet('{_ensure_mosaic_avg_truth()}')
+            FROM read_parquet('{truth("mosaic_truth_pdf", bbox=HOTSPOT_BBOX, size=16, xres=0.004,
+                                     stride=16, bands=(0,), method="average")}')
         """,
         "q60_image_mosaic_native_grid": f"""
             SELECT chip_id, band, grid_epsg, n_images, n_contributing,
                    filled, v_sum, capped, status
-            FROM read_parquet('{_ensure_mosaic_native_truth()}')
+            FROM read_parquet('{truth(
+                "mosaic_truth_pdf", bbox=crs.bbox_from_lonlat(32633, *HOTSPOT_BBOX),
+                size=32, xres=100.0, stride=32, grid_epsg=32633)}')
         """,
         "q01_pricing_summary": """
             -- outer CASTs: DuckDB SUM(BIGINT) yields HUGEINT which pandas

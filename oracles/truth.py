@@ -1,19 +1,21 @@
-"""Generator-truth reference results for pixel-valued driver oracles.
+"""Generator-truth reference results for the driver's DuckDB oracles.
 
-The q40/q43 oracles already cross the encode/PARSE boundary by materializing
-the generator's declared metadata for DuckDB.  This module extends the same
-idea to pixel VALUES: every result here is computed from
-``synthetic.make_image_truth`` — the pre-encode array the generator drew
-(plus the value-level qlossy quantization mirror) — and single-process
-numpy reductions.  No mini-raster container, no codec, no CachedReader, no
-Spark: when the driver diffs a Spark query against a parquet written from
-these frames, the comparison crosses the whole encode -> header-parse ->
-tile-decode -> distributed-join stack instead of reusing any of it.
+q40/q43 read the generator's declared metadata (``images_meta_pdf``), so
+the Spark side must recover the same facts by PARSING the encoded blobs.
+Every pixel-valued result here is computed from
+``synthetic.make_image_truth`` / ``make_tiff_image_truth`` — the pre-encode
+array the generator drew (plus the value-level qlossy quantization mirror)
+— and single-process numpy reductions.  No mini-raster container, no
+CachedReader, no Spark: when the driver diffs a Spark query against a
+parquet written from these frames, the comparison crosses the whole
+encode -> header-parse -> tile-decode -> distributed-join stack instead of
+reusing any of it.
 
 Shared with the engine are only the deterministic coordinate/geometry
-kernels (window math, CRS transforms, even-odd PIP) — the same status the
-reference gives rasterio/shapely in its own fixture oracles
-(`/root/reference/tests/test_dataset_pixel_comparison.py`).
+kernels (window math, CRS transforms, even-odd PIP, XXH64) and, for the
+lossy TIFF jpeg rows of q62, the JPEG codec's per-tile round trip — the
+same status the reference gives rasterio/shapely in its own fixture
+oracles (`/root/reference/tests/test_dataset_pixel_comparison.py`).
 """
 
 from __future__ import annotations
@@ -41,6 +43,43 @@ def _image_sidecar(i: int, seed: int = 42) -> dict:
     t = syn.make_image_truth(i, seed)
     t["image_id"] = f"img-{i:08d}"
     return t
+
+
+# mini-raster header compression ids of the generator's format matrix (the
+# container's declared enum, restated here so the oracle never reads it back
+# from the codec module)
+_MINIRASTER_COMP_CODE = {"raw": 0, "deflate": 1, "lzma": 2, "bz2": 3,
+                         "packbits": 4, "qlossy": 5}
+
+
+def images_meta_pdf(n: int, seed: int = 42) -> pd.DataFrame:
+    """Generator-truth metadata for the synthetic images table, WITHOUT any
+    encode or header parse: width/height/bands/epsg/phash from the drawn
+    truth, compression/predictor from the format matrix, tile counts from
+    the 64x64 grid math.  This is the DuckDB side of the q40/q43 oracles —
+    the Spark side must recover the same facts by PARSING the encoded
+    blobs."""
+    rows = []
+    for i in range(n):
+        t = syn.make_image_truth(i, seed)
+        rows.append(
+            {
+                "image_id": f"img-{i:08d}",
+                "fmt": t["fmt"],
+                "width": t["w"],
+                "height": t["h"],
+                "compression": _MINIRASTER_COMP_CODE[t["fmt"]],
+                "predictor": t["predictor"],
+                "epsg": t["epsg"],
+                "n_tiles": -(-t["w"] // 64) * (-(-t["h"] // 64)) * t["n_bands"],
+                "phash": syn.phash64(t["arr"][0]),
+            }
+        )
+    pdf = pd.DataFrame(rows)
+    for c in ("width", "height", "compression", "predictor", "epsg", "n_tiles"):
+        pdf[c] = pdf[c].astype("int32")
+    pdf["phash"] = pdf["phash"].astype("int64")
+    return pdf
 
 
 def _zonal_truth_row(t: dict, aoi: dict, band: int) -> dict:
@@ -818,19 +857,36 @@ def image_shard_truth_pdf(
     return pdf
 
 
+def _jpeg_round_trip(t: dict) -> np.ndarray:
+    """Post-decode pixels of a lossy TIFF jpeg row: each tile (64x64,
+    zero-padded) or strip (48 rows) of each planar band through the JPEG
+    codec at the writer's quality 92, cropped back to the image."""
+    from rasteret_spark.format import jpegcodec
+
+    h, w = t["h"], t["w"]
+    th, tw = (64, 64) if t["tiled"] else (min(48, h), w)
+    out = np.empty_like(t["arr"])
+    for b, plane in enumerate(t["arr"]):
+        for y0 in range(0, h, th):
+            for x0 in range(0, w, tw):
+                blk = plane[y0 : y0 + th, x0 : x0 + tw]
+                if t["tiled"]:
+                    blk = np.pad(blk, ((0, th - blk.shape[0]), (0, tw - blk.shape[1])))
+                dec = jpegcodec.decode(jpegcodec.encode(blk, quality=92))
+                out[b, y0 : y0 + th, x0 : x0 + tw] = dec[: min(th, h - y0), : min(tw, w - x0)]
+    return out
+
+
 def _tiff_sidecar(i: int, seed: int = 42) -> dict:
     """TIFF truth dict plus footprint bbox / caption / image_id (same corner
     and caption math as ``make_tiff_image_row``).  For the lossy jpeg rows
-    the generator declares no pre-encode expected pixels; those rows fall
-    back to the engine's own full decode of the real blob — the container/
+    the generator declares no pre-encode expected pixels; those rows take
+    them from a per-tile JPEG round trip of the drawn array — the container/
     window path is still independently checked, the codec itself is pinned
     by the JPEG wire tests instead."""
     t = syn.make_tiff_image_truth(i, seed)
     if t["expected"] is None:
-        from rasteret_spark.format import container
-
-        arr = container.decode_full_any(syn.make_tiff_image_row(i, seed)["bytes"])
-        t["expected"] = arr[None] if arr.ndim == 2 else arr
+        t["expected"] = _jpeg_round_trip(t)
     if t["pixel_is_point"]:
         # the FILE stores a center tiepoint; the engine recovers the area
         # origin as tie - scale/2 — mirror that float roundtrip exactly
@@ -2517,17 +2573,25 @@ class _NegStr:
         return isinstance(other, _NegStr) and self.s == other.s
 
 
+def _psnr_db(a: np.ndarray, b: np.ndarray) -> float:
+    """PSNR of ``b`` against ``a`` with the peak taken from ``a`` (1.0 for an
+    all-zero ``a``); inf when the arrays are equal."""
+    mse = float(np.mean((a - b) ** 2))
+    if mse == 0.0:
+        return float("inf")
+    peak = float(np.max(np.abs(a))) or 1.0
+    return 10.0 * np.log10(peak * peak / mse)
+
+
 def psnr_truth_pdf(n: int = 120, seed: int = 42) -> pd.DataFrame:
     """Expected output of the fidelity query: per image, whether the decode
     should be bit-exact vs the drawn array, and the PSNR it should land on
     (lossless -> exact, capped-inf PSNR; qlossy -> the quantization's PSNR)."""
-    from rasteret_spark.format.codecs import psnr
-
     rows = []
     for i in range(n):
         t = syn.make_image_truth(i, seed)
         lossless = t["fmt"] not in ("qlossy",)
-        p = psnr(t["arr"].astype(np.float64), t["expected"].astype(np.float64))
+        p = _psnr_db(t["arr"].astype(np.float64), t["expected"].astype(np.float64))
         rows.append(
             {
                 "image_id": f"img-{i:08d}",

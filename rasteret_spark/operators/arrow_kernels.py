@@ -7,7 +7,7 @@ code, where a per-element interpreted expression would cost ~37k lambda
 calls per 4096-px chip for a 3x3 stencil.
 
 Float contract — every kernel's output is a fixed function of its input
-bits, so independent oracles (``sources/truth.py``) can reproduce it
+bits, so independent oracles (``oracles/truth.py``) can reproduce it
 exactly:
 
 * every float reduction is a strict left fold in a fixed order (tap

@@ -13,7 +13,7 @@ Semantics (gdaladdo-compatible):
 
 * overview level k is the exact nearest-neighbour decimation
   ``full[::f, ::f]`` — the same convention the read-side truth oracles pin
-  (`sources/truth.overview_truth_pdf`), so rebuilt pyramids verify against
+  (`oracles/truth.overview_truth_pdf`), so rebuilt pyramids verify against
   pre-encode truth;
 * the rewrite preserves the source's container (classic/BigTIFF), byte
   order, codec, predictor, tile/strip layout, georeferencing

@@ -12,7 +12,7 @@ appends (new chips never move old chips between splits, unlike
 The reference leaves splitting to torchgeo samplers driver-side
 (`src/rasteret/integrations/torchgeo.py`); here it is a Catalyst
 expression — zero shuffles, zero Python — and the hash is Spark's builtin
-``xxhash64`` (seed 42), mirrored bit-exactly in ``sources/truth.py`` for
+``xxhash64`` (seed 42), mirrored bit-exactly in ``oracles/truth.py`` for
 the oracle.
 """
 

@@ -443,23 +443,6 @@ def _spark_images_schema():
     )
 
 
-def write_images_dataset(path: str, n: int, seed: int = 42) -> None:
-    """Hive-partitioned (year/month) parquet — Iceberg-style layout
-    (partition pruning parity with rasteret's year/month export,
-    `src/rasteret/core/collection.py:1677-1688`)."""
-    import pyarrow.dataset as ds
-
-    table = images_table(n, seed)
-    ds.write_dataset(
-        table,
-        path,
-        format="parquet",
-        partitioning=["year", "month"],
-        partitioning_flavor="hive",
-        existing_data_behavior="overwrite_or_ignore",
-    )
-
-
 # --- GeoTIFF-backed images table ---------------------------------------------
 # Same row contract as make_image_row, but the blob is a real (Geo)TIFF /
 # BigTIFF written by format/tiffwrite.py — the matrix walks containers,
@@ -636,53 +619,14 @@ def spark_tiff_images_df(spark, n: int, seed: int = 42):
     return spark.createDataFrame(pdf, schema=_spark_images_schema())
 
 
-def images_meta_pdf(n: int, seed: int = 42):
-    """Generator-truth metadata for the synthetic images table, WITHOUT any
-    header parsing: width/height/phash/epsg come from the row dicts (the
-    generator's declared outputs), compression/predictor straight from
-    _FMT_MATRIX, tile counts from the 64x64 grid math.  This is the DuckDB
-    side of the q40/q43 oracles — the Spark side must recover the same
-    facts by PARSING the encoded blobs, so the comparison crosses the
-    encode/parse boundary instead of reusing it."""
-    import pandas as pd
-
-    from rasteret_spark.format import codecs as _codecs
-
-    rows = []
-    for i in range(n):
-        r = make_image_row(i, seed)
-        src_i = (
-            i - (i % 17) if (i % 17) == 16 and i >= 17 else i
-        )  # mirror of make_image_row's dup rule (dup_every=17)
-        fmt, predictor, _dtype = _FMT_MATRIX[src_i % len(_FMT_MATRIX)]
-        tiles = -(-r["w"] // 64) * (-(-r["h"] // 64)) * r["n_bands"]
-        rows.append(
-            {
-                "image_id": r["image_id"],
-                "fmt": r["fmt"],
-                "width": np.int32(r["w"]),
-                "height": np.int32(r["h"]),
-                "compression": np.int32(_codecs.COMP_NAMES[fmt]),
-                "predictor": np.int32(predictor),
-                "epsg": np.int32(r["epsg"]),
-                "n_tiles": np.int32(tiles),
-                "phash": np.int64(r["phash"]),
-            }
-        )
-    pdf = pd.DataFrame(rows)
-    for c, t in [("width", "int32"), ("height", "int32"), ("compression", "int32"),
-                 ("predictor", "int32"), ("epsg", "int32"), ("n_tiles", "int32"),
-                 ("phash", "int64")]:
-        pdf[c] = pdf[c].astype(t)
-    return pdf
-
-
 def generator_fingerprint() -> str:
     """Content hash of EVERY module on the blob-encode path (this generator,
     the TIFF writer, the mini-raster writer, the codecs) — the cache key for
-    /tmp blob/oracle artifacts.  Hashing only the generator would leave the
-    stale-cache hole open: an edit to a codec changes the bytes every
-    generator emits without touching the generator's own source."""
+    encoded blob tables (bench, perfbench and driver-query inputs).  Hashing
+    only the generator would leave the stale-cache hole open: an edit to a
+    codec changes the bytes every generator emits without touching the
+    generator's own source.  The oracles' truth parquets are keyed on the
+    truth side instead (``oracles/__init__.py``): they never encode."""
     import hashlib
     import inspect
 

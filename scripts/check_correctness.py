@@ -5,6 +5,7 @@ entry at sf0.01 and diff against its oracle_sql() through DuckDB
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -12,7 +13,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F  # noqa: N812
 from rasteret_spark import crs, geom
 from rasteret_spark.operators import labels
 from rasteret_spark.sources import synthetic as syn
-from rasteret_spark.sources import truth
+from oracles import truth
 
 
 def _stack_mirror(chip: dict, polys: list[tuple[str, int, bytes]]) -> np.ndarray:

@@ -1,0 +1,122 @@
+"""The truth cache is keyed on truth-side sources only, and lives outside
+the library.
+
+Each truth parquet path in ``oracle_sql()`` is the builder name, a digest
+of its params and a digest of ``oracles/`` + ``sources/synthetic.py``.  So a
+format-layer edit (codecs, containers) leaves the oracle SQL text
+byte-identical, while a truth-side edit or a changed builder param moves
+the paths it should.  The checks run ``oracle_sql()`` in a subprocess over
+a copy of the checkout, with ``truth_parquet`` stubbed to the pure
+``truth_path`` so nothing is built."""
+
+import ast
+import json
+import os
+import re
+import shutil
+import subprocess
+import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+
+_PATHS_SCRIPT = """
+import json
+import oracles
+from rasteret_spark.sources import synthetic
+assert oracles.__file__.startswith({root!r}) and synthetic.__file__.startswith({root!r})
+oracles.truth_parquet = oracles.truth_path  # paths only, build nothing
+import __spark_entry__ as E
+print(json.dumps(E.oracle_sql()))
+"""
+
+
+def _oracle_sql(root: Path) -> dict[str, str]:
+    env = {**os.environ, "PYTHONDONTWRITEBYTECODE": "1"}
+    out = subprocess.run(
+        [sys.executable, "-c", _PATHS_SCRIPT.format(root=str(root))],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300, check=True,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def _paths(sql: dict[str, str]) -> dict[str, list[str]]:
+    return {q: re.findall(r"read_parquet\('([^']+)'\)", t) for q, t in sql.items()}
+
+
+def _append(path: Path, text: str) -> None:
+    path.write_text(path.read_text() + text)
+
+
+def test_oracle_paths_follow_truth_side_sources_only(tmp_path):
+    root = tmp_path / "checkout"
+    ignore = shutil.ignore_patterns("__pycache__")
+    shutil.copytree(REPO / "rasteret_spark", root / "rasteret_spark", ignore=ignore)
+    shutil.copytree(REPO / "oracles", root / "oracles", ignore=ignore)
+    shutil.copy(REPO / "__spark_entry__.py", root / "__spark_entry__.py")
+
+    base = _oracle_sql(root)
+    paths = _paths(base)
+    truth_queries = {q for q, ps in paths.items() if ps}
+    assert len(truth_queries) >= 41
+
+    # format-layer edits: the oracle SQL text stays byte-identical
+    for mod in ("codecs.py", "miniraster.py"):
+        _append(root / "rasteret_spark" / "format" / mod, "\n# edited\n")
+    assert _oracle_sql(root) == base
+
+    # one builder param (q72's change threshold): only q72's path moves
+    entry = root / "__spark_entry__.py"
+    src = entry.read_text()
+    assert src.count("CHANGE_THRESHOLD = 300.0\n") == 1
+    entry.write_text(src.replace("CHANGE_THRESHOLD = 300.0\n", "CHANGE_THRESHOLD = 301.0\n"))
+    moved = _paths(_oracle_sql(root))
+    assert {q for q in truth_queries if moved[q] != paths[q]} == {"q72_change_detect"}
+
+    # a truth-side edit: every truth path moves
+    _append(root / "oracles" / "truth.py", "\n# edited\n")
+    edited = _paths(_oracle_sql(root))
+    assert all(edited[q] != moved[q] for q in truth_queries)
+
+
+def test_truth_path_is_keyed_on_params():
+    import oracles
+
+    p = oracles.truth_path("zonal_truth_pdf", n_images=120, n_aois=40)
+    assert p == oracles.truth_path("zonal_truth_pdf", n_aois=40, n_images=120)
+    assert p != oracles.truth_path("zonal_truth_pdf", n_images=120, n_aois=41)
+    assert p != oracles.truth_path("zonal_truth_pdf", n_images=120, n_aois=40, bands=(0, 1))
+    assert p.startswith(f"{oracles.ORACLE_DIR}/zonal_truth_pdf_")
+
+
+def _imports(tree: ast.AST) -> set[str]:
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            names.add(node.module)
+    return names
+
+
+def test_library_holds_no_oracle_code():
+    for path in sorted((REPO / "rasteret_spark").rglob("*.py")):
+        rel = path.relative_to(REPO)
+        assert path.stem != "truth", rel
+        tree = ast.parse(path.read_text())
+        bad = {m for m in _imports(tree) if m == "oracles" or m.startswith("oracles.")}
+        assert not bad, (rel, bad)
+        defs = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+        assert "_lzw_decode_ref" not in defs, rel
+
+    # the driver contract imports the oracles only inside oracle_sql(), and
+    # keeps no hand-written truth wrappers
+    entry = ast.parse((REPO / "__spark_entry__.py").read_text())
+    top = [n for n in entry.body if not isinstance(n, (ast.FunctionDef, ast.ClassDef))]
+    assert not any("oracles" in m for n in top for m in _imports(n))
+    for node in entry.body:
+        if isinstance(node, ast.FunctionDef) and node.name != "oracle_sql":
+            assert not any("oracles" in m for m in _imports(node)), node.name
+    names = {n.name for n in entry.body if isinstance(n, ast.FunctionDef)}
+    assert not {n for n in names if n.startswith("_ensure_")}
+    assert "_gen_fingerprint" not in names

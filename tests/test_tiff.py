@@ -455,7 +455,7 @@ def test_q63_overview_serve_invariants(spark):
     (single-IFD) images fall back to full resolution."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
 
     pdf = E.q63_overview_serve(spark, "unused").toPandas()

@@ -176,7 +176,7 @@ class TestChipHistogram:
 
 class TestAssignSplit:
     def test_deterministic_and_mirrors_xxh64(self, spark):
-        from rasteret_spark.sources.truth import _xxh64_str
+        from oracles.truth import _xxh64_str
 
         df = spark.createDataFrame(
             [{"chip_id": f"chip-{i}"} for i in range(500)]

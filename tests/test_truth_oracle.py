@@ -1,4 +1,4 @@
-"""Generator-truth oracle module (sources/truth.py) vs the real stack.
+"""Generator-truth oracle module (oracles/truth.py) vs the real stack.
 
 truth.py recomputes pixel-valued query results from the PRE-ENCODE array
 (no codec / container / Reader anywhere), so agreement here certifies the
@@ -15,7 +15,7 @@ import pytest
 from rasteret_spark.format import container
 from rasteret_spark.operators.decode import zonal_oracle_row
 from rasteret_spark.sources import synthetic as syn
-from rasteret_spark.sources import truth
+from oracles import truth
 
 
 def test_make_image_truth_expected_matches_decode():
