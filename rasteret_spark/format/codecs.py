@@ -53,13 +53,6 @@ COMP_CODES = {v: k for k, v in COMP_NAMES.items()}
 LOSSY_COMPS = {COMP_QLOSSY, COMP_JPEG}  # unconditionally lossy codecs
 
 
-def is_lossy(compression: int, qstep: float = 1.0) -> bool:
-    """True when a tile encoded with (compression, qstep) loses precision:
-    qlossy/JPEG always; LERC exactly when qstep != 1.0 (qstep maps to
-    MAX_Z_ERROR = qstep/2)."""
-    return compression in LOSSY_COMPS or (compression == COMP_LERC and qstep != 1.0)
-
-
 def _jpeg_quality(qstep: float) -> int:
     """For COMP_JPEG the header's qstep field carries the JFIF quality
     (2..100); the format default qstep=1.0 maps to quality 90."""

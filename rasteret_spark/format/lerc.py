@@ -989,30 +989,3 @@ def decode_fast(buf: bytes):
     if valid.shape[0] != n_bands:
         valid = np.broadcast_to(valid[:1], (n_bands, n_rows, n_cols)).copy()
     return out, valid
-
-
-def encode_fast(arr: np.ndarray, valid: np.ndarray | None = None, max_z_error: float = 0.0) -> bytes:
-    """liblerc-backed encode (arbitrary maxZError); falls back to the pure
-    deterministic encoder for lossless requests."""
-    lib = _liblerc()
-    if lib is None:
-        return encode(arr, valid, max_z_error)
-    a = np.asarray(arr)
-    if a.ndim == 2:
-        a = a[None]
-    n_bands, rows, cols = a.shape
-    dt = _DT_ID[a.dtype]
-    mask_arg = None
-    n_masks = 0
-    if valid is not None:
-        n_masks = 1
-        mask_arg = np.ascontiguousarray(valid, dtype=np.uint8).tobytes()
-    buf = ctypes.create_string_buffer(4 * a.nbytes + 16384)
-    n = ctypes.c_uint(0)
-    st = lib.lerc_encode(
-        np.ascontiguousarray(a).ctypes.data_as(ctypes.c_void_p), dt, 1, cols, rows,
-        n_bands, n_masks, mask_arg, max_z_error, buf, len(buf), ctypes.byref(n),
-    )
-    if st != 0:
-        raise LercError(f"lerc_encode failed: {st}")
-    return buf.raw[: n.value]
