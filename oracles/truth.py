@@ -15,7 +15,7 @@ Shared with the engine are only the deterministic coordinate/geometry
 kernels (window math, CRS transforms, even-odd PIP, XXH64) and, for the
 lossy TIFF jpeg rows of q62, the JPEG codec's per-tile round trip — the
 same status the reference gives rasterio/shapely in its own fixture
-oracles (`/root/reference/tests/test_dataset_pixel_comparison.py`).
+oracles (its `tests/test_dataset_pixel_comparison.py`).
 """
 
 from __future__ import annotations
