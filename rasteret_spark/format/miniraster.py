@@ -321,7 +321,6 @@ def read_window(
     row_off: int = 0,
     win_w: int | None = None,
     win_h: int | None = None,
-    fill: float | None = None,
     band: int = 0,
 ) -> np.ndarray:
     """Decode only the tiles intersecting the window; paste + crop.
@@ -329,8 +328,8 @@ def read_window(
     Byte access goes exclusively through coalesced ``blob[o:o+n]`` slices —
     the local stand-in for ranged GETs — so the access pattern matches the
     reference's tile-window read path (`src/rasteret/fetch/cog.py:744-826`).
-    Pixels outside the raster (window overhang) are filled with ``fill`` or
-    the raster nodata (or 0).
+    Pixels outside the raster (window overhang) are filled with the raster
+    nodata (or 0).
     """
     if meta is None:
         prefix = blob[:DEFAULT_PREFIX]
@@ -342,8 +341,7 @@ def read_window(
         win_h = meta.height - row_off
 
     dtype = meta.dtype
-    if fill is None:
-        fill = meta.nodata if meta.nodata is not None else 0
+    fill = meta.nodata if meta.nodata is not None else 0
     canvas = np.full((win_h, win_w), fill, dtype=dtype)
 
     tiles = plan_window_tiles(meta, col_off, row_off, win_w, win_h, band)
@@ -435,12 +433,10 @@ class CachedReader:
         return t
 
     def window(
-        self, col_off: int, row_off: int, win_w: int, win_h: int,
-        fill: float | None = None, band: int = 0,
+        self, col_off: int, row_off: int, win_w: int, win_h: int, band: int = 0
     ) -> np.ndarray:
         m = self.meta
-        if fill is None:
-            fill = m.nodata if m.nodata is not None else 0
+        fill = m.nodata if m.nodata is not None else 0
         canvas = np.full((win_h, win_w), fill, dtype=m.dtype)
         for t_idx, tx, ty in plan_window_tiles(m, col_off, row_off, win_w, win_h, band):
             tile = self._tile(t_idx)

@@ -171,9 +171,7 @@ def _filter_rows(rows: np.ndarray, bpp: int, force: int | None = None) -> bytes:
 
 
 # --- encode ------------------------------------------------------------------
-def encode(
-    img: np.ndarray, *, level: int = 6, force_filter: int | None = None
-) -> bytes:
+def encode(img: np.ndarray, *, force_filter: int | None = None) -> bytes:
     """uint8/uint16 array -> PNG bytes.
 
     Shapes: (h, w) gray, (h, w, 2) gray+alpha, (h, w, 3) RGB,
@@ -205,7 +203,7 @@ def encode(
     return (
         SIGNATURE
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(stream, level))
+        + _chunk(b"IDAT", zlib.compress(stream, 6))
         + _chunk(b"IEND", b"")
     )
 

@@ -695,7 +695,10 @@ class _ReadSlicer:
         return self._read(int(sl.start), int(sl.stop - sl.start))
 
 
-def parse_tiff_chain(read, max_ifds: int = 32) -> list[TiffMeta]:
+MAX_IFDS = 32  # IFD chain walk bound: a looping or hostile chain stops here
+
+
+def parse_tiff_chain(read) -> list[TiffMeta]:
     """Parse the whole IFD chain: [full-res, overview_1, overview_2, ...].
 
     Overview IFDs carry no geo tags (GDAL convention) — their georeferencing
@@ -703,7 +706,7 @@ def parse_tiff_chain(read, max_ifds: int = 32) -> list[TiffMeta]:
     width/height ratio (each overview covers the same extent), so
     ``transform6``/``to_engine_meta`` work at every level."""
     metas = [parse_tiff(read, ifd=0)]
-    while metas[-1].next_ifd_offset and len(metas) < max_ifds:
+    while metas[-1].next_ifd_offset and len(metas) < MAX_IFDS:
         # seed each step from the previous meta's next pointer: ONE chain
         # walk total, not a fresh walk-from-the-start per level (which is
         # O(k^2) ranged round-trips on exactly the remote path this serves)
@@ -746,7 +749,7 @@ def pick_overview(metas: list[TiffMeta], factor: float) -> int:
 
 def read_window_at_res(
     read, col0: int, row0: int, win_w: int, win_h: int,
-    factor: float = 1.0, band: int = 0,
+    factor: float = 1.0,
     metas: list[TiffMeta] | None = None,
 ) -> tuple[np.ndarray, int]:
     """Window read in FULL-RESOLUTION pixel coordinates, served from the
@@ -766,5 +769,5 @@ def read_window_at_res(
     fy = metas[0].height / m.height
     c0, r0 = int(col0 / fx), int(row0 / fy)
     ww, wh = max(int(win_w / fx), 1), max(int(win_h / fy), 1)
-    win = mr.read_window(_ReadSlicer(read), em, c0, r0, ww, wh, band=band)
+    win = mr.read_window(_ReadSlicer(read), em, c0, r0, ww, wh)
     return win, li

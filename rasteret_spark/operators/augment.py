@@ -78,7 +78,7 @@ def rot90(values: Column, w: Column, h: Column) -> Column:
     )
 
 
-def normalize_chips(df: DataFrame, values_col: str = "values") -> DataFrame:
+def normalize_chips(df: DataFrame) -> DataFrame:
     """Per-chip z-score over the VALID (non-null) pixels, nulls preserved —
     native aggregate expressions, no UDF.  A constant chip (std 0) maps to
     0.0 everywhere (the convention torch Normalize users expect from a
@@ -87,7 +87,7 @@ def normalize_chips(df: DataFrame, values_col: str = "values") -> DataFrame:
     DataFrame-level on purpose: the mean/std bind to intermediate COLUMNS,
     evaluated once per row — embedding the aggregates inside the per-pixel
     transform lambda would re-evaluate them per element (O(n^2) per chip)."""
-    v = F.col(values_col)
+    v = F.col("values")
     valid = F.filter(v, lambda x: x.isNotNull())
     n = F.size(valid)
     denom = F.when(n > 0, n.cast("double")).otherwise(F.lit(1.0))
@@ -104,7 +104,7 @@ def normalize_chips(df: DataFrame, values_col: str = "values") -> DataFrame:
     )
     s = F.col("_nz_s")
     return df.withColumn(
-        values_col,
+        "values",
         F.transform(
             v,
             lambda x: F.when(x.isNull(), F.lit(None).cast("double"))
@@ -131,9 +131,6 @@ GEOREF_COLS = ("chip_xmin", "chip_ymax", "chip_xres", "chip_yres", "grid_epsg")
 def augment_chips(
     chips: DataFrame,
     ops: tuple[str, ...] | list[str] = ("identity", "hflip", "vflip"),
-    values_col: str = "values",
-    w_col: str = "chip_w",
-    h_col: str = "chip_h",
     normalize_values: bool = False,
 ) -> DataFrame:
     """Fan a chip-row table out into one row per (chip, op): the standard
@@ -161,9 +158,9 @@ def augment_chips(
     unknown = [o for o in ops if o not in _GEOMETRIC]
     if unknown:
         raise ValueError(f"unknown augment ops {unknown}; have {sorted(_GEOMETRIC)}")
-    v = F.col(values_col)
-    w = F.col(w_col).cast("long")
-    h = F.col(h_col).cast("long")
+    v = F.col("values")
+    w = F.col("chip_w").cast("long")
+    h = F.col("chip_h").cast("long")
     has_prev = "aug_op" in chips.columns
     dtypes = dict(chips.dtypes)
     geo_cols = [c for c in GEOREF_COLS if c in chips.columns]
@@ -182,26 +179,26 @@ def augment_chips(
         branches.append(
             F.struct(
                 label.alias("aug_op"),
-                out_v.alias(values_col),
-                (F.col(h_col) if swap else F.col(w_col)).alias(w_col),
-                (F.col(w_col) if swap else F.col(h_col)).alias(h_col),
+                out_v.alias("values"),
+                (F.col("chip_h") if swap else F.col("chip_w")).alias("chip_w"),
+                (F.col("chip_w") if swap else F.col("chip_h")).alias("chip_h"),
                 *geo_fields,
             )
         )
     other = [
         c
         for c in chips.columns
-        if c not in (values_col, w_col, h_col, "aug_op", *geo_cols)
+        if c not in ("values", "chip_w", "chip_h", "aug_op", *geo_cols)
     ]
     out = (
         chips.withColumn("_aug", F.explode(F.array(*branches)))
         .select(
             *other,
             F.col("_aug.aug_op").alias("aug_op"),
-            F.col(f"_aug.{values_col}").alias(values_col),
-            F.col(f"_aug.{w_col}").alias(w_col),
-            F.col(f"_aug.{h_col}").alias(h_col),
+            F.col("_aug.values").alias("values"),
+            F.col("_aug.chip_w").alias("chip_w"),
+            F.col("_aug.chip_h").alias("chip_h"),
             *[F.col(f"_aug.{c}").alias(c) for c in geo_cols],
         )
     )
-    return normalize_chips(out, values_col) if normalize_values else out
+    return normalize_chips(out) if normalize_values else out

@@ -43,26 +43,28 @@ from rasteret_spark.operators.util import nanlist
 
 GRID_COLS = ("chip_xmin", "chip_ymax", "chip_xres", "chip_yres",
              "chip_w", "chip_h", "grid_epsg")
+# the per-pixel temporal reductions group CHIP_STACK rows by this key
+STACK_KEY = ("chip_id", "band")
+
+
+def _carry_firsts(df: DataFrame) -> list[Column]:
+    """The grid columns ride a per-chip group via ``first`` (constant
+    within a chip by construction)."""
+    return [F.first(c).alias(c) for c in GRID_COLS if c in df.columns]
 
 
 def pivot_bands(
-    per_band: DataFrame,
-    value_col: str = "values",
-    key_cols: tuple[str, ...] = ("chip_id",),
-    carry_cols: tuple[str, ...] = GRID_COLS,
+    per_band: DataFrame, key_cols: tuple[str, ...] = ("chip_id",)
 ) -> DataFrame:
     """One row per chip with a ``bands map<int, array<double>>`` column.
 
     Single groupBy on the chip key — the only shuffle in any index
     computation; georeferencing columns ride along via ``first`` (they are
     constant within a chip by construction)."""
-    aggs = [
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct(F.col("band"), F.col(value_col))))
-        ).alias("bands")
-    ]
-    aggs += [F.first(c).alias(c) for c in carry_cols if c in per_band.columns]
-    return per_band.groupBy(*key_cols).agg(*aggs)
+    bands = F.map_from_entries(
+        F.array_sort(F.collect_list(F.struct(F.col("band"), F.col("values"))))
+    ).alias("bands")
+    return per_band.groupBy(*key_cols).agg(bands, *_carry_firsts(per_band))
 
 
 def _nd_expr(a: Column, b: Column) -> Column:
@@ -130,16 +132,11 @@ def normalized_difference(
 
 
 def band_ratio(
-    per_band: DataFrame,
-    band_a: int,
-    band_b: int,
-    out_col: str = "ratio",
-    key_cols: tuple[str, ...] = ("chip_id",),
-    with_stats: bool = True,
+    per_band: DataFrame, band_a: int, band_b: int, out_col: str = "ratio"
 ) -> DataFrame:
     """``band_a / band_b`` per pixel (simple-ratio indices)."""
     return _apply_index(
-        per_band, band_a, band_b, _ratio_expr, out_col, key_cols, with_stats
+        per_band, band_a, band_b, _ratio_expr, out_col, ("chip_id",), True
     )
 
 
@@ -147,16 +144,13 @@ def linear_combination(
     per_band: DataFrame,
     weights: dict[int, float],
     bias: float = 0.0,
-    out_col: str = "lc",
-    key_cols: tuple[str, ...] = ("chip_id",),
-    with_stats: bool = True,
 ) -> DataFrame:
     """``sum_i w_i * band_i + bias`` per pixel (tasseled-cap-style
     transforms).  Null in ANY weighted band nulls the output pixel."""
     if not weights:
         raise ValueError("weights must name at least one band")
     items = sorted(weights.items())
-    p = pivot_bands(per_band, key_cols=key_cols)
+    p = pivot_bands(per_band)
     b0, w0 = items[0]
     acc = F.transform(
         F.try_element_at("bands", F.lit(b0)),
@@ -171,10 +165,7 @@ def linear_combination(
     for b, w in items[1:]:
         acc = F.zip_with(acc, F.try_element_at("bands", F.lit(b)), _add_band(w))
     carry = [c for c in p.columns if c != "bands"]
-    out = p.select(*carry, acc.alias(out_col))
-    if with_stats:
-        out = out.select("*", *_stats(out_col))
-    return out
+    return p.select(*carry, acc.alias("lc")).select("*", *_stats("lc"))
 
 
 def _stat_matrix(mat, stat: str):
@@ -231,10 +222,6 @@ def _group_matrix(arrs) -> "tuple":
 def temporal_composite(
     stack: DataFrame,
     stat: str = "median",
-    value_col: str = "values",
-    key_cols: tuple[str, ...] = ("chip_id", "band"),
-    carry_cols: tuple[str, ...] = GRID_COLS,
-    out_col: str = "composite",
 ) -> DataFrame:
     """Per-pixel reduction ACROSS TIME over chip-stack rows — the
     cloud-free-composite primitive (monthly median NDVI, max-value
@@ -250,13 +237,11 @@ def temporal_composite(
     vectorized numpy pass per group row (one ``mapInPandas``)."""
     if stat not in ("median", "mean", "min", "max", "count"):
         raise ValueError(f"unknown stat {stat!r}")
-    g = stack.groupBy(*key_cols).agg(
-        F.collect_list(value_col).alias("_t"),
-        *[F.first(c).alias(c) for c in carry_cols
-          if c in stack.columns and c not in key_cols],
+    g = stack.groupBy(*STACK_KEY).agg(
+        F.collect_list("values").alias("_t"), *_carry_firsts(stack)
     )
     schema = _out_schema(
-        g.drop("_t"), [("n_t", "int"), (out_col, "array<double>")]
+        g.drop("_t"), [("n_t", "int"), ("composite", "array<double>")]
     )
 
     def run(batches):
@@ -273,7 +258,7 @@ def temporal_composite(
                     comps.append(nanlist(_stat_matrix(mat, stat)))
             out = pdf.drop(columns=["_t"])
             out["n_t"] = pd.array(n_t, dtype="int32")
-            out[out_col] = comps
+            out["composite"] = comps
             yield out
 
     return g.mapInPandas(run, schema=schema)
@@ -284,11 +269,6 @@ def change_detect(
     split_ts,
     stat: str = "median",
     threshold: float | None = None,
-    value_col: str = "values",
-    time_col: str = "datetime",
-    key_cols: tuple[str, ...] = ("chip_id", "band"),
-    carry_cols: tuple[str, ...] = GRID_COLS,
-    out_col: str = "delta",
 ) -> DataFrame:
     """Two-epoch per-pixel change detection over chip-stack rows: composite
     the timesteps BEFORE ``split_ts`` and the timesteps AT/AFTER it with the
@@ -296,11 +276,11 @@ def change_detect(
     deforestation/new-construction screen (median-vs-median deltas are
     robust to single cloudy scenes).
 
-    Input: CHIP_STACK-shaped rows.  Output: one row per ``key_cols`` with
-    ``n_before``/``n_after`` (timesteps per epoch), the ``out_col`` delta
-    array (null where either epoch has no valid observation for that
-    pixel), ``<out_col>_valid``, and — when ``threshold`` is given —
-    ``<out_col>_changed`` (pixels with ``|delta| > threshold``).
+    Input: CHIP_STACK-shaped rows.  Output: one row per (chip, band) with
+    ``n_before``/``n_after`` (timesteps per epoch), the ``delta`` array
+    (null where either epoch has no valid observation for that pixel),
+    ``delta_valid``, and — when ``threshold`` is given — ``delta_changed``
+    (pixels with ``|delta| > threshold``).
 
     ONE shuffle: both epochs aggregate in the same groupBy via conditional
     collect_lists (no self-join of composites), and the per-pixel reduction
@@ -309,24 +289,19 @@ def change_detect(
     ``stat="count"`` deltas observation DENSITY (data-coverage drift)."""
     if stat not in ("median", "mean", "min", "max", "count"):
         raise ValueError(f"unknown stat {stat!r}")
-    for c in (value_col, time_col):
+    for c in ("values", "datetime"):
         if c not in stack.columns:
             raise ValueError(f"change_detect needs column {c!r}")
     split = F.lit(split_ts).cast("timestamp")
-    g = stack.groupBy(*key_cols).agg(
-        F.collect_list(
-            F.when(F.col(time_col) < split, F.col(value_col))
-        ).alias("_a"),
-        F.collect_list(
-            F.when(F.col(time_col) >= split, F.col(value_col))
-        ).alias("_b"),
-        *[F.first(c).alias(c) for c in carry_cols
-          if c in stack.columns and c not in key_cols],
+    g = stack.groupBy(*STACK_KEY).agg(
+        F.collect_list(F.when(F.col("datetime") < split, F.col("values"))).alias("_a"),
+        F.collect_list(F.when(F.col("datetime") >= split, F.col("values"))).alias("_b"),
+        *_carry_firsts(stack),
     )
     extra = [("n_before", "int"), ("n_after", "int"),
-             (out_col, "array<double>"), (f"{out_col}_valid", "int")]
+             ("delta", "array<double>"), ("delta_valid", "int")]
     if threshold is not None:
-        extra.append((f"{out_col}_changed", "int"))
+        extra.append(("delta_changed", "int"))
     schema = _out_schema(g.drop("_a", "_b"), extra)
     thr = None if threshold is None else float(threshold)
 
@@ -343,10 +318,10 @@ def change_detect(
                 )
                 n_px = 0 if first is None else first.size
                 if n_px <= 0:
-                    cols[out_col].append([])
-                    cols[f"{out_col}_valid"].append(0)
+                    cols["delta"].append([])
+                    cols["delta_valid"].append(0)
                     if thr is not None:
-                        cols[f"{out_col}_changed"].append(0)
+                        cols["delta_changed"].append(0)
                     continue
                 mat_a, _ = _group_matrix(arrs_a)
                 mat_b, _ = _group_matrix(arrs_b)
@@ -361,12 +336,12 @@ def change_detect(
                 delta = _stat_matrix(sized(mat_b), stat) - _stat_matrix(
                     sized(mat_a), stat
                 )
-                cols[out_col].append(nanlist(delta))
+                cols["delta"].append(nanlist(delta))
                 fin = ~np.isnan(delta)
-                cols[f"{out_col}_valid"].append(int(fin.sum()))
+                cols["delta_valid"].append(int(fin.sum()))
                 if thr is not None:
                     with np.errstate(invalid="ignore"):
-                        cols[f"{out_col}_changed"].append(
+                        cols["delta_changed"].append(
                             int((np.abs(delta[fin]) > thr).sum())
                         )
             out = pdf.drop(columns=["_a", "_b"])
@@ -381,15 +356,7 @@ def change_detect(
     return g.mapInPandas(run, schema=schema)
 
 
-def temporal_trend(
-    stack: DataFrame,
-    value_col: str = "values",
-    time_col: str = "datetime",
-    key_cols: tuple[str, ...] = ("chip_id", "band"),
-    tie_cols: tuple[str, ...] = ("image_id",),
-    carry_cols: tuple[str, ...] = GRID_COLS,
-    per_seconds: float = 86400.0,
-) -> DataFrame:
+def temporal_trend(stack: DataFrame, per_seconds: float = 86400.0) -> DataFrame:
     """Per-pixel least-squares temporal trend over chip-stack rows: for
     every pixel, the OLS slope and intercept of ``value ~ time`` across the
     valid observations — the greening/browning/drift screen (NDVI trend,
@@ -397,7 +364,7 @@ def temporal_trend(
     (default days) from the group's FIRST timestep, so intercepts are the
     fitted value at the earliest observation.
 
-    Output: one row per ``key_cols`` with ``n_t`` (collected timesteps),
+    Output: one row per (chip, band) with ``n_t`` (collected timesteps),
     a ``slope`` array (null where fewer than two distinct-time valid
     observations exist) and an ``intercept`` array (null exactly where
     slope is).
@@ -405,29 +372,21 @@ def temporal_trend(
     ONE shuffle (the groupBy); the per-pixel sums fold time-major in one
     vectorized numpy pass per group row (one ``mapInPandas``) over a
     DETERMINISTICALLY ordered observation array — ``array_sort`` on
-    (time, tie_cols, values) structs — so float sums are reproducible and
+    (time, image_id, values) structs — so float sums are reproducible and
     independent oracles can mirror them bit-exactly."""
-    for c in (value_col, time_col):
+    for c in ("values", "datetime"):
         if c not in stack.columns:
             raise ValueError(f"temporal_trend needs column {c!r}")
-    ties = [c for c in tie_cols if c in stack.columns]
+    tie = [F.col("image_id").alias("_k0")] if "image_id" in stack.columns else []
     obs = F.array_sort(
         F.collect_list(
             F.when(
-                F.col(value_col).isNotNull(),
-                F.struct(
-                    F.col(time_col).alias("t"),
-                    *[F.col(c).alias(f"_k{j}") for j, c in enumerate(ties)],
-                    F.col(value_col).alias("v"),
-                ),
+                F.col("values").isNotNull(),
+                F.struct(F.col("datetime").alias("t"), *tie, F.col("values").alias("v")),
             )
         )
     )
-    g = stack.groupBy(*key_cols).agg(
-        obs.alias("_obs"),
-        *[F.first(c).alias(c) for c in carry_cols
-          if c in stack.columns and c not in key_cols],
-    )
+    g = stack.groupBy(*STACK_KEY).agg(obs.alias("_obs"), *_carry_firsts(stack))
     schema = _out_schema(
         g.drop("_obs"),
         [("n_t", "int"), ("slope", "array<double>"),
@@ -490,7 +449,6 @@ def temporal_trend(
 def chip_stats(
     per_band: DataFrame,
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-    value_col: str = "values",
 ) -> DataFrame:
     """Per-chip radiometric QA: exact linear-interpolated quantiles, value
     range, null fraction and saturated-pixel count over one chip band's
@@ -505,8 +463,8 @@ def chip_stats(
     pixels — numpy's default — emitted as ``q25`` for p=0.25 etc.;
     ``at_max_px`` counts pixels equal to the chip maximum (saturation /
     clipping indicator); ``null_frac`` is nodata coverage."""
-    if value_col not in per_band.columns:
-        raise ValueError(f"chip_stats needs column {value_col!r}")
+    if "values" not in per_band.columns:
+        raise ValueError("chip_stats needs column 'values'")
     for p in probs:
         if not 0.0 <= p <= 1.0:
             raise ValueError(f"quantile prob {p} outside [0, 1]")
@@ -522,7 +480,7 @@ def chip_stats(
     def run(batches):
         for pdf in batches:
             cols: dict[str, list] = {n: [] for n, _ in extra}
-            for cell in pdf[value_col]:
+            for cell in pdf["values"]:
                 if cell is None or (
                     isinstance(cell, float) and np.isnan(cell)
                 ):
@@ -571,8 +529,6 @@ def qa_mask(
     data_band: int = 0,
     qa_band: int = 1,
     bit: int = 1,
-    key_cols: tuple[str, ...] = ("chip_id",),
-    out_col: str = "masked",
 ) -> DataFrame:
     """Bitmask QA screening — the Landsat/Sentinel cloud-mask workflow
     (QA_PIXEL / SCL band interpreted bit-wise, flagged pixels nulled out of
@@ -589,14 +545,14 @@ def qa_mask(
 
     - ``qa_flag   array<boolean>`` — true where the bit is set (null where
       the QA pixel itself is nodata),
-    - ``<out_col> array<double>``  — the data band with flagged/unknown
+    - ``masked array<double>``   — the data band with flagged/unknown
       pixels nulled,
     - ``qa_valid`` / ``qa_flagged`` / ``kept_px`` counts.
 
     Pure Catalyst after the pivot: no Python nodes, no second shuffle."""
     if not 0 <= bit <= 62:
         raise ValueError(f"qa bit {bit} outside [0, 62]")
-    p = pivot_bands(per_band, key_cols=key_cols)
+    p = pivot_bands(per_band)
     data = F.try_element_at("bands", F.lit(data_band))
     qa = F.try_element_at("bands", F.lit(qa_band))
     flag = F.transform(
@@ -619,7 +575,7 @@ def qa_mask(
             data,
             flag,
             lambda v, m: F.when(m == F.lit(False), v),
-        ).alias(out_col),
+        ).alias("masked"),
     )
     # second projection so the qa_flag/masked lambdas evaluate once
     # (Catalyst does not CSE higher-order lambdas)
@@ -630,7 +586,7 @@ def qa_mask(
         ).alias("qa_valid"),
         F.size(F.filter(F.col("qa_flag"), lambda b: b)).alias("qa_flagged"),
         F.size(
-            F.filter(F.col(out_col), lambda v: v.isNotNull())
+            F.filter(F.col("masked"), lambda v: v.isNotNull())
         ).alias("kept_px"),
     )
 
@@ -639,8 +595,6 @@ def stretch(
     per_band: DataFrame,
     p_lo: float = 0.02,
     p_hi: float = 0.98,
-    value_col: str = "values",
-    out_col: str = "stretched",
 ) -> DataFrame:
     """Robust percentile contrast stretch — the training-chip normalization
     step (clip at the p2/p98 pixel quantiles, rescale to [0, 1]) that every
@@ -664,22 +618,21 @@ def stretch(
         vhi = F.get(vals, F.ceil(idx).cast("int"))
         return F.when(n > 0, vlo + (vhi - vlo) * (idx - lo.cast("double")))
 
-    sorted_alias = f"_{out_col}_sorted"
     staged = per_band.select(
         "*",
         F.array_sort(
-            F.filter(F.col(value_col), lambda v: v.isNotNull())
-        ).alias(sorted_alias),
+            F.filter(F.col("values"), lambda v: v.isNotNull())
+        ).alias("_stretched_sorted"),
     )
-    n = F.size(F.col(sorted_alias))
+    n = F.size(F.col("_stretched_sorted"))
     cut = staged.select(
         "*",
-        _quant(F.col(sorted_alias), n, p_lo).alias("cut_lo"),
-        _quant(F.col(sorted_alias), n, p_hi).alias("cut_hi"),
-    ).drop(sorted_alias)
+        _quant(F.col("_stretched_sorted"), n, p_lo).alias("cut_lo"),
+        _quant(F.col("_stretched_sorted"), n, p_hi).alias("cut_hi"),
+    ).drop("_stretched_sorted")
     lo_c, hi_c = F.col("cut_lo"), F.col("cut_hi")
     scaled = F.transform(
-        F.col(value_col),
+        F.col("values"),
         lambda v: F.when(
             v.isNotNull(),
             F.when(
@@ -691,14 +644,14 @@ def stretch(
             ).otherwise(F.lit(0.0)),
         ),
     )
-    out = cut.select("*", scaled.alias(out_col))
+    out = cut.select("*", scaled.alias("stretched"))
     return out.select(
         "*",
         F.size(
-            F.filter(F.col(value_col), lambda v: v < lo_c)
+            F.filter(F.col("values"), lambda v: v < lo_c)
         ).alias("clip_lo_px"),
         F.size(
-            F.filter(F.col(value_col), lambda v: v > hi_c)
+            F.filter(F.col("values"), lambda v: v > hi_c)
         ).alias("clip_hi_px"),
     )
 
@@ -708,13 +661,11 @@ def chip_histogram(
     lo: float,
     hi: float,
     n_bins: int = 8,
-    value_col: str = "values",
-    prefix: str = "h",
 ) -> DataFrame:
     """Per-chip fixed-bin histogram as a ZERO-shuffle Catalyst projection —
     the distribution fingerprint used for dataset balance reports, domain
     -shift detection between acquisition batches, and histogram-matching
-    prep.  Bin k (columns ``<prefix>0 .. <prefix>{n_bins-1}``) counts valid
+    prep.  Bin k (columns ``h0 .. h{n_bins-1}``) counts valid
     pixels with ``clamp(floor((v - lo) / width), 0, n_bins - 1) == k`` —
     out-of-range pixels land in the edge bins so every valid pixel is
     counted exactly once (the numpy.histogram edge convention for clipped
@@ -738,43 +689,31 @@ def chip_histogram(
         # silently receive the array INDEX as k
         return F.size(
             F.filter(
-                F.col(value_col),
+                F.col("values"),
                 lambda v: v.isNotNull() & (_bin(v) == F.lit(k)),
             )
         )
 
-    cols = [_count_bin(k).alias(f"{prefix}{k}") for k in range(n_bins)]
+    cols = [_count_bin(k).alias(f"h{k}") for k in range(n_bins)]
     return per_band.select("*", *cols)
 
 
 def threshold_mask(
-    indexed: DataFrame,
-    index_col: str,
-    lo: float | None = None,
-    hi: float | None = None,
-    out_col: str = "mask",
+    indexed: DataFrame, index_col: str, lo: float | None = None
 ) -> DataFrame:
-    """Boolean per-pixel mask ``lo <= v <= hi`` (null pixels -> null) plus a
-    ``<out_col>_count`` of true pixels — e.g. "vegetated pixels per chip"."""
-    if lo is None and hi is None:
-        raise ValueError("need lo and/or hi")
+    """Boolean per-pixel mask ``v >= lo`` (null pixels -> null) plus a
+    ``mask_count`` of true pixels — e.g. "vegetated pixels per chip"."""
+    if lo is None:
+        raise ValueError("need lo")
 
     def pred(v: Column) -> Column:
-        c = F.lit(True)
-        if lo is not None:
-            c = c & (v >= F.lit(lo))
-        if hi is not None:
-            c = c & (v <= F.lit(hi))
-        return F.when(v.isNotNull(), c)
+        return F.when(v.isNotNull(), v >= F.lit(lo))
 
     # two projections so the predicate transform evaluates ONCE (Catalyst
     # does not CSE higher-order lambdas); the count reads the mask column
-    masked = indexed.select(
-        "*", F.transform(F.col(index_col), pred).alias(out_col)
-    )
+    masked = indexed.select("*", F.transform(F.col(index_col), pred).alias("mask"))
     return masked.select(
-        "*",
-        F.size(F.filter(F.col(out_col), lambda b: b)).alias(f"{out_col}_count"),
+        "*", F.size(F.filter(F.col("mask"), lambda b: b)).alias("mask_count")
     )
 
 

@@ -112,18 +112,17 @@ def slice_time_steps(
     t_start=None,
     t_end=None,
     t_step: int = 1,
-    ts_col: str = "datetime",
 ) -> DataFrame:
     """Interval time filter + step slicing over per-chip candidates (light
     columns): keep rows with ``t_start <= ts <= t_end``, then per chip every
     ``t_step``-th in (ts, image_id) order — the adapter's temporal-overlap
     filter + ``iloc[::t_step]`` (`torchgeo.py:1016-1025`)."""
     if t_start is not None:
-        cands = cands.filter(F.col(ts_col) >= F.lit(t_start))
+        cands = cands.filter(F.col("datetime") >= F.lit(t_start))
     if t_end is not None:
-        cands = cands.filter(F.col(ts_col) <= F.lit(t_end))
+        cands = cands.filter(F.col("datetime") <= F.lit(t_end))
     if t_step > 1:
-        w = Window.partitionBy("chip_id").orderBy(F.col(ts_col).asc(), F.col("image_id").asc())
+        w = Window.partitionBy("chip_id").orderBy(F.col("datetime").asc(), F.col("image_id").asc())
         cands = (
             cands.withColumn("_rn", F.row_number().over(w))
             .filter(F.pmod(F.col("_rn") - 1, F.lit(int(t_step))) == 0)
@@ -142,7 +141,6 @@ def chip_serve(
     bands: tuple[int, ...] | list[int] = (0,),
     method: str = "nearest",
     max_images_per_chip: int | None = rmo.DEFAULT_MAX_IMAGES_PER_CHIP,
-    res: int = 7,
 ) -> DataFrame:
     """Serve [T, C, H, W] chip stacks for a chip-request table.
 
@@ -162,7 +160,8 @@ def chip_serve(
     once to size and local-checkpoint the grouped side
     (``decode.grouped_side_choice``).
     """
-    cands = rmo._light_candidates(chips, images_light, images, res)
+    # cell resolution 7, as in raster_mosaic.chip_candidates
+    cands = rmo._light_candidates(chips, images_light, images, 7)
     cands = slice_time_steps(cands, t_start, t_end, t_step)
     pairs = rmo._capped_payload(cands, images, max_images_per_chip)
     return rmo.chip_stack_pixels(pairs, bands=bands, method=method)

@@ -213,6 +213,30 @@ def grouped_side_choice(agg: DataFrame, list_col: str) -> tuple[DataFrame, bool]
     return agg, int(n_pairs) <= BROADCAST_PAIRS_LIMIT
 
 
+def join_grouped_side(
+    images: DataFrame, probes: DataFrame, fields: list[str], list_col: str
+) -> DataFrame:
+    """The blob pipelines' one grouped-side join (zonal AOIs, sample
+    points, chip candidates): ``probes`` grouped per image_id into a
+    ``list_col`` of ``fields`` structs — light columns, a small shuffle —
+    joined to ``images`` (image_id + the payload columns the kernel reads).
+
+    Building it runs the candidate join once: the grouped side is
+    local-checkpointed and its pair count picks the join
+    (``grouped_side_choice``).  At or below ``BROADCAST_PAIRS_LIMIT`` pairs
+    the grouped side broadcasts, so the kernel fuses with the image scan
+    and blobs never shuffle.  Above it both sides hash-partition on
+    image_id into ``_decode_parallelism`` partitions before a sort-merge
+    join: each blob crosses exactly one exchange, and the decode still
+    spreads over every core."""
+    agg = probes.groupBy("image_id").agg(F.collect_list(F.struct(*fields)).alias(list_col))
+    agg, use_broadcast = grouped_side_choice(agg, list_col)
+    if use_broadcast:
+        return images.join(F.broadcast(agg), "image_id")
+    n = _decode_parallelism(images)
+    return images.repartition(n, "image_id").join(agg.repartition(n, "image_id"), "image_id")
+
+
 def _decode_parallelism(df: DataFrame) -> int:
     """Decode stages are compute-bound, not byte-bound: AQE's size-based
     partition coalescing would pack a whole image table (tiny in bytes,
@@ -305,27 +329,16 @@ def zonal_stats(
 
     Building the plan runs the candidate join once: the grouped AOI side is
     local-checkpointed, and its pair count, observed while the checkpoint is
-    written, picks broadcast vs shuffle join (``grouped_side_choice``).
+    written, picks broadcast vs shuffle join (``join_grouped_side``).
     """
-    agg = pairs.groupBy("image_id").agg(
-        F.collect_list(
-            F.struct("aoi_id", "aoi_geometry", "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax")
-        ).alias("_aois")
-    )
     # with pre-enriched ``meta`` the per-window header reads disappear
     has_meta = "meta" in images.columns
     payload_col, open_blob = blob_source(images)
     cols = ["image_id", payload_col, "caption"] + (["meta"] if has_meta else [])
-    agg, use_broadcast = grouped_side_choice(agg, "_aois")
-    if use_broadcast:
-        # the grouped AOI side is small next to the blobs (size-guarded):
-        # broadcast it so the decode fuses with the image scan — blobs NEVER
-        # shuffle.  Above the pair bound the plan switches to the shuffle
-        # join below automatically.
-        src = images.select(*cols).join(F.broadcast(agg), "image_id")
-    else:
-        src = images.select(*cols).join(agg, "image_id")
-        src = src.repartition(_decode_parallelism(src), "image_id")
+    src = join_grouped_side(
+        images.select(*cols), pairs,
+        ["aoi_id", "aoi_geometry", "aoi_xmin", "aoi_ymin", "aoi_xmax", "aoi_ymax"], "_aois",
+    )
 
     want_bands = tuple(bands) if bands is not None else (0,)
 

@@ -39,14 +39,18 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _shingles(text_col: str, n: int = 3) -> F.Column:
-    """Word n-gram shingles as an array column (native)."""
+SHINGLE_N = 3  # words per shingle
+
+
+def _shingles(text_col: str) -> F.Column:
+    """Word ``SHINGLE_N``-gram shingles as an array column (native)."""
     # explicit whitespace class: Java \s includes \x0B, RE2 (the DuckDB
     # oracles) does not — keep both engines byte-identical on any input
     toks = F.split(
         F.trim(F.lower(F.regexp_replace(F.col(text_col), r"[ \t\n\x0B\f\r]+", " "))),
         " ",
     )
+    n = SHINGLE_N
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
@@ -54,7 +58,7 @@ def _shingles(text_col: str, n: int = 3) -> F.Column:
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_perm: int = 16, shingle_n: int = 3
+    df: DataFrame, text_col: str, id_col: str, num_perm: int = 16
 ) -> DataFrame:
     """(id, signature array<long>) — entirely JVM-native.
 
@@ -66,7 +70,7 @@ def minhash_signatures(
     partial-combine map-side: the shuffle carries ~n_docs rows per
     partition, not n_docs x n_shingles x num_perm."""
     ex = _spread(df).select(
-        F.col(id_col).alias("_id"), F.explode(_shingles(text_col, shingle_n)).alias("_sh")
+        F.col(id_col).alias("_id"), F.explode(_shingles(text_col)).alias("_sh")
     ).withColumn("_h", F.xxhash64(F.col("_sh")))
     mins = ex.groupBy("_id").agg(
         *[
@@ -87,7 +91,6 @@ def minhash_lsh_pairs(
     num_perm: int = 16,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH, verified with exact shingle
     Jaccard.  Returns (id_a, id_b, jaccard) with id_a < id_b.
@@ -96,7 +99,7 @@ def minhash_lsh_pairs(
     (self-join on band hash; AQE handles bucket skew) -> exact verify on the
     pair's shingle sets (array_intersect/array_union — native)."""
     rows_per_band = num_perm // bands
-    sig = minhash_signatures(df, text_col, id_col, num_perm, shingle_n)
+    sig = minhash_signatures(df, text_col, id_col, num_perm)
     banded = sig.withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))).select(
         F.col(id_col),
         "band",
@@ -126,7 +129,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     sh = _spread(df).join(need, id_col, "left_semi").select(
-        F.col(id_col), F.array_distinct(_shingles(text_col, shingle_n)).alias("sh")
+        F.col(id_col), F.array_distinct(_shingles(text_col)).alias("sh")
     )
     pairs = (
         cand.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -143,11 +146,11 @@ def minhash_lsh_pairs(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float, shingle_n: int = 3
+    df: DataFrame, text_col: str, id_col: str, threshold: float
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard >= threshold (brute verify path /
     oracle for the LSH variant).  O(n^2) — small inputs or post-bucket only."""
-    sh = df.select(F.col(id_col), F.array_distinct(_shingles(text_col, shingle_n)).alias("sh"))
+    sh = df.select(F.col(id_col), F.array_distinct(_shingles(text_col)).alias("sh"))
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -221,7 +224,7 @@ def hash64_str(s: str) -> int:
 
 
 def simhash_near_dups(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3, block_bits: int = 16
+    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs by simhash hamming distance <= max_hamming.
 
@@ -229,10 +232,8 @@ def simhash_near_dups(
     on at least one band — pigeonhole), equi-join per band, verify hamming via
     bit_count(xor).  Native join + bit ops; only the signature is a UDF."""
     sh = _spread(df).select(F.col(id_col), simhash_udf()(F.col(text_col)).alias("sim"))
-    bands = 64 // block_bits
-    mask = (1 << block_bits) - 1
-    banded = sh.withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))).withColumn(
-        "key", F.expr(f"shiftright(sim, band * {block_bits}) & {mask}")
+    banded = sh.withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(3)))).withColumn(
+        "key", F.expr("shiftright(sim, band * 16) & 65535")
     )
     a, b = banded.alias("a"), banded.alias("b")
     return (

@@ -51,6 +51,10 @@ META_STRUCT = T.StructType(META_FIELDS)
 
 
 HEADER_PREFIX = 16384  # speculative first read, like the reference's 16 KiB
+# a header that does not fit the prefix parses to this all-null row, which
+# enrich_headers turns into a null ``meta`` (a pandas struct UDF cannot
+# return a null struct itself)
+_NO_META = dict.fromkeys(f.name for f in META_FIELDS)
 
 
 @F.pandas_udf(returnType=META_STRUCT)
@@ -64,60 +68,41 @@ def parse_header_udf(prefixes: pd.Series) -> pd.DataFrame:
         if container is not None:  # tiled/stripped (Geo)TIFF or BigTIFF
             try:
                 tm = tiff.parse_tiff(tiff.prefix_read(prefix))
-            except tiff.NeedBytes as nb:
-                raise ValueError(
-                    f"TIFF header walk needs bytes up to offset "
-                    f"{nb.offset + nb.size} but only {len(prefix)} were read "
-                    "— raise enrich_headers(prefix=...)"
-                ) from nb
+            except tiff.NeedBytes:
+                rows.append(_NO_META)
+                continue
             rows.append(tiff.to_engine_meta(tm).to_row())
             continue
         need = mr.header_len_from_prefix(prefix[:8])
-        if need > len(prefix):
-            raise ValueError(
-                f"header needs {need} bytes but only {len(prefix)} were read — "
-                "raise enrich_headers(prefix=...)"
-            )
-        rows.append(mr.parse_header(prefix[:need]).to_row())
-    return pd.DataFrame(rows)
+        rows.append(_NO_META if need > len(prefix) else mr.parse_header(prefix[:need]).to_row())
+    return pd.DataFrame(rows, columns=list(_NO_META))
 
 
-def enrich_headers(
-    df: DataFrame, bytes_col: str = "bytes", out_col: str = "meta",
-    prefix: int = HEADER_PREFIX,
-) -> DataFrame:
+def enrich_headers(df: DataFrame) -> DataFrame:
     """Add the parsed-header ``meta`` struct column (one parse per row).
 
-    Only the first ``prefix`` bytes cross the Arrow boundary: the substring
-    projection runs JVM-side, so the full blob column never ships to Python
-    — the distributed analogue of the reference's progressive ranged header
-    read (`src/rasteret/fetch/header_parser.py:276-300`), and the difference
-    between moving ~KBs and ~MBs per image through serialization."""
-    return df.withColumn(
-        out_col, parse_header_udf(F.substring(F.col(bytes_col), 1, prefix))
+    Only the first ``HEADER_PREFIX`` bytes of ``bytes`` cross the Arrow
+    boundary: the substring projection runs JVM-side, so the full blob
+    column never ships to Python — the distributed analogue of the
+    reference's progressive ranged header read
+    (`src/rasteret/fetch/header_parser.py:276-300`), and the difference
+    between moving ~KBs and ~MBs per image through serialization.  A header
+    longer than the prefix gives a null ``meta``: the readers then parse the
+    header from the blob itself, so the row still decodes."""
+    parsed = df.withColumn(
+        "meta", parse_header_udf(F.substring(F.col("bytes"), 1, HEADER_PREFIX))
     )
+    # a second projection so the UDF output is read, not re-evaluated
+    return parsed.withColumn("meta", F.when(F.col("meta.width").isNotNull(), F.col("meta")))
 
 
-def validate_contract(df: DataFrame, required: tuple[str, ...] = (
-    "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-)) -> DataFrame:
-    """Schema-contract assertion (rasteret validates required columns at load,
-    `src/rasteret/core/collection.py:975-981`)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise ValueError(f"input table missing required columns: {missing}")
-    return df
-
-
-def enrich_headers_remote(
-    df: DataFrame, url_col: str = "href", out_col: str = "meta",
-) -> DataFrame:
+def enrich_headers_remote(df: DataFrame) -> DataFrame:
     """Header-cache enrichment over RANGED fetches: each row's header parses
     through a handful of ranged reads against its href — KBs per image, no
     blob column, no downloads (the reference's progressive remote header
     parse, `src/rasteret/fetch/header_parser.py:239-300`, distributed).
 
-    Adds ``out_col`` (META_STRUCT, null on failure) and ``enrich_status``
+    Adds ``meta`` (META_STRUCT, null on failure) and ``enrich_status``
     ('ok' or the quarantined error).  Works for every registered ranged
     scheme (file://, http(s)://, injected test fakes)."""
     from rasteret_spark.format import container
@@ -127,18 +112,18 @@ def enrich_headers_remote(
     schema = T.StructType(
         list(df.schema.fields)
         + [
-            T.StructField(out_col, META_STRUCT),
+            T.StructField("meta", META_STRUCT),
             T.StructField("enrich_status", T.StringType()),
         ]
     )
-    df = df.repartition(_decode_parallelism(df), url_col)
+    df = df.repartition(_decode_parallelism(df), "href")
     readers = dict(_RANGED_READERS)  # snapshot: driver-registered schemes
     # must travel to executors by closure, like fetch_blobs' fetchers
 
     def run(batches):
         for pdf in batches:
             metas, status = [], []
-            for url in pdf[url_col]:
+            for url in pdf["href"]:
                 try:
                     em = container.parse_any(RangedBlob(str(url), readers))
                     metas.append(em.to_row())
@@ -147,7 +132,7 @@ def enrich_headers_remote(
                     metas.append(None)
                     status.append(_err_status(e))
             out = pdf.copy()
-            out[out_col] = metas
+            out["meta"] = metas
             out["enrich_status"] = status
             yield out
 

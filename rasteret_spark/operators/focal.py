@@ -62,7 +62,6 @@ def focal_stats(
     per_band: DataFrame,
     stat: str = "mean",
     radius: int = 1,
-    value_col: str = "values",
     out_col: str | None = None,
 ) -> DataFrame:
     """Moving-window statistic per pixel (focal mean/min/max/sum/count).
@@ -76,9 +75,9 @@ def focal_stats(
         raise ValueError(f"unknown focal stat {stat!r} (one of {FOCAL_STATS})")
     if radius < 1:
         raise ValueError("radius must be >= 1")
-    _require(per_band, value_col)
+    _require(per_band, "values")
     return _arrow_map(
-        per_band, value_col, out_col or f"focal_{stat}",
+        per_band, "values", out_col or f"focal_{stat}",
         lambda row, a: ak.focal_stat_2d(a, stat, radius),
     )
 
@@ -87,8 +86,6 @@ def convolve(
     per_band: DataFrame,
     kernel,
     normalize: bool = False,
-    value_col: str = "values",
-    out_col: str = "conv",
 ) -> DataFrame:
     """2-D convolution with an arbitrary odd-sized square kernel.
 
@@ -100,9 +97,9 @@ def convolve(
     size = len(k)
     if size % 2 != 1 or size < 3 or any(len(row) != size for row in k):
         raise ValueError("kernel must be square with odd size >= 3")
-    _require(per_band, value_col)
+    _require(per_band, "values")
     return _arrow_map(
-        per_band, value_col, out_col,
+        per_band, "values", "conv",
         lambda row, a: ak.convolve_2d(a, k, normalize),
     )
 
@@ -162,10 +159,7 @@ def terrain(
     )
 
 
-def spatial_stats(
-    per_band: DataFrame,
-    value_col: str = "values",
-) -> DataFrame:
+def spatial_stats(per_band: DataFrame) -> DataFrame:
     """Per-chip spatial autocorrelation: Moran's I and Geary's C under
     rook contiguity (unit weights between orthogonally adjacent VALID
     pixels, no edge wrap, no replicate padding) — the texture/clustering
@@ -179,7 +173,7 @@ def spatial_stats(
     transcendentals — every sum folds in a fixed (pixel-major, then
     N/S/W/E offset) order, so independent mirrors reproduce the floats
     bit-exactly."""
-    _require(per_band, value_col)
+    _require(per_band, "values")
 
     def row_fn(row, arr2d):
         if arr2d is None:
@@ -191,7 +185,7 @@ def spatial_stats(
         per_band,
         [("n_valid", "int"), ("w_pairs", "bigint"),
          ("morans_i", "double"), ("gearys_c", "double")],
-        row_fn, value_col=value_col,
+        row_fn,
     )
 
 

@@ -23,11 +23,10 @@ from pyspark.sql import functions as F  # noqa: N812
 from rasteret_spark.operators.spatial_join import _axis_cell, _n, _q, cell_of_point_col, pack_cell
 
 
-def _ring_cells(
-    df: DataFrame, x: str, y: str, res: int, k: int, out: str = "cell", inner: int = 0
-) -> DataFrame:
-    """Explode each probe into the cells with Chebyshev distance in
-    ``[inner, k]`` — native sequence/explode (lon wrap, lat clamp), no UDF.
+def _ring_cells(df: DataFrame, res: int, k: int, inner: int = 0) -> DataFrame:
+    """Explode each probe (``x``, ``y``) into the cells with Chebyshev
+    distance in ``[inner, k]`` — native sequence/explode (lon wrap, lat
+    clamp), no UDF.
 
     ``inner > 0`` yields only the NEW shell between two expansion rounds, so
     round r never re-scans the (2k+1)^2 disk already examined by round r-1.
@@ -38,42 +37,36 @@ def _ring_cells(
     shell = f"greatest(abs(_dx), abs(_dy)) >= {inner} AND " if inner > 0 else ""
     return (
         df.selectExpr(
-            *keep, f"{_axis_cell(_q(x), 180.0, res)} AS _cix",
-            f"{_axis_cell(_q(y), 90.0, res)} AS _ciy", f"{span} AS _dx",
+            *keep, f"{_axis_cell('x', 180.0, res)} AS _cix",
+            f"{_axis_cell('y', 90.0, res)} AS _ciy", f"{span} AS _dx",
         )
         .selectExpr(*keep, "_cix", "_ciy", "_dx", f"{span} AS _dy")
         .filter(f"{shell}_ciy + _dy >= 0 AND _ciy + _dy < {n}")
-        .selectExpr(*keep, f"{pack_cell(res, f'pmod(_cix + _dx, {n})', '_ciy + _dy')} AS {_q(out)}")
+        .selectExpr(*keep, f"{pack_cell(res, f'pmod(_cix + _dx, {n})', '_ciy + _dy')} AS cell")
     )
 
 
-def _dist2(px: str, py: str, tx: str, ty: str) -> F.Column:
-    dx = F.col(px) - F.col(tx)
-    dy = F.col(py) - F.col(ty)
+def _dist2() -> F.Column:
+    dx = F.col("x") - F.col("tx")
+    dy = F.col("y") - F.col("ty")
     return dx * dx + dy * dy
 
 
-def knn_bruteforce(
-    probes: DataFrame,
-    targets: DataFrame,
-    k: int,
-    probe_id: str = "point_index",
-    target_id: str = "target_id",
-    px: str = "x",
-    py: str = "y",
-    tx: str = "tx",
-    ty: str = "ty",
-) -> DataFrame:
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The ``k`` nearest targets per probe (ties by ascending target id)."""
+    w = Window.partitionBy("point_index").orderBy(F.col("dist2").asc(), F.col("target_id").asc())
+    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+OUT_COLS = ("point_index", "target_id", "dist2", "rank")
+
+
+def knn_bruteforce(probes: DataFrame, targets: DataFrame, k: int) -> DataFrame:
     """Exact kNN by cross join + window top-k (baseline / oracle path).
-    Output: probe_id, target_id, dist2, rank."""
-    j = probes.select(probe_id, px, py).crossJoin(targets.select(target_id, tx, ty))
-    j = j.withColumn("dist2", _dist2(px, py, tx, ty))
-    w = Window.partitionBy(probe_id).orderBy(F.col("dist2").asc(), F.col(target_id).asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, target_id, "dist2", "rank")
-    )
+    Probes carry ``point_index, x, y``, targets ``target_id, tx, ty``.
+    Output: point_index, target_id, dist2, rank."""
+    j = probes.select("point_index", "x", "y").crossJoin(targets.select("target_id", "tx", "ty"))
+    return _top_k(j.withColumn("dist2", _dist2()), k).select(*OUT_COLS)
 
 
 def knn_cells(
@@ -81,29 +74,22 @@ def knn_cells(
     targets: DataFrame,
     k: int,
     res: int = 6,
-    start_ring: int = 1,
-    max_ring: int | None = None,
-    probe_id: str = "point_index",
-    target_id: str = "target_id",
-    px: str = "x",
-    py: str = "y",
-    tx: str = "tx",
-    ty: str = "ty",
     stats: dict | None = None,
 ) -> DataFrame:
     """Exact kNN via iterative k-ring expansion at cell resolution ``res``.
+    Probes carry ``point_index, x, y``, targets ``target_id, tx, ty``.
 
     Scale discipline (each round is bounded, nothing re-executes):
 
-      * round 1 joins the start-ring disk; every later round joins ONLY the
+      * round 1 joins the ring-1 disk; every later round joins ONLY the
         new ring shell (``_ring_cells(inner=prev+1)``) — the already-scanned
         disk is never re-joined;
       * the per-round frontier (pending probes) and their accumulated top-k
         candidates are ``localCheckpoint``-ed, truncating lineage so the
         per-round driver decision (a count) and the final action never
         re-execute earlier rounds' joins;
-      * the expansion is capped at ``min(max_ring, n/4)`` rings (wrap-safe:
-        2k+1 <= n always holds) — stragglers past the cap fall back to the
+      * the expansion is capped at ``n/4`` rings (wrap-safe: 2k+1 <= n
+        always holds) — stragglers past the cap fall back to the
         brute-force join, which for a handful of far-from-everything probes
         is the cheaper plan anyway.
 
@@ -113,56 +99,42 @@ def knn_cells(
     """
     n = _n(res)
     cell_h = 180.0 / n  # guaranteed coverage radius unit (smaller extent)
-    ring_cap = max(1, n // 4) if max_ring is None else min(max_ring, max(1, n // 4))
+    ring_cap = max(1, n // 4)
 
-    t_cells = targets.select(target_id, tx, ty).withColumn(
-        "cell", F.expr(cell_of_point_col(_q(tx), _q(ty), res))
+    t_cells = targets.select("target_id", "tx", "ty").withColumn(
+        "cell", F.expr(cell_of_point_col("tx", "ty", res))
     )
     t_cells = t_cells.persist()
 
-    pending = probes.select(probe_id, px, py).localCheckpoint(eager=False)
+    pending = probes.select("point_index", "x", "y").localCheckpoint(eager=False)
     pending_topk = None  # accumulated candidates of still-pending probes
     done_parts: list[DataFrame] = []
-    ring, prev_ring, rounds, n_brute = start_ring, 0, 0, 0
+    ring, prev_ring, rounds, n_brute = 1, 0, 0, 0
     while True:
         rounds += 1
-        shell = _ring_cells(
-            pending, px, py, res, ring, inner=(prev_ring + 1 if prev_ring else 0)
-        )
-        new_cand = (
-            shell.join(t_cells, "cell")
-            .drop("cell")
-            .withColumn("dist2", _dist2(px, py, tx, ty))
-        )
+        shell = _ring_cells(pending, res, ring, inner=(prev_ring + 1 if prev_ring else 0))
+        new_cand = shell.join(t_cells, "cell").drop("cell").withColumn("dist2", _dist2())
         cand = new_cand if pending_topk is None else pending_topk.unionByName(new_cand)
-        w = Window.partitionBy(probe_id).orderBy(F.col("dist2").asc(), F.col(target_id).asc())
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .localCheckpoint()  # eager: one materialization per round
-        )
+        topk = _top_k(cand, k).localCheckpoint()  # eager: one materialization per round
         guaranteed = (ring * cell_h) ** 2
-        agg = topk.groupBy(probe_id).agg(
+        agg = topk.groupBy("point_index").agg(
             F.count("*").alias("_cnt"), F.max("dist2").alias("_maxd")
         )
         done_ids = agg.filter((F.col("_cnt") >= k) & (F.col("_maxd") <= guaranteed)).select(
-            probe_id
+            "point_index"
         )
         # both splits read the checkpointed topk — no join re-execution
         done_parts.append(
-            topk.join(F.broadcast(done_ids), probe_id, "left_semi").select(
-                probe_id, target_id, "dist2", "rank"
-            )
+            topk.join(F.broadcast(done_ids), "point_index", "left_semi").select(*OUT_COLS)
         )
-        pending = pending.join(F.broadcast(done_ids), probe_id, "left_anti").localCheckpoint()
+        pending = pending.join(F.broadcast(done_ids), "point_index", "left_anti").localCheckpoint()
         if pending.isEmpty():
             break
-        pending_topk = topk.join(F.broadcast(done_ids), probe_id, "left_anti").drop("rank")
+        pending_topk = topk.join(F.broadcast(done_ids), "point_index", "left_anti").drop("rank")
         prev_ring, ring = ring, ring * 2
         if ring > ring_cap:
-            rest = knn_bruteforce(pending, targets, k, probe_id, target_id, px, py, tx, ty)
             n_brute = 1
-            done_parts.append(rest.select(probe_id, target_id, "dist2", "rank"))
+            done_parts.append(knn_bruteforce(pending, targets, k))
             break
     t_cells.unpersist()
     if stats is not None:
@@ -171,4 +143,4 @@ def knn_cells(
     results = done_parts[0]
     for part in done_parts[1:]:
         results = results.unionByName(part)
-    return results.select(probe_id, target_id, "dist2", "rank")
+    return results.select(*OUT_COLS)

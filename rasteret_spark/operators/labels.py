@@ -84,19 +84,14 @@ def burn_mask(
     return mask, contributing
 
 
-def class_stats(
-    masks: DataFrame,
-    pixels: DataFrame,
-    value_col: str = "values",
-    mask_col: str = "mask",
-) -> DataFrame:
+def class_stats(masks: DataFrame, pixels: DataFrame) -> DataFrame:
     """Class-stratified pixel statistics over (imagery, label) pairs — the
     training-data QA surface (class balance, per-class radiometry) for the
     masks :func:`label_masks` produces and the pixel rows the mosaic/stack
     kernels produce on the SAME grid.
 
     ``masks``: (chip_id, mask array<int>) rows.  ``pixels``: (chip_id, band,
-    ``value_col`` array<double>) rows (MOSAIC/CHIP_STACK shape).  Output:
+    ``values`` array<double>) rows (MOSAIC/CHIP_STACK shape).  Output:
     one row per (chip_id, band, class_id) with n_px (pixels of the class),
     n_valid (with a non-null value), v_sum / v_mean over the valid ones.
 
@@ -106,7 +101,7 @@ def class_stats(
     emits K rows per chip (not H x W), and the only data movement is the
     chip-keyed equi-join.  A null mask emits no rows."""
     j_in = pixels.join(
-        masks.select("chip_id", F.col(mask_col).alias("_mask")), "chip_id"
+        masks.select("chip_id", F.col("mask").alias("_mask")), "chip_id"
     )
     carry_a = [c for c in ("chip_id", "band") if c in pixels.columns]
     # per-class sums accumulate the valid pixels in array order (cumsum's
@@ -116,7 +111,7 @@ def class_stats(
         + ["class_id int", "n_px int", "n_valid int",
            "v_sum double", "v_mean double"]
     )
-    sel_cols = carry_a + [value_col, "_mask"]
+    sel_cols = carry_a + ["values", "_mask"]
 
     def run(batches):
         for pdf in batches:
@@ -128,7 +123,7 @@ def class_stats(
                 if m_cell is None:
                     continue
                 m = np.asarray(m_cell, dtype=np.int64)
-                v_cell = pdf[value_col].iloc[i]
+                v_cell = pdf["values"].iloc[i]
                 v = np.full(m.size, np.nan)
                 if v_cell is not None:
                     va = np.asarray(v_cell, dtype=np.float64)
@@ -158,7 +153,6 @@ def label_masks(
     aois: DataFrame,
     class_col: str = "crop",
     classes: list[str] | None = None,
-    res: int = 7,
 ) -> DataFrame:
     """Per-chip segmentation label masks from an AOI polygon table.
 
@@ -201,7 +195,7 @@ def label_masks(
     # candidate join on LIGHT columns only; the polygon WKB payload joins
     # AFTER the candidate filter (never rides the cell-cover explode —
     # same rule as image blobs in every other spatial path)
-    pairs = bbox_join(cb, a_light, res=res, img_prefix="cgrid").select(
+    pairs = bbox_join(cb, a_light, res=7, img_prefix="cgrid").select(
         *CHIP_COLS, *extra, "aoi_id", "_cls"
     ).join(
         aois.select("aoi_id", F.col("geometry").alias("_wkb")), "aoi_id"

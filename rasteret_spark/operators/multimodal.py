@@ -148,10 +148,7 @@ def sniff_kind(blob: bytes) -> str:
     return _sniff(blob, MEDIA_MAGIC)
 
 
-def classify_media(
-    df: DataFrame, bytes_col: str = "bytes",
-    magic: tuple[tuple[bytes, str], ...] | None = None,
-) -> DataFrame:
+def classify_media(df: DataFrame) -> DataFrame:
     """Cheap magic-byte sniffing -> media metadata struct (native exprs).
 
     Prefixes are compared on the BINARY column directly — casting the blob
@@ -160,28 +157,24 @@ def classify_media(
     ``MEDIA_MAGIC`` table ``sniff_kind`` consults, in the same order — the
     two classifiers cannot drift.
 
-    ``magic`` pins an explicit prefix-table snapshot into the plan; by
-    default the module table is snapshotted AT BUILD TIME (a registration
-    after the plan is built never silently alters it — pass the new
-    snapshot explicitly to opt in)."""
-    magic = MEDIA_MAGIC if magic is None else tuple(magic)
+    The module table is snapshotted AT BUILD TIME: a registration after the
+    plan is built never silently alters it."""
     expr = None
-    for pattern, kind in magic:
+    for pattern, kind in MEDIA_MAGIC:
         cond = None
         for off, probe in _probes(pattern):
             # substring is 1-based; compares run on the BINARY column
-            c = F.substring(F.col(bytes_col), off + 1, len(probe)) == F.lit(probe)
+            c = F.substring(F.col("bytes"), off + 1, len(probe)) == F.lit(probe)
             cond = c if cond is None else cond & c
         expr = F.when(cond, F.lit(kind)) if expr is None else expr.when(cond, F.lit(kind))
     expr = F.lit("unknown") if expr is None else expr.otherwise(F.lit("unknown"))
     return df.withColumn("media_kind", expr).withColumn(
-        "media_bytes", F.length(F.col(bytes_col))
+        "media_bytes", F.length(F.col("bytes"))
     )
 
 
 def decode_resize(
-    df: DataFrame, out_h: int, out_w: int, bytes_col: str = "bytes",
-    id_col: str = "image_id",
+    df: DataFrame, out_h: int, out_w: int,
     decoders: dict[str, Callable[[bytes], np.ndarray]] | None = None,
     magic: tuple[tuple[bytes, str], ...] | None = None,
 ) -> DataFrame:
@@ -189,9 +182,7 @@ def decode_resize(
     pixels as array<double> plus shape metadata and a status column.  Decode
     dispatches through the registry; a kind with no registered decoder (or a
     kernel failure) yields a quarantine row — never a task failure."""
-    schema = (
-        f"{id_col} string, out_h int, out_w int, pixels array<double>, status string"
-    )
+    schema = "image_id string, out_h int, out_w int, pixels array<double>, status string"
     # explicit snapshots beat module globals: both registries are pinned
     # into the plan AT BUILD TIME (late registrations cannot retroactively
     # change a built plan; inject updated snapshots to opt in)
@@ -201,7 +192,7 @@ def decode_resize(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for rid, blob in zip(pdf[id_col], pdf[bytes_col]):
+            for rid, blob in zip(pdf["image_id"], pdf["bytes"]):
                 try:
                     blob = bytes(blob)
                     kind = _sniff(blob, magic)
@@ -217,7 +208,7 @@ def decode_resize(
                     xs = (np.arange(out_w) * arr.shape[1] / out_w).astype(int)
                     out.append(
                         {
-                            id_col: rid,
+                            "image_id": rid,
                             "out_h": out_h,
                             "out_w": out_w,
                             "pixels": arr[np.ix_(ys, xs)].ravel().tolist(),
@@ -227,23 +218,19 @@ def decode_resize(
                 except Exception as e:  # quarantine row, not a task failure
                     out.append(
                         {
-                            id_col: rid, "out_h": out_h, "out_w": out_w,
+                            "image_id": rid, "out_h": out_h, "out_w": out_w,
                             "pixels": None, "status": _err_status(e),
                         }
                     )
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col).mapInPandas(run, schema=schema)
+    return df.select("image_id", "bytes").mapInPandas(run, schema=schema)
 
 
 FEATURE_DIM = 22  # 6 z-space stats + 4x4 coarse z-mean grid
 
 
-def extract_features(
-    df: DataFrame, bytes_col: str = "bytes", id_col: str = "image_id",
-    decoders: dict[str, Callable[[bytes], np.ndarray]] | None = None,
-    magic: tuple[tuple[bytes, str], ...] | None = None,
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Deterministic fixed-dim feature vector per media row — the
     feature-extract stage of a training-data pipeline (decode -> descriptor
     -> ANN/dedup over the descriptor).  Decode dispatches through the same
@@ -255,14 +242,14 @@ def extract_features(
     raw mean/std are deliberately excluded (they'd make unrelated images
     near-parallel).  Rotation-variant by design: dedup wants exact layout
     similarity, not invariance."""
-    schema = f"{id_col} string, features array<double>, status string"
-    decoders = dict(_DECODERS) if decoders is None else dict(decoders)
-    magic = MEDIA_MAGIC if magic is None else tuple(magic)
+    schema = "image_id string, features array<double>, status string"
+    # both registries are snapshotted into the plan AT BUILD TIME
+    decoders, magic = dict(_DECODERS), MEDIA_MAGIC
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for rid, blob in zip(pdf[id_col], pdf[bytes_col]):
+            for rid, blob in zip(pdf["image_id"], pdf["bytes"]):
                 try:
                     blob = bytes(blob)
                     kind = _sniff(blob, magic)
@@ -295,20 +282,16 @@ def extract_features(
                         for c in [z[ys[i]:ys[i + 1], xs[j]:xs[j + 1]]]
                     ]
                     feats = [*q.tolist(), grad, *cells]
-                    out.append({id_col: rid, "features": feats, "status": "ok"})
+                    out.append({"image_id": rid, "features": feats, "status": "ok"})
                 except Exception as e:
-                    out.append({id_col: rid, "features": None,
+                    out.append({"image_id": rid, "features": None,
                                 "status": _err_status(e)})
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col).mapInPandas(run, schema=schema)
+    return df.select("image_id", "bytes").mapInPandas(run, schema=schema)
 
 
-def frame_sample(
-    df: DataFrame, every_n: int = 10, bytes_col: str = "bytes",
-    id_col: str = "image_id",
-    magic: tuple[tuple[object, str], ...] | None = None,
-) -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling: one output row per sampled frame.
 
     REAL for MJPEG-AVI blobs — the RIFF ``movi`` walk yields JPEG streams
@@ -318,13 +301,13 @@ def frame_sample(
     one-"frame"-per-tile-row proxy stream, so the same plan shape covers
     tables mixing media kinds; undecodable rows quarantine with
     frame_no = -1 rather than failing the task."""
-    schema = f"{id_col} string, frame_no int, frame_mean double, status string"
-    magic = MEDIA_MAGIC if magic is None else tuple(magic)
+    schema = "image_id string, frame_no int, frame_mean double, status string"
+    magic = MEDIA_MAGIC  # snapshotted AT BUILD TIME
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for rid, blob in zip(pdf[id_col], pdf[bytes_col]):
+            for rid, blob in zip(pdf["image_id"], pdf["bytes"]):
                 try:
                     blob = bytes(blob)
                     kind = _sniff(blob, magic)
@@ -333,7 +316,7 @@ def frame_sample(
                             if fno % every_n:
                                 continue
                             g = _to_gray(jpegcodec.decode(frame))
-                            out.append({id_col: rid, "frame_no": fno,
+                            out.append({"image_id": rid, "frame_no": fno,
                                         "frame_mean": float(g.mean()),
                                         "status": "ok"})
                     else:  # raster proxy: one "frame" per tile row
@@ -343,12 +326,12 @@ def frame_sample(
                                 blob, meta, 0, fno * meta.tile_h,
                                 meta.width, meta.tile_h,
                             )
-                            out.append({id_col: rid, "frame_no": fno,
+                            out.append({"image_id": rid, "frame_no": fno,
                                         "frame_mean": float(strip.mean()),
                                         "status": "ok"})
                 except Exception as e:  # quarantine, not a task failure
-                    out.append({id_col: rid, "frame_no": -1,
+                    out.append({"image_id": rid, "frame_no": -1,
                                 "frame_mean": None, "status": _err_status(e)})
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col).mapInPandas(run, schema=schema)
+    return df.select("image_id", "bytes").mapInPandas(run, schema=schema)

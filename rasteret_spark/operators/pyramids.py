@@ -94,14 +94,12 @@ def _rebuild_blob(blob: bytes, factors: tuple[int, ...], rebuild: bool):
 def build_overviews(
     images: DataFrame,
     factors: tuple[int, ...] = (2, 4),
-    id_col: str = "image_id",
-    blob_col: str = "bytes",
     rebuild: bool = False,
 ) -> DataFrame:
     """Append a nearest-neighbour overview pyramid to every TIFF blob.
 
-    Input: any DataFrame with ``id_col`` + ``blob_col``.  Output: the same
-    two columns (``blob_col`` now pyramid-bearing where ``status = 'ok'``)
+    Input: any DataFrame with ``image_id`` + ``bytes``.  Output: the same
+    two columns (``bytes`` now pyramid-bearing where ``status = 'ok'``)
     plus ``status`` / ``n_levels_in`` / ``n_levels_out`` / ``bytes_in`` /
     ``bytes_out``.  See the module docstring for pass-through statuses."""
     from rasteret_spark.operators.util import spread_compute
@@ -111,18 +109,18 @@ def build_overviews(
         raise ValueError(
             f"factors must be ascending unique ints >= 2, got {factors!r}"
         )
-    for c in (id_col, blob_col):
+    for c in ("image_id", "bytes"):
         if c not in images.columns:
             raise ValueError(f"build_overviews needs column {c!r}")
 
-    src = images.select(id_col, blob_col)
-    schema = f"{id_col} string, {blob_col} binary" + PYRAMID_EXTRA
+    src = images.select("image_id", "bytes")
+    schema = "image_id string, bytes binary" + PYRAMID_EXTRA
 
     def run(batches):
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                blob = bytes(row[blob_col])
+                blob = bytes(row["bytes"])
                 try:
                     new, status, n_in, n_out = _rebuild_blob(
                         blob, fs, rebuild
@@ -131,8 +129,8 @@ def build_overviews(
                     new, status = blob, f"error: {type(e).__name__}: {e}"
                     n_in = n_out = 0
                 out.append({
-                    id_col: row[id_col],
-                    blob_col: new,
+                    "image_id": row["image_id"],
+                    "bytes": new,
                     "status": status,
                     "n_levels_in": n_in,
                     "n_levels_out": n_out,
@@ -141,7 +139,7 @@ def build_overviews(
                 })
             yield pd.DataFrame(
                 out, columns=[
-                    id_col, blob_col, "status", "n_levels_in",
+                    "image_id", "bytes", "status", "n_levels_in",
                     "n_levels_out", "bytes_in", "bytes_out",
                 ]
             )

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark import crs
 from rasteret_spark.format import miniraster as mr
-from rasteret_spark.operators.decode import _err_status, blob_source, grouped_side_choice
+from rasteret_spark.operators.decode import _err_status, blob_source, join_grouped_side
 from rasteret_spark.operators.util import nanlist
 
 CHIP_COLS = ("chip_id", "chip_xmin", "chip_ymax", "chip_xres", "chip_yres",
@@ -537,14 +537,14 @@ def chip_stack_pixels(
     return pairs.groupBy("chip_id").applyInPandas(stack, schema=CHIP_STACK_SCHEMA)
 
 
-def most_common_epsg(images: DataFrame, epsg_col: str = "epsg") -> int:
+def most_common_epsg(images: DataFrame) -> int:
     """Auto target-CRS detection: the mode of the record CRSes with a
     deterministic tie-break (the reference's most-common-CRS pick before
     reprojection, `src/rasteret/core/execution.py:396-456`)."""
     row = (
-        images.groupBy(epsg_col)
+        images.groupBy("epsg")
         .count()
-        .orderBy(F.col("count").desc(), F.col(epsg_col).asc())
+        .orderBy(F.col("count").desc(), F.col("epsg").asc())
         .first()
     )
     if row is None:
@@ -650,21 +650,15 @@ def _depth_cap(cands: DataFrame, max_images_per_chip: int) -> DataFrame:
 def join_payload_grouped(cands: DataFrame, images_payload: DataFrame) -> DataFrame:
     """Join light (chip x image) candidates to blob payloads with the
     one-blob-shuffle guarantee: candidates group into one per-image chip
-    LIST (light columns), and that grouped side joins the payload under the
-    same size-guarded broadcast the zonal path uses
-    (``decode.grouped_side_choice``).  Broadcast path: blobs never shuffle
-    at the join — the only blob exchange left is the final per-chip group.
-    Above ``decode.BROADCAST_PAIRS_LIMIT`` pairs the plan falls back to a
-    hash join on image_id (the 10^9-pair regime where broadcasting would
-    blow the driver)."""
+    LIST (light columns), and that grouped side joins the payload through
+    the zonal and sample paths' ``decode.join_grouped_side``.  Broadcast
+    path: blobs never shuffle at the join — the only blob exchange left is
+    the final per-chip group.  Above ``decode.BROADCAST_PAIRS_LIMIT`` pairs
+    the plan falls back to a hash join on image_id (the 10^9-pair regime
+    where broadcasting would blow the driver)."""
     chip_cols = [c for c in cands.columns if c != "image_id"]
-    agg = cands.groupBy("image_id").agg(
-        F.collect_list(F.struct(*chip_cols)).alias("_chips")
-    )
-    agg, use_broadcast = grouped_side_choice(agg, "_chips")
-    side = F.broadcast(agg) if use_broadcast else agg
     return (
-        images_payload.join(side, "image_id")
+        join_grouped_side(images_payload, cands, chip_cols, "_chips")
         .withColumn("_c", F.explode("_chips"))
         .drop("_chips")
         .select(*images_payload.columns, "_c.*")
@@ -713,7 +707,7 @@ def chip_candidates(
 
     NOTE: the size guard runs the candidate join once at PLAN-BUILD time and
     local-checkpoints the grouped side (same contract as the zonal path's
-    ``grouped_side_choice``); the checkpoint lives as long as the returned
+    ``decode.join_grouped_side``); the checkpoint lives as long as the returned
     plan."""
     cands = _light_candidates(chips, images_light, images, res)
     return _capped_payload(cands, images, max_images_per_chip)

@@ -59,12 +59,15 @@ def _tile_dims(w: int, h: int, tile: tuple[int, int]) -> tuple[int, int] | None:
     return (tw, th)
 
 
-def _overview_factors(w: int, h: int, min_dim: int = 32, max_levels: int = 6) -> list[int]:
+MAX_OVERVIEW_LEVELS = 6
+
+
+def _overview_factors(w: int, h: int, min_dim: int = 32) -> list[int]:
     """gdaladdo's default ladder: powers of two while the decimated image
-    stays >= ``min_dim`` in both axes."""
+    stays >= ``min_dim`` in both axes, at most ``MAX_OVERVIEW_LEVELS``."""
     out: list[int] = []
     f = 2
-    while len(out) < max_levels and min(w, h) // f >= min_dim:
+    while len(out) < MAX_OVERVIEW_LEVELS and min(w, h) // f >= min_dim:
         out.append(f)
         f *= 2
     return out

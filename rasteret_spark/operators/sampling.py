@@ -407,29 +407,16 @@ def sample_points(
     Building the plan runs the candidate join once: the grouped point side
     is local-checkpointed, and its pair count, observed while the checkpoint
     is written, picks broadcast vs shuffle join
-    (``decode.grouped_side_choice``).  The kernel (``_sample_batches``) runs
+    (``decode.join_grouped_side``).  The kernel (``_sample_batches``) runs
     in ``mapInArrow``: no pandas conversion of the grouped points on the way
     in or of the samples on the way out."""
-    from rasteret_spark.operators.decode import (
-        _decode_parallelism,
-        blob_source,
-        grouped_side_choice,
-    )
+    from rasteret_spark.operators.decode import blob_source, join_grouped_side
 
     want_bands = tuple(bands) if bands is not None else (0,)
     payload_col, open_blob = blob_source(images)
-    agg = candidates.groupBy("image_id").agg(
-        F.collect_list(F.struct("point_index", "x", "y")).alias("_pts")
+    src = join_grouped_side(
+        images.select("image_id", payload_col), candidates, ["point_index", "x", "y"], "_pts"
     )
-    agg, use_broadcast = grouped_side_choice(agg, "_pts")
-    if use_broadcast:
-        # grouped probe side is small next to the blobs (size-guarded):
-        # broadcast it so the sampling stage fuses with the image scan (no
-        # blob shuffle); above the pair bound: shuffle join on image_id
-        src = images.select("image_id", payload_col).join(F.broadcast(agg), "image_id")
-    else:
-        src = images.select("image_id", payload_col).join(agg, "image_id")
-        src = src.repartition(_decode_parallelism(src), "image_id")
 
     schema = SAMPLES_SCHEMA + (NEIGHBORHOOD_COL if neighborhood > 0 else "")
 
@@ -439,18 +426,14 @@ def sample_points(
     return src.mapInArrow(run, schema=schema)
 
 
-def point_time_series(
-    samples: DataFrame,
-    image_times: DataFrame,
-    time_col: str = "datetime",
-) -> DataFrame:
+def point_time_series(samples: DataFrame, image_times: DataFrame) -> DataFrame:
     """Per-point temporal drill: fold SAMPLES_SCHEMA rows into one row per
     (point, band) with the full observation series ordered by time — the
     time-series-analysis primitive (the reference's per-point sampling
     returns flat rows, `src/rasteret/core/point_sampling.py:350-514`;
     analysis over them happens client-side there).
 
-    ``image_times``: (image_id, <time_col>) — the light columns of the
+    ``image_times``: (image_id, datetime) — the light columns of the
     records table; joined by image_id (auto-broadcast under AQE when
     small).  Only valid in-bounds samples enter the series.  Output:
     ``series array<struct<t, image_id, value>>`` (chronological,
@@ -460,7 +443,7 @@ def point_time_series(
         "point_index", "band", "image_id", "value"
     )
     joined = valid.join(
-        image_times.select("image_id", F.col(time_col).alias("_t")), "image_id"
+        image_times.select("image_id", F.col("datetime").alias("_t")), "image_id"
     )
     series = F.array_sort(
         F.collect_list(F.struct(F.col("_t").alias("t"), "image_id", "value"))

@@ -36,42 +36,38 @@ def cosine_expr(a, b) -> F.Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def cosine_topk(
-    targets: DataFrame,
-    probes: DataFrame,
-    k: int,
-    target_id: str = "vec_id",
-    probe_id: str = "probe_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine: broadcast probes x targets, native scoring.
-    Output: probe_id, target_id, cosine, rank (excludes self-matches by id)."""
-    p = probes.select(
-        F.col(probe_id).alias("_pid"), F.col(vec_col).alias("_pvec")
+def _probe_side(probes: DataFrame) -> DataFrame:
+    return probes.select(F.col("probe_id").alias("_pid"), F.col("embedding").alias("_pvec"))
+
+
+def _rank_topk(j: DataFrame, k: int) -> DataFrame:
+    """Top-k targets per probe by cosine (ties by ascending ``vec_id``) over
+    the candidate pairs ``j`` (``vec_id, embedding, _pid, _pvec``);
+    self-matches by id are excluded."""
+    j = j.filter(F.col("vec_id") != F.col("_pid")).withColumn(
+        "cosine", cosine_expr(F.col("embedding"), F.col("_pvec"))
     )
-    # scoring runs in the scan stage — spread it by compute, or a one-split
-    # embeddings parquet pins the whole probe x target sweep to one core
-    t = spread_compute(targets.select(F.col(target_id), F.col(vec_col)))
-    j = t.crossJoin(F.broadcast(p))
-    j = j.filter(F.col(target_id) != F.col("_pid")).withColumn(
-        "cosine", cosine_expr(F.col(vec_col), F.col("_pvec"))
-    )
-    w = Window.partitionBy("_pid").orderBy(F.col("cosine").desc(), F.col(target_id).asc())
+    w = Window.partitionBy("_pid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         j.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(F.col("_pid").alias(probe_id), target_id, "cosine", "rank")
+        .select(F.col("_pid").alias("probe_id"), "vec_id", "cosine", "rank")
     )
 
 
-def _planes(dim: int, n_bits: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_bits, dim)).astype(np.float64)
+def cosine_topk(targets: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact top-k by cosine: broadcast probes x targets, native scoring.
+    Targets carry ``vec_id, embedding``, probes ``probe_id, embedding``.
+    Output: probe_id, vec_id, cosine, rank (excludes self-matches by id)."""
+    # scoring runs in the scan stage — spread it by compute, or a one-split
+    # embeddings parquet pins the whole probe x target sweep to one core
+    t = spread_compute(targets.select("vec_id", "embedding"))
+    return _rank_topk(t.crossJoin(F.broadcast(_probe_side(probes))), k)
 
 
-def hyperplane_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int = 7):
+def hyperplane_buckets_udf(dim: int, n_bits: int, n_tables: int):
     """array of per-table sign-bit signatures (one int per hash table)."""
-    planes = _planes(dim, n_bits * n_tables, seed)
+    planes = np.random.default_rng(7).standard_normal((n_bits * n_tables, dim))
     weights = 1 << np.arange(n_bits, dtype=np.int64)
 
     @F.pandas_udf("array<long>")
@@ -91,9 +87,6 @@ def lsh_topk(
     dim: int,
     n_bits: int = 8,
     n_tables: int = 8,
-    target_id: str = "vec_id",
-    probe_id: str = "probe_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: multi-table (OR-construction) hyperplane LSH.
 
@@ -105,37 +98,25 @@ def lsh_topk(
     stay uniform by construction."""
     buckets = hyperplane_buckets_udf(dim, n_bits, n_tables)
     t = (
-        spread_compute(targets.select(target_id, vec_col))
-        .withColumn("_bks", buckets(F.col(vec_col)))
-        .select(target_id, vec_col, F.posexplode("_bks").alias("table", "bucket"))
+        spread_compute(targets.select("vec_id", "embedding"))
+        .withColumn("_bks", buckets(F.col("embedding")))
+        .select("vec_id", "embedding", F.posexplode("_bks").alias("table", "bucket"))
     )
     p = (
-        probes.select(F.col(probe_id).alias("_pid"), F.col(vec_col).alias("_pvec"))
+        _probe_side(probes)
         .withColumn("_bks", buckets(F.col("_pvec")))
         .select("_pid", "_pvec", F.posexplode("_bks").alias("table", "bucket"))
     )
-    j = t.join(p, ["table", "bucket"]).filter(F.col(target_id) != F.col("_pid"))
-    j = j.dropDuplicates([target_id, "_pid"]).withColumn(
-        "cosine", cosine_expr(F.col(vec_col), F.col("_pvec"))
-    )
-    w = Window.partitionBy("_pid").orderBy(F.col("cosine").desc(), F.col(target_id).asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_pid").alias(probe_id), target_id, "cosine", "rank")
-    )
+    # the self-match filter in _rank_topk is pushed below the dedup
+    return _rank_topk(t.join(p, ["table", "bucket"]).dropDuplicates(["vec_id", "_pid"]), k)
 
 
 # --- IVF (inverted-file) ANN --------------------------------------------------
-def train_ivf_centroids(
-    df: DataFrame,
-    n_clusters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 4096,
-    iters: int = 10,
-    seed: int = 11,
-) -> np.ndarray:
+IVF_SAMPLE = 4096  # rows the coarse quantizer trains on
+IVF_ITERS = 10  # Lloyd iterations
+
+
+def train_ivf_centroids(df: DataFrame, n_clusters: int) -> np.ndarray:
     """Train the IVF coarse quantizer: spherical k-means on a bounded,
     DETERMINISTIC sample (hash-ordered limit — reproducible regardless of
     partitioning), Lloyd iterations in numpy on the driver.
@@ -144,16 +125,16 @@ def train_ivf_centroids(
     table is — at 100 TB the quantizer still trains on the same few thousand
     rows; everything per-row stays distributed (``ivf_assign``)."""
     pdf = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string")))
-        .limit(sample)
+        df.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id").cast("string")))
+        .limit(IVF_SAMPLE)
         .toPandas()
     )
-    m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     m /= np.linalg.norm(m, axis=1, keepdims=True) + 1e-12
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(11)
     cent = m[rng.choice(len(m), size=min(n_clusters, len(m)), replace=False)]
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assign = np.argmax(m @ cent.T, axis=1)
         for c in range(len(cent)):
             sel = m[assign == c]
@@ -185,9 +166,6 @@ def ivf_topk(
     k: int,
     centroids: np.ndarray,
     nprobe: int = 4,
-    target_id: str = "vec_id",
-    probe_id: str = "probe_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN top-k: targets live in exactly ONE inverted list (their
     nearest centroid); probes visit their ``nprobe`` nearest lists; exact
@@ -199,23 +177,15 @@ def ivf_topk(
     tuned by nprobe, cost by n_clusters; both are runtime knobs, no index
     rebuild needed for nprobe."""
     t = (
-        spread_compute(targets.select(target_id, vec_col))
-        .withColumn("_cl", ivf_cluster_udf(centroids, 1)(F.col(vec_col))[0])
+        spread_compute(targets.select("vec_id", "embedding"))
+        .withColumn("_cl", ivf_cluster_udf(centroids, 1)(F.col("embedding"))[0])
     )
-    p = (
-        probes.select(F.col(probe_id).alias("_pid"), F.col(vec_col).alias("_pvec"))
-        .withColumn("_cl", F.explode(ivf_cluster_udf(centroids, nprobe)(F.col("_pvec"))))
+    p = _probe_side(probes).withColumn(
+        "_cl", F.explode(ivf_cluster_udf(centroids, nprobe)(F.col("_pvec")))
     )
-    j = t.join(p, "_cl").filter(F.col(target_id) != F.col("_pid"))
     # no dedup shuffle needed: a target lives in exactly ONE inverted list,
     # so a (target, probe) pair can only arise once even with nprobe > 1
-    j = j.withColumn("cosine", cosine_expr(F.col(vec_col), F.col("_pvec")))
-    w = Window.partitionBy("_pid").orderBy(F.col("cosine").desc(), F.col(target_id).asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_pid").alias(probe_id), target_id, "cosine", "rank")
-    )
+    return _rank_topk(t.join(p, "_cl"), k)
 
 
 def cosine_near_dup_pairs(

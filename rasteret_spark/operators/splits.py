@@ -71,7 +71,6 @@ def assign_split(
     fractions: tuple[float, ...] = (0.8, 0.1, 0.1),
     names: tuple[str, ...] = ("train", "val", "test"),
     salt: str = "",
-    out_col: str = "split",
 ) -> DataFrame:
     """Add a deterministic ``split`` column keyed on ``key_col``.
 
@@ -87,18 +86,12 @@ def assign_split(
             fractions=fractions,
             names=names,
             salt=salt,
-        ).alias(out_col),
+        ).alias("split"),
     )
 
 
-def split_summary(
-    df: DataFrame,
-    split_col: str = "split",
-    strata_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-split (optionally per-stratum) row counts — the balance report a
-    pipeline asserts on before shipping a dataset.  Integer counts only
-    (order-independent, oracle-exact); one groupBy shuffle over a tiny
-    aggregated result."""
-    keys = [split_col, *strata_cols]
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
+def split_summary(df: DataFrame) -> DataFrame:
+    """Per-split row counts — the balance report a pipeline asserts on
+    before shipping a dataset.  Integer counts only (order-independent,
+    oracle-exact); one groupBy shuffle over a tiny aggregated result."""
+    return df.groupBy("split").agg(F.count(F.lit(1)).alias("n_rows"))

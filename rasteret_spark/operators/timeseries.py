@@ -71,36 +71,31 @@ def fill_time_series(
     return out, gap & (has_prev | has_next)
 
 
-def gap_fill(
-    stack: DataFrame,
-    value_col: str = "values",
-    ts_col: str = "datetime",
-    key_cols: tuple[str, ...] = ("chip_id", "band"),
-) -> DataFrame:
+def gap_fill(stack: DataFrame) -> DataFrame:
     """Fill per-pixel temporal gaps in CHIP_STACK-shaped rows (one row per
     chip x timestep x band).  Output carries the same columns with
-    ``value_col`` filled plus ``n_missing`` (input nulls at that timestep)
+    ``values`` filled plus ``n_missing`` (input nulls at that timestep)
     and ``n_filled`` (how many of them the interpolation repaired).
 
-    Timesteps order by (``ts_col``, image_id) inside each group — identical
-    to the stack's t_index assignment — so results are invariant to row
-    order and partitioning."""
+    Timesteps order by (datetime, image_id) inside each (chip_id, band)
+    group — identical to the stack's t_index assignment — so results are
+    invariant to row order and partitioning."""
     in_schema = dict(zip(stack.schema.names, (f.dataType.simpleString()
                                               for f in stack.schema.fields)))
-    if value_col not in in_schema:
-        raise ValueError(f"stack has no {value_col!r} column")
+    if "values" not in in_schema:
+        raise ValueError("stack has no 'values' column")
     out_schema = ", ".join(f"{n} {t}" for n, t in in_schema.items()) + GAPFILL_EXTRA
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        order_cols = [c for c in (ts_col, "image_id") if c in pdf.columns]
+        order_cols = [c for c in ("datetime", "image_id") if c in pdf.columns]
         pdf = pdf.sort_values(order_cols).reset_index(drop=True)
         # quarantine rows (values = null, e.g. a corrupt-blob time slot) pass
         # through untouched — they carry no pixels to fill
-        null_rows = pdf[value_col].isna()
+        null_rows = pdf["values"].isna()
         live = pdf[~null_rows].reset_index(drop=True)
         # Arrow delivers array<double> as float ndarrays (nulls -> NaN);
         # asarray also coerces list-of-None inputs — no per-pixel Python
-        arrs = [np.asarray(row, dtype=np.float64) for row in live[value_col]]
+        arrs = [np.asarray(row, dtype=np.float64) for row in live["values"]]
         pdf = pdf.copy()
         pdf["n_missing"] = pd.array(
             [None if n else int(np.isnan(a).sum())
@@ -110,15 +105,15 @@ def gap_fill(
         pdf["n_filled"] = 0
         if arrs and all(a.size == arrs[0].size for a in arrs):
             vals = np.stack(arrs)
-            tsec = live[ts_col].astype("int64").to_numpy().astype(np.float64) / 1e9
+            tsec = live["datetime"].astype("int64").to_numpy().astype(np.float64) / 1e9
             out, fixed = fill_time_series(vals, tsec)
             live_idx = np.flatnonzero(~null_rows.to_numpy())
-            new_vals = pdf[value_col].tolist()
+            new_vals = pdf["values"].tolist()
             from rasteret_spark.operators.util import nanlist
 
             for j, i in enumerate(live_idx):
                 new_vals[i] = nanlist(out[j])
-            pdf[value_col] = new_vals
+            pdf["values"] = new_vals
             pdf.loc[~null_rows, "n_filled"] = fixed.sum(axis=1).astype(np.int64)
             if "filled" in pdf.columns:  # keep the CHIP_STACK invariant
                 pdf.loc[~null_rows, "filled"] = (
@@ -132,6 +127,6 @@ def gap_fill(
         for n in null_rows:
             yield (True, None) if n else (False, next(it))
 
-    return stack.groupBy(*[F.col(k) for k in key_cols]).applyInPandas(
+    return stack.groupBy("chip_id", "band").applyInPandas(
         run, schema=out_schema
     )

@@ -160,7 +160,9 @@ def checkpointed_run(
     """Run ``transform`` over ``df`` resumably.
 
     ``df`` is bucketed into ``n_parts`` by ``xxhash64(key_col)``; only
-    buckets without a checkpoint-log row are processed.  Output parquet is
+    buckets without a checkpoint-log row are processed.  The transform sees
+    the ``part_id`` column and must keep ``key_col``: its output's
+    ``part_id`` is derived from that key again.  Output parquet is
     partitioned by ``part_id`` with dynamic overwrite (idempotent re-runs).
     Returns the full stage output (read back from the checkpoint dir).
 
@@ -193,9 +195,9 @@ def checkpointed_run(
             with open(tmp, "w") as f:
                 f.write(fingerprint)
             os.replace(tmp, pfile)
-    bucketed = df.withColumn(
-        "part_id", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_parts)).cast("int")
-    )
+    # a pure function of the key: the transform's output re-derives it
+    part_id = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_parts)).cast("int")
+    bucketed = df.withColumn("part_id", part_id)
     done = completed_parts(spark, out_dir, stage)
     todo = bucketed.filter(~F.col("part_id").isin(list(done))) if done else bucketed
 
@@ -205,9 +207,7 @@ def checkpointed_run(
         int(r.part_id) for r in todo.select("part_id").distinct().collect()
     )
     if todo_ids:
-        result = transform(todo)
-        if "part_id" not in result.columns:
-            raise ValueError("transform must preserve the part_id column")
+        result = transform(todo).withColumn("part_id", part_id)
 
         acc = spark.sparkContext.accumulator({}, _PartMetricsParam())
 

@@ -31,14 +31,9 @@ def resumable_zonal(
     output (band 0), computing only buckets missing from the checkpoint
     log."""
 
-    def transform(bucketed_images: DataFrame) -> DataFrame:
-        z = decode.zonal_join(bucketed_images, aois, res=res)
-        # re-attach the bucket id for the partitioned write
-        part = bucketed_images.select("image_id", "part_id")
-        return z.join(part, "image_id")
-
     return lineage.checkpointed_run(
-        spark, images, transform, out_dir, key_col="image_id",
+        spark, images, lambda bucket: decode.zonal_join(bucket, aois, res=res),
+        out_dir, key_col="image_id",
         stage="zonal", n_parts=n_parts, params={"res": res},
     )
 
@@ -64,11 +59,9 @@ def resumable_sample(
     storage on the caller's DataFrame.)"""
 
     def transform(bucketed_images: DataFrame) -> DataFrame:
-        s = sampling.sample_join(
+        return sampling.sample_join(
             bucketed_images, points, res=res, max_ring=max_ring, neighborhood=neighborhood
         )
-        part = bucketed_images.select("image_id", "part_id")
-        return s.join(part, "image_id")
 
     return lineage.checkpointed_run(
         spark, images, transform, out_dir, key_col="image_id",

@@ -84,11 +84,7 @@ def write_images_geoparquet(df: DataFrame, path: str) -> None:
 
 
 def load_images(
-    spark: SparkSession,
-    path: str,
-    columns: list[str] | None = None,
-    column_map: dict[str, str] | None = None,
-    validate: bool = True,
+    spark: SparkSession, path: str, column_map: dict[str, str] | None = None
 ) -> DataFrame:
     """Contract-validated load (S2) with optional column aliasing
     (rasteret's ``column_map``, `src/rasteret/ingest/parquet_record_table.py:138-160`)."""
@@ -96,15 +92,12 @@ def load_images(
     if column_map:
         for src, dst in column_map.items():
             df = df.withColumnRenamed(src, dst)
-    if validate:
-        missing = [c for c in REQUIRED_COLUMNS if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"image table at {path} missing required columns {missing}; "
-                f"present: {df.columns}"
-            )
-    if columns:
-        df = df.select(*columns)
+    missing = [c for c in REQUIRED_COLUMNS if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"image table at {path} missing required columns {missing}; "
+            f"present: {df.columns}"
+        )
     return df
 
 

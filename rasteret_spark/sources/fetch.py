@@ -401,13 +401,12 @@ def fetch_with_retry(
 def fetch_blobs(
     df: DataFrame,
     url_col: str = "href",
-    out_col: str = "bytes",
     attempts: int = 3,
     base_delay: float = 0.2,
 ) -> DataFrame:
-    """Resolve ``url_col`` hrefs to a binary ``out_col`` executor-side.
+    """Resolve ``url_col`` hrefs to a binary ``bytes`` column executor-side.
 
-    All input columns pass through; adds ``out_col`` (binary, null on
+    All input columns pass through; adds ``bytes`` (binary, null on
     failure), ``fetch_status`` (string, 'ok' or the error — quarantine
     errors carry the attempt count) and ``fetch_attempts`` (int, how many
     tries the row took; >1 flags rows that recovered through retry).
@@ -427,7 +426,7 @@ def fetch_blobs(
     schema = T.StructType(
         list(df.schema.fields)
         + [
-            T.StructField(out_col, T.BinaryType()),
+            T.StructField("bytes", T.BinaryType()),
             T.StructField("fetch_status", T.StringType()),
             T.StructField("fetch_attempts", T.IntegerType()),
         ]
@@ -451,7 +450,7 @@ def fetch_blobs(
                     status.append(f"{_err_status(e)} (after {used} attempts)")
                     tries.append(used)
             out = pdf.copy()
-            out[out_col] = blobs
+            out["bytes"] = blobs
             out["fetch_status"] = status
             out["fetch_attempts"] = tries
             yield out

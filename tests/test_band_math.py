@@ -132,7 +132,7 @@ def test_threshold_mask(per_band):
     r = {x.chip_id: x for x in bm.threshold_mask(nd, "nd", lo=0.0).collect()}["c3"]
     assert r.mask[0] is None and r.mask[1] is True and r.mask[2] is None
     assert r.mask_count == 1
-    with pytest.raises(ValueError, match="lo and/or hi"):
+    with pytest.raises(ValueError, match="need lo"):
         bm.threshold_mask(nd, "nd")
 
 

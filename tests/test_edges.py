@@ -50,3 +50,50 @@ def test_empty_candidates_through_sampling_and_zonal(spark, images_pdf):
         "aoi_xmin double, aoi_ymin double, aoi_xmax double, aoi_ymax double",
     )
     assert decode.zonal_stats(empty_pairs, images).count() == 0
+
+
+def test_long_header_enriches_to_null_meta_and_still_decodes(spark, images_pdf, aois_pdf):
+    """A header longer than enrich's speculative prefix (here a raster
+    re-encoded in 4x4 tiles: a 40+ KB tile table) gives a null ``meta``
+    instead of failing the job, and the zonal join reads that row's header
+    from the blob: enriched and raw tables give identical rows."""
+    import numpy as np
+
+    from rasteret_spark.format import miniraster as mr
+
+    pdf = images_pdf.head(20).copy()
+    # re-encode an image whose footprint meets an AOI's, so it decodes
+    row = next(
+        i for i, r in enumerate(pdf.itertuples())
+        if ((aois_pdf.xmin <= r.xmax) & (aois_pdf.xmax >= r.xmin)
+            & (aois_pdf.ymin <= r.ymax) & (aois_pdf.ymax >= r.ymin)).any()
+    )
+    long_id = pdf.iloc[row]["image_id"]
+    blob = bytes(pdf.iloc[row]["bytes"])
+    meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:64])])
+    pixels = np.stack([mr.decode_full(blob, band=b) for b in range(meta.n_bands)])
+    long_blob = mr.encode_image(
+        pixels, tile_w=4, tile_h=4, transform=tuple(meta.transform),
+        epsg=meta.epsg, nodata=meta.nodata,
+    )
+    assert mr.header_len_from_prefix(long_blob[:64]) > enrich.HEADER_PREFIX
+    pdf.iat[row, pdf.columns.get_loc("bytes")] = long_blob
+    raw = spark.createDataFrame(pdf)
+    enriched = enrich.enrich_headers(raw)
+    metas = {r.image_id: r.meta for r in enriched.select("image_id", "meta").collect()}
+    assert metas[long_id] is None
+    assert sum(m is not None for m in metas.values()) == len(pdf) - 1
+
+    aois = spark.createDataFrame(
+        aois_pdf.rename(
+            columns={
+                **{c: f"aoi_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]},
+                "geometry": "aoi_geometry",
+            }
+        )
+    )
+    key = ["image_id", "aoi_id", "band"]
+    a = decode.zonal_join(raw, aois).toPandas().sort_values(key).reset_index(drop=True)
+    b = decode.zonal_join(enriched, aois).toPandas().sort_values(key).reset_index(drop=True)
+    assert (a[a["image_id"] == long_id]["status"] == "ok").any()
+    pd.testing.assert_frame_equal(a, b)

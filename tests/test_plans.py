@@ -4,6 +4,7 @@ These assertions pin the *plan shape*, not just results — the properties that
 keep the engine viable at 10^12 rows (SURVEY.md §4).
 """
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,7 +65,7 @@ def test_zonal_plan_broadcasts_pairs_and_keeps_blobs_unshuffled(spark, images_pa
 
 
 def test_broadcast_guard_switches_at_bound_with_identical_output(
-    spark, images_pdf, points_pdf, monkeypatch
+    spark, images_pdf, points_pdf, monkeypatch, blob_exchanges
 ):
     """The sample_points broadcast guard: the default path broadcasts below
     the pair bound and switches to the shuffle join above it; both plans
@@ -91,14 +92,44 @@ def test_broadcast_guard_switches_at_bound_with_identical_output(
     opt = _optimized(shuffled)
     assert "strategy=broadcast" not in opt, opt
     assert "REPARTITION_BY_NUM" in _plan(shuffled)
+    # both sides partition by image_id before the join: each blob crosses
+    # one exchange, not a join shuffle plus a repartition above it
+    assert blob_exchanges(shuffled) == 1, _plan(shuffled)
     got_shuffle = shuffled.toPandas()
     bcast = sampling.sample_points(cands, blobs, max_ring=2)
     assert "strategy=broadcast" in _optimized(bcast)
+    assert blob_exchanges(bcast) == 0, _plan(bcast)
     got_bcast = bcast.toPandas()
     key = ["point_index", "image_id"]
     a = got_bcast.sort_values(key).reset_index(drop=True)
     b = got_shuffle.sort_values(key).reset_index(drop=True)
     assert a.equals(b)
+
+
+def test_zonal_shuffle_fallback_moves_each_blob_once(
+    spark, images_pdf, aois_pdf, monkeypatch, blob_exchanges
+):
+    """Above the pair bound the zonal plan joins on image_id with each blob
+    crossing exactly one exchange, and yields the broadcast path's rows."""
+    from rasteret_spark.operators import decode
+
+    images = spark.createDataFrame(images_pdf)
+    aois = spark.createDataFrame(
+        aois_pdf.rename(columns={"geometry": "aoi_geometry"}).rename(
+            columns={c: f"aoi_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]}
+        )
+    )
+    with monkeypatch.context() as m:
+        m.setattr(decode, "BROADCAST_PAIRS_LIMIT", 0)  # force above-bound
+        shuffled = decode.zonal_join(images, aois)
+    assert blob_exchanges(shuffled) == 1, _plan(shuffled)
+    bcast = decode.zonal_join(images, aois)
+    assert blob_exchanges(bcast) == 0, _plan(bcast)
+    key = ["image_id", "aoi_id", "band"]
+    a = bcast.toPandas().sort_values(key).reset_index(drop=True)
+    b = shuffled.toPandas().sort_values(key).reset_index(drop=True)
+    assert len(a) > 0 and (a["status"] == "ok").any()
+    pd.testing.assert_frame_equal(a, b)
 
 
 def test_cell_join_is_native_no_python_in_candidates(spark, images_pdf, aois_pdf):

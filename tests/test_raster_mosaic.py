@@ -313,7 +313,9 @@ def test_mosaic_max_images_cap_bounds_group_depth(chip_tables, images_pdf):
         np.testing.assert_array_equal(vals[~np.isnan(want)], want[~np.isnan(want)])
 
 
-def test_payload_join_grouped_broadcast_vs_shuffle_parity(chip_tables, monkeypatch):
+def test_payload_join_grouped_broadcast_vs_shuffle_parity(
+    chip_tables, monkeypatch, blob_exchanges
+):
     """The size-guarded grouped payload join: broadcast mode keeps blobs out
     of the join shuffle entirely (no sort-merge join; the broadcast side is
     the per-image chip LIST), the above-bound shuffle mode produces
@@ -342,6 +344,10 @@ def test_payload_join_grouped_broadcast_vs_shuffle_parity(chip_tables, monkeypat
     with monkeypatch.context() as m:
         m.setattr(decode, "BROADCAST_PAIRS_LIMIT", 0)  # force above-bound
         sh = rmo.chip_candidates(chips, img_light, payload, res=7)
+    # the shuffle path moves each blob through one exchange (image_id); the
+    # broadcast path through none before the per-chip group
+    assert blob_exchanges(sh) == 1
+    assert blob_exchanges(bc) == 0
     a = bc.drop("bytes").toPandas().sort_values(["chip_id", "image_id"]).reset_index(drop=True)
     b = sh.drop("bytes").toPandas().sort_values(["chip_id", "image_id"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns])

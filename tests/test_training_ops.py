@@ -112,7 +112,7 @@ def test_simhash_exact_vs_bruteforce(spark, docs_with_dups):
     want = set()
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
-            if bin(np.uint64(sims[a] ^ sims[b]) & np.uint64((1 << 64) - 1)).count("1") <= 3:
+            if bin((sims[a] ^ sims[b]) & ((1 << 64) - 1)).count("1") <= 3:
                 want.add((a, b))
     got_pairs = set(map(tuple, got[["id_a", "id_b"]].itertuples(index=False)))
     # 4x16-bit banding + hamming<=3 is pigeonhole-exact
