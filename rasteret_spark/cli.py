@@ -14,8 +14,8 @@ Commands:
     python -m rasteret_spark.cli collections import SRC NAME [--workspace DIR]
 
 ``build`` ingests an existing records parquet (or a STAC-items table written
-by ``sources.stac``) with optional bbox/date narrowing — the engine's STAC
-API search itself is a library surface (``sources.stac.search_items``), kept
+by ``sources.stac``) with optional bbox/date narrowing — STAC items from an
+API search enter through the library (``Collection.from_stac_items``), kept
 out of the CLI so the tool never needs network access.  ``main`` accepts an
 injected SparkSession for tests/embedding; standalone runs create one.
 """

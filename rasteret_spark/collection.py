@@ -76,9 +76,13 @@ class Collection:
         return cls(spark, fetch_blobs(refs, url_col=url_col))
 
     @classmethod
-    def from_stac_items(cls, spark: SparkSession, items_df: DataFrame) -> "Collection":
-        """A records table already produced by ``sources.stac`` ingestion."""
-        return cls(spark, items_df)
+    def from_stac_items(cls, spark: SparkSession, items) -> "Collection":
+        """STAC Item dicts (one API search page or many) as a records
+        collection (``sources.stac.records_df``); narrow it with ``subset``
+        (bbox, date range) and ``where`` (e.g. cloud cover)."""
+        from rasteret_spark.sources import stac
+
+        return cls(spark, stac.records_df(spark, items))
 
     # --- narrowing (all lazy, all pushdown-friendly) ---------------------------
     def subset(

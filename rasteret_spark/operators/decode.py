@@ -1,5 +1,5 @@
-"""Vectorized decode operators: tile-window reads, full-image stats, zonal
-extraction (raster <-> vector).
+"""Vectorized decode operators: tile-window reads and zonal extraction
+(raster <-> vector).
 
 Spark re-expression of rasteret's read pipeline R2-R6 (`src/rasteret/fetch/
 cog.py`: tile-window planning 969-1089, byte-range coalescing 724-742, decode
@@ -82,73 +82,6 @@ def _err_status(e: BaseException) -> str:
     """Compact per-row error label for quarantine rows (bounded length so a
     pathological message can't bloat the output)."""
     return f"{type(e).__name__}: {e}"[:200]
-
-
-# --- per-image full decode stats (flagship decode benchmark stage) ------------
-IMAGE_STATS_SCHEMA = (
-    "image_id string, fmt string, caption string, width int, height int, "
-    "px_count bigint, valid_count bigint, v_mean double, v_min double, v_max double, "
-    "status string"
-)
-
-
-def decode_image_stats(df: DataFrame) -> DataFrame:
-    """Decode every image fully (all tiles via coalesced range reads) and emit
-    per-image pixel stats.  Input needs columns: image_id, bytes, fmt, caption."""
-    cols = ["image_id", "bytes", "fmt", "caption"]
-    df = df.repartition(_decode_parallelism(df), "image_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for image_id, blob, fmt, caption in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["caption"]
-            ):
-                try:
-                    blob = bytes(blob)
-                    meta = container.parse_any(blob)
-                    arr = container.decode_full_any(blob)  # (h,w) or (bands,h,w)
-                    vals = arr.astype(np.float64)
-                    valid = np.ones(arr.shape, dtype=bool)
-                    if meta.nodata is not None:
-                        valid = vals != meta.nodata
-                        if np.isnan(meta.nodata):
-                            valid = ~np.isnan(vals)
-                    v = vals[valid]
-                    out.append(
-                        {
-                            "image_id": image_id,
-                            "fmt": fmt,
-                            "caption": caption,
-                            "width": meta.width,
-                            "height": meta.height,
-                            "px_count": int(arr.size),
-                            "valid_count": int(valid.sum()),
-                            "v_mean": float(v.mean()) if v.size else None,
-                            "v_min": float(v.min()) if v.size else None,
-                            "v_max": float(v.max()) if v.size else None,
-                            "status": "ok",
-                        }
-                    )
-                except Exception as e:  # quarantine row, not a task failure
-                    out.append(
-                        {
-                            "image_id": image_id,
-                            "fmt": fmt,
-                            "caption": caption,
-                            "width": None,
-                            "height": None,
-                            "px_count": 0,
-                            "valid_count": 0,
-                            "v_mean": None,
-                            "v_min": None,
-                            "v_max": None,
-                            "status": _err_status(e),
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return df.select(*cols).mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
 
 
 # --- zonal extraction (AOI x image join rows -> masked stats) ------------------

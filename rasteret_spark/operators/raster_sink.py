@@ -92,7 +92,7 @@ def write_cogs(
 
     ``writers`` is a registry snapshot (defaults to the module registry at
     BUILD time — a scheme registered after this call does not alter the
-    plan, mirroring ``fetch_blobs(fetchers=...)``).  Floats default to
+    plan, as ``fetch_blobs`` snapshots ``_FETCHERS``).  Floats default to
     predictor 3 (byte-plane split) which is what GDAL emits for float COGs;
     integer dtypes get predictor 2 under LZW/deflate, 1 otherwise.
     """

@@ -18,14 +18,15 @@ REQUIRED_COLUMNS = ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
 GEO_COLUMNS = ("datetime", "epsg", "transform", "geometry", "xmin", "ymin", "xmax", "ymax")
 
 
-def write_images(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partitioned sink (S10): year/month hive layout, zstd compression."""
+def write_images(df: DataFrame, path: str) -> None:
+    """Partitioned sink (S10): year/month hive layout, zstd compression;
+    replaces whatever table is at ``path``."""
     if "year" not in df.columns:
         df = df.withColumn("year", F.year("datetime")).withColumn(
             "month", F.month("datetime")
         )
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("year", "month")
         .parquet(path)
@@ -99,86 +100,3 @@ def load_images(
             f"present: {df.columns}"
         )
     return df
-
-
-# --- incremental (Iceberg-style snapshot) reads ------------------------------
-# Real Iceberg tracks snapshots via manifest files of data-file entries; the
-# hive layout gets the same consumption model from a manifest of per-FILE
-# fingerprints (path, size, mtime).  ``read_since`` plans a scan over ONLY
-# the files that appeared (or were rewritten) after the snapshot — cost is
-# O(new data) + one metadata listing, never a full-table diff — which is how
-# a streaming sampler or training-set refresher tails an append-only image
-# table.
-
-SNAPSHOT_SCHEMA = "path string, size bigint, mtime bigint"
-
-
-def _list_data_files(spark: SparkSession, table_dir: str):
-    """Recursive Hadoop FS listing of data files under a table dir —
-    portable to HDFS/S3A, metadata-only."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out = []
-    it = fs.listFiles(p, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith((".", "_")):
-            out.append(
-                (st.getPath().toString(), int(st.getLen()),
-                 int(st.getModificationTime()))
-            )
-    return out
-
-
-def snapshot_catalog(spark: SparkSession, table_dir: str, manifest_path: str) -> int:
-    """Record the table's current file manifest (one fingerprint row per
-    data file).  Returns the file count.  Atomic: written beside the target
-    then renamed, so a reader never sees a half manifest."""
-    import json
-    import os
-    import uuid
-
-    files = _list_data_files(spark, table_dir)
-    tmp = f"{manifest_path}.tmp.{uuid.uuid4().hex}"
-    os.makedirs(os.path.dirname(manifest_path) or ".", exist_ok=True)
-    with open(tmp, "w") as f:
-        for path, size, mtime in files:
-            f.write(json.dumps({"path": path, "size": size, "mtime": mtime}) + "\n")
-    os.replace(tmp, manifest_path)
-    return len(files)
-
-
-def read_since(
-    spark: SparkSession, table_dir: str, manifest_path: str | None
-) -> DataFrame:
-    """Rows added since the snapshot: plan a parquet scan over ONLY the
-    files absent from (or rewritten since) the manifest.
-
-    ``manifest_path=None`` (or missing file) means no snapshot yet — the
-    whole table is "new".  A file whose (size, mtime) changed counts as new
-    (hive rewrites replace files; conservative re-read beats silent loss).
-    Returns an empty DataFrame with the table schema when nothing is new."""
-    import json
-    import os
-
-    seen: dict[str, tuple[int, int]] = {}
-    if manifest_path and os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            for line in f:
-                r = json.loads(line)
-                seen[r["path"]] = (int(r["size"]), int(r["mtime"]))
-    current = _list_data_files(spark, table_dir)
-    new_files = [
-        path for path, size, mtime in current
-        if seen.get(path) != (size, mtime)
-    ]
-    full = spark.read.parquet(table_dir)  # schema (+ partition columns)
-    if not new_files:
-        return spark.createDataFrame([], full.schema)
-    # basePath keeps hive partition columns (year/month) in the projection
-    return (
-        spark.read.option("basePath", table_dir).parquet(*new_files)
-        .select(*full.columns)
-    )

@@ -226,10 +226,10 @@ def ranged_reader(
     readers: dict[str, Callable[[str], Callable[[int, int], bytes]]] | None = None,
 ) -> Callable[[int, int], bytes]:
     """``readers`` is a registry SNAPSHOT (plan builders capture
-    ``dict(_RANGED_READERS)`` at build time and ship it by closure, like
-    ``fetch_blobs(fetchers=...)``) — without it, a custom scheme registered
-    on the driver would be missing on executors, where this module imports
-    fresh."""
+    ``dict(_RANGED_READERS)`` at build time and ship it by closure, like the
+    ``dict(_FETCHERS)`` snapshot ``fetch_blobs`` takes) — without it, a
+    custom scheme registered on the driver would be missing on executors,
+    where this module imports fresh."""
     reg = _RANGED_READERS if readers is None else readers
     scheme = urlparse(url).scheme.lower() or "file"
     fac = reg.get(scheme)
@@ -341,8 +341,8 @@ def register_writer(scheme: str, fn: Callable[[str, bytes], None]) -> None:
     """Register/override the blob writer for a URL scheme (e.g. "s3").
     ``fn(url, data)`` must write the whole object idempotently (PUT
     semantics) and be picklable — it executes on executors.  Plan builders
-    snapshot the registry at build time (``dict(_WRITERS)``), mirroring
-    ``fetch_blobs(fetchers=...)``."""
+    snapshot the registry at build time (``dict(_WRITERS)``), as
+    ``fetch_blobs`` snapshots ``_FETCHERS``."""
     _WRITERS[scheme.lower()] = fn
 
 

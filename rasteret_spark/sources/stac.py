@@ -9,7 +9,8 @@ projection extension fields `proj:epsg` / `proj:transform`).
 Network boundaries are injectable and OPTIONAL:
 
   * S4 (API search): the caller pages the API however they like (requests,
-    aiohttp, a queue) and hands the item dicts to ``records_df`` — the
+    aiohttp, a queue) and hands the item dicts to
+    ``Collection.from_stac_items`` (``records_df``) — the
     driver-side page loop is I/O-bound and tiny next to the table it
     produces, exactly like the reference's search client.
   * S5 (static catalog crawl): ``records_from_ndjson`` reads
@@ -30,7 +31,6 @@ from collections.abc import Iterable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql import types as T  # noqa: N812
 
 from rasteret_spark import geom
@@ -146,31 +146,3 @@ def records_from_ndjson(spark: SparkSession, path: str) -> DataFrame:
             yield out
 
     return lines.mapInPandas(parse, schema=RECORD_SCHEMA)
-
-
-def filter_search(
-    records: DataFrame,
-    bbox: tuple[float, float, float, float] | None = None,
-    date_range: tuple[str, str] | None = None,
-    max_cloud_cover: float | None = None,
-) -> DataFrame:
-    """The reference's search-filter surface (bbox + date range + cloud
-    cover, `src/rasteret/core/collection.py:225-290`) as native predicates —
-    pushdown-friendly, composable with the cell-cover joins downstream."""
-    out = records
-    if bbox is not None:
-        xmin, ymin, xmax, ymax = bbox
-        out = out.filter(
-            (F.col("xmax") >= xmin) & (F.col("xmin") <= xmax)
-            & (F.col("ymax") >= ymin) & (F.col("ymin") <= ymax)
-        )
-    if date_range is not None:
-        out = out.filter(
-            (F.col("datetime") >= F.lit(date_range[0]))
-            & (F.col("datetime") <= F.lit(date_range[1]))
-        )
-    if max_cloud_cover is not None:
-        out = out.filter(
-            F.col("cloud_cover").isNull() | (F.col("cloud_cover") <= max_cloud_cover)
-        )
-    return out

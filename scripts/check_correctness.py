@@ -135,6 +135,9 @@ if __name__ == "__main__":
     json_out = None
     if "--json" in args:
         i = args.index("--json")
+        if i + 1 == len(args):
+            print("usage: check_correctness.py [QUERY ...] [--json FILE]", file=sys.stderr)
+            sys.exit(2)
         json_out = args[i + 1]
         args = args[:i] + args[i + 2 :]
     sys.exit(main(only=args or None, json_out=json_out))

@@ -170,16 +170,6 @@ def test_chip_stack_quarantines_time_step_keeps_axis(spark, mixed_images):
     assert sorted(got["t_index"]) == list(range(len(got)))
 
 
-def test_decode_image_stats_quarantines_corrupt_blob(spark, mixed_images):
-    df = spark.createDataFrame(mixed_images[["image_id", "bytes", "fmt", "caption"]])
-    got = decode.decode_image_stats(df).toPandas().set_index("image_id")
-    assert got.loc["img-corrupt", "status"] != "ok"
-    assert got.loc["img-corrupt", "px_count"] == 0
-    healthy_id = mixed_images.iloc[0]["image_id"]
-    assert got.loc[healthy_id, "status"] == "ok"
-    assert got.loc[healthy_id, "px_count"] > 0
-
-
 def test_grid_georef_round_trips_pixel_coords(spark, mixed_images):
     """R10: mosaic rows are self-describing — pixel lon/lat reconstruct from
     the row's own grid columns and land inside the queried chip extent."""

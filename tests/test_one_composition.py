@@ -8,8 +8,9 @@ are generated is a change to those functions, not to every pipeline.
 An AST scan of the library and its runnable surfaces finds each call of the
 chain's primitives, resolving import aliases, and each hand-written
 ``F.col("xmin").alias("img_xmin")`` rename of the image footprint (the one
-copy is ``spatial_join.image_light``).  The same scan checks that no
-operator module is kept alive by its tests alone."""
+copy is ``spatial_join.image_light``).  The same scan checks that every
+library module is reached by an import chain from a runnable surface, so no
+module is kept alive by its tests alone."""
 
 import ast
 from pathlib import Path
@@ -22,14 +23,23 @@ SCANNED = [
     REPO / "bench_extra.py",
     *sorted((REPO / "scripts").rglob("*.py")),
 ]
-# every non-test importer: the library and each runnable surface
-IMPORTERS = [
-    *sorted((REPO / "rasteret_spark").rglob("*.py")),
+LIB = REPO / "rasteret_spark"
+# the runnable surfaces: the query entry, the benches, the scripts,
+# perfbench, the oracles, and the workspace CLI inside the library
+# (``python -m rasteret_spark.cli``)
+SURFACES = [
     REPO / "__spark_entry__.py",
     *sorted(REPO.glob("bench*.py")),
     *sorted((REPO / "scripts").rglob("*.py")),
     *sorted((REPO / "perfbench").rglob("*.py")),
+    *sorted((REPO / "oracles").rglob("*.py")),
 ]
+CLI = "rasteret_spark.cli"
+# library module no import reaches -> (file, conf key) whose conf value
+# names it, so Spark loads it by name
+LOADED_BY_CONF = {
+    "rasteret_spark.worker_daemon": ("rasteret_spark/session.py", "spark.python.daemon.module"),
+}
 OPS = "rasteret_spark.operators"
 # primitive -> the only modules that may call it
 ALLOWED = {
@@ -194,23 +204,39 @@ def _imported(path: Path) -> set[str]:
     return out
 
 
-def test_every_operator_module_has_a_non_test_importer():
-    """A module under ``operators/`` that only ``tests/`` import is dead
-    library code: delete it with its tests instead of keeping it tested."""
-    imports = {
-        path.relative_to(REPO).as_posix(): _imported(path) for path in IMPORTERS
-    }
-    orphans = []
-    for mod_path in sorted((REPO / "rasteret_spark" / "operators").glob("*.py")):
-        if mod_path.stem == "__init__":
-            continue
-        own = mod_path.relative_to(REPO).as_posix()
-        mod = _module_name(own)
-        if not any(
-            name == mod or name.startswith(f"{mod}.")
-            for rel, names in imports.items()
-            if rel != own
-            for name in names
-        ):
-            orphans.append(mod)
-    assert not orphans, "operator modules with no caller outside tests/: " + ", ".join(orphans)
+def _reached() -> set[str]:
+    """Every library module an import chain from a surface runs.  Importing
+    ``a.b.c`` runs the packages ``a`` and ``a.b`` too; ``from a import b``
+    names either the module ``a.b`` or a name inside ``a``."""
+    files = {_module_name(p.relative_to(REPO).as_posix()): p for p in LIB.rglob("*.py")}
+    reached: set[str] = set()
+    todo = list(SURFACES)
+
+    def reach(mod: str) -> None:
+        parts = mod.split(".")
+        for k in range(1, len(parts) + 1):
+            m = ".".join(parts[:k])
+            if m in files and m not in reached:
+                reached.add(m)
+                todo.append(files[m])
+
+    reach(CLI)
+    while todo:
+        for name in _imported(todo.pop()):
+            reach(name if name in files else name.rsplit(".", 1)[0])
+    return reached
+
+
+def test_every_library_module_is_reached_by_a_runnable_surface():
+    """A module under ``rasteret_spark/`` that no import chain from a
+    runnable surface reaches is dead library code, also when another dead
+    module imports it: delete it with its tests instead of keeping it
+    tested."""
+    modules = {_module_name(p.relative_to(REPO).as_posix()) for p in LIB.rglob("*.py")}
+    reached = _reached()
+    for mod, (rel, key) in LOADED_BY_CONF.items():
+        assert mod in modules and mod not in reached, f"stale entry {mod}"
+        assert _module_name(rel) in reached, f"{rel} is not reached"
+        assert f'"{key}": "{mod}"' in (REPO / rel).read_text(), f"{rel} sets no {key}={mod}"
+    orphans = sorted(modules - reached - LOADED_BY_CONF.keys())
+    assert not orphans, "library modules no runnable surface reaches: " + ", ".join(orphans)

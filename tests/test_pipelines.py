@@ -1,11 +1,10 @@
-"""End-to-end resumable zonal pipeline + streaming image decode."""
+"""End-to-end resumable zonal and sample pipelines."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from rasteret_spark.plans import lineage, pipelines
-from rasteret_spark.streaming import images as stream_img
 
 
 def _frames(spark, images_pdf, aois_pdf):
@@ -51,43 +50,6 @@ def test_resumable_zonal_partial_then_complete(spark, images_pdf, aois_pdf, tmp_
 
     log = lineage.read_log(spark, out)
     assert log.agg(F.sum("rows_out")).first()[0] == len(full)
-
-
-def test_streaming_image_sample(spark, images_pdf, points_pdf, tmp_path):
-    src = str(tmp_path / "img_stream")
-    out = str(tmp_path / "samples_out")
-    ckpt = str(tmp_path / "ckpt")
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-            "xmin", "ymin", "xmax", "ymax"]
-    # arrive in two file batches
-    spark.createDataFrame(images_pdf[cols].iloc[:30]).write.mode("append").parquet(src)
-    spark.createDataFrame(images_pdf[cols].iloc[30:]).write.mode("append").parquet(src)
-
-    stream = stream_img.read_image_stream(spark, src, files_per_trigger=2)
-    pts = spark.createDataFrame(points_pdf)
-    q = stream_img.stream_sample_points(stream, pts, out, ckpt, max_ring=0)
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out).toPandas()
-    # batch-mode reference over the same inputs
-    from rasteret_spark.operators import sampling, spatial_join as sj
-
-    images = spark.createDataFrame(
-        images_pdf.rename(columns={c: f"img_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]})
-    )
-    cands = sj.point_in_bbox_join(
-        pts, images.select("image_id", "img_xmin", "img_ymin", "img_xmax", "img_ymax"), res=8
-    ).select("point_index", "x", "y", "image_id")
-    want = sampling.sample_points(
-        cands, images.select("image_id", "bytes"), max_ring=0
-    ).toPandas()
-    key = ["point_index", "image_id"]
-    g = got.sort_values(key).reset_index(drop=True)
-    w = want.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(w)
-    np.testing.assert_array_equal(
-        g["value"].to_numpy(float), w["value"].to_numpy(float)
-    )
 
 
 def test_resumable_sample_partial_then_complete(spark, images_pdf, points_pdf, tmp_path):

@@ -215,9 +215,9 @@ def test_fetch_blobs_file_and_custom_scheme(spark, tmp_path):
 
 
 def test_fetch_feeds_decode_pipeline(spark, tmp_path, images_pdf):
-    """hrefs -> fetch_blobs -> decode stats: the injected backend slots into
+    """hrefs -> fetch_blobs -> full decode: the injected backend slots into
     the real pipeline (blobs written to disk by the test, read by file://)."""
-    from rasteret_spark.operators import decode
+    from rasteret_spark.format import container
     from rasteret_spark.sources import fetch as fx
 
     sub = images_pdf.iloc[:4]
@@ -228,6 +228,10 @@ def test_fetch_feeds_decode_pipeline(spark, tmp_path, images_pdf):
         hrefs.append({"image_id": r["image_id"], "href": f"file://{p}",
                       "fmt": r["fmt"], "caption": r["caption"]})
     df = fx.fetch_blobs(spark.createDataFrame(pd.DataFrame(hrefs)))
-    got = decode.decode_image_stats(df).toPandas()
-    assert len(got) == 4 and (got["status"] == "ok").all()
-    assert (got["px_count"] > 0).all()
+    got = df.toPandas()
+    assert len(got) == 4 and (got["fetch_status"] == "ok").all()
+    want = dict(zip(sub["image_id"], sub["bytes"]))
+    for image_id, blob in zip(got["image_id"], got["bytes"]):
+        arr = container.decode_full_any(bytes(blob))
+        assert arr.size > 0
+        assert np.array_equal(arr, container.decode_full_any(bytes(want[image_id])))

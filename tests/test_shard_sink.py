@@ -237,75 +237,6 @@ def test_image_caption_shards_byte_exact(spark, images_pdf, tmp_path_factory):
     )
 
 
-def test_streaming_shard_export_matches_batch_and_replays_idempotent(
-    spark, images_pdf, tmp_path
-):
-    """Micro-batched shard export: epochs partition the arrivals, every
-    epoch's tars are byte-identical to a batch export of the same rows,
-    and re-running the stream (fresh checkpoint, same inputs) regenerates
-    the SAME bytes — replay-idempotent by determinism."""
-    import hashlib
-    from pathlib import Path
-
-    from rasteret_spark.streaming import images as stream_img
-
-    src = str(tmp_path / "img_stream")
-    out = str(tmp_path / "shards_out")
-    mani = str(tmp_path / "manifests")
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-            "xmin", "ymin", "xmax", "ymax"]
-    spark.createDataFrame(images_pdf[cols].iloc[:10]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(images_pdf[cols].iloc[10:20]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = stream_img.read_image_stream(spark, src, files_per_trigger=1)
-    q = stream_img.stream_image_shards(
-        stream, out, str(tmp_path / "ckpt"), n_shards=3, manifest_dir=mani
-    )
-    q.awaitTermination(300)
-
-    man = spark.read.parquet(mani).toPandas()
-    assert set(man["status"]) == {"ok"}
-    epochs = sorted(man["epoch"].unique())
-    assert len(epochs) == 2
-    assert man["n_samples"].sum() == 20
-    assert len(man) == 3 * 2  # contiguous shard ids per epoch
-
-    # every sample readable back; ids partition across epochs exactly
-    back = ss.read_image_shards(spark, out + "/epoch=*/shard-*.tar").toPandas()
-    assert sorted(back["image_id"]) == sorted(images_pdf["image_id"].iloc[:20])
-
-    # epoch tars == batch export of the same rows, byte for byte
-    for epoch, lo, hi in ((epochs[0], 0, 10), (epochs[1], 10, 20)):
-        bdir = str(tmp_path / f"batch_{epoch}")
-        bman = ss.write_image_shards(
-            spark.createDataFrame(images_pdf[cols].iloc[lo:hi]), bdir, n_shards=3
-        ).toPandas()
-        for _, r in bman.iterrows():
-            shard = Path(r["href"]).name
-            stream_bytes = Path(out, f"epoch={epoch}", shard).read_bytes()
-            assert hashlib.sha256(stream_bytes).hexdigest() == r["sha256"]
-
-    # replay with a fresh checkpoint: same bytes land in the same places
-    before = {
-        p: hashlib.sha256(p.read_bytes()).hexdigest()
-        for p in Path(out).rglob("*.tar")
-    }
-    q2 = stream_img.stream_image_shards(
-        stream_img.read_image_stream(spark, src, files_per_trigger=1),
-        out, str(tmp_path / "ckpt2"), n_shards=3, manifest_dir=mani,
-    )
-    q2.awaitTermination(300)
-    after = {
-        p: hashlib.sha256(p.read_bytes()).hexdigest()
-        for p in Path(out).rglob("*.tar")
-    }
-    assert before == after
-
-
 def test_null_keys_quarantine_and_null_captions_roundtrip(
     spark, images_pdf, tmp_path_factory
 ):

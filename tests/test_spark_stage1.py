@@ -40,21 +40,6 @@ def test_enrich_headers_matches_local_parse(images_df, images_pdf):
         )
 
 
-def test_decode_image_stats_matches_oracle(images_df, images_pdf):
-    got = decode.decode_image_stats(images_df).toPandas().set_index("image_id")
-    assert len(got) == len(images_pdf)
-    for _, row in images_pdf.iterrows():
-        blob = bytes(row["bytes"])
-        meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:8])])
-        arr = mr.decode_full(blob).astype(np.float64)
-        valid = np.ones(arr.shape, bool) if meta.nodata is None else arr != meta.nodata
-        g = got.loc[row["image_id"]]
-        assert int(g["px_count"]) == arr.size
-        assert int(g["valid_count"]) == int(valid.sum())
-        np.testing.assert_allclose(g["v_mean"], arr[valid].mean(), rtol=1e-12)
-        assert g["caption"] == row["caption"]  # byte-equal pass-through
-
-
 def test_multiband_zonal_matches_per_band_oracle(spark, images_pdf, aois_pdf):
     """bands=(0,1,2): one stats row per (pair, available band), each pinned
     bit-exact against the full-decode oracle of THAT band."""

@@ -1,6 +1,7 @@
 """STAC ingest (S4/S5): item -> record contract, distributed ndjson crawl,
-search filters.  Items are spec-shaped static fixtures (no network in this
-environment — the cassette-fixture role of the reference's STAC tests)."""
+search filters through ``Collection.subset`` / ``where``.  Items are
+spec-shaped static fixtures (no network in this environment — the
+cassette-fixture role of the reference's STAC tests)."""
 
 import json
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rasteret_spark import geom
+from rasteret_spark.collection import Collection
 from rasteret_spark.sources import stac
 
 
@@ -73,15 +75,14 @@ def test_item_to_record_contract():
 
 
 def test_records_df_and_filters(spark):
-    df = stac.records_df(spark, _items())
-    assert df.count() == 2
-    got = stac.filter_search(
-        df, bbox=(9.9, 49.9, 10.2, 50.2), date_range=("2023-01-01", "2023-12-31"),
-        max_cloud_cover=20.0,
-    )
-    assert [r.image_id for r in got.collect()] == ["S2A_0001"]
+    coll = Collection.from_stac_items(spark, _items())
+    assert coll.count() == 2
+    got = coll.subset(
+        bbox=(9.9, 49.9, 10.2, 50.2), date_range=("2023-01-01", "2023-12-31")
+    ).where("cloud_cover IS NULL OR cloud_cover <= 20.0")
+    assert [r.image_id for r in got.records.collect()] == ["S2A_0001"]
     # cloud filter keeps null-cover items
-    assert stac.filter_search(df, max_cloud_cover=1.0).count() == 1
+    assert coll.where("cloud_cover IS NULL OR cloud_cover <= 1.0").count() == 1
 
 
 def test_ndjson_crawl_is_distributed_and_equal(spark, tmp_path):

@@ -338,28 +338,6 @@ def test_zonal_stats_on_tiff_blobs_bit_exact(spark):
             assert r["v_sum"] == pytest.approx(want["v_sum"], rel=0, abs=0)
 
 
-def test_decode_image_stats_on_tiff(spark):
-    from rasteret_spark.operators import decode
-    from rasteret_spark.sources import synthetic as syn
-
-    images = syn.spark_tiff_images_df(spark, 8)
-    got = decode.decode_image_stats(
-        images.select("image_id", "bytes", "fmt", "caption")
-    ).toPandas().set_index("image_id")
-    assert (got["status"] == "ok").all()
-    pdf = syn.tiff_images_table(8).to_pandas()
-    for _, row in pdf.iterrows():
-        arr = container.decode_full_any(row["bytes"])
-        g = got.loc[row["image_id"]]
-        assert g["px_count"] == arr.size
-        vals = np.asarray(arr, dtype=np.float64)
-        nod = row["nodata"]
-        valid = np.ones(vals.shape, bool) if pd.isna(nod) else vals != nod
-        assert g["valid_count"] == int(valid.sum())
-        if valid.any():
-            assert g["v_mean"] == pytest.approx(float(vals[valid].mean()))
-
-
 # --- COG overview pyramids ---------------------------------------------------
 def test_overview_chain_parses_with_derived_georef():
     rng = np.random.default_rng(21)

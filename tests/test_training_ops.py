@@ -255,8 +255,9 @@ def test_multimodal_decoder_injection(spark):
 
 def test_registry_snapshots_pin_built_plans(spark):
     """A plan built BEFORE a registration must not silently change when the
-    module registries mutate afterwards; passing the updated snapshot
-    explicitly is the opt-in (mirrors fetch_blobs(fetchers=...))."""
+    module registries mutate afterwards (as fetch_blobs keeps the _FETCHERS
+    snapshot it takes at build); passing the updated snapshot explicitly is
+    the opt-in."""
     from rasteret_spark.operators import multimodal
 
     magic_prefix = b"FAKE"

@@ -13,7 +13,7 @@ from rasteret_spark import crs, geom
 from rasteret_spark.collection import Collection
 from rasteret_spark.format import miniraster as mr
 from rasteret_spark.operators import assemble
-from rasteret_spark.sources import fetch as fx, stac
+from rasteret_spark.sources import fetch as fx
 
 N_SCENES = 6
 SIZE = 64
@@ -66,7 +66,7 @@ def test_full_reference_workflow(spark, tmp_path, mem_fetcher):
     items = mem_fetcher
 
     # 1. STAC ingest -> records; 2. resolve blobs through the fetch registry
-    records = stac.records_df(spark, list(items)).withColumn(
+    records = Collection.from_stac_items(spark, items).records.withColumn(
         "href", F.col("assets")["data"]
     )
     withblobs = fx.fetch_blobs(records)
