@@ -1620,8 +1620,8 @@ def q59_bpe_token_stats(spark, sf_dir):
 
 def q58_image_feature_pairs(spark, sf_dir):
     """Multimodal -> similarity composition: decode every image through the
-    pluggable-kernel registry into a FEATURE_DIM descriptor, then hyperplane-LSH
-    near-dup pairs over the descriptors (the feature-extract stage of a
+    kernel of its sniffed media kind into a FEATURE_DIM descriptor, then
+    hyperplane-LSH near-dup pairs over the descriptors (the feature-extract stage of a
     training-data pipeline).  Planted exact-duplicate images (the synthetic
     generator's dup_every rule) surface at cosine ~1."""
     from rasteret_spark.operators import multimodal, similarity

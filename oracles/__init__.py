@@ -18,15 +18,23 @@ and the JPEG codec behind q62's jpeg rows.  After an edit there a stale
 parquet still holds the old kernel's answer, so the engine's fresh output
 shows up as a mismatch and never hides one; delete ``ORACLE_DIR`` to
 rebuild.
+
+Writing a parquet deletes the entries for the same builder and params that
+are keyed on another sources digest, unless one was touched (written or
+returned by ``truth_parquet``) in the last ``KEEP_OTHER_DIGEST_S``: a
+checkout at another commit that is still in use keeps its truths.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import time
 from pathlib import Path
 
 ORACLE_DIR = "/tmp/rasteret_spark_oracle"
+KEEP_OTHER_DIGEST_S = 3600.0
 
 
 def _sources_digest() -> str:
@@ -50,7 +58,10 @@ def truth_parquet(builder_name: str, **params) -> str:
     file).  Float columns write NaN as NULL to match Spark's nullable
     doubles."""
     path = truth_path(builder_name, **params)
-    if not os.path.exists(path):
+    if os.path.exists(path):
+        with contextlib.suppress(OSError):  # another user's file keeps its time
+            os.utime(path)
+    else:
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -70,4 +81,23 @@ def truth_parquet(builder_name: str, **params) -> str:
         tmp = f"{path}.tmp.{os.getpid()}"
         pq.write_table(pa.Table.from_arrays(cols, names=list(pdf.columns)), tmp)
         os.replace(tmp, path)
+        _prune_other_digests(path)
     return path
+
+
+def _prune_other_digests(path: str) -> None:
+    """Delete ``path``'s siblings for the same builder and params keyed on
+    another sources digest and untouched for ``KEEP_OTHER_DIGEST_S``."""
+    d, name = os.path.split(path)
+    prefix, digest = name[: -len(".parquet")].rsplit("_", 1)
+    cutoff = time.time() - KEEP_OTHER_DIGEST_S
+    for entry in os.scandir(d):
+        head, _, other = entry.name.removesuffix(".parquet").rpartition("_")
+        if (
+            entry.name.endswith(".parquet") and head == prefix
+            and other != digest and len(other) == len(digest)
+        ):
+            # gone already (a concurrent writer pruned it) or not ours
+            with contextlib.suppress(OSError):
+                if entry.stat().st_mtime < cutoff:
+                    os.remove(entry.path)

@@ -13,11 +13,13 @@ Commands:
     python -m rasteret_spark.cli collections delete NAME [--workspace DIR]
     python -m rasteret_spark.cli collections import SRC NAME [--workspace DIR]
 
-``build`` ingests an existing records parquet (or a STAC-items table written
-by ``sources.stac``) with optional bbox/date narrowing — STAC items from an
-API search enter through the library (``Collection.from_stac_items``), kept
-out of the CLI so the tool never needs network access.  ``main`` accepts an
-injected SparkSession for tests/embedding; standalone runs create one.
+``build`` ingests an existing image-records parquet with optional bbox/date
+narrowing; a ``--records`` path ending in ``.ndjson`` or ``.jsonl`` is a
+static catalog of newline-delimited STAC items instead, parsed on the
+executors (``stac.records_from_ndjson``).  STAC items from an API search
+enter through the library (``Collection.from_stac_items``), kept out of the
+CLI so the tool never needs network access.  ``main`` accepts an injected
+SparkSession for tests/embedding; standalone runs create one.
 """
 
 from __future__ import annotations
@@ -61,10 +63,11 @@ def _names(workspace: str) -> list[str]:
 
 
 def _summary(spark, path: str, name: str) -> dict:
+    # plain read, not the image-table contract: a collection built from STAC
+    # items holds asset hrefs, not blobs
     from rasteret_spark.collection import Collection
 
-    c = Collection.from_parquet(spark, path)
-    d = c.describe()
+    d = Collection(spark, spark.read.parquet(path)).describe()
     return {"name": name, "path": path, **d}
 
 
@@ -81,7 +84,12 @@ def _emit(rows, as_json: bool, out) -> None:
 def cmd_build(args, spark, out) -> int:
     from rasteret_spark.collection import Collection
 
-    c = Collection.from_parquet(spark, args.records)
+    if args.records.endswith((".ndjson", ".jsonl")):
+        from rasteret_spark.sources import stac
+
+        c = Collection(spark, stac.records_from_ndjson(spark, args.records))
+    else:
+        c = Collection.from_parquet(spark, args.records)
     c = c.subset(bbox=args.bbox, date_range=args.date_range)
     dst = _collection_path(args.workspace, args.name)
     if os.path.exists(dst) and not args.overwrite:
@@ -180,7 +188,10 @@ def build_parser() -> argparse.ArgumentParser:
 
     b = csub.add_parser("build", help="build a named collection from a records table")
     b.add_argument("name")
-    b.add_argument("--records", required=True, help="source records parquet path")
+    b.add_argument(
+        "--records", required=True,
+        help="source records parquet path, or newline-delimited STAC items (.ndjson/.jsonl)",
+    )
     b.add_argument("--bbox", type=_parse_bbox, default=None)
     b.add_argument("--date-range", type=_parse_date_range, default=None)
     b.add_argument("--overwrite", action="store_true")

@@ -25,10 +25,11 @@ rasters (the reference reprojects via pyproj/rasterio,
                      unit-scale-on-standard-parallel invariants.
 
 ``register_crs`` injects arbitrary additional codes (mirroring rasteret's
-runtime registries, `src/rasteret/constants.py:49-88`); ``make_utm`` builds
-real northern/southern UTM callables for registration under any code.  All
-transforms are numpy-vectorized and run executor-side inside pandas UDF
-batches; the registry dict travels by closure capture.
+runtime registries, `src/rasteret/constants.py:49-88`); ``tm_forward`` /
+``tm_inverse`` give the real Transverse Mercator for registering any UTM
+zone under a code.  All transforms are numpy-vectorized and run
+executor-side inside pandas UDF batches; the registry dict travels by
+closure capture.
 
 Separability: a CRS is *separable* when lon depends only on x and lat only on
 y (linear zones, 4326, 3857).  Transverse Mercator is NOT separable (lon
@@ -149,23 +150,6 @@ def tm_inverse(x, y, lon0_deg: float, k0: float, fe: float, fn: float):
         phi += d * np.sin(2.0 * j * chi)
     lam = np.arctan2(np.sinh(ep), np.cos(xp))
     return lon0_deg + np.degrees(lam), np.degrees(phi)
-
-
-def make_utm(zone: int, north: bool = True):
-    """(to_lonlat, from_lonlat) callables for real WGS84 UTM — register under
-    any code via ``register_crs(code, *make_utm(z, north), separable=False)``."""
-    if not 1 <= zone <= 60:
-        raise ValueError(f"UTM zone {zone} out of range 1..60")
-    lon0 = zone * 6.0 - 183.0
-    fn = 0.0 if north else 10_000_000.0
-
-    def to_ll(x, y, _lon0=lon0, _fn=fn):
-        return tm_inverse(x, y, _lon0, 0.9996, 500_000.0, _fn)
-
-    def from_ll(lon, lat, _lon0=lon0, _fn=fn):
-        return tm_forward(lon, lat, _lon0, 0.9996, 500_000.0, _fn)
-
-    return to_ll, from_ll
 
 
 # --- ellipsoidal Lambert Azimuthal Equal-Area (Snyder 1987 §24) ---------------
@@ -453,14 +437,6 @@ def transform_points(src_epsg: int, dst_epsg: int, x, y):
     ``transform_coords`` analogue (rasteret `core/geometry.py:186-247`)."""
     lon, lat = to_lonlat(src_epsg, x, y)
     return from_lonlat(dst_epsg, lon, lat)
-
-
-def transform_ring(src_epsg: int, dst_epsg: int, ring: np.ndarray) -> np.ndarray:
-    """(n, 2) polygon ring between CRSs (vertices map pointwise; densify
-    upstream if edge curvature matters for the use)."""
-    ring = np.asarray(ring, dtype=np.float64)
-    x, y = transform_points(src_epsg, dst_epsg, ring[:, 0], ring[:, 1])
-    return np.stack([x, y], axis=1)
 
 
 def transform_bbox(

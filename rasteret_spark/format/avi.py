@@ -1,89 +1,22 @@
-"""Minimal RIFF/AVI container for Motion-JPEG video — stdlib only.
+"""Minimal RIFF/AVI reader for Motion-JPEG video — stdlib only.
 
-Makes ``operators.multimodal.frame_sample`` a REAL video path (the
-reference leans on external video tooling for frame extraction; this
-container has no codec libraries, so the MJPEG route is built from the
-repo's own from-scratch JPEG codec in ``format/jpegcodec.py``): each
-``00dc`` chunk in the ``movi`` list is one complete baseline-JFIF stream.
+Gives ``operators.multimodal`` a REAL video path, the poster frame of an
+MJPEG-AVI (the reference leans on external video tooling; this container
+has no codec libraries, so the MJPEG route is built from the repo's own
+from-scratch JPEG codec in ``format/jpegcodec.py``): each ``00dc`` chunk in
+the ``movi`` list is one complete baseline-JFIF stream.
 
-Writer emits the standard header chain (``avih``/``strh``/``strf`` with
-``MJPG`` fourcc) plus an ``idx1`` index; the reader walks the RIFF tree
-and never trusts ``idx1`` (truncated-file tolerant, like real players).
+The reader walks the RIFF tree and never trusts ``idx1`` (truncated-file
+tolerant, like real players).
 """
 
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass
-
-import numpy as np
 
 
 class AviError(ValueError):
     pass
-
-
-def _chunk(fourcc: bytes, data: bytes) -> bytes:
-    pad = b"\x00" if len(data) & 1 else b""  # RIFF chunks are word-aligned
-    return fourcc + struct.pack("<I", len(data)) + data + pad
-
-
-def _list(list_type: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", list_type + payload)
-
-
-def encode_avi(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
-    """JPEG streams -> MJPEG AVI bytes (one ``00dc`` chunk per frame)."""
-    if not frames:
-        raise AviError("AVI needs at least one frame")
-    if fps <= 0:
-        raise AviError(f"bad fps {fps}")
-    n = len(frames)
-    max_bytes = max(len(f) for f in frames)
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps,        # microseconds per frame
-        max_bytes * fps,         # max bytes per second
-        0,                       # padding granularity
-        0x10,                    # AVIF_HASINDEX
-        n, 0, 1, max_bytes,      # total frames, initial, streams, buf size
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<10I", 0, 0, 0, 1, fps, 0, n, max_bytes, 0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, width, height)
-    )
-    strf = struct.pack(  # BITMAPINFOHEADER
-        "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih) + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
-    movi_payload = b"".join(_chunk(b"00dc", f) for f in frames)
-    movi = _list(b"movi", movi_payload)
-    # idx1 offsets are relative to the start of the movi list data (i.e. the
-    # position of the 'movi' fourcc), the most widely-written convention
-    idx = bytearray()
-    off = 4  # first chunk starts right after the 'movi' fourcc
-    for f in frames:
-        idx += b"00dc" + struct.pack("<III", 0x10, off, len(f))
-        off += 8 + len(f) + (len(f) & 1)
-    body = b"AVI " + hdrl + movi + _chunk(b"idx1", bytes(idx))
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-@dataclass(frozen=True)
-class AviInfo:
-    width: int
-    height: int
-    fps: int
-    n_frames: int
-    handler: str
 
 
 def _walk(buf: bytes, pos: int, end: int):
@@ -101,29 +34,6 @@ def _walk(buf: bytes, pos: int, end: int):
         pos = start + size + (size & 1)
 
 
-def parse_avi(buf: bytes) -> AviInfo:
-    """Header walk -> AviInfo; raises AviError for non-AVI input."""
-    buf = bytes(buf)
-    if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-        raise AviError("not an AVI (RIFF/AVI  signature missing)")
-    width = height = fps = n = 0
-    handler = ""
-    for fourcc, ltype, start, size in _walk(buf, 12, len(buf)):
-        if ltype == b"hdrl":
-            for f2, l2, s2, z2 in _walk(buf, start, start + size):
-                if f2 == b"avih":
-                    us_pf, _, _, _, n = struct.unpack_from("<5I", buf, s2)
-                    width, height = struct.unpack_from("<2I", buf, s2 + 32)
-                    fps = round(1_000_000 / us_pf) if us_pf else 0
-                elif l2 == b"strl":
-                    for f3, _, s3, _ in _walk(buf, s2, s2 + z2):
-                        if f3 == b"strh" and buf[s3 : s3 + 4] == b"vids":
-                            handler = buf[s3 + 4 : s3 + 8].decode("latin1")
-    if width == 0 or height == 0:
-        raise AviError("AVI without video dimensions")
-    return AviInfo(width=width, height=height, fps=fps, n_frames=n, handler=handler)
-
-
 def iter_frames(buf: bytes):
     """Yield raw video-frame payloads (``..dc``/``..db`` chunks) in stream
     order, straight from the ``movi`` walk — ``idx1`` is ignored."""
@@ -135,22 +45,3 @@ def iter_frames(buf: bytes):
             for f2, l2, s2, z2 in _walk(buf, start, start + size):
                 if f2[2:4] in (b"dc", b"db"):
                     yield buf[s2 : s2 + z2]
-
-
-def frames_to_avi(
-    frames: "np.ndarray | list[np.ndarray]", fps: int = 10, quality: int = 90
-) -> bytes:
-    """Convenience: uint8 frame arrays -> MJPEG AVI via the repo JPEG
-    encoder.  Accepts (t, h, w) gray or (t, h, w, 3) RGB."""
-    from rasteret_spark.format import jpegcodec
-
-    arrs = [np.asarray(f) for f in frames]
-    if not arrs:
-        raise AviError("no frames")
-    h, w = arrs[0].shape[:2]
-    for a in arrs:
-        if a.shape[:2] != (h, w):
-            raise AviError("all frames must share one dimension")
-    return encode_avi(
-        [jpegcodec.encode(a, quality=quality) for a in arrs], w, h, fps=fps
-    )

@@ -115,22 +115,28 @@ def _emit_literals(out: bytearray, arr: np.ndarray, s: int, e: int) -> None:
         s += chunk
 
 
+_ONE_BYTE = [bytes((b,)) for b in range(256)]
+
+
 def packbits_decode(data: bytes, expected: int) -> bytes:
-    src = np.frombuffer(data, dtype=np.uint8)
+    """Runs walked over ``bytes`` (ints and slices, no numpy scalars); a
+    repeat header with no byte after it raises ``IndexError``."""
+    src = bytes(data)
     out = bytearray()
     i = 0
-    n = src.size
+    n = len(src)
     while i < n and len(out) < expected:
-        h = int(src[i])
+        h = src[i]
         i += 1
         if h < 128:  # literal run of h+1 bytes
-            out.extend(src[i : i + h + 1].tobytes())
+            out += src[i : i + h + 1]
             i += h + 1
         elif h > 128:  # repeat next byte 257-h times
-            out.extend(bytes([int(src[i])]) * (257 - h))
+            out += _ONE_BYTE[src[i]] * (257 - h)
             i += 1
         # h == 128: no-op
-    return bytes(out[:expected])
+    del out[expected:]
+    return bytes(out)
 
 
 # --- TIFF 6.0 LZW -------------------------------------------------------------

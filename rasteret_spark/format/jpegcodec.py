@@ -946,15 +946,3 @@ def decode(buf: bytes, tables: bytes | None = None) -> np.ndarray:
     raise ValueError(f"unsupported JPEG component count {len(planes)}")
 
 
-def decode_coefficients(buf: bytes) -> list[np.ndarray]:
-    """Entropy-decode only: per-component (n_blocks, 64) quantized zigzag
-    coefficients.  The entropy layer is lossless, so for a stream produced
-    by :func:`encode` these match the encoder's quantized coefficients
-    EXACTLY — the internal-consistency oracle in tests/test_jpeg.py."""
-    buf = bytes(buf)
-    st = _ParseState()
-    scan_off = _parse_segments(buf, st)
-    if scan_off is None or st.frame is None:
-        raise ValueError("JPEG stream has no scan/frame")
-    coefs, _, _, _ = _decode_all_scans(buf, scan_off, st)
-    return coefs

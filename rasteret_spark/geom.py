@@ -24,10 +24,6 @@ WKB_MULTIPOLYGON = 6
 
 
 # --- encoding ----------------------------------------------------------------
-def wkb_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, WKB_POINT, x, y)
-
-
 def wkb_polygon(rings: list[np.ndarray]) -> bytes:
     """rings: list of (n,2) float64 arrays, closed or not (auto-closed)."""
     out = bytearray(struct.pack("<BII", 1, WKB_POLYGON, len(rings)))

@@ -99,34 +99,6 @@ def focal_stat_2d(v2d: np.ndarray, stat: str, radius: int) -> np.ndarray:
     return np.where(nv > 0, s / nv, np.nan)
 
 
-def convolve_2d(
-    v2d: np.ndarray, kernel: list[list[float]], normalize: bool
-) -> np.ndarray:
-    """Weighted sum of the clamped taps in tap order.  Strict: any NaN tap
-    nulls the pixel.  ``normalize``: ``sum w*v / sum w`` over the valid
-    taps, NaN where the valid weights sum to zero."""
-    radius = len(kernel) // 2
-    terms = [
-        (t, float(kernel[dr + radius][dc + radius]))
-        for dr, dc, t in _clamped_taps(v2d, radius)
-    ]
-    if normalize:
-        num = np.zeros(v2d.shape)
-        den = np.zeros(v2d.shape)
-        for t, w in terms:
-            m = ~np.isnan(t)
-            num = num + np.where(m, t * w, 0.0)
-            den = den + np.where(m, w, 0.0)
-        return np.where(den != 0.0, num / den, np.nan)
-    s = None
-    any_null = np.zeros(v2d.shape, dtype=bool)
-    for t, w in terms:
-        any_null |= np.isnan(t)
-        term = t * w
-        s = term if s is None else s + term
-    return np.where(any_null, np.nan, s)
-
-
 SOBEL_X = ((-1.0, 0.0, 1.0), (-2.0, 0.0, 2.0), (-1.0, 0.0, 1.0))
 SOBEL_Y = ((-1.0, -2.0, -1.0), (0.0, 0.0, 0.0), (1.0, 2.0, 1.0))
 

@@ -5,9 +5,8 @@ The distributed outputs stay exploded array-rows (the scalable layout); these
 helpers reassemble a COLLECTED chip — the analogue of the reference's
 xarray/CF assembly (`/root/reference/src/rasteret/core/raster_accessor.py:
 1328-1477`: spatial_ref, GeoTransform, band/time coords) without requiring
-xarray in the engine.  If xarray is installed, ``to_xarray`` upgrades the
-result to a labeled DataArray; otherwise the plain (tensor, attrs) pair has
-everything needed to georeference each pixel.
+xarray in the engine: the plain (tensor, attrs) pair has everything needed
+to georeference each pixel (``pixel_coords`` gives the lon/lat axes).
 
 Attrs contract (GDAL GeoTransform order, north-up lon/lat grid):
   transform = (xres, 0, xmin, 0, -yres, ymax)   x = xmin + (col+0.5)*xres
@@ -66,8 +65,8 @@ def _plane(values, h: int, w: int) -> np.ndarray:
 def chip_to_array(row, value_col: str = "values") -> tuple[np.ndarray, dict]:
     """One mosaic row (MOSAIC_SCHEMA, collected) -> ((H, W) float64, attrs).
     Nulls become NaN.  ``value_col`` assembles derived arrays that carry
-    the same grid columns — band-math indices (``"nd"``/``"ratio"``/
-    ``"lc"``) and temporal composites (``"composite"``)."""
+    the same grid columns — band-math indices (``"nd"``/``"ratio"``) and
+    temporal composites (``"composite"``)."""
     attrs = _attrs(row)
     return _plane(row[value_col], attrs["height"], attrs["width"]), attrs
 
@@ -144,39 +143,3 @@ def chip_batches(stack_df, batch_size: int = 8):
         batch.append(stack_to_tensor(current))
     if batch:
         yield batch
-
-
-def to_xarray(tensor: np.ndarray, attrs: dict):
-    """Upgrade to a labeled DataArray with x/y coords and CF-ish attrs:
-    the real ``xarray.DataArray`` when xarray is installed, otherwise the
-    drop-in shim in ``rasteret_spark.compat.xarraylike`` (same core
-    surface: dims/coords/attrs/values, sel/isel, reductions, arithmetic)
-    — the engine itself never depends on xarray."""
-    try:
-        import xarray as xr  # gated import: not a container requirement
-    except ImportError:
-        from rasteret_spark.compat import xarraylike as xr
-
-    lon, lat = pixel_coords(attrs)
-    if tensor.ndim == 2:
-        dims = ("y", "x")
-        coords = {"y": lat, "x": lon}
-    else:
-        dims = ("time", "band", "y", "x")
-        coords = {
-            "time": attrs.get("times", list(range(tensor.shape[0]))),
-            "band": attrs.get("bands", list(range(tensor.shape[1]))),
-            "y": lat,
-            "x": lon,
-        }
-    return xr.DataArray(
-        tensor,
-        dims=dims,
-        coords=coords,
-        attrs={
-            "transform": attrs["transform"],
-            "epsg": attrs["epsg"],
-            "crs_wkt": attrs.get("crs_wkt"),
-            "chip_id": attrs["chip_id"],
-        },
-    )

@@ -140,34 +140,6 @@ def band_ratio(
     )
 
 
-def linear_combination(
-    per_band: DataFrame,
-    weights: dict[int, float],
-    bias: float = 0.0,
-) -> DataFrame:
-    """``sum_i w_i * band_i + bias`` per pixel (tasseled-cap-style
-    transforms).  Null in ANY weighted band nulls the output pixel."""
-    if not weights:
-        raise ValueError("weights must name at least one band")
-    items = sorted(weights.items())
-    p = pivot_bands(per_band)
-    b0, w0 = items[0]
-    acc = F.transform(
-        F.try_element_at("bands", F.lit(b0)),
-        lambda v: v * F.lit(w0) + F.lit(bias),
-    )
-
-    def _add_band(weight: float):
-        # bind the weight via closure (a default arg would change the
-        # lambda's arity, which PySpark introspects for HOFs)
-        return lambda s, v: s + v * F.lit(weight)
-
-    for b, w in items[1:]:
-        acc = F.zip_with(acc, F.try_element_at("bands", F.lit(b)), _add_band(w))
-    carry = [c for c in p.columns if c != "bands"]
-    return p.select(*carry, acc.alias("lc")).select("*", *_stats("lc"))
-
-
 def _stat_matrix(mat, stat: str):
     """Per-slot statistic across a (T, N) float64 matrix with NaN nulls.
     ``mean`` folds the valid observations in row (collected) order;

@@ -1,6 +1,6 @@
 """Deduplication operators for document tables at training-data scale.
 
-Five families, each shaped for a 1000-executor cluster:
+Four families, each shaped for a 1000-executor cluster:
 
   * exact           — hash-groupBy, one shuffle on the content hash
   * minhash + LSH   — shingle -> seeded-hash min-signature -> banded bucket
@@ -9,8 +9,6 @@ Five families, each shaped for a 1000-executor cluster:
                       groupBy min) so codegen applies; no Python.
   * simhash         — 64-bit bit-majority of token hashes (Arrow-batched
                       pandas UDF; numpy bit ops), near-dup = hamming <= d
-  * n-gram Jaccard  — exact pairwise similarity, bucketed by LSH first so
-                      the cross product never materializes globally
   * embedding cosine near-dup lives in ``similarity.py``
 
 The ``phash`` column of the image table plays the same role for imagery
@@ -145,27 +143,6 @@ def minhash_lsh_pairs(
     return pairs
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard >= threshold (brute verify path /
-    oracle for the LSH variant).  O(n^2) — small inputs or post-bucket only."""
-    sh = df.select(F.col(id_col), F.array_distinct(_shingles(text_col)).alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    return (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            (
-                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                / F.size(F.array_union("a.sh", "b.sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 # --- simhash -------------------------------------------------------------------
 def simhash_udf():
     """64-bit simhash of whitespace tokens (Arrow batched, numpy-vectorized).
@@ -175,8 +152,8 @@ def simhash_udf():
     BYTE POSITIONS (bounded by the longest token), each step a vectorized
     uint64 xor/multiply across every token — no per-token Python.  Bit
     matrices and the per-document majority vote are a single ``reduceat``
-    over document boundaries.  Output is bit-identical to the scalar
-    ``hash64_str`` path (pinned by the pigeonhole-exact test)."""
+    over document boundaries.  Output is bit-identical to a scalar FNV-1a
+    per token (pinned by the pigeonhole-exact test)."""
 
     @F.pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
@@ -213,14 +190,6 @@ def simhash_udf():
         return pd.Series(out)
 
     return _simhash
-
-
-def hash64_str(s: str) -> int:
-    """Deterministic 64-bit FNV-1a (stable across processes, unlike hash())."""
-    h = 0xCBF29CE484222325
-    for ch in s.encode("utf-8"):
-        h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def simhash_near_dups(

@@ -20,10 +20,6 @@ numpy's ``np.pad(mode="edge")``).  Null semantics are per operator:
 * ``focal_stats`` — the statistic is taken over the VALID taps in the
   window; a pixel with zero valid taps is null.  (Cloud-tolerant
   smoothing: a null center still receives a neighborhood estimate.)
-* ``convolve`` — strict stencil by default: ANY null tap nulls the output
-  pixel (a weighted sum with a missing term is not that kernel).  With
-  ``normalize=True`` the kernel renormalizes over the valid taps instead
-  (sum w*v / sum w over valid), the standard nodata-aware blur.
 * ``sobel`` — strict: gradients at a pixel with any missing neighbor are
   null; magnitude is ``sqrt(gx^2 + gy^2)``.
 """
@@ -79,28 +75,6 @@ def focal_stats(
     return _arrow_map(
         per_band, "values", out_col or f"focal_{stat}",
         lambda row, a: ak.focal_stat_2d(a, stat, radius),
-    )
-
-
-def convolve(
-    per_band: DataFrame,
-    kernel,
-    normalize: bool = False,
-) -> DataFrame:
-    """2-D convolution with an arbitrary odd-sized square kernel.
-
-    ``kernel`` is a (2R+1)x(2R+1) nested sequence of weights.  Strict
-    stencil by default (any null tap -> null pixel); ``normalize=True``
-    renormalizes over valid taps (``sum w*v / sum w``, null when the valid
-    weights sum to zero) — the nodata-aware blur."""
-    k = [list(map(float, row)) for row in kernel]
-    size = len(k)
-    if size % 2 != 1 or size < 3 or any(len(row) != size for row in k):
-        raise ValueError("kernel must be square with odd size >= 3")
-    _require(per_band, "values")
-    return _arrow_map(
-        per_band, "values", "conv",
-        lambda row, a: ak.convolve_2d(a, k, normalize),
     )
 
 

@@ -1,6 +1,6 @@
 """Distributed COG export: mosaic/composite pixel rows -> one tiled,
 overviewed GeoTIFF per chip, written executor-side through the pluggable
-writer registry (`sources/fetch.register_writer`).
+writer registry (`sources/fetch._WRITERS`).
 
 The reference is a READER of COGs others produce (its writer-shaped code is
 test fixtures only); a training-data pipeline also needs the opposite leg —

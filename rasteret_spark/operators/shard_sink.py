@@ -9,7 +9,7 @@ mosaic/composite rows into that layout, distributed:
   same deterministic assignment family as ``operators/splits`` — stable
   across runs, partitionings and appends), and the per-shard groupBy is the
   only data movement.  Shard files write executor-side through the
-  pluggable writer registry (`sources/fetch.register_writer`).
+  pluggable writer registry (`sources/fetch._WRITERS`).
 - **Byte-deterministic shards**: entries are sorted by sample key, the
   from-scratch ustar writer (`format/ustar.py`) pins every varying header
   field, ``.npy`` payloads use the fixed v1.0 format, and ``.json``

@@ -88,10 +88,3 @@ def assign_split(
             salt=salt,
         ).alias("split"),
     )
-
-
-def split_summary(df: DataFrame) -> DataFrame:
-    """Per-split row counts — the balance report a pipeline asserts on
-    before shipping a dataset.  Integer counts only (order-independent,
-    oracle-exact); one groupBy shuffle over a tiny aggregated result."""
-    return df.groupBy("split").agg(F.count(F.lit(1)).alias("n_rows"))

@@ -143,10 +143,6 @@ def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
     }
 
 
-def read_log(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.schema(LOG_SCHEMA).json(_log_dir(out_dir))
-
-
 def checkpointed_run(
     spark: SparkSession,
     df: DataFrame,

@@ -213,14 +213,6 @@ _RANGED_READERS: dict[str, Callable[[str], Callable[[int, int], bytes]]] = {
 }
 
 
-def register_ranged_reader(
-    scheme: str, factory: Callable[[str], Callable[[int, int], bytes]]
-) -> None:
-    """Register a ranged-read factory for a scheme: ``factory(url)`` returns
-    ``read(offset, size) -> bytes``.  Must be picklable (executor-side)."""
-    _RANGED_READERS[scheme.lower()] = factory
-
-
 def ranged_reader(
     url: str,
     readers: dict[str, Callable[[str], Callable[[int, int], bytes]]] | None = None,
@@ -335,15 +327,6 @@ def _put_file(url: str, data: bytes) -> None:
 _WRITERS: dict[str, Callable[[str, bytes], None]] = {
     "file": _put_file,
 }
-
-
-def register_writer(scheme: str, fn: Callable[[str, bytes], None]) -> None:
-    """Register/override the blob writer for a URL scheme (e.g. "s3").
-    ``fn(url, data)`` must write the whole object idempotently (PUT
-    semantics) and be picklable — it executes on executors.  Plan builders
-    snapshot the registry at build time (``dict(_WRITERS)``), as
-    ``fetch_blobs`` snapshots ``_FETCHERS``."""
-    _WRITERS[scheme.lower()] = fn
 
 
 def put(

@@ -16,7 +16,8 @@ Network boundaries are injectable and OPTIONAL:
   * S5 (static catalog crawl): ``records_from_ndjson`` reads
     newline-delimited STAC items AS A DISTRIBUTED TEXT SOURCE
     (``spark.read.text`` -> Arrow-batched parse), so a million-item static
-    catalog ingests in parallel without touching the driver.
+    catalog ingests in parallel without touching the driver.  The CLI's
+    ``collections build NAME --records PATH.ndjson`` (or ``.jsonl``) runs it.
 
 This sandbox has no network, so tests feed static item dicts/files — the
 same role the reference's cassette fixtures play.

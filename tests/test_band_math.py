@@ -103,29 +103,6 @@ def test_band_ratio(per_band):
     assert r["c3"].ratio[2] is None  # 2.0 / null
 
 
-def test_linear_combination_and_missing_band(per_band):
-    df, truth = per_band
-    out = {
-        x.chip_id: x
-        for x in bm.linear_combination(df, {0: 0.5, 1: 2.0}, bias=1.0).collect()
-    }
-    a, b = truth["c2"][0], truth["c2"][1]
-    want = [
-        None if (x is None or y is None) else 1.0 + 0.5 * x + 2.0 * y
-        for x, y in zip(a, b)
-    ]
-    got = list(out["c2"].lc)
-    assert [g is None for g in got] == [w is None for w in want]
-    for g, w in zip(got, want):
-        if g is not None:
-            assert abs(g - w) < 1e-9
-    # a band absent from the pivot nulls the whole chip (try_element_at)
-    missing = bm.linear_combination(df, {0: 1.0, 7: 1.0}).collect()
-    assert all(r.lc is None for r in missing)
-    with pytest.raises(ValueError, match="at least one band"):
-        bm.linear_combination(df, {})
-
-
 def test_threshold_mask(per_band):
     df, _ = per_band
     nd = bm.normalized_difference(df, 1, 0)

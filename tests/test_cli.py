@@ -60,6 +60,47 @@ def test_build_with_bbox_narrows(spark, records_path, images_pdf, tmp_path):
     assert 0 < n < 60, "bbox build must narrow the collection"
 
 
+def _stac_item(i: int) -> dict:
+    x = 10.0 + 0.1 * i
+    ring = [[x, 50.0], [x + 0.1, 50.0], [x + 0.1, 50.1], [x, 50.1], [x, 50.0]]
+    return {
+        "type": "Feature",
+        "id": f"S2A_{i:04d}",
+        "bbox": [x, 50.0, x + 0.1, 50.1],
+        "geometry": {"type": "Polygon", "coordinates": [ring]},
+        "properties": {
+            "datetime": f"2023-0{6 + i}-01T10:30:00Z",
+            "proj:epsg": 4326,
+            "proj:transform": [0.001, 0.0, x, 0.0, -0.001, 50.1],
+            "eo:cloud_cover": 5.0 * i,
+        },
+        "assets": {"B04": {"href": f"s3://bucket/scene{i}/B04.tif"}},
+    }
+
+
+def test_build_from_ndjson_stac_items(spark, tmp_path):
+    """A ``.ndjson`` records path is a static catalog of STAC items: the
+    built collection holds the rows ``Collection.from_stac_items`` gives."""
+    from rasteret_spark.collection import Collection
+
+    items = [_stac_item(i) for i in range(3)]
+    src = tmp_path / "catalog.ndjson"
+    src.write_text("".join(json.dumps(item) + "\n" for item in items))
+    ws = str(tmp_path / "ws")
+    rc, out = _run(
+        spark, "collections", "build", "stac", "--records", str(src),
+        "--workspace", ws, "--json",
+    )
+    assert rc == 0 and json.loads(out)["records"] == 3
+    want = Collection.from_stac_items(spark, items).records
+    got = spark.read.parquet(f"{ws}/stac").select(*want.columns)
+
+    def rows(df):
+        return [r.asDict(recursive=True) for r in df.orderBy("image_id").collect()]
+
+    assert rows(got) == rows(want)
+
+
 def test_info_missing_collection_fails_loudly(spark, tmp_path):
     rc, _ = _run(
         spark, "collections", "info", "nope", "--workspace", str(tmp_path / "ws")

@@ -1,11 +1,9 @@
-"""Compat layer: the xarray-surface shim and the torch map-style dataset.
+"""Compat layer: the torch map-style dataset.
 
-Parity targets: the reference hands results to users as xarray objects
-(`src/rasteret/core/raster_accessor.py:1328-1477`) and as a TorchGeo
-dataset (`src/rasteret/integrations/torchgeo.py:292-299`).  Neither
-library is in this container, so assemble.to_xarray falls back to
-rasteret_spark.compat.xarraylike (same core surface) and ChipDataset
-implements torch's duck-typed map-style protocol over a staged cache.
+Parity target: the reference hands results to users as a TorchGeo dataset
+(`src/rasteret/integrations/torchgeo.py:292-299`).  torch is not in this
+container, so ChipDataset implements torch's duck-typed map-style protocol
+over a staged cache.
 """
 
 import numpy as np
@@ -13,110 +11,7 @@ import pandas as pd
 import pytest
 
 from rasteret_spark.compat.torchdata import ChipDataset
-from rasteret_spark.compat.xarraylike import DataArray, Dataset
 from rasteret_spark.operators import assemble
-
-
-# --- xarraylike ----------------------------------------------------------------
-def _da():
-    vals = np.arange(24, dtype=np.float64).reshape(2, 3, 4)
-    return DataArray(
-        vals, ("time", "y", "x"),
-        coords={"time": np.array([10, 20]),
-                "y": np.array([50.0, 49.0, 48.0]),   # descending, like rasters
-                "x": np.array([1.0, 2.0, 3.0, 4.0])},
-        attrs={"epsg": 4326},
-    )
-
-
-def test_dataarray_basic_surface():
-    da = _da()
-    assert da.shape == (2, 3, 4) and da.dims == ("time", "y", "x")
-    assert da.attrs["epsg"] == 4326
-    assert np.array_equal(np.asarray(da), da.values)
-
-
-def test_isel_drops_scalar_dims_and_slices_coords():
-    da = _da()
-    s = da.isel(time=1)
-    assert s.dims == ("y", "x") and s.shape == (3, 4)
-    assert np.array_equal(s.values, da.values[1])
-    s2 = da.isel(y=slice(0, 2), x=2)
-    assert s2.dims == ("time", "y")
-    assert np.array_equal(s2.coords["y"], [50.0, 49.0])
-
-
-def test_sel_exact_nearest_and_range():
-    da = _da()
-    assert np.array_equal(da.sel(time=20).values, da.values[1])
-    with pytest.raises(KeyError):
-        da.sel(time=15)
-    assert np.array_equal(da.sel(time=14, method="nearest").values, da.values[0])
-    # slice over a DESCENDING coord
-    sub = da.sel(y=slice(49.5, 48.0))
-    assert np.array_equal(sub.coords["y"], [49.0, 48.0])
-    near = da.sel(x=2.4, method="nearest")
-    assert np.array_equal(near.values, da.values[:, :, 1])
-
-
-def test_sel_one_sided_slices_follow_coord_order():
-    """Real xarray keeps slice semantics in COORD order: on a descending
-    coord, slice(None, 0) keeps the leading (larger) values."""
-    da = DataArray(np.arange(4.0), ("y",), coords={"y": np.array([90.0, 60.0, 0.0, -90.0])})
-    assert np.array_equal(da.sel(y=slice(None, 0)).coords["y"], [90.0, 60.0, 0.0])
-    assert np.array_equal(da.sel(y=slice(60, None)).coords["y"], [60.0, 0.0, -90.0])
-    asc = DataArray(np.arange(4.0), ("x",), coords={"x": np.array([0.0, 1.0, 2.0, 3.0])})
-    assert np.array_equal(asc.sel(x=slice(None, 1.5)).coords["x"], [0.0, 1.0])
-    assert np.array_equal(asc.sel(x=slice(2, None)).coords["x"], [2.0, 3.0])
-
-
-def test_sel_nearest_on_datetime_object_coords():
-    import datetime as dtm
-
-    times = [dtm.datetime(2024, 1, 1), dtm.datetime(2024, 2, 1), dtm.datetime(2024, 3, 1)]
-    da = DataArray(np.array([1.0, 2.0, 3.0]), ("time",),
-                   coords={"time": np.array(times, dtype=object)})
-    got = da.sel(time=dtm.datetime(2024, 2, 10), method="nearest")
-    assert float(got) == 2.0
-    got2 = da.sel(time=np.datetime64("2024-02-25"), method="nearest")
-    assert float(got2) == 3.0
-
-
-def test_reductions_and_arithmetic():
-    da = _da()
-    m = da.mean(dim="time")
-    assert m.dims == ("y", "x")
-    assert np.allclose(m.values, da.values.mean(axis=0))
-    ndvi_ish = (da - 1.0) / (da + 1.0)
-    assert np.allclose(ndvi_ish.values, (da.values - 1) / (da.values + 1))
-    tot = (da + da).sum()
-    assert tot == pytest.approx(2 * da.values.sum())
-    other = DataArray(np.ones((2, 3, 4)), ("t2", "y", "x"))
-    with pytest.raises(ValueError, match="different dims"):
-        da + other
-
-
-def test_dataset_container():
-    da = _da()
-    ds = Dataset({"red": da, "nir": da + 1}, attrs={"title": "t"})
-    assert set(ds.keys()) == {"red", "nir"}
-    assert "red" in ds and ds["nir"].values[0, 0, 0] == 1.0
-
-
-def test_to_xarray_falls_back_to_shim():
-    attrs = {"transform": (0.25, 0.0, 10.0, 0.0, -0.25, 50.0),
-             "epsg": 4326, "crs_wkt": None, "chip_id": "c-1",
-             "width": 4, "height": 3}
-    tensor = np.arange(12, dtype=np.float32).reshape(3, 4)
-    da = assemble.to_xarray(tensor, attrs)
-    # whichever backend, the surface is identical
-    assert tuple(da.dims) == ("y", "x")
-    assert da.attrs["epsg"] == 4326
-    assert np.array_equal(np.asarray(da), tensor)
-    # y coords start at 49.875 (pixel centers below ymax=50, yres 0.25)
-    assert float(da.sel(y=49.9, x=10.15, method="nearest")) == float(tensor[0, 0])
-    got = da.sel(y=slice(50.0, 49.6))
-    assert got.values.shape[0] >= 1
 
 
 # --- torch map-style dataset ------------------------------------------------------
@@ -175,7 +70,7 @@ def test_chip_dataset_from_cache_reopens(spark, tmp_path):
 
 def test_collection_to_torch_dataset_end_to_end(spark, tmp_path):
     """Facade drive: synthetic images -> Collection -> staged dataset ->
-    random access -> to_xarray over a staged chip plane."""
+    random access -> pixel-center axes of a staged chip plane."""
     import rasteret_spark.sources.synthetic as syn
     from rasteret_spark.collection import Collection
 
@@ -189,11 +84,11 @@ def test_collection_to_torch_dataset_end_to_end(spark, tmp_path):
     s0 = ds[0]
     assert s0["image"].ndim == 4 and s0["image"].shape[2:] == (16, 16)
     meta = ds.attrs(0)
-    da = assemble.to_xarray(
-        s0["image"][0, 0],
-        {**meta, "transform": tuple(meta["transform"]), "width": 16, "height": 16})
-    assert da.shape == (16, 16) and tuple(da.dims) == ("y", "x")
-    assert np.isfinite(np.nanmean(np.asarray(da)))
+    lon, lat = assemble.pixel_coords({**meta, "width": 16, "height": 16})
+    assert lon.shape == (16,) and lat.shape == (16,)
+    assert bbox[0] < lon[0] < lon[-1] < bbox[2]
+    assert bbox[3] > lat[0] > lat[-1] > bbox[1]
+    assert np.isfinite(np.nanmean(s0["image"][0, 0]))
 
 
 def test_chip_dataset_works_with_a_dataloader_style_consumer(spark, tmp_path):

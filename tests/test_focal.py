@@ -126,46 +126,6 @@ def test_focal_radius_two(per_band):
             equal_nan=True)
 
 
-def test_convolve_strict_and_normalized(per_band):
-    df, truth = per_band
-    k = [[0.0, 1.0, 0.0], [1.0, 2.0, 1.0], [0.0, 1.0, 0.0]]
-    strict = {r.chip_id: r for r in focal.convolve(df, k).collect()}
-    norm = {r.chip_id: r
-            for r in focal.convolve(df, k, normalize=True).collect()}
-    kf = np.asarray(k).ravel()
-    for chip, a in truth.items():
-        win = _windows(a, 1)
-        any_null = np.isnan(win).any(-1)
-        s = (win * kf).sum(-1)
-        want_strict = np.where(any_null, np.nan, s).ravel()
-        np.testing.assert_allclose(
-            _got(strict[chip], "conv"), want_strict, rtol=0, atol=1e-9,
-            equal_nan=True)
-        valid = ~np.isnan(win)
-        num = np.where(valid, win * kf, 0.0).sum(-1)
-        den = np.where(valid, kf, 0.0).sum(-1)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            want_norm = np.where(den == 0, np.nan, num / den).ravel()
-        np.testing.assert_allclose(
-            _got(norm[chip], "conv"), want_norm, rtol=0, atol=1e-9,
-            equal_nan=True)
-
-
-def test_convolve_zero_weight_taps_still_gate_strict_nulls(spark):
-    """A null under a zero kernel weight still nulls the strict output —
-    the stencil footprint is the kernel's SHAPE, not its support."""
-    df = spark.createDataFrame([{
-        "chip_id": "c", "band": 0,
-        "values": [None, 1.0, 1.0] + [1.0] * 6, **_grid(w=3, h=3)}])
-    k = [[0.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 0.0]]
-    r = focal.convolve(df, k).collect()[0]
-    # pixel 4 (center) has the null at offset (-1,-1): strict -> null even
-    # though its weight is 0
-    assert r.conv[4] is None
-    # pixel 8 (bottom-right) never touches the null
-    assert r.conv[8] == 1.0
-
-
 def test_sobel_matches_numpy(per_band):
     df, truth = per_band
     out = {r.chip_id: r for r in focal.sobel(df).collect()}
@@ -211,8 +171,6 @@ def test_validation_errors(per_band):
         focal.focal_stats(df, "median")
     with pytest.raises(ValueError, match="radius"):
         focal.focal_stats(df, "mean", radius=0)
-    with pytest.raises(ValueError, match="square with odd size"):
-        focal.convolve(df, [[1.0, 2.0], [3.0, 4.0]])
     with pytest.raises(ValueError, match="need column"):
         focal.sobel(df.drop("chip_w"))
 

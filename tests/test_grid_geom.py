@@ -1,12 +1,18 @@
 """Unit tests for the WKB/PIP geometry kernels."""
 
+import struct
+
 import numpy as np
 
 from rasteret_spark import geom
 
 
+def wkb_point(x: float, y: float) -> bytes:
+    return struct.pack("<BIdd", 1, geom.WKB_POINT, x, y)
+
+
 def test_wkb_point_polygon_roundtrip():
-    pt = geom.wkb_point(3.5, -7.25)
+    pt = wkb_point(3.5, -7.25)
     assert geom.parse_wkb(pt) == ("point", (3.5, -7.25))
     ring = np.array([[0, 0], [4, 0], [4, 4], [0, 4]], dtype=float)
     poly = geom.wkb_polygon([ring])

@@ -5,6 +5,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from lineage_log import read_log
+
 from rasteret_spark.plans import lineage
 
 
@@ -25,7 +27,7 @@ def test_full_run_then_noop_resume(spark, workdir):
         spark, df, _transform, workdir, key_col="key", stage="s1", n_parts=8
     )
     assert out1.count() == 1000
-    log = lineage.read_log(spark, workdir)
+    log = read_log(spark, workdir)
     assert log.count() == 8
     assert log.agg(F.sum("rows_out")).first()[0] == 1000
 
@@ -34,7 +36,7 @@ def test_full_run_then_noop_resume(spark, workdir):
         spark, df, _transform, workdir, key_col="key", stage="s1", n_parts=8
     )
     assert out2.count() == 1000
-    assert lineage.read_log(spark, workdir).count() == 8  # no new log rows
+    assert read_log(spark, workdir).count() == 8  # no new log rows
 
 
 def test_partial_then_resume_completes(spark, workdir):
@@ -77,14 +79,14 @@ def test_empty_output_bucket_still_completes(spark, workdir):
     lineage.checkpointed_run(
         spark, df, drop_some, workdir, key_col="key", stage="s1", n_parts=8
     )
-    log = lineage.read_log(spark, workdir).toPandas()
+    log = read_log(spark, workdir).toPandas()
     assert len(log) == 8, "every input bucket must log, including empty ones"
     assert (log["rows_out"] == 0).any() and (log["rows_out"] > 0).any()
     # resume is a no-op: no new log rows, empty buckets not re-processed
     lineage.checkpointed_run(
         spark, df, drop_some, workdir, key_col="key", stage="s1", n_parts=8
     )
-    assert lineage.read_log(spark, workdir).count() == 8
+    assert read_log(spark, workdir).count() == 8
 
 
 def test_log_carries_per_partition_wall(spark, workdir):
@@ -94,7 +96,7 @@ def test_log_carries_per_partition_wall(spark, workdir):
     lineage.checkpointed_run(
         spark, df, _transform, workdir, key_col="key", stage="s1", n_parts=4
     )
-    log = lineage.read_log(spark, workdir).toPandas()
+    log = read_log(spark, workdir).toPandas()
     assert len(log) == 4
     assert (log["wall_s"] >= 0).all()
     # per-partition, not one stage-level number: rows_out varies per bucket
@@ -205,7 +207,7 @@ def test_legacy_flat_data_dir_is_adopted_on_resume(spark, workdir):
         spark, df, _transform, workdir, key_col="key", stage="s1", n_parts=8
     )
     assert out.count() == 400  # all rows visible, nothing re-run
-    assert lineage.read_log(spark, workdir).count() == 8  # no new log rows
+    assert read_log(spark, workdir).count() == 8  # no new log rows
     assert os.path.isdir(os.path.join(workdir, "data-s1"))
     assert not os.path.exists(os.path.join(workdir, "data"))
 

@@ -9,10 +9,12 @@ An AST scan of the library and its runnable surfaces finds each call of the
 chain's primitives, resolving import aliases, and each hand-written
 ``F.col("xmin").alias("img_xmin")`` rename of the image footprint (the one
 copy is ``spatial_join.image_light``).  The same scan checks that every
-library module is reached by an import chain from a runnable surface, so no
-module is kept alive by its tests alone."""
+library module is reached by an import chain from a runnable surface, and
+every top-level library function or class by a name the surfaces can get to,
+so no code is kept alive by its tests alone."""
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -240,3 +242,83 @@ def test_every_library_module_is_reached_by_a_runnable_surface():
         assert f'"{key}": "{mod}"' in (REPO / rel).read_text(), f"{rel} sets no {key}={mod}"
     orphans = sorted(modules - reached - LOADED_BY_CONF.keys())
     assert not orphans, "library modules no runnable surface reaches: " + ", ".join(orphans)
+
+
+# the module surfaces plus the README workflow written as code
+DEF_SURFACES = [*SURFACES, REPO / "tests" / "test_user_story.py"]
+WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    """ids of the docstring constants of a module and its defs."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, *DEFS)) and node.body:
+            first = node.body[0]
+            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant):
+                out.add(id(first.value))
+    return out
+
+
+def _names(node: ast.AST, docstrings: set[int]) -> set[str]:
+    """Every name a piece of code can get to: a ``Name``, an ``Attribute``,
+    each part of an import alias, or a word of a string constant that is
+    not a docstring (conf values, ``getattr`` names)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+            if n.asname:
+                out.add(n.asname)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docstrings:
+            out.update(WORD.findall(n.value))
+    return out
+
+
+def _unreached_definitions() -> dict[str, int]:
+    """``module.name`` -> line count of each top-level function or class in a
+    reached library module whose name no surface file, no module-level code
+    of a reached module and no reached definition mentions (followed
+    transitively; a class is one unit)."""
+    files = {_module_name(p.relative_to(REPO).as_posix()): p for p in LIB.rglob("*.py")}
+    defs: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
+    names: set[str] = set()
+    for mod in sorted(_reached() | LOADED_BY_CONF.keys()):
+        tree = ast.parse(files[mod].read_text(), filename=str(files[mod]))
+        docs = _docstrings(tree)
+        for top in tree.body:
+            if isinstance(top, DEFS):
+                defs.setdefault(top.name, []).append((mod, top, docs))
+            else:
+                names |= _names(top, docs)
+    for path in DEF_SURFACES:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        names |= _names(tree, _docstrings(tree))
+    todo = list(names)
+    while todo:
+        for _, node, docs in defs.pop(todo.pop(), []):
+            new = _names(node, docs) - names
+            names |= new
+            todo.extend(new)
+    return {
+        f"{mod}.{node.name}": node.end_lineno - min(
+            [node.lineno, *(d.lineno for d in node.decorator_list)]
+        ) + 1
+        for group in defs.values() for mod, node, _ in group
+    }
+
+
+def test_every_library_definition_is_reached_by_a_runnable_surface():
+    """A top-level function or class under ``rasteret_spark/`` whose name
+    nothing a runnable surface runs can get to is dead library code: delete
+    it with its tests, or move it into ``tests/`` when it is a fixture
+    builder or the reference a test compares against."""
+    dead = _unreached_definitions()
+    assert not dead, "library definitions no runnable surface reaches: " + ", ".join(
+        f"{name} ({n} lines)" for name, n in sorted(dead.items())
+    )

@@ -16,6 +16,7 @@ import re
 import shutil
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -120,3 +121,42 @@ def test_library_holds_no_oracle_code():
     names = {n.name for n in entry.body if isinstance(n, ast.FunctionDef)}
     assert not {n for n in names if n.startswith("_ensure_")}
     assert "_gen_fingerprint" not in names
+
+
+def test_truth_write_prunes_stale_entries_of_other_digests(tmp_path, monkeypatch):
+    """Writing a truth parquet deletes the same builder+params keyed on
+    another sources digest once untouched for an hour; recent ones, other
+    params, other builders and the current entry stay."""
+    import pandas as pd
+
+    import oracles
+    from oracles import truth
+
+    monkeypatch.setattr(oracles, "ORACLE_DIR", str(tmp_path))
+    monkeypatch.setattr(truth, "tiny_truth_pdf", lambda n: pd.DataFrame({"v": [1.0] * n}),
+                        raising=False)
+    path = Path(oracles.truth_path("tiny_truth_pdf", n=2))
+    stem = path.name.removesuffix(".parquet")
+    prefix, digest = stem.rsplit("_", 1)
+    other_params = Path(oracles.truth_path("tiny_truth_pdf", n=3)).name.rsplit("_", 1)[0]
+    old = time.time() - oracles.KEEP_OTHER_DIGEST_S - 60
+    names = {
+        "stale": f"{prefix}_{'0' * len(digest)}.parquet",
+        "recent": f"{prefix}_{'1' * len(digest)}.parquet",
+        "other_params": f"{other_params}_{'0' * len(digest)}.parquet",
+        "other_builder": f"other_{prefix}_{'0' * len(digest)}.parquet",
+        "temp": f"{prefix}_{'0' * len(digest)}.parquet.tmp.1",
+    }
+    for key, name in names.items():
+        (tmp_path / name).write_bytes(b"")
+        if key != "recent":
+            os.utime(tmp_path / name, (old, old))
+
+    assert oracles.truth_parquet("tiny_truth_pdf", n=2) == str(path)
+    left = {p.name for p in tmp_path.iterdir()}
+    assert left == {path.name, *(n for k, n in names.items() if k != "stale")}
+
+    # a hit touches the entry, so another checkout's write keeps it
+    os.utime(path, (old, old))
+    oracles.truth_parquet("tiny_truth_pdf", n=2)
+    assert path.stat().st_mtime > old + 60

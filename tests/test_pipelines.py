@@ -4,6 +4,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from lineage_log import read_log
+
 from rasteret_spark.plans import lineage, pipelines
 
 
@@ -48,7 +50,7 @@ def test_resumable_zonal_partial_then_complete(spark, images_pdf, aois_pdf, tmp_
         a.drop(columns=["part_id"]), b[a.columns.drop("part_id")], check_like=True
     )
 
-    log = lineage.read_log(spark, out)
+    log = read_log(spark, out)
     assert log.agg(F.sum("rows_out")).first()[0] == len(full)
 
 
@@ -78,7 +80,7 @@ def test_resumable_sample_partial_then_complete(spark, images_pdf, points_pdf, t
     a = ref.sort_values(key).reset_index(drop=True)
     b = resumed.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns], check_like=True)
-    assert lineage.read_log(spark, out).agg(F.sum("rows_out")).first()[0] == len(a)
+    assert read_log(spark, out).agg(F.sum("rows_out")).first()[0] == len(a)
 
     # direct operator parity on the value column
     from rasteret_spark.operators import sampling, spatial_join as sj

@@ -5,7 +5,8 @@ here the same kernels additionally hold under generated inputs.
 
 Properties pinned:
   * codec matrix: encode/decode identity for arbitrary tiles, every lossless
-    codec x predictor combination (incl. the pure-Python LZW);
+    codec x predictor combination (incl. the pure-Python LZW), and PackBits
+    over seeded runs and malformed streams;
   * PIP: the crossing-count grid kernel is BIT-IDENTICAL to the generic
     even-odd ray-cast for simple polygons, multipolygons with holes,
     vertices and pixel centres on shared grid values, ascending, descending
@@ -62,6 +63,64 @@ def test_tile_roundtrip_codec_predictor_matrix(seed, comp, pred, dtype):
     cid = codecs.COMP_NAMES[comp]
     out = codecs.decode_tile(codecs.encode_tile(tile, cid, pred), cid, pred, tile.dtype, h, w)
     np.testing.assert_array_equal(out, tile)
+
+
+def _packbits_decode_ref(data: bytes, expected: int) -> bytes:
+    """The numpy-scalar run walk ``codecs.packbits_decode`` replaced."""
+    src = np.frombuffer(data, dtype=np.uint8)
+    out = bytearray()
+    i = 0
+    n = src.size
+    while i < n and len(out) < expected:
+        h = int(src[i])
+        i += 1
+        if h < 128:  # literal run of h+1 bytes
+            out.extend(src[i : i + h + 1].tobytes())
+            i += h + 1
+        elif h > 128:  # repeat next byte 257-h times
+            out.extend(bytes([int(src[i])]) * (257 - h))
+            i += 1
+        # h == 128: no-op
+    return bytes(out[:expected])
+
+
+def _result(fn, *args):
+    try:
+        return fn(*args)
+    except Exception as e:  # the exception type is part of the contract
+        return type(e)
+
+
+@settings(**SETTINGS)
+@given(blob=st.binary(min_size=0, max_size=512), expected=st.integers(-1, 1024))
+def test_packbits_decode_matches_reference_on_any_stream(blob, expected):
+    """Arbitrary bytes: same output, or the same exception type."""
+    assert _result(codecs.packbits_decode, blob, expected) == _result(
+        _packbits_decode_ref, blob, expected
+    )
+
+
+def test_packbits_seeded_roundtrip_and_malformed_streams():
+    """Runs of 1..130 bytes (literal and repeat headers, 128-byte splits)
+    round-trip from bytes, bytearray and memoryview input; ``expected``
+    cuts the output; a repeat header with no byte after it is an
+    ``IndexError`` and a literal run cut short yields what is there."""
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        k = int(rng.integers(1, 40))
+        raw = np.repeat(
+            rng.integers(0, 256, k, dtype=np.uint8), rng.integers(1, 131, k)
+        ).tobytes()
+        enc = codecs.packbits_encode(raw)
+        for buf in (enc, bytearray(enc), memoryview(enc)):
+            assert codecs.packbits_decode(buf, len(raw)) == raw
+        cut = int(rng.integers(0, len(raw) + 1))
+        assert codecs.packbits_decode(enc, cut) == raw[:cut]
+    assert codecs.packbits_decode(b"\x02ab", 10) == b"ab"  # literal cut short
+    assert codecs.packbits_decode(b"\x80\xfdz", 10) == b"zzzz"  # 128 is a no-op
+    for bad in (b"\xff", b"\x00a\xfe"):
+        with pytest.raises(IndexError):
+            codecs.packbits_decode(bad, 10)
 
 
 @settings(**SETTINGS)

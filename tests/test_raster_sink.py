@@ -137,24 +137,22 @@ def test_write_cogs_quarantines_malformed_chip(spark, tmp_path_factory):
     assert not os.path.exists(out + "/bad-1.tif")
 
 
-def test_write_cogs_snapshots_the_writer_registry(spark, mosaic_pixels, tmp_path_factory):
+def test_write_cogs_snapshots_the_writer_registry(
+    spark, mosaic_pixels, tmp_path_factory, monkeypatch
+):
     """A writer registered AFTER the plan is built must not alter it —
     the sink captures dict(_WRITERS) at build time."""
     from rasteret_spark.sources import fetch as fx
 
     out = str(tmp_path_factory.mktemp("cogs_snap"))
     plan = rsink.write_cogs(mosaic_pixels, out)  # snapshot taken here
-    old = fx._WRITERS["file"]
 
     def boom(url, data):
         raise RuntimeError("post-build registration must not be seen")
 
-    fx.register_writer("file", boom)
-    try:
-        man = plan.toPandas()
-        assert set(man["status"]) == {"ok"}
-    finally:
-        fx._WRITERS["file"] = old
+    monkeypatch.setitem(fx._WRITERS, "file", boom)
+    man = plan.toPandas()
+    assert set(man["status"]) == {"ok"}
 
 
 def test_write_cogs_integer_dtype_fills_nodata(spark, tmp_path_factory):

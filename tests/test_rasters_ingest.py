@@ -202,7 +202,7 @@ def test_chunky_rgb_tiff_ingests(spark, tmp_path):
     assert em.transform[0] == pytest.approx(0.01) and em.epsg == 4326
 
 
-def test_ranged_reader_snapshot_travels_with_plan(spark, tmp_path):
+def test_ranged_reader_snapshot_travels_with_plan(spark, tmp_path, monkeypatch):
     """A custom ranged scheme registered on the driver must reach executors
     through the plan's snapshot — and deregistration after build must not
     break the already-built plan."""
@@ -223,12 +223,11 @@ def test_ranged_reader_snapshot_travels_with_plan(spark, tmp_path):
 
         return read
 
-    fx.register_ranged_reader("fakefs", fake_factory)
-    try:
+    with monkeypatch.context() as m:
+        m.setitem(fx._RANGED_READERS, "fakefs", fake_factory)
         df = spark.createDataFrame([(f"fakefs://{p}",)], ["href"])
         plan = enrich_headers_remote(df)  # snapshot captured here
-    finally:
-        del fx._RANGED_READERS["fakefs"]
+    assert "fakefs" not in fx._RANGED_READERS
     got = plan.collect()[0]
     assert got["enrich_status"] == "ok"
     assert got["meta"]["width"] == row["w"]

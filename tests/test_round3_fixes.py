@@ -104,19 +104,6 @@ def test_asof_null_timestamps_never_match(spark):
     assert pd.isna(fwd.loc[2, "v"]), "NULL left_ts must stay unmatched (forward)"
 
 
-# --- binary-safe magic sniffing ---------------------------------------------------
-def test_classify_media_handles_non_utf8_payloads(spark):
-    rows = [
-        ("a", bytearray(b"MRST" + b"\xff\xfe\x80\x81\x00\xc3\x28")),
-        ("b", bytearray(b"ID3" + b"\xc3\x28\xff")),
-        ("c", bytearray(b"\x89PNG\r\n\x1a\n")),
-    ]
-    df = spark.createDataFrame(rows, "id string, bytes binary")
-    got = multimodal.classify_media(df).select("id", "media_kind").toPandas()
-    kinds = dict(zip(got["id"], got["media_kind"]))
-    assert kinds == {"a": "miniraster", "b": "audio", "c": "png"}
-
-
 # --- grouped-side lifetime ----------------------------------------------------------
 def _persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -171,7 +158,9 @@ def test_grouped_side_outlives_later_plan_builds(spark, images_pdf, aois_pdf, po
 
 # --- retry-exact lineage rows_out --------------------------------------------------
 def test_lineage_rows_out_matches_written_partition_counts(spark, tmp_path):
-    from rasteret_spark.plans.lineage import checkpointed_run, read_log
+    from lineage_log import read_log
+
+    from rasteret_spark.plans.lineage import checkpointed_run
 
     df = spark.range(0, 1000).withColumn("k", (F.col("id") % 37).cast("string"))
     out_dir = str(tmp_path / "ckpt")
@@ -226,25 +215,6 @@ def test_fetch_blobs_does_not_mutate_caller_schema(spark):
     assert set(out.columns) == set(cols_before) | {
         "bytes", "fetch_status", "fetch_attempts"
     }
-
-
-def test_classify_media_labels_jpeg_png(spark):
-    import pandas as pd
-
-    rows = [
-        {"image_id": "j", "bytes": b"\xff\xd8\xff\xe0" + b"\x00" * 20},
-        {"image_id": "p", "bytes": b"\x89PNG\r\n\x1a\n" + b"\x00" * 20},
-    ]
-    got = (
-        multimodal.classify_media(spark.createDataFrame(pd.DataFrame(rows)))
-        .toPandas()
-        .set_index("image_id")
-    )
-    assert got.loc["j", "media_kind"] == "jpeg"
-    assert got.loc["p", "media_kind"] == "png"
-    # classifier and decode-registry sniffing agree
-    for r in rows:
-        assert multimodal.sniff_kind(bytes(r["bytes"])) == got.loc[r["image_id"], "media_kind"]
 
 
 def test_feature_extract_tiny_image_no_nan(spark):

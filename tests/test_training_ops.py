@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from rasteret_spark.operators import dedup, multimodal, similarity, text
+from rasteret_spark.operators import dedup, similarity, text
 
 SF = "/root/testdata/sf0.001"
 
@@ -69,16 +69,6 @@ def _jaccard_oracle(pdf, n=3):
     return out
 
 
-def test_ngram_jaccard_exact_pairs(spark, docs_with_dups):
-    got = dedup.ngram_jaccard_pairs(docs_with_dups, "text", "doc_id", threshold=0.5).toPandas()
-    oracle = _jaccard_oracle(docs_with_dups.toPandas())
-    want = {k: v for k, v in oracle.items() if v >= 0.5}
-    got_pairs = {(a, b): j for a, b, j in got.itertuples(index=False)}
-    assert set(got_pairs) == set(want)
-    for k in want:
-        assert abs(got_pairs[k] - want[k]) < 1e-9
-
-
 def test_minhash_lsh_finds_near_dups(spark, docs_with_dups):
     got = dedup.minhash_lsh_pairs(
         docs_with_dups, "text", "doc_id", num_perm=16, bands=4, jaccard_threshold=0.5
@@ -95,13 +85,21 @@ def test_minhash_lsh_finds_near_dups(spark, docs_with_dups):
     assert len(strong & found) / len(strong) >= 0.8
 
 
+def hash64_str(s: str) -> int:
+    """Deterministic 64-bit FNV-1a (stable across processes, unlike hash())."""
+    h = 0xCBF29CE484222325
+    for ch in s.encode("utf-8"):
+        h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
 def test_simhash_exact_vs_bruteforce(spark, docs_with_dups):
     got = dedup.simhash_near_dups(docs_with_dups, "text", "doc_id", max_hamming=3).toPandas()
     pdf = docs_with_dups.toPandas()
     sims = {}
     for _, r in pdf.iterrows():
         toks = [w for w in r["text"].lower().split() if w]
-        hs = np.array([dedup.hash64_str(w) for w in toks], dtype=np.int64).astype(np.uint64)
+        hs = np.array([hash64_str(w) for w in toks], dtype=np.int64).astype(np.uint64)
         bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(int)
         votes = (2 * bits - 1).sum(axis=0)
         v = np.uint64(0)
@@ -195,101 +193,6 @@ def test_text_functions_oracle(spark):
 
     want_fp = hashlib.md5("the quick brown fox and the dog of war."[:64].encode()).hexdigest()
     assert got.loc["a", "fp"] == want_fp
-
-
-def test_multimodal_decode_resize_and_frames(spark, images_df):
-    sub = images_df.limit(8)
-    got = multimodal.decode_resize(sub, 16, 16).toPandas()
-    assert len(got) == 8
-    assert all(len(p) == 256 for p in got["pixels"])
-    from rasteret_spark.format import miniraster as mr
-
-    pdf = sub.select("image_id", "bytes").toPandas()
-    for _, r in pdf.iterrows():
-        arr = mr.decode_full(bytes(r["bytes"]), band=0).astype(np.float64)
-        ys = (np.arange(16) * arr.shape[0] / 16).astype(int)
-        xs = (np.arange(16) * arr.shape[1] / 16).astype(int)
-        want = arr[np.ix_(ys, xs)].ravel()
-        g = got[got["image_id"] == r["image_id"]]["pixels"].iloc[0]
-        np.testing.assert_allclose(np.asarray(g), want)
-
-    frames = multimodal.frame_sample(sub, every_n=1).toPandas()
-    assert (frames.groupby("image_id").size() >= 2).all()
-
-    # a TRUNCATED jpeg (real decoder registered, stream garbage) and a kind
-    # with no registered decoder (bare ID3 audio) both quarantine -> rows
-    # with status, never task failures (R12 policy)
-    stub = spark.createDataFrame(
-        pd.DataFrame([
-            {"image_id": "jpeg-1", "bytes": b"\xff\xd8\xff" + b"\x00" * 50},
-            {"image_id": "mp3-1", "bytes": b"ID3" + b"\x00" * 50},
-        ])
-    )
-    q = multimodal.decode_resize(stub, 8, 8).toPandas().set_index("image_id")
-    assert q.loc["jpeg-1", "pixels"] is None
-    assert q.loc["jpeg-1", "status"] != "ok"
-    assert q.loc["mp3-1", "pixels"] is None
-    assert "no decoder registered" in q.loc["mp3-1", "status"]
-
-
-def test_multimodal_decoder_injection(spark):
-    """register_media_decoder: an injected kernel slots into the same plan —
-    the declared-stub formats are a registry entry away from real."""
-    from rasteret_spark.operators import multimodal
-
-    def fake_jpeg(blob: bytes) -> np.ndarray:
-        return np.full((32, 32), float(len(blob)))
-
-    real_jpeg = multimodal._DECODERS["jpeg"]  # builtin — restore after
-    multimodal.register_media_decoder("jpeg", fake_jpeg)
-    try:
-        stub = spark.createDataFrame(
-            pd.DataFrame([{"image_id": "jpeg-1", "bytes": b"\xff\xd8\xff" + b"\x00" * 50}])
-        )
-        got = multimodal.decode_resize(stub, 8, 8).toPandas().iloc[0]
-        assert got["status"] == "ok"
-        assert np.asarray(got["pixels"]).tolist() == [53.0] * 64
-    finally:
-        multimodal._DECODERS["jpeg"] = real_jpeg
-
-
-def test_registry_snapshots_pin_built_plans(spark):
-    """A plan built BEFORE a registration must not silently change when the
-    module registries mutate afterwards (as fetch_blobs keeps the _FETCHERS
-    snapshot it takes at build); passing the updated snapshot explicitly is
-    the opt-in."""
-    from rasteret_spark.operators import multimodal
-
-    magic_prefix = b"FAKE"
-    stub = spark.createDataFrame(
-        pd.DataFrame([{"image_id": "x-1", "bytes": magic_prefix + b"\x01" * 40}])
-    )
-    built_classify = multimodal.classify_media(stub)
-    built_decode = multimodal.decode_resize(stub, 4, 4)
-    saved_magic = multimodal.MEDIA_MAGIC
-    multimodal.register_media_magic(magic_prefix, "fakekind")
-    multimodal.register_media_decoder(
-        "fakekind", lambda blob: np.full((8, 8), 7.0)
-    )
-    try:
-        # built plans: unchanged (snapshot captured at build)
-        assert built_classify.toPandas().iloc[0]["media_kind"] == "unknown"
-        assert built_decode.toPandas().iloc[0]["pixels"] is None
-        # new plans (and explicit snapshots): see the registration
-        fresh = multimodal.classify_media(stub).toPandas().iloc[0]
-        assert fresh["media_kind"] == "fakekind"
-        explicit = multimodal.decode_resize(
-            stub, 4, 4,
-            decoders=dict(multimodal._DECODERS),
-            magic=multimodal.MEDIA_MAGIC,
-        ).toPandas().iloc[0]
-        assert explicit["status"] == "ok"
-        assert np.asarray(explicit["pixels"]).tolist() == [7.0] * 16
-        feats = multimodal.extract_features(stub).toPandas().iloc[0]
-        assert feats["status"] == "ok"
-    finally:
-        multimodal.MEDIA_MAGIC = saved_magic
-        del multimodal._DECODERS["fakekind"]
 
 
 def test_ivf_topk_recall_and_determinism(spark):

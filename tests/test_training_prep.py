@@ -228,8 +228,8 @@ class TestAssignSplit:
         df = splits.assign_split(
             spark.createDataFrame([{"chip_id": f"c{i}"} for i in range(50)])
         )
-        summ = {r.split: r.n_rows
-                for r in splits.split_summary(df).collect()}
+        summ = {r.split: r["count"]
+                for r in df.groupBy("split").count().collect()}
         assert sum(summ.values()) == 50
         plan = _plan(splits.assign_split(
             spark.createDataFrame([{"chip_id": "c"}])
