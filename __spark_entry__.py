@@ -532,19 +532,62 @@ def q26_chip_stack(spark, sf_dir):
 # ==============================================================================
 # image engine over synthetic blobs + LSH/ANN ops (oracles: oracles/truth.py)
 # ==============================================================================
+IMAGE_CACHE = "/tmp/rasteret_spark_oracle"
+# how long an encoded-image entry keyed on another generator fingerprint
+# survives its last use: a checkout at another commit still in use keeps it
+KEEP_OTHER_FINGERPRINT_S = 3600.0
+
+
+def _fingerprinted(name: str) -> str:
+    """``IMAGE_CACHE/<name>_<fingerprint>``: an encoded-image entry keyed on
+    the encode-path fingerprint, so a codec or writer edit regenerates it."""
+    from rasteret_spark.sources.synthetic import generator_fingerprint
+
+    return f"{IMAGE_CACHE}/{name}_{generator_fingerprint()}"
+
+
+def _prune_other_fingerprints(path: str) -> None:
+    """Mark ``path`` used, and delete its siblings of the same name keyed on
+    another fingerprint and untouched for ``KEEP_OTHER_FINGERPRINT_S`` (the
+    rule ``oracles.truth_parquet`` applies to truth parquets)."""
+    import contextlib
+    import os
+    import shutil
+    import time
+
+    d, name = os.path.split(path)
+    stem = name.removesuffix(".parquet")
+    suffix = name[len(stem):]
+    head, _, fp = stem.rpartition("_")
+    cutoff = time.time() - KEEP_OTHER_FINGERPRINT_S
+    with contextlib.suppress(OSError):  # another user's entry keeps its time
+        os.utime(path)
+    for entry in os.scandir(d):
+        other = entry.name.removesuffix(suffix) if suffix else entry.name
+        o_head, _, o_fp = other.rpartition("_")
+        if (
+            entry.name == other + suffix and o_head == head
+            and o_fp != fp and len(o_fp) == len(fp)
+        ):
+            # gone already (a concurrent writer pruned it) or not ours
+            with contextlib.suppress(OSError):
+                if entry.stat().st_mtime < cutoff:
+                    if entry.is_dir():
+                        shutil.rmtree(entry.path)
+                    else:
+                        os.remove(entry.path)
+
+
 def _cached_images(spark, make_df, name: str, n: int, seed: int = 42):
     """A synthetic images table (``make_df(spark, n, seed)``), generated and
     encoded once per machine and read back as parquet: input prep kept out
     of every query wall, and no driver-side rows shipped inside tasks.
-    Keyed on the encode-path fingerprint, so a codec or writer edit
-    regenerates; written to a temp directory and renamed, so a reader never
-    sees a partial table."""
+    Keyed on the encode-path fingerprint (``_fingerprinted``); written to a
+    temp directory and renamed, so a reader never sees a partial table."""
     import os
     import shutil
 
-    from rasteret_spark.sources.synthetic import generator_fingerprint
-
-    path = f"/tmp/rasteret_spark_oracle/{name}_{n}_{seed}_{generator_fingerprint()}.parquet"
+    path = _fingerprinted(f"{name}_{n}_{seed}") + ".parquet"
     if not os.path.exists(path):
         tmp = f"{path}.tmp.{os.getpid()}"
         make_df(spark, n, seed).write.mode("overwrite").parquet(tmp)
@@ -552,6 +595,7 @@ def _cached_images(spark, make_df, name: str, n: int, seed: int = 42):
             os.replace(tmp, path)
         except OSError:  # a concurrent writer renamed its copy first
             shutil.rmtree(tmp, ignore_errors=True)
+    _prune_other_fingerprints(path)
     return spark.read.parquet(path)
 
 
@@ -903,7 +947,7 @@ def q67_overview_pixels(spark, sf_dir):
                     ww, wh = w // 2, h // 2
                     for factor in (1, 2, 4):
                         win, lv = tiff.read_window_at_res(
-                            tiff.blob_read(blob), c0, r0, ww, wh,
+                            blob, c0, r0, ww, wh,
                             factor=float(factor), metas=metas,
                         )
                         v = np.asarray(win, dtype=np.float64).ravel()
@@ -1183,14 +1227,14 @@ def q76_build_overviews(spark, sf_dir):
     def verify(batches):
         import numpy as np
 
-        from rasteret_spark.format import tiff
+        from rasteret_spark.format import container
 
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
                 cs = None
                 if row["status"] == "ok":
-                    a = tiff.decode_full(
+                    a = container.decode_full(
                         bytes(row["bytes"]), band=0, ifd=1
                     ).astype(np.float64).ravel()
                     cs = float(np.nansum(a * np.arange(1, a.size + 1)))
@@ -1314,7 +1358,6 @@ def q82_cog_export(spark, sf_dir):
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import raster_sink as rsink
     from rasteret_spark.operators import spatial_join as sj
-    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     images = _images_df(spark)
     grid = ch.chip_requests(
@@ -1322,14 +1365,12 @@ def q82_cog_export(spark, sf_dir):
     )
     pairs = rmo.chip_candidates(grid, sj.image_light(images), images, res=7)
     px = rmo.first_valid_mosaic_pixels(pairs, bands=(0, 1))
-    out_dir = (
-        f"/tmp/rasteret_spark_oracle/"
-        f"cogs_{COG_SIZE}_{COG_RES}_{COG_STRIDE}_{generator_fingerprint()}"
-    )
+    out_dir = _fingerprinted(f"cogs_{COG_SIZE}_{COG_RES}_{COG_STRIDE}")
     man = rsink.write_cogs(px, out_dir)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
     if bad:
         raise RuntimeError(f"{bad} chips failed COG export")
+    _prune_other_fingerprints(out_dir)
 
     files = spark.read.format("binaryFile").load(out_dir + "/*.tif")
 
@@ -1337,6 +1378,7 @@ def q82_cog_export(spark, sf_dir):
         import numpy as np
         import pandas as pd
 
+        from rasteret_spark.format import container
         from rasteret_spark.format import tiff as tf
 
         for pdf in batches:
@@ -1345,7 +1387,7 @@ def q82_cog_export(spark, sf_dir):
                 blob = bytes(r["content"])
                 chip_id = r["path"].rsplit("/", 1)[1].removesuffix(".tif")
                 metas = tf.parse_tiff_chain(tf.blob_read(blob))
-                full = tf.decode_full(blob)
+                full = container.decode_full(blob)
                 arr = full if full.ndim == 3 else full[None]
                 for bi in range(arr.shape[0]):
                     a64 = arr[bi].astype(np.float64)
@@ -1383,14 +1425,14 @@ def q83_shard_export(spark, sf_dir):
     float32 stack and the XXH64 shard assignment from pre-encode truth."""
     from rasteret_spark.operators import raster_mosaic as rmo
     from rasteret_spark.operators import shard_sink as ss
-    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     px = rmo.first_valid_mosaic_pixels(_chip_pairs(spark), bands=(0, 1))
-    out_dir = f"/tmp/rasteret_spark_oracle/shards_4_{generator_fingerprint()}"
+    out_dir = _fingerprinted("shards_4")
     man = ss.write_tar_shards(px, out_dir, n_shards=4)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
     if bad:
         raise RuntimeError(f"{bad} shards failed export")
+    _prune_other_fingerprints(out_dir)
     return ss.read_tar_shards(spark, out_dir + "/*.tar").select(
         "chip_id", "shard_id", "n_bands", "height", "width", "filled", "v_sum"
     )
@@ -1422,14 +1464,14 @@ def q84_image_caption_shards(spark, sf_dir):
     oracles/truth.image_shard_truth_pdf mirrors the float32 pixel sums,
     captions and XXH64 shard assignment from pre-encode generator truth."""
     from rasteret_spark.operators import shard_sink as ss
-    from rasteret_spark.sources.synthetic import generator_fingerprint
 
     images = _images_df(spark).select("image_id", "bytes", "caption")
-    out_dir = f"/tmp/rasteret_spark_oracle/imgshards_4_{generator_fingerprint()}"
+    out_dir = _fingerprinted("imgshards_4")
     man = ss.write_image_shards(images, out_dir, n_shards=4)
     bad = man.filter(F.col("status") != "ok").count()  # materializes the export
     if bad:
         raise RuntimeError(f"{bad} shards failed export")
+    _prune_other_fingerprints(out_dir)
     return ss.read_image_shards(spark, out_dir + "/*.tar")
 
 
@@ -1492,12 +1534,14 @@ def q63_overview_serve(spark, sf_dir):
         from rasteret_spark.format import tiff
 
         class _Count:
+            """A blob that counts the bytes sliced out of it."""
+
             def __init__(self, blob):
                 self.blob, self.n = blob, 0
 
-            def __call__(self, off, size):
-                self.n += size
-                return self.blob[off : off + size]
+            def __getitem__(self, sl):
+                self.n += sl.stop - sl.start
+                return self.blob[sl]
 
         for pdf in batches:
             out = []

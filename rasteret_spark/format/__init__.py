@@ -1,9 +1,1 @@
-from rasteret_spark.format.miniraster import (  # noqa: F401
-    MiniRasterMeta,
-    encode_image,
-    parse_header,
-    decode_full,
-    read_window,
-    plan_window_tiles,
-    coalesce_ranges,
-)
+"""Blob containers (mini-raster, (Geo)TIFF) and the codecs behind them."""

@@ -484,7 +484,7 @@ def decode_tile(
             raise ValueError(
                 f"planar tile decode expects grayscale JPEG, got shape "
                 f"{out.shape} (interleaved RGB JPEG goes through "
-                "tiff.decode_chunky_tile/decode_full)"
+                "container.decode_full)"
             )
         # JPEG streams carry their own dimensions; TIFF edge tiles may hold
         # the full padded tile — crop like the short-strip path below

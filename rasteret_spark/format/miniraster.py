@@ -56,7 +56,6 @@ MAGIC = b"MRST"
 HEADER_FIXED = 99
 HEADER_FIXED_V1 = 97  # v1 had no n_bands field (nodata_flag at 24, 2 bytes earlier)
 VERSION = 2
-DEFAULT_PREFIX = 4096  # first speculative header read, like a COG 16 KiB prefix
 
 
 @dataclass
@@ -206,10 +205,25 @@ def encode_image(
     return bytes(head) + b"".join(payloads)
 
 
+class NeedBytes(ValueError):
+    """A header parse ran past the end of the bytes it was given (a prefix
+    or a truncated blob): callers holding only a prefix re-fetch a larger
+    one (the reference's progressive header read,
+    `src/rasteret/fetch/header_parser.py:276-300`); a short read is never
+    parsed."""
+
+    def __init__(self, offset: int, size: int):
+        super().__init__(f"short read: need bytes [{offset}, {offset + size})")
+        self.offset = offset
+        self.size = size
+
+
 def header_len_from_prefix(prefix: bytes) -> int:
     """First progressive read: how many bytes does the full header need?"""
     if prefix[:4] != MAGIC:
         raise ValueError("not a mini-raster blob (bad magic)")
+    if len(prefix) < 8:
+        raise NeedBytes(0, 8)
     return int(np.frombuffer(prefix[4:8], dtype=np.uint32)[0])
 
 
@@ -223,7 +237,7 @@ def parse_header(buf: bytes) -> MiniRasterMeta:
     """
     header_len = header_len_from_prefix(buf)
     if len(buf) < header_len:
-        raise ValueError(f"need {header_len} header bytes, got {len(buf)}")
+        raise NeedBytes(0, header_len)
     version, dtype_code, compression, predictor = buf[8], buf[9], buf[10], buf[11]
     if version not in (1, VERSION):
         raise ValueError(f"unsupported version {version}")
@@ -314,99 +328,16 @@ def coalesce_ranges(
     return merged
 
 
-def read_window(
-    blob: bytes,
-    meta: MiniRasterMeta | None = None,
-    col_off: int = 0,
-    row_off: int = 0,
-    win_w: int | None = None,
-    win_h: int | None = None,
-    band: int = 0,
-) -> np.ndarray:
-    """Decode only the tiles intersecting the window; paste + crop.
-
-    Byte access goes exclusively through coalesced ``blob[o:o+n]`` slices —
-    the local stand-in for ranged GETs — so the access pattern matches the
-    reference's tile-window read path (`src/rasteret/fetch/cog.py:744-826`).
-    Pixels outside the raster (window overhang) are filled with the raster
-    nodata (or 0).
-    """
-    if meta is None:
-        prefix = blob[:DEFAULT_PREFIX]
-        need = header_len_from_prefix(prefix)
-        meta = parse_header(blob[:need] if need > len(prefix) else prefix)
-    if win_w is None:
-        win_w = meta.width - col_off
-    if win_h is None:
-        win_h = meta.height - row_off
-
-    dtype = meta.dtype
-    fill = meta.nodata if meta.nodata is not None else 0
-    canvas = np.full((win_h, win_w), fill, dtype=dtype)
-
-    tiles = plan_window_tiles(meta, col_off, row_off, win_w, win_h, band)
-    if not tiles:
-        return canvas
-    idxs = np.array([t[0] for t in tiles])
-    ranges = coalesce_ranges(meta.tile_offsets[idxs], meta.tile_byte_counts[idxs])
-    payload_by_tile: dict[int, bytes] = {}
-    for m_off, m_size, members in ranges:
-        chunk = blob[m_off : m_off + m_size]  # one "ranged GET"
-        for local_i in members:
-            t_idx = int(idxs[local_i])
-            rel = int(meta.tile_offsets[t_idx]) - m_off
-            payload_by_tile[t_idx] = chunk[rel : rel + int(meta.tile_byte_counts[t_idx])]
-
-    for t_idx, tx, ty in tiles:
-        tile = codecs.decode_tile(
-            payload_by_tile[t_idx],
-            meta.compression,
-            meta.predictor,
-            dtype,
-            meta.tile_h,
-            meta.tile_w,
-            meta.qstep,
-            jpeg_tables=meta.jpeg_tables,
-        )
-        # tile's pixel-space origin
-        px0, py0 = tx * meta.tile_w, ty * meta.tile_h
-        # valid extent of the tile inside the raster (edge tiles are padded)
-        vw = min(meta.tile_w, meta.width - px0)
-        vh = min(meta.tile_h, meta.height - py0)
-        # intersection with the window, in window coords
-        c0 = max(px0, col_off)
-        r0 = max(py0, row_off)
-        c1 = min(px0 + vw, col_off + win_w)
-        r1 = min(py0 + vh, row_off + win_h)
-        if c1 <= c0 or r1 <= r0:
-            continue
-        canvas[r0 - row_off : r1 - row_off, c0 - col_off : c1 - col_off] = tile[
-            r0 - py0 : r1 - py0, c0 - px0 : c1 - px0
-        ]
-    return canvas
-
-
-def decode_full(blob: bytes, band: int | None = None) -> np.ndarray:
-    """Decode the whole image (correctness oracle path).
-
-    ``band=None``: 2-D for single-band blobs, else a stacked (bands, h, w)
-    cube; an explicit ``band`` always yields 2-D."""
-    if band is not None:
-        return read_window(blob, band=band)
-    need = header_len_from_prefix(blob[:8])
-    meta = parse_header(blob[:need])
-    if meta.n_bands == 1:
-        return read_window(blob, meta)
-    return np.stack([read_window(blob, meta, band=b) for b in range(meta.n_bands)])
-
-
 class CachedReader:
-    """Per-image window reader with a decoded-tile cache.
+    """The engine's window reader: a parsed header, a decoded-tile cache and
+    coalesced byte-range reads of only the tiles a request touches.
 
-    One instance per image inside a UDF batch lets many windows (multiple
-    AOIs / many sampled points on the same image) share tile decodes — the
-    distributed analogue of rasteret's per-source tile cache in the point
-    sampler (`src/rasteret/core/raster_accessor.py:519-560`).
+    ``blob`` is anything sliceable: bytes, or a ``fetch.RangedBlob`` for
+    href tables.  One instance per image inside a UDF batch lets many
+    windows (multiple AOIs / many sampled points on the same image) share
+    tile reads and decodes — the distributed analogue of rasteret's
+    per-source tile cache in the point sampler
+    (`src/rasteret/core/raster_accessor.py:519-560`).
     """
 
     def __init__(self, blob: bytes, meta: MiniRasterMeta | None = None):
@@ -418,28 +349,38 @@ class CachedReader:
         self.meta = meta
         self._tiles: dict[int, np.ndarray] = {}
 
-    def _tile(self, t_idx: int) -> np.ndarray:
-        t = self._tiles.get(t_idx)
-        if t is None:
+    def tiles(self, ids) -> list[np.ndarray]:
+        """The decoded tiles of planar tile indices ``ids``, in order.  The
+        uncached ones are read in one pass, one ``blob`` slice per coalesced
+        range — over a ``fetch.RangedBlob`` each slice is one ranged GET
+        (`src/rasteret/fetch/cog.py:744-826`) — and each is decoded once
+        into the cache."""
+        ids = [int(i) for i in ids]
+        missing = [i for i in dict.fromkeys(ids) if i not in self._tiles]
+        if missing:
             m = self.meta
-            off = int(m.tile_offsets[t_idx])
-            cnt = int(m.tile_byte_counts[t_idx])
-            t = codecs.decode_tile(
-                self.blob[off : off + cnt], m.compression, m.predictor,
-                m.dtype, m.tile_h, m.tile_w, m.qstep,
-                jpeg_tables=m.jpeg_tables,
-            )
-            self._tiles[t_idx] = t
-        return t
+            offsets = m.tile_offsets[missing]
+            sizes = m.tile_byte_counts[missing]
+            for m_off, m_size, members in coalesce_ranges(offsets, sizes):
+                chunk = self.blob[m_off : m_off + m_size]
+                for k in members:
+                    rel = int(offsets[k]) - m_off
+                    self._tiles[missing[k]] = codecs.decode_tile(
+                        chunk[rel : rel + int(sizes[k])], m.compression, m.predictor,
+                        m.dtype, m.tile_h, m.tile_w, m.qstep, jpeg_tables=m.jpeg_tables,
+                    )
+        return [self._tiles[i] for i in ids]
 
     def window(
         self, col_off: int, row_off: int, win_w: int, win_h: int, band: int = 0
     ) -> np.ndarray:
+        """Pixels of one band's window; pixels outside the raster (window
+        overhang) hold the raster nodata (or 0)."""
         m = self.meta
         fill = m.nodata if m.nodata is not None else 0
         canvas = np.full((win_h, win_w), fill, dtype=m.dtype)
-        for t_idx, tx, ty in plan_window_tiles(m, col_off, row_off, win_w, win_h, band):
-            tile = self._tile(t_idx)
+        plan = plan_window_tiles(m, col_off, row_off, win_w, win_h, band)
+        for (_, tx, ty), tile in zip(plan, self.tiles([t[0] for t in plan])):
             px0, py0 = tx * m.tile_w, ty * m.tile_h
             vw = min(m.tile_w, m.width - px0)
             vh = min(m.tile_h, m.height - py0)

@@ -1,8 +1,8 @@
 """Tiled/stripped (Geo)TIFF + BigTIFF container: header parse and window read.
 
-The second container behind the engine's ``parse_header``/``read_window``
-surface — the real-world input the reference is built around.  The reference
-parses COG headers via progressive HTTP range requests
+The second container behind the engine's ``container.parse_any`` /
+``CachedReader`` surface — the real-world input the reference is built
+around.  The reference parses COG headers via progressive HTTP range requests
 (`src/rasteret/fetch/header_parser.py:33-657`: both endiannesses, the TIFF 6.0
 tag/type matrix, GeoKeys, GDAL_NODATA, the PixelIsPoint origin shift) and
 decodes tiles through imagecodecs (`src/rasteret/fetch/cog.py:843-966`).  This
@@ -22,10 +22,10 @@ Design notes:
     pastes are order-correct without a container-specific decode path;
   * chunky multi-sample layouts (PlanarConfiguration=1, SamplesPerPixel>1,
     e.g. interleaved RGB) do not fit the engine's planar band-major tile
-    model — they decode through this module's ``decode_chunky_tile`` /
-    ``decode_full`` but are rejected by ``to_engine_meta`` (planar-config-2
-    and single-band files lower cleanly, matching the reference's raster
-    domain);
+    model — they decode through this module's ``decode_chunky_tile`` in
+    ``container.decode_full`` but are rejected by ``to_engine_meta``
+    (planar-config-2 and single-band files lower cleanly, matching the
+    reference's raster domain);
   * COG overview pyramids are first-class: ``parse_tiff_chain`` walks the
     next-IFD chain (full resolution + every reduced-resolution subfile),
     propagates georeferencing onto the overviews (which carry none, per
@@ -42,7 +42,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from rasteret_spark.format import codecs
-from rasteret_spark.format.miniraster import MiniRasterMeta
+from rasteret_spark.format.miniraster import CachedReader, MiniRasterMeta, NeedBytes
 
 # --- TIFF constants (public spec values) -------------------------------------
 CLASSIC_MAGIC = 42
@@ -123,17 +123,6 @@ _SF_BITS_DTYPE = {
 }
 
 
-class NeedBytes(Exception):
-    """Raised by prefix-backed reads when the parse walks past the prefix —
-    callers re-fetch a larger prefix (the reference's progressive header
-    read, `src/rasteret/fetch/header_parser.py:276-300`)."""
-
-    def __init__(self, offset: int, size: int):
-        super().__init__(f"need bytes [{offset}, {offset + size})")
-        self.offset = offset
-        self.size = size
-
-
 class _Ranges:
     """Bounded-range reader over a ``read(offset, size) -> bytes`` callable.
 
@@ -148,43 +137,19 @@ class _Ranges:
 
     def get(self, offset: int, size: int) -> bytes:
         buf = self._read(int(offset), int(size))
-        if len(buf) < size:
-            raise ValueError(
-                f"short read at {offset}: wanted {size}, got {len(buf)} "
-                "(truncated file?)"
-            )
+        if len(buf) < size:  # past the end of a prefix or a truncated file
+            raise NeedBytes(int(offset), int(size))
         self.bytes_fetched += size
         self.max_end = max(self.max_end, int(offset) + int(size))
         return buf
 
 
-def prefix_read(prefix: bytes):
-    """A ``read`` callable over an in-memory prefix; raises ``NeedBytes``
-    past its end (enrichment parses from a speculative 16 KiB prefix)."""
+def blob_read(blob):
+    """The ``read(offset, size)`` callable over a sliceable ``blob`` (bytes,
+    a prefix, or a ``fetch.RangedBlob``)."""
 
     def read(offset: int, size: int) -> bytes:
-        if offset + size > len(prefix):
-            raise NeedBytes(offset, size)
-        return prefix[offset : offset + size]
-
-    return read
-
-
-def blob_read(blob: bytes):
-    def read(offset: int, size: int) -> bytes:
-        return blob[offset : offset + size]
-
-    return read
-
-
-def file_read(path: str):
-    """Ranged reads against a local file — one open per call keeps the
-    callable picklable for use inside executors."""
-
-    def read(offset: int, size: int) -> bytes:
-        with open(path, "rb") as f:
-            f.seek(offset)
-            return f.read(size)
+        return bytes(blob[offset : offset + size])
 
     return read
 
@@ -525,7 +490,7 @@ def to_engine_meta(m: TiffMeta) -> MiniRasterMeta:
     Supported: any single-sample layout; planar (PlanarConfiguration=2)
     multi-sample layouts, whose tile order is plane-major — exactly the
     engine's band-major ``tile_index``.  Chunky multi-sample (interleaved
-    RGB) rasters must go through ``decode_full``/``decode_chunky_tile``."""
+    RGB) rasters must go through ``container.decode_full``."""
     engine_comp = TIFF_COMP_TO_ENGINE.get(m.compression)
     if engine_comp is None:
         raise ValueError(
@@ -540,7 +505,7 @@ def to_engine_meta(m: TiffMeta) -> MiniRasterMeta:
         raise ValueError(
             "chunky multi-sample TIFF (PlanarConfiguration=1, "
             f"SamplesPerPixel={m.samples_per_pixel}) does not fit the planar "
-            "tile model; use tiff.decode_full for interleaved rasters"
+            "tile model; use container.decode_full for interleaved rasters"
         )
     n_bands = m.samples_per_pixel if m.planar_config == 2 else 1
     expected_tiles = m.tiles_x * m.tiles_y * n_bands
@@ -644,57 +609,6 @@ def decode_chunky_tile(raw: bytes, m: TiffMeta) -> np.ndarray:
     return chunky
 
 
-def decode_full(src, band: int | None = None, ifd: int = 0) -> np.ndarray:
-    """Whole-image decode of a TIFF blob/path.
-
-    Returns (h, w) for single-sample; (h, w, spp) for chunky multi-sample;
-    (bands, h, w) for planar multi-sample (band=None) or (h, w) for one
-    band.  ``ifd`` selects a directory in the chain (overview levels)."""
-    if isinstance(src, (bytes, bytearray, memoryview)):
-        blob = bytes(src)
-        read = blob_read(blob)
-    else:
-        read = file_read(src)
-    m = parse_tiff(read, ifd=ifd)
-    spp = m.samples_per_pixel
-    if spp > 1 and m.planar_config == 1:
-        out = np.zeros((m.height, m.width, spp), dtype=m.dtype)
-        for ty in range(m.tiles_y):
-            for tx in range(m.tiles_x):
-                idx = ty * m.tiles_x + tx
-                raw = read(int(m.tile_offsets[idx]), int(m.tile_byte_counts[idx]))
-                tile = decode_chunky_tile(raw, m)
-                y0, x0 = ty * m.tile_h, tx * m.tile_w
-                vh = min(tile.shape[0], m.height - y0)
-                vw = min(m.tile_w, m.width - x0)
-                out[y0 : y0 + vh, x0 : x0 + vw] = tile[:vh, :vw]
-        return out if band is None else out[:, :, band]
-    # planar / single-sample: lower to the engine meta and reuse the shared
-    # window reader (same tile plan + coalescing as every other decode path)
-    from rasteret_spark.format import miniraster as mr
-
-    em = to_engine_meta(m)
-    bands = range(em.n_bands) if band is None and em.n_bands > 1 else [band or 0]
-    planes = [
-        mr.read_window(_ReadSlicer(read), em, 0, 0, m.width, m.height, band=b)
-        for b in bands
-    ]
-    if band is None and em.n_bands > 1:
-        return np.stack(planes)
-    return planes[0]
-
-
-class _ReadSlicer:
-    """Adapts a ranged-read callable to the ``blob[a:b]`` slicing the shared
-    window reader performs — each slice is one ranged read."""
-
-    def __init__(self, read):
-        self._read = read
-
-    def __getitem__(self, sl: slice) -> bytes:
-        return self._read(int(sl.start), int(sl.stop - sl.start))
-
-
 MAX_IFDS = 32  # IFD chain walk bound: a looping or hostile chain stops here
 
 
@@ -748,26 +662,23 @@ def pick_overview(metas: list[TiffMeta], factor: float) -> int:
 
 
 def read_window_at_res(
-    read, col0: int, row0: int, win_w: int, win_h: int,
+    blob, col0: int, row0: int, win_w: int, win_h: int,
     factor: float = 1.0,
     metas: list[TiffMeta] | None = None,
 ) -> tuple[np.ndarray, int]:
-    """Window read in FULL-RESOLUTION pixel coordinates, served from the
-    coarsest overview that satisfies ``factor`` — the COG zoom economics:
-    requesting 1/4 resolution reads ~1/16 of the tile bytes.
+    """Window read of a sliceable TIFF ``blob`` in FULL-RESOLUTION pixel
+    coordinates, served from the coarsest overview that satisfies
+    ``factor`` — the COG zoom economics: requesting 1/4 resolution reads
+    ~1/16 of the tile bytes.
 
     Returns (array, level_index); the array's shape is the window scaled by
     the chosen level's actual decimation (floor semantics)."""
-    from rasteret_spark.format import miniraster as mr
-
     if metas is None:
-        metas = parse_tiff_chain(read)
+        metas = parse_tiff_chain(blob_read(blob))
     li = pick_overview(metas, factor)
     m = metas[li]
-    em = to_engine_meta(m)
     fx = metas[0].width / m.width
     fy = metas[0].height / m.height
     c0, r0 = int(col0 / fx), int(row0 / fy)
     ww, wh = max(int(win_w / fx), 1), max(int(win_h / fy), 1)
-    win = mr.read_window(_ReadSlicer(read), em, c0, r0, ww, wh)
-    return win, li
+    return CachedReader(blob, to_engine_meta(m)).window(c0, r0, ww, wh), li

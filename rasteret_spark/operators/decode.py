@@ -391,7 +391,7 @@ def zonal_oracle_row(image_row: dict, aoi_row: dict, band: int = 0) -> dict:
     `tests/test_dataset_pixel_comparison.py`)."""
     blob = image_row["bytes"]
     meta = container.parse_any(blob)
-    arr = container.decode_full_any(blob, band=band)
+    arr = container.decode_full(blob, band=band)
     lon, lat = pixel_centers_lonlat(meta.transform, meta.epsg, 0, 0, meta.width, meta.height)
     inside = geom.points_in_polygon_wkb(
         lon.ravel(), lat.ravel(), aoi_row["geometry"]
@@ -430,7 +430,7 @@ def psnr_check(df: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for image_id, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                arr = mr.decode_full(bytes(blob))
+                arr = container.decode_full(bytes(blob))
                 if arr.ndim == 2:
                     arr = arr[None]
                 i = int(image_id.split("-")[1])

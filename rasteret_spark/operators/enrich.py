@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql import types as T  # noqa: N812
 
-from rasteret_spark.format import miniraster as mr
+from rasteret_spark.format import container
 
 META_FIELDS = [
     T.StructField("width", T.IntegerType()),
@@ -51,31 +51,22 @@ META_STRUCT = T.StructType(META_FIELDS)
 
 
 HEADER_PREFIX = 16384  # speculative first read, like the reference's 16 KiB
-# a header that does not fit the prefix parses to this all-null row, which
-# enrich_headers turns into a null ``meta`` (a pandas struct UDF cannot
-# return a null struct itself)
+# a header that does not fit the prefix, or does not parse, gives this
+# all-null row, which enrich_headers turns into a null ``meta`` (a pandas
+# struct UDF cannot return a null struct itself)
 _NO_META = dict.fromkeys(f.name for f in META_FIELDS)
+
+
+def _parse_prefix(prefix) -> dict:
+    try:
+        return container.parse_any(bytes(prefix)).to_row()
+    except Exception:  # NeedBytes or a corrupt blob: the readers parse (and quarantine) it
+        return _NO_META
 
 
 @F.pandas_udf(returnType=META_STRUCT)
 def parse_header_udf(prefixes: pd.Series) -> pd.DataFrame:
-    from rasteret_spark.format import tiff
-
-    rows = []
-    for prefix in prefixes:
-        prefix = bytes(prefix)
-        container = tiff.sniff(prefix[:4])
-        if container is not None:  # tiled/stripped (Geo)TIFF or BigTIFF
-            try:
-                tm = tiff.parse_tiff(tiff.prefix_read(prefix))
-            except tiff.NeedBytes:
-                rows.append(_NO_META)
-                continue
-            rows.append(tiff.to_engine_meta(tm).to_row())
-            continue
-        need = mr.header_len_from_prefix(prefix[:8])
-        rows.append(_NO_META if need > len(prefix) else mr.parse_header(prefix[:need]).to_row())
-    return pd.DataFrame(rows, columns=list(_NO_META))
+    return pd.DataFrame([_parse_prefix(p) for p in prefixes], columns=list(_NO_META))
 
 
 def enrich_headers(df: DataFrame) -> DataFrame:
@@ -87,8 +78,9 @@ def enrich_headers(df: DataFrame) -> DataFrame:
     reference's progressive ranged header read
     (`src/rasteret/fetch/header_parser.py:276-300`), and the difference
     between moving ~KBs and ~MBs per image through serialization.  A header
-    longer than the prefix gives a null ``meta``: the readers then parse the
-    header from the blob itself, so the row still decodes."""
+    longer than the prefix, or one that does not parse, gives a null
+    ``meta``: the readers then parse the header from the blob itself, so a
+    long header still decodes and a corrupt blob becomes status rows."""
     parsed = df.withColumn(
         "meta", parse_header_udf(F.substring(F.col("bytes"), 1, HEADER_PREFIX))
     )
@@ -105,7 +97,6 @@ def enrich_headers_remote(df: DataFrame) -> DataFrame:
     Adds ``meta`` (META_STRUCT, null on failure) and ``enrich_status``
     ('ok' or the quarantined error).  Works for every registered ranged
     scheme (file://, http(s)://, injected test fakes)."""
-    from rasteret_spark.format import container
     from rasteret_spark.operators.decode import _decode_parallelism, _err_status
     from rasteret_spark.sources.fetch import _RANGED_READERS, RangedBlob
 

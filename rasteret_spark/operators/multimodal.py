@@ -74,10 +74,14 @@ def _decode_avi_poster(blob: bytes) -> np.ndarray:
     raise ValueError("AVI stream has no frames")
 
 
+def _decode_raster(blob: bytes) -> np.ndarray:
+    return container.decode_full(bytes(blob), band=0)
+
+
 # blob -> 2-D float array; keyed by sniffed media kind
 _DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {
-    "miniraster": lambda blob: mr.decode_full(blob, band=0),
-    "tiff": lambda blob: container.decode_full_any(bytes(blob), band=0),
+    "miniraster": _decode_raster,
+    "tiff": _decode_raster,
     "jpeg": _decode_jpeg,
     "png": _decode_png,
     "audio-wav": _decode_wav,

@@ -52,7 +52,7 @@ PYRAMID_EXTRA = (
 
 def _rebuild_blob(blob: bytes, factors: tuple[int, ...], rebuild: bool):
     """(new_blob, status, n_levels_in, n_levels_out) for one TIFF blob."""
-    from rasteret_spark.format import tiff, tiffwrite
+    from rasteret_spark.format import container, tiff, tiffwrite
 
     metas = tiff.parse_tiff_chain(tiff.blob_read(blob))
     n_in = len(metas)
@@ -67,7 +67,7 @@ def _rebuild_blob(blob: bytes, factors: tuple[int, ...], rebuild: bool):
     if m.model_transform is not None:
         # the writer georeferences via scale+tiepoint only
         return blob, "skipped_model_transform", n_in, n_in
-    arr = tiff.decode_full(blob)
+    arr = container.decode_full(blob)
     interleaved = m.samples_per_pixel > 1 and m.planar_config == 1
     new = tiffwrite.write_tiff(
         np.ascontiguousarray(arr),

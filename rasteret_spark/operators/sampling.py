@@ -63,20 +63,20 @@ NEIGHBORHOOD_FIELD = pa.field("neighborhood", pa.list_(pa.float64()))
 def _gather_pixels(
     reader: mr.CachedReader, band: int, rr: np.ndarray, cc: np.ndarray
 ) -> np.ndarray:
-    """Vectorized pixel gather: decode each touched tile once (shared cache),
-    fancy-index all requested (row, col) pairs.  Coords (1-D) must be
-    in-raster.  One stable argsort groups the requests by tile id; each
-    tile serves its contiguous run, tiles in ascending id order."""
+    """Vectorized pixel gather: read the touched tiles in one coalesced
+    pass (decoded once, shared cache), fancy-index all requested (row, col)
+    pairs.  Coords (1-D) must be in-raster.  One stable argsort groups the
+    requests by tile id; each tile serves its contiguous run, tiles in
+    ascending id order."""
     meta = reader.meta
     out = np.empty(rr.shape, dtype=np.float64)
     tids = (rr // meta.tile_h) * meta.tiles_x + (cc // meta.tile_w)
     order = np.argsort(tids, kind="stable")
     stids = tids[order]
     starts = np.flatnonzero(np.diff(stids, prepend=-1))
-    for s, e in zip(starts, np.append(starts[1:], len(order))):
+    tiles = reader.tiles(band * meta.tiles_per_band + stids[starts])
+    for s, e, tile in zip(starts, np.append(starts[1:], len(order)), tiles):
         sel = order[s:e]
-        ty, tx = divmod(int(stids[s]), meta.tiles_x)
-        tile = reader._tile(meta.tile_index(band, ty, tx))
         out[sel] = tile[rr[sel] % meta.tile_h, cc[sel] % meta.tile_w]
     return out
 

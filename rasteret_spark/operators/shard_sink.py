@@ -353,7 +353,7 @@ def write_image_shards(
                 key = str(r[key_col])
                 blob = bytes(r[blob_col])
                 meta = container.parse_any(blob)
-                arr = container.decode_full_any(blob)
+                arr = container.decode_full(blob)
                 # disambiguate layout by the PARSED dims, not shape
                 # heuristics (a chunky image whose height equals its band
                 # count would misclassify otherwise)

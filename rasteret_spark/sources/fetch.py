@@ -196,6 +196,8 @@ _FETCHERS: dict[str, Callable[[str], bytes]] = {
 
 # --- ranged reads: the no-full-download transport ----------------------------
 def _file_ranged_reader(url: str) -> Callable[[int, int], bytes]:
+    """Ranged reads of a local file (``file://`` URL or plain path) — one
+    open per call keeps the callable picklable for use inside executors."""
     path = urlparse(url).path
 
     def read(offset: int, size: int) -> bytes:
@@ -236,8 +238,8 @@ class RangedBlob:
 
     Every blob-consuming decode path in the engine accesses payloads
     exclusively through contiguous slices (header prefix, coalesced tile
-    ranges), so handing this object to ``CachedReader``/``read_window``
-    yields the reference's no-full-download COG access pattern
+    ranges), so handing this object to ``CachedReader`` yields the
+    reference's no-full-download COG access pattern
     (`src/rasteret/fetch/cog.py:744-826`) over any registered transport —
     each slice is a ranged GET, nothing else ever transfers.
 
@@ -268,16 +270,10 @@ class RangedBlob:
         if sl.stop is None:
             raise ValueError("RangedBlob slice needs an explicit stop")
         size = int(sl.stop) - start
-        last: BaseException | None = None
-        for i in range(self._attempts):
-            try:
-                return self._read(start, size)
-            except Exception as e:
-                last = e
-                if not is_transient(e) or i == self._attempts - 1:
-                    raise
-                self._sleep(_backoff_s(f"{self.url}#{start}", i, self._base_delay))
-        raise last  # unreachable; keeps type-checkers honest
+        return _with_retry(
+            lambda: self._read(start, size), f"{self.url}#{start}",
+            self._attempts, self._base_delay, self._sleep,
+        )[0]
 
 
 def register_fetcher(scheme: str, fn: Callable[[str], bytes]) -> None:
@@ -354,6 +350,26 @@ def _backoff_s(url: str, attempt: int, base_delay: float) -> float:
     return base_delay * (2.0**attempt) * (1.0 + 0.25 * frac)
 
 
+def _with_retry(call, key: str, attempts: int, base_delay: float, sleep):
+    """``call()`` with bounded retry on TRANSIENT errors only: up to
+    ``attempts`` tries, exponential backoff (base * 2^i + jitter, keyed on
+    ``key``) between them.  Returns (result, attempts_used).  Permanent
+    errors raise immediately; a transient error that survives all attempts
+    raises the last exception."""
+    for i in range(attempts):
+        try:
+            return call(), i + 1
+        except Exception as e:
+            if not is_transient(e) or i == attempts - 1:
+                # attach the TRUE attempt count (a permanent error can land
+                # on attempt >1 after transient retries) for callers' audit
+                # columns
+                e._fetch_attempts = i + 1  # type: ignore[attr-defined]
+                raise
+            sleep(_backoff_s(key, i, base_delay))
+    raise ValueError(f"attempts must be >= 1, got {attempts}")
+
+
 def fetch_with_retry(
     url: str,
     fetchers: dict[str, Callable[[str], bytes]],
@@ -361,24 +377,8 @@ def fetch_with_retry(
     base_delay: float = 0.2,
     sleep: Callable[[float], None] = time.sleep,
 ) -> tuple[bytes, int]:
-    """Fetch with bounded retry on TRANSIENT errors only: up to ``attempts``
-    tries, exponential backoff (base * 2^i + jitter) between them.  Returns
-    (blob, attempts_used).  Permanent errors raise immediately; a transient
-    error that survives all attempts raises the last exception."""
-    last: BaseException | None = None
-    for i in range(attempts):
-        try:
-            return fetch(url, fetchers), i + 1
-        except Exception as e:
-            last = e
-            if not is_transient(e) or i == attempts - 1:
-                # attach the TRUE attempt count (a permanent error can land
-                # on attempt >1 after transient retries) for callers' audit
-                # columns
-                e._fetch_attempts = i + 1  # type: ignore[attr-defined]
-                raise
-            sleep(_backoff_s(url, i, base_delay))
-    raise last  # unreachable; keeps type-checkers honest
+    """``fetch`` under ``_with_retry``: (blob, attempts_used)."""
+    return _with_retry(lambda: fetch(url, fetchers), url, attempts, base_delay, sleep)
 
 
 def fetch_blobs(

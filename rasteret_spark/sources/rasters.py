@@ -94,7 +94,7 @@ def ingest_rasters(
                             # ingest must yield rows every operator can read,
                             # not rows that quarantine at query time.  Pixels
                             # identical (transpose), geo carried over.
-                            chunky = tiff.decode_full(blob)  # (h, w, spp)
+                            chunky = container.decode_full(blob)  # (h, w, spp)
                             planar = np.ascontiguousarray(
                                 chunky.transpose(2, 0, 1)
                             )
@@ -114,7 +114,7 @@ def ingest_rasters(
                         w, h, n_bands = em.width, em.height, em.n_bands
                         fmt = codecs.COMP_CODES.get(em.compression, "unknown")
                         epsg, nodata, transform = em.epsg, em.nodata, em.transform
-                    arr0 = container.decode_full_any(blob, band=0)
+                    arr0 = container.decode_full(blob, band=0)
                     a, _, c, _, e, f0 = transform
                     cols = np.array([0.0, w, w, 0.0])
                     rows = np.array([0.0, 0.0, h, h])

@@ -13,7 +13,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from rasteret_spark.format import avi, jpegcodec, pngcodec
+import png_fixture
+from rasteret_spark.format import avi, jpegcodec
 from rasteret_spark.operators import multimodal
 
 RNG = np.random.default_rng(55)
@@ -162,7 +163,7 @@ def test_wav_decode_kernel():
 
 def test_png_jpeg_builtin_kernels_match_codecs():
     img = _smooth_frames(1, 33, 21)[0]
-    png = pngcodec.encode(img)
+    png = png_fixture.encode(img)
     jpg = jpegcodec.encode(img, quality=95)
     g_png = multimodal._DECODERS["png"](png)
     assert g_png.shape == (33, 21)
@@ -171,11 +172,11 @@ def test_png_jpeg_builtin_kernels_match_codecs():
     assert _psnr(g_jpg, img) > 35.0
     # 16-bit PNG scales into the 0..255 presentation range
     img16 = (img.astype(np.uint16) * 257)
-    g16 = multimodal._DECODERS["png"](pngcodec.encode(img16))
+    g16 = multimodal._DECODERS["png"](png_fixture.encode(img16))
     np.testing.assert_allclose(g16, img.astype(np.float64), atol=0.01)
     # RGB -> BT.601 luma
     rgb = np.dstack([img, img // 2, img // 3])
-    lum = multimodal._DECODERS["png"](pngcodec.encode(rgb))
+    lum = multimodal._DECODERS["png"](png_fixture.encode(rgb))
     want = img * 0.299 + (img // 2) * 0.587 + (img // 3) * 0.114
     np.testing.assert_allclose(lum, want)
 
@@ -184,7 +185,7 @@ def test_sniff_offset_patterns():
     frames = _smooth_frames(1, 8, 8)
     assert multimodal._sniff(frames_to_avi(frames)) == "video-avi"
     assert multimodal._sniff(_wav_bytes(np.zeros(4))) == "audio-wav"
-    assert multimodal._sniff(pngcodec.encode(frames[0])) == "png"
+    assert multimodal._sniff(png_fixture.encode(frames[0])) == "png"
     assert multimodal._sniff(jpegcodec.encode(frames[0])) == "jpeg"
     assert multimodal._sniff(b"II*\x00rest") == "tiff"
     assert multimodal._sniff(b"RIFF\x00\x00\x00\x00XXXX") == "unknown"
@@ -197,7 +198,7 @@ def media_df(spark):
     t = np.linspace(0, 1, 400, endpoint=False)
     rows = [
         {"image_id": "vid-1", "bytes": frames_to_avi(frames, fps=6)},
-        {"image_id": "png-1", "bytes": pngcodec.encode(frames[0])},
+        {"image_id": "png-1", "bytes": png_fixture.encode(frames[0])},
         {"image_id": "jpg-1", "bytes": jpegcodec.encode(frames[3], quality=95)},
         {"image_id": "wav-1", "bytes": _wav_bytes(np.sin(2 * np.pi * 3 * t))},
         {"image_id": "bad-1", "bytes": b"\xff\xd8\xff" + b"junk" * 4},

@@ -423,7 +423,7 @@ def test_pixel_series_matches_flat_samples(spark, coll, points_pdf, images_pdf):
 
 
 def test_to_cogs_facade_writes_ingestable_files(tmp_path, spark, coll, images_pdf):
-    from rasteret_spark.format import tiff as tf
+    from rasteret_spark.format import container
 
     im = images_pdf.iloc[0]
     bbox = (
@@ -437,7 +437,7 @@ def test_to_cogs_facade_writes_ingestable_files(tmp_path, spark, coll, images_pd
     by_id = {r["chip_id"]: r for _, r in mos.iterrows()}
     for _, m in man.iterrows():
         blob = open(m["href"], "rb").read()
-        got = tf.decode_full(blob)
+        got = container.decode_full(blob)
         want = np.asarray(
             [np.nan if v is None else v for v in by_id[m["chip_id"]]["values"]],
             dtype="float64",

@@ -59,7 +59,7 @@ def test_long_header_enriches_to_null_meta_and_still_decodes(spark, images_pdf, 
     from the blob: enriched and raw tables give identical rows."""
     import numpy as np
 
-    from rasteret_spark.format import miniraster as mr
+    from rasteret_spark.format import container, miniraster as mr
 
     pdf = images_pdf.head(20).copy()
     # re-encode an image whose footprint meets an AOI's, so it decodes
@@ -71,7 +71,7 @@ def test_long_header_enriches_to_null_meta_and_still_decodes(spark, images_pdf, 
     long_id = pdf.iloc[row]["image_id"]
     blob = bytes(pdf.iloc[row]["bytes"])
     meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:64])])
-    pixels = np.stack([mr.decode_full(blob, band=b) for b in range(meta.n_bands)])
+    pixels = np.stack([container.decode_full(blob, band=b) for b in range(meta.n_bands)])
     long_blob = mr.encode_image(
         pixels, tile_w=4, tile_h=4, transform=tuple(meta.transform),
         epsg=meta.epsg, nodata=meta.nodata,

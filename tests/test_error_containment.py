@@ -186,3 +186,40 @@ def test_grid_georef_round_trips_pixel_coords(spark, mixed_images):
     lat_last = row["chip_ymax"] - (h - 0.5) * row["chip_yres"]
     assert row["chip_xmin"] < lon0 < lon_last < row["chip_xmin"] + w * row["chip_xres"]
     assert row["chip_ymax"] > lat0 > lat_last > row["chip_ymax"] - h * row["chip_yres"]
+
+
+def test_enrich_nulls_corrupt_meta_and_zonal_quarantines_it(spark, images_pdf, aois_pdf):
+    """One corrupt blob in an enriched table gets a null ``meta`` instead of
+    failing the job; the zonal join over the enriched table gives the raw
+    table's healthy rows plus that image's status rows."""
+    from rasteret_spark.operators import enrich
+
+    pdf = images_pdf.head(20).copy()
+    aois = aois_pdf.rename(
+        columns={
+            **{c: f"aoi_{c}" for c in ["xmin", "ymin", "xmax", "ymax"]},
+            "geometry": "aoi_geometry",
+        }
+    )
+    # corrupt an image whose footprint meets an AOI, so the join visits it
+    row = next(
+        i for i, r in enumerate(pdf.itertuples())
+        if ((aois.aoi_xmin <= r.xmax) & (aois.aoi_xmax >= r.xmin)
+            & (aois.aoi_ymin <= r.ymax) & (aois.aoi_ymax >= r.ymin)).any()
+    )
+    bad_id = pdf.iloc[row]["image_id"]
+    pdf.iat[row, pdf.columns.get_loc("bytes")] = bytearray(b"not a raster " * 8)
+    raw = spark.createDataFrame(pdf)
+    enriched = enrich.enrich_headers(raw)
+    metas = {r.image_id: r.meta for r in enriched.select("image_id", "meta").collect()}
+    assert metas[bad_id] is None
+    assert sum(m is not None for m in metas.values()) == len(pdf) - 1
+
+    key = ["image_id", "aoi_id", "band"]
+    aois_df = spark.createDataFrame(aois)
+    a = decode.zonal_join(raw, aois_df).toPandas().sort_values(key).reset_index(drop=True)
+    b = decode.zonal_join(enriched, aois_df).toPandas().sort_values(key).reset_index(drop=True)
+    bad = b[b["image_id"] == bad_id]
+    assert len(bad) > 0 and (bad["status"] != "ok").all()
+    assert (b[b["image_id"] != bad_id]["status"] == "ok").any()
+    pd.testing.assert_frame_equal(a, b)

@@ -8,7 +8,7 @@ against an in-memory oracle).
 import numpy as np
 import pytest
 
-from rasteret_spark.format import codecs, miniraster as mr
+from rasteret_spark.format import codecs, container, miniraster as mr
 
 
 RNG = np.random.default_rng(42)
@@ -25,7 +25,7 @@ def _img(dtype, h=130, w=97, lo=0, hi=200):
 def test_lossless_roundtrip_int(comp, dtype):
     arr = _img(dtype)
     blob = mr.encode_image(arr, tile_w=48, tile_h=32, compression=codecs.COMP_NAMES[comp])
-    out = mr.decode_full(blob)
+    out = container.decode_full(blob)
     np.testing.assert_array_equal(out, arr)
 
 
@@ -35,7 +35,7 @@ def test_predictor2_roundtrip(comp):
     blob = mr.encode_image(
         arr, compression=codecs.COMP_NAMES[comp], predictor=codecs.PRED_HORIZONTAL
     )
-    np.testing.assert_array_equal(mr.decode_full(blob), arr)
+    np.testing.assert_array_equal(container.decode_full(blob), arr)
 
 
 @pytest.mark.parametrize("dtype", ["float32", "float64"])
@@ -44,13 +44,13 @@ def test_predictor3_float_roundtrip(dtype):
     blob = mr.encode_image(
         arr, compression=codecs.COMP_DEFLATE, predictor=codecs.PRED_FLOAT
     )
-    np.testing.assert_array_equal(mr.decode_full(blob), arr)
+    np.testing.assert_array_equal(container.decode_full(blob), arr)
 
 
 def test_qlossy_psnr_gate():
     arr = _img("uint8", hi=255)
     blob = mr.encode_image(arr, compression=codecs.COMP_QLOSSY, qstep=2.0)
-    out = mr.decode_full(blob)
+    out = container.decode_full(blob)
     assert out.dtype == arr.dtype
     assert codecs.psnr(arr, out, peak=255.0) >= 40.0
 
@@ -58,7 +58,7 @@ def test_qlossy_psnr_gate():
 def test_qlossy_float_psnr():
     arr = _img("float32", lo=-50, hi=50)
     blob = mr.encode_image(arr, compression=codecs.COMP_QLOSSY, qstep=0.05)
-    assert codecs.psnr(arr, mr.decode_full(blob)) >= 40.0
+    assert codecs.psnr(arr, container.decode_full(blob)) >= 40.0
 
 
 def test_header_roundtrip_fields():
@@ -87,7 +87,7 @@ def test_window_read_matches_full_decode(win):
     arr = _img("uint16")
     blob = mr.encode_image(arr, tile_w=32, tile_h=48, compression=codecs.COMP_DEFLATE)
     c, r, w, h = win
-    out = mr.read_window(blob, col_off=c, row_off=r, win_w=w, win_h=h)
+    out = mr.CachedReader(blob).window(c, r, w, h)
     cw = min(arr.shape[1] - c, w)
     ch = min(arr.shape[0] - r, h)
     np.testing.assert_array_equal(out[:ch, :cw], arr[r : r + h, c : c + w])
@@ -96,7 +96,7 @@ def test_window_read_matches_full_decode(win):
 def test_window_overhang_filled_with_nodata():
     arr = _img("int32")
     blob = mr.encode_image(arr, nodata=-1.0)
-    out = mr.read_window(blob, col_off=90, row_off=120, win_w=20, win_h=20)
+    out = mr.CachedReader(blob).window(90, 120, 20, 20)
     assert out.shape == (20, 20)
     np.testing.assert_array_equal(out[:10, :7], arr[120:130, 90:97])
     assert (out[10:, :] == -1).all() and (out[:, 7:] == -1).all()
@@ -125,10 +125,10 @@ def test_multiband_roundtrip_planar():
     assert len(meta.tile_offsets) == meta.tiles_per_band * 3
     # per-band full decode and stacked decode agree with the source cube
     for b in range(3):
-        np.testing.assert_array_equal(mr.decode_full(blob, band=b), cube[b])
-    np.testing.assert_array_equal(mr.decode_full(blob), cube)
+        np.testing.assert_array_equal(container.decode_full(blob, band=b), cube[b])
+    np.testing.assert_array_equal(container.decode_full(blob), cube)
     # banded window reads touch only that band's planar tile run
-    out = mr.read_window(blob, col_off=10, row_off=20, win_w=30, win_h=40, band=2)
+    out = mr.CachedReader(blob).window(10, 20, 30, 40, band=2)
     np.testing.assert_array_equal(out, cube[2][20:60, 10:40])
     r = mr.CachedReader(blob)
     np.testing.assert_array_equal(r.window(10, 20, 30, 40, band=1), cube[1][20:60, 10:40])
@@ -137,10 +137,68 @@ def test_multiband_roundtrip_planar():
 def test_singleband_decode_stays_2d():
     arr = _img("uint8")
     blob = mr.encode_image(arr)
-    assert mr.decode_full(blob).ndim == 2
+    assert container.decode_full(blob).ndim == 2
 
 
 def test_packbits_edge_cases():
     for data in [b"", b"a", b"a" * 300, b"abc" * 50, bytes(range(256)) * 2, b"aabbbbbcdd"]:
         enc = codecs.packbits_encode(data)
         assert codecs.packbits_decode(enc, len(data)) == data
+
+
+class _CountingBlob:
+    """A blob that records every slice read from it: each slice stands for
+    one ranged GET."""
+
+    def __init__(self, blob: bytes):
+        self.blob, self.slices = blob, []
+
+    def __getitem__(self, sl: slice) -> bytes:
+        self.slices.append((sl.start, sl.stop))
+        return self.blob[sl]
+
+
+def _merged(meta, ids) -> list[tuple[int, int]]:
+    ranges = mr.coalesce_ranges(meta.tile_offsets[ids], meta.tile_byte_counts[ids])
+    return sorted((o, o + n) for o, n, _ in ranges)
+
+
+def test_reader_reads_one_slice_per_merged_range():
+    """Several AOI windows on one image: each window reads its uncached
+    tiles with one slice per coalesced range (adjacent tiles of a tile row
+    merge), never one per tile; a repeated window reads nothing."""
+    arr = _img("uint16", h=256, w=256)
+    blob = mr.encode_image(arr, tile_w=32, tile_h=32, compression=codecs.COMP_DEFLATE)
+    meta = container.parse_any(blob)
+    src = _CountingBlob(blob)
+    reader = mr.CachedReader(src, meta)
+    seen: set[int] = set()
+    for c, r, w, h in [(10, 10, 70, 50), (40, 30, 100, 60), (0, 200, 256, 56)]:
+        ids = [t for t, _, _ in mr.plan_window_tiles(meta, c, r, w, h) if t not in seen]
+        before = len(src.slices)
+        out = reader.window(c, r, w, h)
+        np.testing.assert_array_equal(out, arr[r : r + h, c : c + w])
+        got = sorted(src.slices[before:])
+        assert got == _merged(meta, ids)
+        assert len(got) < len(ids)
+        seen.update(ids)
+    before = len(src.slices)
+    reader.window(10, 10, 70, 50)
+    assert len(src.slices) == before
+
+
+def test_point_gather_reads_one_slice_per_merged_range():
+    from rasteret_spark.operators import sampling
+
+    arr = _img("uint16", h=256, w=256)
+    blob = mr.encode_image(arr, tile_w=32, tile_h=32, compression=codecs.COMP_DEFLATE)
+    meta = container.parse_any(blob)
+    src = _CountingBlob(blob)
+    reader = mr.CachedReader(src, meta)
+    rr = np.array([5, 6, 40, 41, 200, 5, 250])
+    cc = np.array([5, 100, 7, 200, 60, 250, 3])
+    got = sampling._gather_pixels(reader, 0, rr, cc)
+    np.testing.assert_array_equal(got, arr[rr, cc].astype(np.float64))
+    ids = sorted({(r // 32) * meta.tiles_x + c // 32 for r, c in zip(rr, cc)})
+    assert sorted(src.slices) == _merged(meta, ids)
+    assert len(src.slices) < len(ids)

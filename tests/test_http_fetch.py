@@ -161,12 +161,11 @@ def test_remote_tiff_header_parse_is_ranged_not_downloaded(http_server):
     assert header_bytes < 8192, header_bytes
     assert m.header_bytes_read == header_bytes  # parser accounting is honest
 
-    # window read over the same transport: engine meta + ranged slicer
+    # window read over the same transport: engine meta + ranged blob
     from rasteret_spark.format import miniraster as mr
 
     em = tiff.to_engine_meta(m)
-    win = mr.read_window(tiff._ReadSlicer(fx.http_ranged_reader(url)), em,
-                         100, 100, 64, 64)
+    win = mr.CachedReader(fx.RangedBlob(url), em).window(100, 100, 64, 64)
     assert np.array_equal(np.asarray(win, dtype=a.dtype), a[100:164, 100:164])
     total = H.stats["range_bytes"]
     assert total < len(blob) / 4, (total, len(blob))

@@ -13,7 +13,7 @@ import os
 import numpy as np
 import pytest
 
-from rasteret_spark.format import codecs, jpegcodec as J, miniraster as mr
+from rasteret_spark.format import codecs, container, jpegcodec as J, miniraster as mr
 from rasteret_spark.format import tiff, tiffwrite
 
 SPARK_IMAGES = "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin"
@@ -234,13 +234,13 @@ class TestJpegTiff:
         m = tiff.parse_tiff_bytes(b)
         assert m.compression == 7
         assert (m.jpeg_tables is not None) == (tables_mode == 1)
-        out = tiff.decode_full(b)
+        out = container.decode_full(b)
         assert codecs.psnr(img, out, peak=255) >= 40.0
         # engine meta carries the tables for the distributed byte-range path
         em = tiff.to_engine_meta(m)
         assert em.compression == codecs.COMP_JPEG
         assert (em.jpeg_tables is not None) == (tables_mode == 1)
-        win = mr.read_window(b, em, 30, 20, 100, 90)
+        win = mr.CachedReader(b, em).window(30, 20, 100, 90)
         assert codecs.psnr(img[20:110, 30:130], win, peak=255) >= 40.0
 
     def test_stripped_layout(self):
@@ -249,7 +249,7 @@ class TestJpegTiff:
             img, rows_per_strip=48, compression="jpeg", jpeg_quality=92,
             jpeg_tables_mode=1,
         )
-        assert codecs.psnr(img, tiff.decode_full(b), peak=255) >= 40.0
+        assert codecs.psnr(img, container.decode_full(b), peak=255) >= 40.0
 
     @pytest.mark.parametrize("tables_mode", [0, 1])
     def test_chunky_rgb_photometric6(self, tables_mode):
@@ -260,7 +260,7 @@ class TestJpegTiff:
         )
         m = tiff.parse_tiff_bytes(b)
         assert m.photometric == 6  # stored as YCbCr, like real COG writers
-        out = tiff.decode_full(b)
+        out = container.decode_full(b)
         assert out.shape == img.shape
         assert codecs.psnr(img, out, peak=255) >= 40.0
 
@@ -286,7 +286,7 @@ class TestJpegMiniraster:
             img, tile_w=64, tile_h=64, compression=codecs.COMP_JPEG,
             qstep=92.0,  # for COMP_JPEG, qstep carries the JFIF quality
         )
-        assert codecs.psnr(img, mr.decode_full(blob), peak=255) >= 40.0
+        assert codecs.psnr(img, container.decode_full(blob), peak=255) >= 40.0
         r = mr.CachedReader(blob)
         win = r.window(30, 20, 100, 90)
         assert codecs.psnr(img[20:110, 30:130], win, peak=255) >= 40.0

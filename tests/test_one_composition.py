@@ -1,7 +1,8 @@
 """One composition per pipeline: only ``decode.zonal_join`` and
-``sampling.sample_join`` chain candidate generation into the decode, and
-only ``raster_mosaic``'s shared chip steps cap chip candidates and join
-their payloads.
+``sampling.sample_join`` chain candidate generation into the decode, only
+``raster_mosaic``'s shared chip steps cap chip candidates and join their
+payloads, and only ``miniraster.CachedReader`` coalesces byte ranges and
+decodes tiles (chunky TIFF tiles aside).
 
 Every other caller goes through the entries, so changing how candidates
 are generated is a change to those functions, not to every pipeline.
@@ -43,8 +44,15 @@ LOADED_BY_CONF = {
     "rasteret_spark.worker_daemon": ("rasteret_spark/session.py", "spark.python.daemon.module"),
 }
 OPS = "rasteret_spark.operators"
+FMT = "rasteret_spark.format"
 # primitive -> the only modules that may call it
 ALLOWED = {
+    # one window reader: tiles decode in CachedReader (chunky TIFF tiles in
+    # tiff.decode_chunky_tile), and only CachedReader coalesces byte ranges
+    f"{FMT}.codecs.decode_tile": {
+        "rasteret_spark/format/miniraster.py", "rasteret_spark/format/tiff.py",
+    },
+    f"{FMT}.miniraster.coalesce_ranges": {"rasteret_spark/format/miniraster.py"},
     f"{OPS}.spatial_join.refine_rect_polygon": {"rasteret_spark/operators/decode.py"},
     f"{OPS}.decode.zonal_stats": {"rasteret_spark/operators/decode.py"},
     f"{OPS}.sampling.sample_points": {"rasteret_spark/operators/sampling.py"},
@@ -133,14 +141,20 @@ def test_chain_primitives_called_only_from_the_entries():
         and (rel, owner, callee) not in ALLOWLIST
     ]
     assert not offenders, (
-        "hand-written zonal/sample chain outside decode.zonal_join / "
-        "sampling.sample_join: " + ", ".join(offenders)
+        "a primitive called outside its owners (the zonal/sample chain outside "
+        "decode.zonal_join / sampling.sample_join, or a tile decode or range "
+        "coalescing outside CachedReader): " + ", ".join(offenders)
     )
 
 
 def test_scan_sees_the_entries_and_the_allowlisted_site():
-    """Guards the scanner itself: the entries' own calls and q49 resolve."""
+    """Guards the scanner itself: the entries' own calls, the one window
+    reader's and q49 resolve."""
     seen = {(rel, owner, callee) for path in SCANNED for rel, owner, callee, _ in _calls(path)}
+    for callee in ("codecs.decode_tile", "miniraster.coalesce_ranges"):
+        assert ("rasteret_spark/format/miniraster.py", "CachedReader", f"{FMT}.{callee}") in seen
+    assert ("rasteret_spark/format/tiff.py", "decode_chunky_tile",
+            f"{FMT}.codecs.decode_tile") in seen
     assert ("rasteret_spark/operators/decode.py", "zonal_join",
             f"{OPS}.decode.zonal_stats") in seen
     assert ("rasteret_spark/operators/decode.py", "zonal_join",
@@ -261,55 +275,84 @@ def _docstrings(tree: ast.Module) -> set[int]:
     return out
 
 
-def _names(node: ast.AST, docstrings: set[int]) -> set[str]:
-    """Every name a piece of code can get to: a ``Name``, an ``Attribute``,
-    each part of an import alias, or a word of a string constant that is
-    not a docstring (conf values, ``getattr`` names)."""
+class _File:
+    """One parsed file: its module name, docstring ids and import aliases."""
+
+    def __init__(self, path: Path):
+        self.module = _module_name(path.relative_to(REPO).as_posix())
+        self.tree = ast.parse(path.read_text(), filename=str(path))
+        self.docstrings = _docstrings(self.tree)
+        self.aliases = _aliases(self.tree, self.module)
+
+
+def _names(node: ast.AST, f: _File) -> set[str]:
+    """Every name a piece of code of file ``f`` can get to: a ``Name``, an
+    ``Attribute``, each part of an import alias, or a word of a string
+    constant that is not a docstring (conf values, ``getattr`` names).  A
+    ``Name`` or ``Attribute`` chain that resolves through the file's import
+    aliases (or its own definitions) also gives its dotted path, and so does
+    each name a ``from`` import brings in."""
     out = set()
     for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
+        if isinstance(n, (ast.Name, ast.Attribute)):
+            out.add(n.id if isinstance(n, ast.Name) else n.attr)
+            dotted = _dotted(n, f.aliases)
+            if dotted and "." in dotted:
+                out.add(dotted)
+        elif isinstance(n, ast.ImportFrom):
+            base = _import_base(n, f.module)
+            out.update(f"{base}.{a.name}" for a in n.names)
+        if isinstance(n, ast.alias):
             out.update(n.name.split("."))
             if n.asname:
                 out.add(n.asname)
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docstrings:
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in f.docstrings:
             out.update(WORD.findall(n.value))
     return out
 
 
 def _unreached_definitions() -> dict[str, int]:
     """``module.name`` -> line count of each top-level function or class in a
-    reached library module whose name no surface file, no module-level code
-    of a reached module and no reached definition mentions (followed
-    transitively; a class is one unit)."""
+    reached library module that no surface file, no module-level code of a
+    reached module and no reached definition mentions (followed
+    transitively; a class is one unit).  A name defined in one reached
+    module is mentioned by its bare name; a name defined in several (say
+    ``encode``) only by a reference that resolves, through the mentioning
+    file's import aliases, to that module's definition."""
     files = {_module_name(p.relative_to(REPO).as_posix()): p for p in LIB.rglob("*.py")}
-    defs: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
+    defs: dict[str, tuple[ast.AST, _File]] = {}
     names: set[str] = set()
     for mod in sorted(_reached() | LOADED_BY_CONF.keys()):
-        tree = ast.parse(files[mod].read_text(), filename=str(files[mod]))
-        docs = _docstrings(tree)
-        for top in tree.body:
+        f = _File(files[mod])
+        for top in f.tree.body:
             if isinstance(top, DEFS):
-                defs.setdefault(top.name, []).append((mod, top, docs))
+                defs[f"{mod}.{top.name}"] = (top, f)
             else:
-                names |= _names(top, docs)
+                names |= _names(top, f)
+    by_name: dict[str, list[str]] = {}
+    for key in defs:
+        by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
     for path in DEF_SURFACES:
-        tree = ast.parse(path.read_text(), filename=str(path))
-        names |= _names(tree, _docstrings(tree))
+        f = _File(path)
+        names |= _names(f.tree, f)
+
+    def reached_by(token: str) -> list[str]:
+        if "." in token:
+            return [token]
+        group = by_name.get(token, [])
+        return group if len(group) == 1 else []
+
     todo = list(names)
     while todo:
-        for _, node, docs in defs.pop(todo.pop(), []):
-            new = _names(node, docs) - names
-            names |= new
-            todo.extend(new)
+        for key in reached_by(todo.pop()):
+            if key in defs:
+                node, f = defs.pop(key)
+                new = _names(node, f) - names
+                names |= new
+                todo.extend(new)
     return {
-        f"{mod}.{node.name}": node.end_lineno - min(
-            [node.lineno, *(d.lineno for d in node.decorator_list)]
-        ) + 1
-        for group in defs.values() for mod, node, _ in group
+        key: node.end_lineno - min([node.lineno, *(d.lineno for d in node.decorator_list)]) + 1
+        for key, (node, _) in defs.items()
     }
 
 

@@ -160,3 +160,42 @@ def test_truth_write_prunes_stale_entries_of_other_digests(tmp_path, monkeypatch
     os.utime(path, (old, old))
     oracles.truth_parquet("tiny_truth_pdf", n=2)
     assert path.stat().st_mtime > old + 60
+
+
+def test_encoded_image_tables_prune_other_fingerprints(tmp_path, monkeypatch):
+    """An encoded image table or export directory, once written, deletes the
+    same name's entries keyed on another generator fingerprint that went
+    untouched for ``KEEP_OTHER_FINGERPRINT_S``; recent ones, other names and
+    temp directories stay, and the written entry is marked used."""
+    sys.path.insert(0, str(REPO))
+    import __spark_entry__ as E
+
+    monkeypatch.setattr(E, "IMAGE_CACHE", str(tmp_path))
+    table = Path(E._fingerprinted("images_120_42") + ".parquet")
+    cogs = Path(E._fingerprinted("cogs_96_0.001_96"))
+    fp = cogs.name.rsplit("_", 1)[1]
+    old = time.time() - E.KEEP_OTHER_FINGERPRINT_S - 60
+    names = {
+        "stale": f"images_120_42_{'0' * len(fp)}.parquet",
+        "recent": f"images_120_42_{'1' * len(fp)}.parquet",
+        "other_n": f"images_96_42_{'0' * len(fp)}.parquet",
+        "temp": f"images_120_42_{'0' * len(fp)}.parquet.tmp.1",
+        "stale_cogs": f"cogs_96_0.001_96_{'0' * len(fp)}",
+        "shards": f"imgshards_4_{'0' * len(fp)}",
+    }
+    for path in (table, cogs):
+        path.mkdir()
+        os.utime(path, (old, old))
+    for key, name in names.items():
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "part-0").write_bytes(b"")
+        if key != "recent":
+            os.utime(tmp_path / name, (old, old))
+
+    E._prune_other_fingerprints(str(table))
+    left = {p.name for p in tmp_path.iterdir()}
+    assert left == {table.name, cogs.name, *(n for k, n in names.items() if k != "stale")}
+    assert table.stat().st_mtime > old + 60
+    E._prune_other_fingerprints(str(cogs))
+    assert not (tmp_path / names["stale_cogs"]).exists()
+    assert (tmp_path / names["shards"]).exists()

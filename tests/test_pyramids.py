@@ -11,7 +11,7 @@ Reference parity: the reference reads pyramids that upstream tooling built
 import numpy as np
 import pytest
 
-from rasteret_spark.format import tiff
+from rasteret_spark.format import container, tiff
 from rasteret_spark.operators import pyramids
 from rasteret_spark.sources import synthetic as syn
 
@@ -63,11 +63,11 @@ def test_lossless_rewrite_is_bit_exact_and_levels_decimate(tiff_df, built):
     for image_id, r in built.items():
         if r.status != "ok":
             continue
-        full_src = tiff.decode_full(bytes(src[image_id]["bytes"]))
+        full_src = container.decode_full(bytes(src[image_id]["bytes"]))
         metas = tiff.parse_tiff_chain(tiff.blob_read(bytes(r.bytes)))
         assert len(metas) == 3
         assert metas[1].subfile_type & 1 and metas[2].subfile_type & 1
-        full_new = tiff.decode_full(bytes(r.bytes))
+        full_new = container.decode_full(bytes(r.bytes))
         np.testing.assert_array_equal(full_new, full_src)
         chunky = (metas[0].samples_per_pixel > 1
                   and metas[0].planar_config == 1)
@@ -79,7 +79,7 @@ def test_lossless_rewrite_is_bit_exact_and_levels_decimate(tiff_df, built):
                 want = full_src[d, d, :]
             else:  # planar (bands, h, w)
                 want = full_src[:, d, d]
-            got = tiff.decode_full(bytes(r.bytes), ifd=level)
+            got = container.decode_full(bytes(r.bytes), ifd=level)
             np.testing.assert_array_equal(got, want)
         checked += 1
     assert checked > 0

@@ -15,7 +15,7 @@ import pandas as pd
 import pytest
 
 from rasteret_spark import crs
-from rasteret_spark.format import miniraster as mr
+from rasteret_spark.format import container, miniraster as mr
 from rasteret_spark.operators import raster_mosaic as rmo, spatial_join as sj
 
 
@@ -43,7 +43,7 @@ def _oracle_reproject(blob: bytes, band: int, chip: dict) -> np.ndarray:
     meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:8])])
     if band >= meta.n_bands:
         return np.full((chip["chip_h"], chip["chip_w"]), np.nan)
-    arr = mr.decode_full(blob, band=band).astype(np.float64)
+    arr = container.decode_full(blob, band=band).astype(np.float64)
     a, _, c, _, e, f = meta.transform
     out = np.full((chip["chip_h"], chip["chip_w"]), np.nan)
     for r in range(chip["chip_h"]):
@@ -200,7 +200,7 @@ def test_reproject_bilinear_matches_pointwise_oracle():
         reader, 0, grid["xmin"], grid["ymax"], grid["xres"], grid["yres"],
         grid["w"], grid["h"],
     )
-    full = mr.decode_full(blob).astype(np.float64)
+    full = container.decode_full(blob).astype(np.float64)
     for r in range(grid["h"]):
         for c in range(grid["w"]):
             lon = grid["xmin"] + (c + 0.5) * grid["xres"]

@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from rasteret_spark.format import container
 from rasteret_spark.format import tiff as tf
 from rasteret_spark.operators import raster_mosaic as rmo
 from rasteret_spark.operators import raster_sink as rsink
@@ -71,14 +72,14 @@ def test_write_cogs_roundtrip_bit_exact(spark, mosaic_pixels, tmp_path_factory):
             want = np.asarray(
                 [np.nan if v is None else v for v in row["values"]], dtype="float64"
             ).reshape(row["chip_h"], row["chip_w"]).astype("float32")
-            got = tf.decode_full(blob, band=bi)
+            got = container.decode_full(blob, band=bi)
             assert got.dtype == np.float32
             assert np.array_equal(got, want, equal_nan=True)
         # overview levels are the writer-contract decimation of the full res
-        full = tf.decode_full(blob)
+        full = container.decode_full(blob)
         for li in range(1, len(metas)):
             f = 2**li
-            lvl = tf.decode_full(blob, ifd=li)
+            lvl = container.decode_full(blob, ifd=li)
             dec = full[::f, ::f] if full.ndim == 2 else full[:, ::f, ::f]
             assert np.array_equal(lvl, dec, equal_nan=True)
 
@@ -168,7 +169,7 @@ def test_write_cogs_integer_dtype_fills_nodata(spark, tmp_path_factory):
     ).toPandas()
     assert man.iloc[0]["status"] == "ok"
     blob = open(man.iloc[0]["href"], "rb").read()
-    got = tf.decode_full(blob)
+    got = container.decode_full(blob)
     assert got.dtype == np.uint16
     want = np.asarray([0 if v is None else int(v) for v in vals], dtype="uint16")
     assert np.array_equal(got.ravel(), want)

@@ -73,7 +73,7 @@ def test_ingest_rasters_builds_contract_table(spark, scene_dir):
         assert row["ymax"] == pytest.approx(52.6, abs=1e-9)
         # phash is the band-0 perceptual hash of the DECODED pixels
         assert int(row["phash"]) == syn.phash64(
-            np.asarray(container.decode_full_any(bytes(row["bytes"]), band=0),
+            np.asarray(container.decode_full(bytes(row["bytes"]), band=0),
                        dtype=np.float64)
         )
     # contract: every operator-required column present
@@ -197,7 +197,7 @@ def test_chunky_rgb_tiff_ingests(spark, tmp_path):
     em = container.parse_any(bytes(row["bytes"]))
     assert em.n_bands == 3
     for b in range(3):
-        got = container.decode_full_any(bytes(row["bytes"]), band=b)
+        got = container.decode_full(bytes(row["bytes"]), band=b)
         assert np.array_equal(np.asarray(got, dtype=np.uint8), arr[:, :, b])
     assert em.transform[0] == pytest.approx(0.01) and em.epsg == 4326
 

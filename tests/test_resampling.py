@@ -5,7 +5,7 @@ oracle test.  Reference surface: rasterio Resampling.cubic / .average through
 
 import numpy as np
 
-from rasteret_spark.format import miniraster as mr
+from rasteret_spark.format import container, miniraster as mr
 from rasteret_spark.operators import raster_mosaic as rmo
 
 
@@ -30,7 +30,7 @@ def test_reproject_cubic_matches_pointwise_oracle():
     g = dict(xmin=10.004, ymax=49.996, xres=0.00043, yres=0.00039, w=40, h=30)
     got = rmo.reproject_cubic(reader, 0, g["xmin"], g["ymax"], g["xres"], g["yres"],
                               g["w"], g["h"])
-    full = mr.decode_full(blob).astype(np.float64)
+    full = container.decode_full(blob).astype(np.float64)
     for r in range(g["h"]):
         for c in range(g["w"]):
             lon = g["xmin"] + (c + 0.5) * g["xres"]

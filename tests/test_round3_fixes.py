@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from rasteret_spark.format import miniraster as mr
+from rasteret_spark.format import container, miniraster as mr
 from rasteret_spark.operators import asof, multimodal
 
 
@@ -52,9 +52,9 @@ def test_parse_header_reads_legacy_v1_blobs():
     assert (m1.width, m1.height, m1.n_bands) == (130, 90, 1)
     assert m1.epsg == 32633 and m1.nodata == 7.0
     assert m1.transform == (10.0, 0.0, 500.0, 0.0, -10.0, 9000.0)
-    np.testing.assert_array_equal(mr.decode_full(v1), arr)
+    np.testing.assert_array_equal(container.decode_full(v1), arr)
     np.testing.assert_array_equal(
-        mr.read_window(v1, col_off=30, row_off=20, win_w=55, win_h=41),
+        mr.CachedReader(v1).window(30, 20, 55, 41),
         arr[20:61, 30:85],
     )
 

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from rasteret_spark.format import codecs, miniraster as mr
+from rasteret_spark.format import codecs, container, miniraster as mr
 
 
 # --- LZW ----------------------------------------------------------------------
@@ -83,9 +83,9 @@ def test_lzw_image_through_format():
     arr = (rng.random((100, 90)) * 900).astype("uint16")
     blob = mr.encode_image(arr, tile_w=64, tile_h=64, compression=codecs.COMP_LZW,
                            predictor=codecs.PRED_HORIZONTAL)
-    np.testing.assert_array_equal(mr.decode_full(blob), arr)
+    np.testing.assert_array_equal(container.decode_full(blob), arr)
     np.testing.assert_array_equal(
-        mr.read_window(blob, col_off=10, row_off=20, win_w=33, win_h=41),
+        mr.CachedReader(blob).window(10, 20, 33, 41),
         arr[20:61, 10:43],
     )
 
@@ -232,6 +232,6 @@ def test_fetch_feeds_decode_pipeline(spark, tmp_path, images_pdf):
     assert len(got) == 4 and (got["fetch_status"] == "ok").all()
     want = dict(zip(sub["image_id"], sub["bytes"]))
     for image_id, blob in zip(got["image_id"], got["bytes"]):
-        arr = container.decode_full_any(bytes(blob))
+        arr = container.decode_full(bytes(blob))
         assert arr.size > 0
-        assert np.array_equal(arr, container.decode_full_any(bytes(want[image_id])))
+        assert np.array_equal(arr, container.decode_full(bytes(want[image_id])))

@@ -213,7 +213,7 @@ def test_image_caption_shards_byte_exact(spark, images_pdf, tmp_path_factory):
     for _, r in sub.iterrows():
         assert caps[r["image_id"]] == r["caption"].encode()
         meta = container.parse_any(bytes(r["bytes"]))
-        dec = container.decode_full_any(bytes(r["bytes"]))
+        dec = container.decode_full(bytes(r["bytes"]))
         if dec.ndim == 2:
             dec = dec[None]
         want = dec.astype(np.float32)

@@ -5,7 +5,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from rasteret_spark import crs
-from rasteret_spark.format import miniraster as mr
+from rasteret_spark.format import container, miniraster as mr
 from rasteret_spark.operators import asof, knn, sampling, spatial_join as sj
 
 
@@ -15,7 +15,7 @@ def _sampling_oracle(images_pdf, points_pdf, max_ring):
     for _, im in images_pdf.iterrows():
         blob = bytes(im["bytes"])
         meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:8])])
-        arr = mr.decode_full(blob, band=0)
+        arr = container.decode_full(blob, band=0)
         a, _, c, _, e, f = meta.transform
         for _, p in points_pdf.iterrows():
             if not (im["xmin"] <= p["x"] <= im["xmax"] and im["ymin"] <= p["y"] <= im["ymax"]):
@@ -50,7 +50,7 @@ def _nodata_probe_points(images_pdf, n=6):
         meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:8])])
         if meta.nodata is None:
             continue
-        arr = mr.decode_full(blob, band=0)
+        arr = container.decode_full(blob, band=0)
         bad = np.argwhere(arr.astype(float) == meta.nodata)
         if not len(bad):
             continue
@@ -119,7 +119,7 @@ def test_sample_points_multiband_and_neighborhood(spark, images_pdf, points_pdf)
     for row in got.itertuples(index=False):
         blob = bytes(by_img[row.image_id]["bytes"])
         if row.image_id not in cubes:
-            cubes[row.image_id] = mr.decode_full(blob)
+            cubes[row.image_id] = container.decode_full(blob)
         arr = cubes[row.image_id]
         band_arr = arr if arr.ndim == 2 else arr[row.band]
         meta = mr.parse_header(blob[: mr.header_len_from_prefix(blob[:8])])

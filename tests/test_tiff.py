@@ -22,6 +22,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from rasteret_spark.format import codecs, container, miniraster as mr, tiff
 from rasteret_spark.format import tiffwrite as tw
+from rasteret_spark.sources import fetch as fx
 
 FIX = "/root/reference/fixtures"
 pytestmark_fixtures = pytest.mark.skipif(
@@ -35,19 +36,19 @@ class TestReferenceFixtures:
     def test_tiled_oversize_lzw_i8_pred2(self):
         """512x512 tile in a 499x374 image: oversized tile, LZW, predictor 2
         (structure pinned by the reference's own test)."""
-        m = tiff.parse_tiff(tiff.file_read(f"{FIX}/tiled-oversize-gray-i8.tif"))
+        m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/tiled-oversize-gray-i8.tif"))
         assert (m.width, m.height) == (499, 374)
         assert (m.tile_w, m.tile_h) == (512, 512) and m.tiled
         assert m.compression == 5 and m.predictor == 2
         assert m.dtype_name == "int8"
-        a = tiff.decode_full(f"{FIX}/tiled-oversize-gray-i8.tif")
+        a = container.decode_full(fx.RangedBlob(f"{FIX}/tiled-oversize-gray-i8.tif"))
         assert a.shape == (374, 499) and a.dtype == np.int8
         assert a.min() == -128 and a.max() == 127  # full-range content
 
     def test_issue69_lzw_uint16_stripped(self):
-        m = tiff.parse_tiff(tiff.file_read(f"{FIX}/issue_69_lzw.tiff"))
+        m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/issue_69_lzw.tiff"))
         assert m.compression == 5 and m.dtype_name == "uint16" and not m.tiled
-        a = tiff.decode_full(f"{FIX}/issue_69_lzw.tiff")
+        a = container.decode_full(fx.RangedBlob(f"{FIX}/issue_69_lzw.tiff"))
         assert a.shape == (45, 45)
         # plausible-raster regression pin (first decode audited by hand)
         assert (int(a.min()), int(a.max())) == (430, 598)
@@ -56,9 +57,9 @@ class TestReferenceFixtures:
     def test_predictor3_float32_stripped(self):
         """Float predictor over LZW strips: the content is uniform noise, so
         any predictor/codec slip destroys the [0, 1] distribution."""
-        m = tiff.parse_tiff(tiff.file_read(f"{FIX}/predictor-3-gray-f32.tif"))
+        m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/predictor-3-gray-f32.tif"))
         assert m.predictor == 3 and m.dtype_name == "float32" and not m.tiled
-        a = tiff.decode_full(f"{FIX}/predictor-3-gray-f32.tif")
+        a = container.decode_full(fx.RangedBlob(f"{FIX}/predictor-3-gray-f32.tif"))
         assert a.shape == (200, 200) and a.dtype == np.float32
         assert 0.0 <= a.min() and a.max() <= 1.0
         assert abs(float(a.mean()) - 0.5) < 0.01
@@ -70,8 +71,8 @@ class TestReferenceFixtures:
         predictor against the other with zero shared code paths.  (Also
         pins the real-world pred2-on-float semantics: integer differencing
         of the raw bit patterns.)"""
-        a2 = tiff.decode_full(f"{FIX}/random-fp16-pred2.tiff")
-        a3 = tiff.decode_full(f"{FIX}/random-fp16-pred3.tiff")
+        a2 = container.decode_full(fx.RangedBlob(f"{FIX}/random-fp16-pred2.tiff"))
+        a3 = container.decode_full(fx.RangedBlob(f"{FIX}/random-fp16-pred3.tiff"))
         assert a2.dtype == np.float16 and a2.shape == (16, 16)
         assert not np.isnan(a2).any()
         assert np.array_equal(a2, a3)
@@ -80,19 +81,19 @@ class TestReferenceFixtures:
         """BigTIFF.tif / BigTIFFLong.tif / BigTIFFMotorola.tif are the same
         64x64 interleaved RGB image in II and MM spellings — a byte-order
         oracle the files provide for free."""
-        le = tiff.decode_full(f"{FIX}/bigtiff/BigTIFF.tif")
-        lg = tiff.decode_full(f"{FIX}/bigtiff/BigTIFFLong.tif")
-        be = tiff.decode_full(f"{FIX}/bigtiff/BigTIFFMotorola.tif")
-        mm = tiff.parse_tiff(tiff.file_read(f"{FIX}/bigtiff/BigTIFFMotorola.tif"))
+        le = container.decode_full(fx.RangedBlob(f"{FIX}/bigtiff/BigTIFF.tif"))
+        lg = container.decode_full(fx.RangedBlob(f"{FIX}/bigtiff/BigTIFFLong.tif"))
+        be = container.decode_full(fx.RangedBlob(f"{FIX}/bigtiff/BigTIFFMotorola.tif"))
+        mm = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/bigtiff/BigTIFFMotorola.tif"))
         assert mm.container == "bigtiff" and mm.byte_order == ">"
         assert le.shape == (64, 64, 3) and le.dtype == np.uint8
         assert np.array_equal(le, lg) and np.array_equal(le, be)
 
     def test_chunky_rgb_lzw_pred2(self):
-        m = tiff.parse_tiff(tiff.file_read(f"{FIX}/tiled-rgb-u8.tif"))
+        m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/tiled-rgb-u8.tif"))
         assert m.samples_per_pixel == 3 and m.planar_config == 1
         assert m.compression == 5 and m.predictor == 2
-        a = tiff.decode_full(f"{FIX}/tiled-rgb-u8.tif")
+        a = container.decode_full(fx.RangedBlob(f"{FIX}/tiled-rgb-u8.tif"))
         assert a.shape == (499, 374, 3) and a.dtype == np.uint8
         # chunky layouts cannot lower into the planar engine meta
         with pytest.raises(ValueError, match="chunky"):
@@ -102,9 +103,9 @@ class TestReferenceFixtures:
         """The libtiff+libzstd-produced strip decodes through the
         from-scratch RFC 8878 decoder (format/zstd.py); stats pinned from
         two independent decoders agreeing (pure Python vs libzstd)."""
-        m = tiff.parse_tiff(tiff.file_read(f"{FIX}/int16_zstd.tif"))
+        m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/int16_zstd.tif"))
         assert m.compression == 50000 and m.dtype_name == "int16"
-        a = tiff.decode_full(f"{FIX}/int16_zstd.tif")
+        a = container.decode_full(fx.RangedBlob(f"{FIX}/int16_zstd.tif"))
         assert a.shape == (64, 64) and a.dtype == np.int16
         assert int(a.min()) == -5000 and int(a.max()) == 4998
         assert a[0, :6].tolist() == [1071, 2253, 3381, -2149, 867, -506]
@@ -115,7 +116,7 @@ class TestReferenceFixtures:
         reads regardless of file size (the reference's whole point)."""
         for name in ["tiled-rgb-u8.tif", "tiled-oversize-gray-i8.tif",
                      "bigtiff/BigTIFFMotorola.tif"]:
-            m = tiff.parse_tiff(tiff.file_read(f"{FIX}/{name}"))
+            m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/{name}"))
             size = os.path.getsize(f"{FIX}/{name}")
             assert m.header_bytes_read < 4096, (name, m.header_bytes_read)
             assert m.header_bytes_read < size
@@ -150,7 +151,7 @@ def test_roundtrip_matrix(dtype, comp):
                         kw["rows_per_strip"] = 10  # final strip short (37%10)
                     blob = tw.write_tiff(a, **kw)
                     m = tiff.parse_tiff_bytes(blob)
-                    out = tiff.decode_full(blob)
+                    out = container.decode_full(blob)
                     assert np.array_equal(np.asarray(out, dtype=a.dtype), a), (
                         dtype, comp, pred, order, bigtiff, layout)
                     assert m.epsg == 32633
@@ -167,18 +168,18 @@ def test_roundtrip_planar_multiband_and_chunky():
     assert m.planar_config == 2 and m.samples_per_pixel == 3
     em = tiff.to_engine_meta(m)
     assert em.n_bands == 3
-    out = tiff.decode_full(blob)
+    out = container.decode_full(blob)
     assert out.shape == (3, 40, 33)
     assert np.array_equal(out, planar)
     # single band extraction goes through the shared engine window reader
-    b1 = tiff.decode_full(blob, band=1)
+    b1 = container.decode_full(blob, band=1)
     assert np.array_equal(b1, planar[1])
 
     chunky = rng.integers(0, 255, size=(40, 33, 3)).astype(np.uint8)
     for pred in (1, 2):
         blob = tw.write_tiff(chunky, interleaved=True, tile=(16, 16),
                              compression="lzw", predictor=pred)
-        out = tiff.decode_full(blob)
+        out = container.decode_full(blob)
         assert np.array_equal(out, chunky), f"chunky pred={pred}"
 
 
@@ -232,9 +233,14 @@ def test_prefix_parse_raises_needbytes_past_end():
     a = np.arange(64 * 64, dtype=np.uint16).reshape(64, 64) % 1000
     blob = tw.write_tiff(a, tile=(32, 32), compression="deflate")
     with pytest.raises(tiff.NeedBytes):
-        tiff.parse_tiff(tiff.prefix_read(blob[:16]))
-    m = tiff.parse_tiff(tiff.prefix_read(blob[:4096]))  # COG-style front IFD
+        tiff.parse_tiff(tiff.blob_read(blob[:16]))
+    m = tiff.parse_tiff(tiff.blob_read(blob[:4096]))  # COG-style front IFD
     assert m.width == 64
+    # the one header parse raises it for both containers
+    raster = mr.encode_image(a, tile_w=8, tile_h=8)
+    for short in (blob[:16], raster[:6], raster[:200]):
+        with pytest.raises(tiff.NeedBytes):
+            container.parse_any(short)
 
 
 def test_short_read_is_loud():
@@ -255,7 +261,7 @@ def test_window_reads_match_full_decode():
                                  byte_order=order, **layout_kw)
             em = container.parse_any(blob)
             assert em.container == "tiff" and em.byte_order == order
-            win = mr.read_window(blob, em, 33, 41, 99, 77)
+            win = mr.CachedReader(blob, em).window(33, 41, 99, 77)
             assert np.array_equal(np.asarray(win, dtype=a.dtype),
                                   a[41:118, 33:132])
             reader = mr.CachedReader(blob)  # parse via container dispatch
@@ -356,13 +362,12 @@ def test_overview_chain_parses_with_derived_georef():
     assert metas[2].transform6() == (40.0, 0.0, 500000.0, 0.0, -40.0, 4000000.0)
     assert all(m.epsg == 32633 and m.nodata == 0.0 for m in metas)
     # the full-res decode is untouched by the pyramid's presence
-    assert np.array_equal(tiff.decode_full(blob), a)
+    assert np.array_equal(container.decode_full(blob), a)
     # each overview lowers into the engine meta and decodes to the exact
     # nearest-neighbour decimation
     for m, f in [(metas[1], 2), (metas[2], 4)]:
         em = tiff.to_engine_meta(m)
-        win = mr.read_window(tiff._ReadSlicer(tiff.blob_read(blob)), em,
-                             0, 0, m.width, m.height)
+        win = mr.CachedReader(blob, em).window(0, 0, m.width, m.height)
         assert np.array_equal(win, a[::f, ::f])
 
 
@@ -388,20 +393,20 @@ def test_read_window_at_res_serves_from_overview():
     blob = tw.write_tiff(a, tile=(64, 64), compression="deflate", predictor=2,
                          overviews=[2, 4])
 
-    class CountingRead:
+    class CountingBlob:
         def __init__(self, blob):
             self.blob, self.n = blob, 0
 
-        def __call__(self, off, size):
-            self.n += size
-            return self.blob[off : off + size]
+        def __getitem__(self, sl):
+            self.n += sl.stop - sl.start
+            return self.blob[sl]
 
     metas = tiff.parse_tiff_chain(tiff.blob_read(blob))
-    r_full = CountingRead(blob)
+    r_full = CountingBlob(blob)
     w_full, li = tiff.read_window_at_res(r_full, 64, 64, 256, 256,
                                          factor=1.0, metas=metas)
     assert li == 0 and np.array_equal(w_full, a[64:320, 64:320])
-    r_ov = CountingRead(blob)
+    r_ov = CountingBlob(blob)
     w_ov, li = tiff.read_window_at_res(r_ov, 64, 64, 256, 256,
                                        factor=4.0, metas=metas)
     assert li == 2
@@ -421,8 +426,7 @@ def test_overviews_on_bigtiff_be_and_planar():
     em1 = tiff.to_engine_meta(metas[1])
     assert em1.n_bands == 2
     for b in range(2):
-        win = mr.read_window(tiff._ReadSlicer(tiff.blob_read(blob)), em1,
-                             0, 0, 48, 48, band=b)
+        win = mr.CachedReader(blob, em1).window(0, 0, 48, 48, band=b)
         assert np.array_equal(np.asarray(win, dtype=np.uint8),
                               planar[b, ::2, ::2])
 

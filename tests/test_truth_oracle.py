@@ -25,7 +25,7 @@ def test_make_image_truth_expected_matches_decode():
     for i in range(40):
         t = syn.make_image_truth(i)
         row = syn.make_image_row(i)
-        got = container.decode_full_any(row["bytes"])
+        got = container.decode_full(row["bytes"])
         if got.ndim == 2:
             got = got[None]
         assert got.shape == t["expected"].shape, i
@@ -129,7 +129,7 @@ def test_make_tiff_image_truth_expected_matches_decode():
     for i in range(28):  # two full passes over the 14-entry matrix
         t = syn.make_tiff_image_truth(i)
         row = syn.make_tiff_image_row(i)
-        got = container.decode_full_any(row["bytes"])
+        got = container.decode_full(row["bytes"])
         if got.ndim == 2:
             got = got[None]
         if t["fmt"] == "jpeg":
@@ -228,7 +228,7 @@ def test_psnr_truth_matches_real_decode():
     for i in range(40):
         t = syn.make_image_truth(i)
         row = syn.make_image_row(i)
-        got = container.decode_full_any(row["bytes"])
+        got = container.decode_full(row["bytes"])
         if got.ndim == 2:
             got = got[None]
         r = by_id[f"img-{i:08d}"]

@@ -19,6 +19,7 @@ import numpy as np
 import pytest
 
 from rasteret_spark.format import codecs, tiff, zstd
+from rasteret_spark.sources import fetch as fx
 
 FIX = "/root/reference/fixtures"
 needs_fixtures = pytest.mark.skipif(
@@ -104,9 +105,9 @@ def test_reference_fixture_strip_pure_python():
     """libtiff+libzstd produced fixtures/int16_zstd.tif; its strip payloads
     must decode through the PURE decoder (not the ctypes path) bit-exactly.
     Expected stats pinned from two independent decoders agreeing."""
-    m = tiff.parse_tiff(tiff.file_read(f"{FIX}/int16_zstd.tif"))
+    m = tiff.parse_tiff(fx.ranged_reader(f"{FIX}/int16_zstd.tif"))
     assert m.compression == 50000 and m.dtype_name == "int16"
-    read = tiff.file_read(f"{FIX}/int16_zstd.tif")
+    read = fx.ranged_reader(f"{FIX}/int16_zstd.tif")
     rows = []
     rows_per_strip = m.tile_h  # stripped file: strip height stored as tile_h
     for i, (off, cnt) in enumerate(zip(m.tile_offsets, m.tile_byte_counts)):
